@@ -1,15 +1,16 @@
 package graft.streaming
 
+import java.net.HttpURLConnection
 import java.util.concurrent.atomic.LongAdder
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** REAL Elasticsearch bulk-`create` sink over the wire protocol — the
-  * reference's sink shape (src/elasticsearch/elasticsearch.go:77-162)
-  * speaking actual HTTP `_bulk` NDJSON, with the per-item status
-  * routing of the reference's response loop
-  * (elasticsearch.go:115-134):
+/** The injector's Elasticsearch sink: bulk `create` over the wire
+  * protocol — the reference's sink shape
+  * (src/elasticsearch/elasticsearch.go:77-162) speaking actual HTTP
+  * `_bulk` NDJSON, with the per-item status routing of the reference's
+  * response loop (elasticsearch.go:115-134):
   *
   *  - 200/201 → inserted;
   *  - 409 → conflict: the id already exists — ES's per-doc version
@@ -23,25 +24,21 @@ import org.apache.spark.sql.functions._
   *    wedge a worker — SURVEY.md §7.5.5 documents the divergence).
   *
   * Scale shape: each partition serializes its rows into
-  * `maxDocsPerBulk`-sized NDJSON bodies and POSTs them over one JDK
-  * connection per request — no driver funnel, no shared client state;
-  * the counters flow back through the JOB RESULT (one stats tuple per
-  * partition), not through executor-side shared adders, so they are
-  * correct on a real cluster, not just in local mode. Uses only the
-  * JDK HTTP client and Spark's bundled Jackson — zero extra
+  * [[EsHttpSink.MaxDocsPerBulk]]-sized NDJSON bodies and POSTs them over
+  * one JDK connection per request — no driver funnel, no shared client
+  * state; the counters (M5) flow back through the JOB RESULT (one stats
+  * tuple per partition), not through executor-side shared adders, so
+  * they are correct on a real cluster, not just in local mode. Uses only
+  * the JDK HTTP client and Spark's bundled Jackson — zero extra
   * dependencies, same discipline as [[Probes]].
   *
-  * [[EsBulkSink]] remains the offline-correctness stand-in (parquet
-  * "index", anti-join dedup); this class is the live-protocol path the
-  * EsHttpSinkSpec exercises end-to-end against an in-JVM HTTP server
-  * implementing the `_bulk` contract.
+  * The same connection settings (timeout, basic auth, self-signed-cert
+  * trust) serve the bulk path, the readiness [[ping]] and the
+  * [[ensureTemplate]] bootstrap through [[EsHttpSink.Config.open]].
   */
-class EsHttpSink(
-    baseUrl: String,
-    maxRetries: Int = 3,
-    backoffMs: Long = 25L,
-    bulkTimeoutMs: Int = 30000,
-    maxDocsPerBulk: Int = 500) extends Serializable {
+class EsHttpSink(conf: EsHttpSink.Config) extends Serializable {
+
+  def this(url: String) = this(EsHttpSink.Config(url))
 
   val inserted = new LongAdder
   val conflicts = new LongAdder
@@ -56,9 +53,7 @@ class EsHttpSink(
   def write(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val url = s"$baseUrl/_bulk"
-    val (mr, bo, to, chunk) = (maxRetries, backoffMs, bulkTimeoutMs,
-      maxDocsPerBulk)
+    val c = conf
     val stats = batch
       .select(col("es_index").cast("string"),
         col("doc_id").cast("string"), to_json(col("payload")))
@@ -70,8 +65,8 @@ class EsHttpSink(
         // `"`, `\` or a newline must be JSON-escaped or the NDJSON body
         // frame-shifts (the reference's elastic client escapes for it)
         val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        var ins = 0L; var conf = 0L; var bad = 0L; var ret = 0L
-        it.grouped(chunk).foreach { rows =>
+        var ins = 0L; var dup = 0L; var bad = 0L; var ret = 0L
+        it.grouped(EsHttpSink.MaxDocsPerBulk).foreach { rows =>
           var pending = rows.toSeq
           var attempt = 0
           while (pending.nonEmpty) {
@@ -80,7 +75,7 @@ class EsHttpSink(
               action.putObject("create").put("_index", idx).put("_id", id)
               mapper.writeValueAsString(action) + "\n" + doc + "\n"
             }.mkString
-            EsHttpSink.post(url, body, to) match {
+            EsHttpSink.post(c, body) match {
               // pair item statuses back to rows positionally (the
               // _bulk contract: items are in request order) — but ONLY
               // when the server answered one item per doc sent; a
@@ -90,7 +85,7 @@ class EsHttpSink(
                 val again = Seq.newBuilder[(String, String, String)]
                 items.zip(pending).foreach { case (st, row) =>
                   if (st == 200 || st == 201) ins += 1
-                  else if (st == 409) conf += 1
+                  else if (st == 409) dup += 1
                   else if (st == 400) bad += 1
                   else again += row // 429/5xx item: retryable
                 }
@@ -99,41 +94,133 @@ class EsHttpSink(
               case Left(_) => () // whole-request failure: retry all
             }
             if (pending.nonEmpty) {
-              if (attempt >= mr)
+              if (attempt >= EsHttpSink.MaxRetries)
                 throw new RuntimeException(
-                  s"bulk to $url failed for ${pending.size} docs after " +
-                    s"$mr retries — failing the stream (SURVEY §7.5.5)")
+                  s"bulk to ${c.url}/_bulk failed for ${pending.size} docs " +
+                    s"after ${EsHttpSink.MaxRetries} retries — failing the " +
+                    "stream (SURVEY §7.5.5)")
               attempt += 1; ret += 1
-              Thread.sleep(bo)
+              Thread.sleep(c.backoffMs)
             }
           }
         }
-        Iterator.single((ins, conf, bad, ret))
+        Iterator.single((ins, dup, bad, ret))
       }.collect()
-    stats.foreach { case (i, c, b, r) =>
-      inserted.add(i); conflicts.add(c); badRequests.add(b); retries.add(r)
+    stats.foreach { case (i, d, b, r) =>
+      inserted.add(i); conflicts.add(d); badRequests.add(b); retries.add(r)
     }
   }
 
   /** The reference's readiness check pings the ES root endpoint
     * (`elasticsearch.go:142-150`: `client.Ping` → ok); here a `GET /`
-    * against `baseUrl` answering 2xx. Wire this into
-    * [[Probes.bind]]'s sink check so a cluster outage flips the pod
-    * unready (the orchestrator then stops routing to it) even while
-    * the streaming query itself is still alive between batches.
+    * answering 2xx. [[InjectorApp.start]] wires it into [[Probes.bind]]
+    * so a cluster outage flips the pod unready (the orchestrator then
+    * stops routing to it) even while the streaming query itself is
+    * still alive between batches.
     */
   def ping(): Boolean =
-    try {
-      val conn = new java.net.URL(baseUrl).openConnection()
-        .asInstanceOf[java.net.HttpURLConnection]
-      conn.setRequestMethod("GET")
-      conn.setConnectTimeout(bulkTimeoutMs)
-      conn.setReadTimeout(bulkTimeoutMs)
-      try conn.getResponseCode / 100 == 2 finally conn.disconnect()
-    } catch { case scala.util.control.NonFatal(_) => false }
+    try EsHttpSink.status(conf.open("GET", "/")) / 100 == 2
+    catch { case scala.util.control.NonFatal(_) => false }
+
+  /** Idempotent pre-create step, the code form of the reference's
+    * check-then-install (`IndexTemplateExists` → `IndexPutTemplate`,
+    * elasticsearch_test.go:135-146): HEAD `_template/{name}`, PUT
+    * [[EsHttpSink.defaultTemplate]] over `{name}-*` only when absent.
+    * Returns true iff this call installed it.
+    */
+  def ensureTemplate(name: String): Boolean = {
+    val path = s"/_template/$name"
+    if (EsHttpSink.status(conf.open("HEAD", path)) == 200) false
+    else {
+      val put = conf.open("PUT", path)
+      put.setDoOutput(true)
+      put.setRequestProperty("Content-Type", "application/json")
+      val os = put.getOutputStream
+      try os.write(EsHttpSink.defaultTemplate(s"$name-*").getBytes("UTF-8"))
+      finally os.close()
+      val st = EsHttpSink.status(put)
+      require(st / 100 == 2,
+        s"template PUT ${conf.url}$path failed with HTTP $st")
+      true
+    }
+  }
 }
 
 object EsHttpSink {
+
+  /** Docs per `_bulk` request. */
+  val MaxDocsPerBulk = 500
+
+  /** Transient-failure retries per bulk chunk before the stream fails. */
+  val MaxRetries = 3
+
+  /** Where and how to reach the cluster (env names per
+    * [[InjectorApp.fromEnv]]).
+    *
+    * @param url        `scheme://host:port` of the cluster root
+    *                   (`ELASTICSEARCH_SCHEME`, `ELASTICSEARCH_HOST`)
+    * @param backoffMs  constant sleep between retries (`ES_BULK_BACKOFF`)
+    * @param timeoutMs  connect and read timeout of every request
+    *                   (`ES_BULK_TIMEOUT`)
+    * @param user       basic-auth user (`ELASTICSEARCH_USER`); sent only
+    *                   together with `password` (`ELASTICSEARCH_PASSWORD`)
+    * @param ignoreCert trust any certificate and host name on https
+    *                   (`ELASTICSEARCH_IGNORE_CERT`)
+    */
+  final case class Config(
+      url: String,
+      backoffMs: Long = 25L,
+      timeoutMs: Int = 30000,
+      user: Option[String] = None,
+      password: Option[String] = None,
+      ignoreCert: Boolean = false) {
+
+    @transient private lazy val authorization: Option[String] =
+      for (u <- user; p <- password) yield "Basic " +
+        java.util.Base64.getEncoder.encodeToString(s"$u:$p".getBytes("UTF-8"))
+
+    @transient private lazy val trustAll: javax.net.ssl.SSLSocketFactory = {
+      val ctx = javax.net.ssl.SSLContext.getInstance("TLS")
+      ctx.init(null, Array[javax.net.ssl.TrustManager](
+        new javax.net.ssl.X509TrustManager {
+          override def checkClientTrusted(
+              c: Array[java.security.cert.X509Certificate],
+              a: String): Unit = ()
+          override def checkServerTrusted(
+              c: Array[java.security.cert.X509Certificate],
+              a: String): Unit = ()
+          override def getAcceptedIssuers
+              : Array[java.security.cert.X509Certificate] = Array.empty
+        }), new java.security.SecureRandom)
+      ctx.getSocketFactory
+    }
+
+    /** The one connection helper: a `method` request to `url + path` with
+      * the timeout, the auth header and (with `ignoreCert`) the trust-all
+      * TLS settings applied. Plain http without credentials costs
+      * nothing beyond the timeouts.
+      */
+    private[streaming] def open(method: String, path: String)
+        : HttpURLConnection = {
+      val conn = new java.net.URL(url + path).openConnection()
+        .asInstanceOf[HttpURLConnection]
+      conn match {
+        case https: javax.net.ssl.HttpsURLConnection if ignoreCert =>
+          https.setSSLSocketFactory(trustAll)
+          https.setHostnameVerifier((_, _) => true)
+        case _ => ()
+      }
+      conn.setRequestMethod(method)
+      conn.setConnectTimeout(timeoutMs)
+      conn.setReadTimeout(timeoutMs)
+      authorization.foreach(conn.setRequestProperty("Authorization", _))
+      conn
+    }
+  }
+
+  private def status(conn: HttpURLConnection): Int =
+    try conn.getResponseCode finally conn.disconnect()
+
   /** POST the NDJSON body; Right(per-item statuses) on a parseable
     * 2xx `_bulk` response, Left(status) on transport/server failure —
     * including a 2xx body that is not a well-formed `_bulk` response
@@ -141,14 +228,9 @@ object EsHttpSink {
     * routes into the sink's bounded-retry path as a counted retry
     * rather than escaping as an uncounted task failure.
     */
-  private[streaming] def post(url: String, body: String,
-      timeoutMs: Int): Either[Int, Seq[Int]] =
+  private def post(c: Config, body: String): Either[Int, Seq[Int]] =
     try {
-      val conn = new java.net.URL(url).openConnection()
-        .asInstanceOf[java.net.HttpURLConnection]
-      conn.setRequestMethod("POST")
-      conn.setConnectTimeout(timeoutMs)
-      conn.setReadTimeout(timeoutMs)
+      val conn = c.open("POST", "/_bulk")
       conn.setDoOutput(true)
       conn.setRequestProperty("Content-Type", "application/x-ndjson")
       val os = conn.getOutputStream
@@ -170,4 +252,31 @@ object EsHttpSink {
         })
       }
     } catch { case scala.util.control.NonFatal(_) => Left(-1) }
+
+  /** The reference delegates mapping control to an index template
+    * installed BEFORE the first insert (`src/elasticsearch/
+    * elasticsearch_test.go:34-61,135-146`; README.md:44-67): without one,
+    * the first bulk create lets ES dynamic mapping guess every field
+    * type. Default body in the reference's shape — wildcard pattern,
+    * `_source` enabled, strings dynamic-mapped to exact-match fields
+    * (`keyword` is the current ES spelling of the reference's
+    * `not_analyzed string`), `@timestamp` typed date for Kibana.
+    */
+  def defaultTemplate(indexPattern: String): String =
+    s"""{
+       |  "template": "$indexPattern",
+       |  "settings": {},
+       |  "mappings": {
+       |    "_source": {"enabled": true},
+       |    "dynamic_templates": [
+       |      {"strings": {
+       |        "match_mapping_type": "string",
+       |        "mapping": {"type": "keyword"}}}
+       |    ],
+       |    "properties": {
+       |      "@timestamp": {"type": "date"}
+       |    }
+       |  },
+       |  "aliases": {}
+       |}""".stripMargin
 }

@@ -12,17 +12,17 @@ import org.apache.spark.sql.types.StructType
   * `src/elasticsearch/config.go:34-98`): a reference operator can point
   * their existing env at this and get the Spark-native pipeline —
   * Kafka source → record-type-dispatched decode → enrich/route →
-  * ES connector with create semantics, plus probes and the metrics
-  * listener. `fromEnv` is pure (env injected as a Map) so the whole
-  * config surface is unit-testable offline; `start` needs a live
-  * Kafka + ES, exactly like the reference binary.
+  * [[EsHttpSink]] bulk `create`, plus probes and the metrics listener.
+  * `fromEnv` is pure (env injected as a Map) so the whole config
+  * surface is unit-testable offline; `start` needs a live Kafka + ES,
+  * exactly like the reference binary.
   */
 object InjectorApp {
 
   final case class AppConfig(
       source: StreamingPipeline.KafkaSourceConfig,
       injector: InjectorConfig,
-      sink: EsConnectorSink.EsConnectorConfig,
+      sink: EsHttpSink.Config,
       registryUrl: Option[String],
       recordType: String,
       probesPort: Option[Int],
@@ -63,12 +63,23 @@ object InjectorApp {
   }
 
   /** Env-var surface, name-for-name with the reference. Unset/empty vars
-    * take the reference's defaults.
+    * take the reference's defaults. `ELASTICSEARCH_DISABLE_SNIFFING` is
+    * accepted and ignored: the sink talks to the one configured URL, so
+    * there is no node discovery to disable.
     */
   def fromEnv(env: Map[String, String]): AppConfig = {
     def get(k: String) = env.get(k).filter(_.nonEmpty)
     def csv(k: String) =
       get(k).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    // a duration the JDK client cannot take fails here, naming its var,
+    // instead of as an unready pod or a misleading bulk failure later
+    def millis(k: String, min: Long, max: Long): Long =
+      get(k).fold(1000L) { v => // config.go:34-50: 1s default
+        val ms = parseDurationMs(v)
+        require(ms >= min && ms <= max,
+          s"$k=$v is out of range: want $min to $max ms")
+        ms
+      }
     val topics = csv("KAFKA_TOPICS").getOrElse(Nil)
     AppConfig(
       source = StreamingPipeline.KafkaSourceConfig(
@@ -90,20 +101,15 @@ object InjectorApp {
         blacklist = csv("ES_BLACKLISTED_COLUMNS").getOrElse(Nil),
         includeKey =
           get("KAFKA_CONSUMER_INCLUDE_KEY").exists(_.toBoolean)),
-      sink = EsConnectorSink.EsConnectorConfig(
-        host = get("ELASTICSEARCH_HOST").getOrElse("localhost"),
-        scheme =
-          get("ELASTICSEARCH_SCHEME").filter(_ == "https").getOrElse("http"),
+      sink = EsHttpSink.Config(
+        url = get("ELASTICSEARCH_SCHEME").filter(_ == "https")
+          .getOrElse("http") + "://" +
+          get("ELASTICSEARCH_HOST").getOrElse("localhost") + ":9200",
         user = get("ELASTICSEARCH_USER"),
         password = get("ELASTICSEARCH_PASSWORD"),
-        ignoreCertificate =
-          get("ELASTICSEARCH_IGNORE_CERT").exists(_.toBoolean),
-        disableSniffing =
-          get("ELASTICSEARCH_DISABLE_SNIFFING").exists(_.toBoolean),
-        bulkTimeoutMs =
-          get("ES_BULK_TIMEOUT").map(parseDurationMs).getOrElse(1000L),
-        backoffMs =
-          get("ES_BULK_BACKOFF").map(parseDurationMs).getOrElse(1000L)),
+        ignoreCert = get("ELASTICSEARCH_IGNORE_CERT").exists(_.toBoolean),
+        timeoutMs = millis("ES_BULK_TIMEOUT", 1L, Int.MaxValue).toInt,
+        backoffMs = millis("ES_BULK_BACKOFF", 0L, Long.MaxValue)),
       registryUrl = get("SCHEMA_REGISTRY_URL"),
       // the reference treats anything but "json" as avro
       // (encode_decode.go:34-40) — unset means the avro default path
@@ -123,13 +129,13 @@ object InjectorApp {
   }
 
   /** Compose and start the full deployment. The defaults are the
-    * cluster-mode path (live Kafka source, es-hadoop connector sink,
+    * cluster-mode path (live Kafka source, [[EsHttpSink]] on `cfg.sink`,
     * HTTP schema registry); each is an injectable seam so the SAME
     * assembly — record-type dispatch, key decode, probe wiring and all —
     * runs end-to-end in-process against a MemoryStream source, a fixture
-    * registry server, and an [[EsBulkSink]] (StreamingSpec), the way the
-    * reference proves its composition against docker-compose services
-    * (`src/kafka/consumer_test.go:106-147`).
+    * registry server and an in-JVM `_bulk` server (StreamingSpec), the
+    * way the reference proves its composition against docker-compose
+    * services (`src/kafka/consumer_test.go:106-147`).
     *
     * @param jsonSchema payload schema for `KAFKA_CONSUMER_RECORD_TYPE=
     *                   json` (the reference infers none either — JSON
@@ -140,7 +146,9 @@ object InjectorApp {
     * @param source injected Kafka-shaped streaming frame (default: the
     *               live Kafka source built from `cfg.source`)
     * @param startSink starts the assembled stream into a sink (default:
-    *                  the ES connector with `cfg.sink` + `cfg.checkpoint`)
+    *                  `foreachBatch` into an [[EsHttpSink]] on `cfg.sink`,
+    *                  checkpointed at `cfg.checkpoint`; offsets commit
+    *                  only after a batch's bulk succeeds, K6)
     * @param schemaProvider registry override (default: HTTP client
     *                       against `cfg.registryUrl`)
     */
@@ -186,25 +194,28 @@ object InjectorApp {
       cfg.injector, jsonSchema, decoder = Some(decoder),
       keyDecoder = keyDecoder)(
       source.getOrElse(StreamingPipeline.kafkaSource(spark, cfg.source)))
+    val sink = new EsHttpSink(cfg.sink)
     val query = startSink.getOrElse { (a: org.apache.spark.sql.DataFrame) =>
       // the documented pre-create step, BEFORE the first insert: without
       // a template, dynamic mapping guesses every field type
       if (cfg.installTemplate)
-        EsConnectorSink.ensureTemplate(cfg.sink,
-          cfg.injector.indexPrefix +
-            cfg.injector.esIndex.getOrElse(cfg.injector.topic))
-      EsConnectorSink.start(a, cfg.sink, cfg.checkpoint)
+        sink.ensureTemplate(cfg.injector.indexPrefix +
+          cfg.injector.esIndex.getOrElse(cfg.injector.topic))
+      a.writeStream
+        .option("checkpointLocation", cfg.checkpoint)
+        .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
+          sink.write(b, id))
+        .start()
     }.apply(assembled)
     val probes = new Probes(cfg.probesPort.getOrElse(8080),
       cfg.livenessRoute, cfg.readinessRoute)
     // liveness up; readiness tracks the stream AND the sink: the default
-    // cluster path pings the configured ES host like the reference's
-    // ReadinessCheck; an injected sink (tests, the HTTP sink) passes its
-    // own ping. An injected sink WITHOUT a ping skips the check rather
-    // than probing an unrelated default host.
+    // sink pings the configured ES host like the reference's
+    // ReadinessCheck; an injected sink passes its own ping. An injected
+    // sink WITHOUT a ping skips the check rather than probing an
+    // unrelated default host.
     val ping = sinkPing.orElse(
-      if (startSink.isEmpty) Some(() => EsConnectorSink.ping(cfg.sink))
-      else None)
+      if (startSink.isEmpty) Some(() => sink.ping()) else None)
     probes.bind(query, ping)
     probes.serve()
     (query, probes)

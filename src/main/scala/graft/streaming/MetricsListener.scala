@@ -19,7 +19,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *    `inputRowsPerSecond > processedRowsPerSecond` (there is no app
   *    buffer to saturate; admission control is `maxOffsetsPerTrigger`).
   *
-  * M5's conflict/retry/bad-request counters live on [[EsBulkSink]] itself.
+  * M5's inserted/conflict/bad-request/retry counters live on
+  * [[EsHttpSink]] itself.
   */
 class MetricsListener extends StreamingQueryListener {
 

@@ -495,15 +495,4 @@ object StreamingPipeline {
       .groupBy(window(col(timeCol), windowLen).as("w"), col("topic"))
       .agg(count(lit(1)).as("n"))
       .select(col("w.start").as("window_start"), col("topic"), col("n"))
-
-  /** Start the stream into an [[EsBulkSink]] with a checkpoint — offsets
-    * commit after sink success (K6).
-    */
-  def start(assembled: DataFrame, sink: EsBulkSink, checkpoint: String,
-      queryName: String = "graft-injector") =
-    assembled.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((batch: DataFrame, id: Long) => sink.write(batch, id))
-      .start()
 }

@@ -4,10 +4,11 @@ import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.operators.InjectorOps.InjectorConfig
-import graft.streaming.{EsHttpSink, EsConnectorSink, StreamingPipeline}
+import graft.streaming.{EsHttpSink, InjectorApp, StreamingPipeline}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** The reference's tier-2 Elasticsearch contract, run against a REAL
   * protocol boundary: [[graft.streaming.EsHttpSink]] speaks actual
@@ -110,7 +111,7 @@ class EsHttpSinkSpec extends SparkSpec {
     val es = new EsStubServer
     val port = es.start()
     try {
-      val sink = new EsHttpSink(s"http://localhost:$port", maxRetries = 3)
+      val sink = new EsHttpSink(s"http://localhost:$port")
       es.failBulks.set(2)
       sink.write(assembled(Seq((0, 1L, """{"id":"a","n":1}"""))), 0L)
       assert(sink.inserted.sum() == 1 && sink.retries.sum() == 2)
@@ -118,7 +119,7 @@ class EsHttpSinkSpec extends SparkSpec {
       // wedging (SURVEY §7.5.5)
       es.failBulks.set(10)
       val e = intercept[org.apache.spark.SparkException] {
-        new EsHttpSink(s"http://localhost:$port", maxRetries = 2)
+        new EsHttpSink(s"http://localhost:$port")
           .write(assembled(Seq((0, 9L, """{"id":"z","n":9}"""))), 1L)
       }
       assert(e.getMessage.contains("failing the stream") ||
@@ -127,7 +128,6 @@ class EsHttpSinkSpec extends SparkSpec {
   }
 
   test("InjectorApp composes with the HTTP sink: env config → pipeline → real _bulk → probes") {
-    import graft.streaming.InjectorApp
     val es = new EsStubServer
     val port = es.start()
     val dir = Files.createTempDirectory("graft-app-http").toString
@@ -229,7 +229,7 @@ class EsHttpSinkSpec extends SparkSpec {
       // exhaustion on persistent garbage fails the stream like any outage
       es.garbageBulks.set(10)
       val e = intercept[org.apache.spark.SparkException] {
-        new EsHttpSink(s"http://localhost:$port", maxRetries = 2)
+        new EsHttpSink(s"http://localhost:$port")
           .write(assembled(Seq((0, 9L, """{"id":"z","n":9}"""))), 1L)
       }
       assert(e.getMessage.contains("failing the stream") ||
@@ -238,7 +238,6 @@ class EsHttpSinkSpec extends SparkSpec {
   }
 
   test("readiness follows the sink ping: outage flips /ready to 500, recovery flips it back (reference ReadinessCheck = ES ping)") {
-    import graft.streaming.InjectorApp
     val es = new EsStubServer
     val port = es.start()
     val dir = Files.createTempDirectory("graft-app-ready").toString
@@ -281,9 +280,8 @@ class EsHttpSinkSpec extends SparkSpec {
     val port = es.start()
     try {
       // install the template exactly as the startup path does
-      val conn = EsConnectorSink.EsConnectorConfig(
-        host = "localhost", port = port, bulkTimeoutMs = 5000L)
-      assert(EsConnectorSink.ensureTemplate(conn, "my-topic"))
+      val sink = new EsHttpSink(s"http://localhost:$port")
+      assert(sink.ensureTemplate("my-topic"))
       val body = es.template("my-topic").get
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
       val pattern = mapper.readTree(body).get("template").asText()
@@ -294,7 +292,6 @@ class EsHttpSinkSpec extends SparkSpec {
       // hour-suffixed pipeline over the wire
       val hourCfg = InjectorConfig(topic = "my-topic",
         timeSuffix = graft.operators.InjectorOps.HourSuffix)
-      val sink = new EsHttpSink(s"http://localhost:$port")
       sink.write(assembledWith(hourCfg)(
         Seq((0, 1L, """{"id":"a","n":1}"""))), 0L)
       assert(sink.inserted.sum() == 1)
@@ -314,13 +311,121 @@ class EsHttpSinkSpec extends SparkSpec {
     val es = new EsStubServer
     val port = es.start()
     try {
-      val cfg = EsConnectorSink.EsConnectorConfig(
-        host = "localhost", port = port, bulkTimeoutMs = 5000L)
+      val sink = new EsHttpSink(s"http://localhost:$port")
       assert(!es.hasTemplate("my-topic"))
-      assert(EsConnectorSink.ensureTemplate(cfg, "my-topic"))
+      assert(sink.ensureTemplate("my-topic"))
       assert(es.hasTemplate("my-topic"))
       // idempotent second call: HEAD finds it, no re-PUT
-      assert(!EsConnectorSink.ensureTemplate(cfg, "my-topic"))
+      assert(!sink.ensureTemplate("my-topic"))
+      assert(es.requests.asScala.count(_._1 == "PUT") == 1)
+    } finally es.stop()
+  }
+
+  test("ensureTemplate installs once, idempotently, before first insert") {
+    val es = new EsStubServer
+    val port = es.start()
+    try {
+      val sink = new EsHttpSink(s"http://localhost:$port")
+      assert(sink.ensureTemplate("my-topic"))
+      // reference-shaped default body: wildcard pattern over the routed
+      // day/hour indices, exact-match strings, typed @timestamp
+      val body = es.template("my-topic").get
+      assert(body.contains("\"template\": \"my-topic-*\""))
+      assert(body.contains("\"match_mapping_type\": \"string\""))
+      assert(body.contains("\"@timestamp\": {\"type\": \"date\"}"))
+      sink.write(assembled(Seq((0, 1L, """{"id":"a","n":1}"""))), 0L)
+      // a second call sees it installed and does NOT re-PUT
+      assert(!sink.ensureTemplate("my-topic"))
+      val calls = es.requests.asScala.toSeq.map(r => s"${r._1} ${r._2}")
+      assert(calls.count(_ == "PUT /_template/my-topic") == 1)
+      assert(calls.indexOf("PUT /_template/my-topic") <
+        calls.indexOf("POST /_bulk"), calls.mkString(", "))
+      assert(es.template("my-topic").contains(body))
+    } finally es.stop()
+  }
+
+  test("default InjectorApp.start deploys the HTTP sink: template before the first insert, docs over _bulk, readiness on GET /") {
+    val es = new EsStubServer
+    val port = es.start()
+    val dir = Files.createTempDirectory("graft-app-default").toString
+    try {
+      val env = InjectorApp.fromEnv(Map(
+        "KAFKA_TOPICS" -> "my-topic",
+        "KAFKA_CONSUMER_RECORD_TYPE" -> "json",
+        "ES_INDEX_TEMPLATE" -> "true",
+        "PROBES_PORT" -> "0",
+        "CHECKPOINT_LOCATION" -> s"$dir/cp"))
+      val cfg = env.copy(sink = env.sink.copy(url = s"http://localhost:$port"))
+      implicit val sqlCtx = spark.sqlContext
+      val stream = MemoryStream[Msg]
+      stream.addData(Seq(
+        Msg(null, """{"id":"a","n":1}""".getBytes("UTF-8"), "my-topic",
+          0, 1L, Timestamp.valueOf("2024-03-05 10:11:12.345"), 0)))
+      // no startSink, no sinkPing: the production defaults
+      val (q, probes) = InjectorApp.start(spark, cfg, jsonSchema = schema,
+        source = Some(stream.toDF()))
+      def ready(): Int = {
+        val c = new java.net.URL(
+          s"http://127.0.0.1:${probes.boundPort}/readiness").openConnection()
+          .asInstanceOf[java.net.HttpURLConnection]
+        try c.getResponseCode finally c.disconnect()
+      }
+      try {
+        q.processAllAvailable()
+        assert(es.doc("my-topic-2024-03-05", "0:1").exists(
+          _.contains(""""id":"a"""")))
+        val calls = es.requests.asScala.toSeq.map(r => s"${r._1} ${r._2}")
+        val put = calls.indexOf("PUT /_template/my-topic")
+        assert(put >= 0 && put < calls.indexOf("POST /_bulk"),
+          s"template must be installed before the first insert: $calls")
+        assert(ready() == 200)
+        es.healthDown.set(true)
+        assert(ready() == 500, "the default ping must follow GET /")
+        es.healthDown.set(false)
+        assert(ready() == 200)
+      } finally { q.stop(); probes.stop() }
+    } finally es.stop()
+  }
+
+  test("https with ELASTICSEARCH_IGNORE_CERT=true reaches a self-signed cluster; without it the certificate is refused") {
+    val es = new EsStubServer
+    val port = es.start(Some(EsStubServer.selfSigned()))
+    try {
+      def conf(env: Map[String, String]) = InjectorApp.fromEnv(
+        env + ("ELASTICSEARCH_SCHEME" -> "https")).sink
+        .copy(url = s"https://localhost:$port")
+      val trusting =
+        new EsHttpSink(conf(Map("ELASTICSEARCH_IGNORE_CERT" -> "true")))
+      assert(trusting.ping())
+      trusting.write(assembled(Seq((0, 1L, """{"id":"a","n":1}"""))), 0L)
+      assert(trusting.inserted.sum() == 1 && es.docCount == 1)
+      assert(trusting.ensureTemplate("my-topic"))
+      assert(!new EsHttpSink(conf(Map.empty)).ping(),
+        "a self-signed certificate must be refused unless ignored")
+    } finally es.stop()
+  }
+
+  test("basic auth from ELASTICSEARCH_USER/PASSWORD rides on _bulk, GET / and _template; none is sent when unset") {
+    val es = new EsStubServer
+    val port = es.start()
+    try {
+      def exercise(env: Map[String, String]): Set[Option[String]] = {
+        es.requests.clear()
+        val conf = InjectorApp.fromEnv(env).sink
+        val sink = new EsHttpSink(conf.copy(url = s"http://localhost:$port"))
+        sink.write(assembled(Seq((0, 1L, """{"id":"a","n":1}"""))), 0L)
+        assert(sink.ping())
+        sink.ensureTemplate("my-topic")
+        val seen = es.requests.asScala.toSeq
+        assert(Set("POST /_bulk", "GET /", "HEAD /_template/my-topic")
+          .subsetOf(seen.map(r => s"${r._1} ${r._2}").toSet))
+        seen.map(_._3).toSet
+      }
+      val basic = "Basic " + java.util.Base64.getEncoder
+        .encodeToString("u:p".getBytes("UTF-8"))
+      assert(exercise(Map("ELASTICSEARCH_USER" -> "u",
+        "ELASTICSEARCH_PASSWORD" -> "p")) == Set(Some(basic)))
+      assert(exercise(Map.empty) == Set(None))
     } finally es.stop()
   }
 }

@@ -4,7 +4,8 @@ import java.net.InetSocketAddress
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.{HttpExchange, HttpServer, HttpsConfigurator,
+  HttpsServer}
 
 /** In-JVM HTTP server implementing the slice of the Elasticsearch REST
   * API the reference's sink and template bootstrap touch — the offline
@@ -15,7 +16,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * `HEAD|PUT /_template/{name}`. Real TCP, real NDJSON parsing, real
   * status routing — so [[graft.streaming.EsHttpSink]] is exercised on
   * the actual protocol rather than an injected seam. `failBulks`
-  * injects whole-request 503s for the bounded-retry contract.
+  * injects whole-request 503s for the bounded-retry contract; `requests`
+  * logs every call with its `Authorization` header.
   */
 final class EsStubServer {
   private val docs = new ConcurrentHashMap[String, String]()
@@ -33,10 +35,22 @@ final class EsStubServer {
   val garbageBulks = new AtomicInteger(0)
   /** When true, `GET /` (the readiness ping endpoint) answers 503. */
   val healthDown = new java.util.concurrent.atomic.AtomicBoolean(false)
+  /** Every request as (method, path, `Authorization` header), in arrival
+    * order.
+    */
+  val requests = new java.util.concurrent.ConcurrentLinkedQueue[
+    (String, String, Option[String])]()
   @volatile private var server: HttpServer = _
 
-  def start(): Int = {
-    server = HttpServer.create(new InetSocketAddress(0), 0)
+  /** Serves plain http, or https with `tls`'s certificate. */
+  def start(tls: Option[javax.net.ssl.SSLContext] = None): Int = {
+    server = tls match {
+      case Some(ctx) =>
+        val s = HttpsServer.create(new InetSocketAddress(0), 0)
+        s.setHttpsConfigurator(new HttpsConfigurator(ctx))
+        s
+      case None => HttpServer.create(new InetSocketAddress(0), 0)
+    }
     server.createContext("/", (ex: HttpExchange) => handle(ex))
     server.setExecutor(null)
     server.start()
@@ -49,6 +63,15 @@ final class EsStubServer {
     Option(docs.get(s"$index/$id"))
 
   def docCount: Int = docs.size
+
+  /** Every stored document as (index, id, source JSON). */
+  def documents: Seq[(String, String, String)] = {
+    import scala.jdk.CollectionConverters._
+    docs.asScala.toSeq.map { case (k, d) =>
+      val slash = k.indexOf('/')
+      (k.take(slash), k.drop(slash + 1), d)
+    }
+  }
 
   def hasTemplate(name: String): Boolean = templates.containsKey(name)
 
@@ -72,6 +95,8 @@ final class EsStubServer {
   private def handle(ex: HttpExchange): Unit = try {
     val path = ex.getRequestURI.getPath
     val method = ex.getRequestMethod
+    requests.add((method, path,
+      Option(ex.getRequestHeaders.getFirst("Authorization"))))
     (method, path) match {
       case ("GET", "/") => // cluster-info root: the readiness ping target
         if (healthDown.get)
@@ -148,5 +173,35 @@ final class EsStubServer {
   } catch {
     case e: Exception =>
       respond(ex, 500, s"""{"error":"${e.getMessage}"}""")
+  }
+}
+
+object EsStubServer {
+  /** A TLS context whose certificate is self-signed for `CN=es-stub`, so
+    * a client passes it only by trusting any certificate and host name.
+    * The key pair comes from the JDK's own `keytool`.
+    */
+  def selfSigned(): javax.net.ssl.SSLContext = {
+    val pass = "changeit"
+    val ks = java.nio.file.Files.createTempDirectory("graft-tls")
+      .resolve("stub.p12").toString
+    val keytool = java.nio.file.Paths.get(
+      System.getProperty("java.home"), "bin", "keytool").toString
+    val proc = new ProcessBuilder(keytool, "-genkeypair", "-alias", "es",
+      "-keyalg", "RSA", "-keysize", "2048", "-dname", "CN=es-stub",
+      "-validity", "2", "-storetype", "PKCS12", "-keystore", ks,
+      "-storepass", pass, "-keypass", pass)
+      .redirectErrorStream(true).start()
+    val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
+    require(proc.waitFor() == 0, s"keytool failed: $out")
+    val store = java.security.KeyStore.getInstance("PKCS12")
+    val in = new java.io.FileInputStream(ks)
+    try store.load(in, pass.toCharArray) finally in.close()
+    val kmf = javax.net.ssl.KeyManagerFactory.getInstance(
+      javax.net.ssl.KeyManagerFactory.getDefaultAlgorithm)
+    kmf.init(store, pass.toCharArray)
+    val ctx = javax.net.ssl.SSLContext.getInstance("TLS")
+    ctx.init(kmf.getKeyManagers, null, null)
+    ctx
   }
 }

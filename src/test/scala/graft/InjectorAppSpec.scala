@@ -23,6 +23,9 @@ class InjectorAppSpec extends AnyFunSuite {
       "ELASTICSEARCH_SCHEME" -> "https",
       "ELASTICSEARCH_USER" -> "u",
       "ELASTICSEARCH_PASSWORD" -> "p",
+      "ELASTICSEARCH_IGNORE_CERT" -> "true",
+      // accepted for env compatibility; a single-URL client has no node
+      // discovery to disable
       "ELASTICSEARCH_DISABLE_SNIFFING" -> "true",
       "ES_INDEX" -> "events-idx",
       "ES_INDEX_PREFIX" -> "pre-",
@@ -47,10 +50,10 @@ class InjectorAppSpec extends AnyFunSuite {
     assert(cfg.injector.timeSuffix == InjectorOps.HourSuffix)
     assert(cfg.injector.blacklist == Seq("secret", "internal"))
     assert(cfg.injector.includeKey)
-    assert(cfg.sink.host == "es-host" && cfg.sink.scheme == "https")
+    assert(cfg.sink.url == "https://es-host:9200")
     assert(cfg.sink.user.contains("u") && cfg.sink.password.contains("p"))
-    assert(cfg.sink.disableSniffing)
-    assert(cfg.sink.bulkTimeoutMs == 2000L && cfg.sink.backoffMs == 500L)
+    assert(cfg.sink.ignoreCert)
+    assert(cfg.sink.timeoutMs == 2000 && cfg.sink.backoffMs == 500L)
     assert(cfg.registryUrl.contains("http://registry:8081"))
     assert(cfg.recordType == "avro")
     assert(cfg.probesPort.contains(9100))
@@ -62,9 +65,10 @@ class InjectorAppSpec extends AnyFunSuite {
     val cfg = InjectorApp.fromEnv(Map.empty)
     assert(cfg.injector.timeSuffix == InjectorOps.DaySuffix)
     assert(cfg.injector.blacklist.isEmpty && !cfg.injector.includeKey)
-    assert(cfg.sink.bulkTimeoutMs == 1000L) // ES_BULK_TIMEOUT default 1s
-    assert(cfg.sink.backoffMs == 1000L)     // ES_BULK_BACKOFF default 1s
-    assert(cfg.sink.scheme == "http" && !cfg.sink.disableSniffing)
+    assert(cfg.sink.timeoutMs == 1000)   // ES_BULK_TIMEOUT default 1s
+    assert(cfg.sink.backoffMs == 1000L)  // ES_BULK_BACKOFF default 1s
+    assert(cfg.sink.url == "http://localhost:9200")
+    assert(cfg.sink.user.isEmpty && !cfg.sink.ignoreCert)
     // DeserializerFor treats anything but "json" as avro — the reference
     // default with the var unset is the avro path
     assert(cfg.recordType == "avro")
@@ -90,5 +94,31 @@ class InjectorAppSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       InjectorApp.parseDurationMs("ms")
     }
+  }
+
+  test("out-of-range ES_BULK_TIMEOUT / ES_BULK_BACKOFF fail at config time, naming the variable") {
+    def rejects(k: String, v: String): Unit = {
+      val e = intercept[IllegalArgumentException] {
+        InjectorApp.fromEnv(Map(k -> v))
+      }
+      assert(e.getMessage.contains(k), e.getMessage)
+    }
+    // a timeout must be a positive Int of millis for the JDK client:
+    // negative, zero (= wait forever) and past Int.MaxValue (600h would
+    // wrap negative) are all refused
+    rejects("ES_BULK_TIMEOUT", "-2s")
+    rejects("ES_BULK_TIMEOUT", "0")
+    rejects("ES_BULK_TIMEOUT", "100us") // rounds to 0 ms
+    rejects("ES_BULK_TIMEOUT", "600h")
+    rejects("ES_BULK_BACKOFF", "-1ms")
+    // the edges that remain valid
+    assert(InjectorApp.fromEnv(Map("ES_BULK_TIMEOUT" -> "1ms"))
+      .sink.timeoutMs == 1)
+    assert(InjectorApp.fromEnv(Map("ES_BULK_TIMEOUT" -> "596h"))
+      .sink.timeoutMs == 2145600000)
+    assert(InjectorApp.fromEnv(Map("ES_BULK_BACKOFF" -> "0"))
+      .sink.backoffMs == 0L)
+    assert(InjectorApp.fromEnv(Map("ES_BULK_BACKOFF" -> "600h"))
+      .sink.backoffMs == 2160000000L)
   }
 }

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.operators.InjectorOps.InjectorConfig
-import graft.streaming.{EsBulkSink, StreamingPipeline}
+import graft.streaming.{EsHttpSink, StreamingPipeline}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -51,6 +51,12 @@ class StreamingSpec extends SparkSpec {
       ts: String = "2024-03-05 10:11:12.345"): Msg =
     Msg(null, json.getBytes("UTF-8"), "my-topic", partition, offset,
       Timestamp.valueOf(ts), 0)
+
+  /** Reads the documents an [[EsStubServer]] stored. */
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  private def keyUid(doc: com.fasterxml.jackson.databind.JsonNode) =
+    Some(doc.at("/key/uid")).filter(_.isNumber).map(_.asLong)
 
   private val batch1 = Seq(
     msg(0, 1L, """{"id":"a","n":1}"""),
@@ -162,7 +168,7 @@ class StreamingSpec extends SparkSpec {
   test("end-to-end: InjectorApp assembles source→registry decode→route→sink→probes") {
     import com.sun.net.httpserver.HttpServer
     import graft.functions.AvroWire
-    import graft.streaming.{InjectorApp, StreamingPipeline => SP}
+    import graft.streaming.InjectorApp
     val valueSchema = """{"type":"record","name":"P","fields":[
       {"name":"id","type":"string"},{"name":"n","type":"int"}]}"""
       .replaceAll("\n\\s*", "")
@@ -187,9 +193,11 @@ class StreamingSpec extends SparkSpec {
       ex.sendResponseHeaders(404, -1L); ex.close()
     })
     server.start()
+    val es = new EsStubServer
+    val esPort = es.start()
     val dir = Files.createTempDirectory("graft-app").toString
     // the whole deployment from the reference's env vars, name-for-name
-    val cfg = InjectorApp.fromEnv(Map(
+    val env = InjectorApp.fromEnv(Map(
       "KAFKA_TOPICS" -> "my-topic",
       "KAFKA_CONSUMER_RECORD_TYPE" -> "avro",
       "KAFKA_CONSUMER_INCLUDE_KEY" -> "true",
@@ -199,6 +207,7 @@ class StreamingSpec extends SparkSpec {
       "K8S_READINESS_ROUTE" -> "/ready",
       "PROBES_PORT" -> "0",
       "CHECKPOINT_LOCATION" -> s"$dir/cp"))
+    val cfg = env.copy(sink = env.sink.copy(url = s"http://localhost:$esPort"))
     val ts = Timestamp.valueOf("2024-03-05 10:11:12.345")
     def frame(id: String, n: Int) =
       AvroWire.encodeConfluent(4, valueSchema, Map("id" -> id, "n" -> n))
@@ -211,11 +220,10 @@ class StreamingSpec extends SparkSpec {
       Msg(null, frame("b", 2), "my-topic", 0, 2L, ts, 0),
       Msg(akey(8L), "not-avro".getBytes("UTF-8"), "my-topic", 1, 1L, ts, 0),
       Msg("junk".getBytes("UTF-8"), frame("c", 3), "my-topic", 1, 2L, ts, 0)))
-    val sink = new EsBulkSink(s"$dir/index")
+    // default sink: EsHttpSink on cfg.sink, readiness on its ping
     val (q, probes) = InjectorApp.start(spark, cfg, jsonSchema = schema,
       avroReaderSchema = valueSchema, avroKeyReaderSchema = keySchema,
-      source = Some(stream.toDF()),
-      startSink = Some(a => SP.start(a, sink, s"$dir/cp")))
+      source = Some(stream.toDF()))
     def probe(path: String): Int = {
       val c = new java.net.URL(
         s"http://127.0.0.1:${probes.boundPort}$path").openConnection()
@@ -227,10 +235,10 @@ class StreamingSpec extends SparkSpec {
       // probes answer on the CONFIGURED routes; defaults are not mounted
       assert(probe("/live") == 200 && probe("/ready") == 200)
       assert(probe("/healthz") == 404)
-      val docs = sink.contents(spark)
-        .select($"es_index", $"doc_id", $"payload.id",
-          $"payload.n", $"payload.key.uid")
-        .as[(String, String, String, Int, Option[Long])].collect().toSet
+      val docs = es.documents.map { case (index, id, src) =>
+        val d = json.readTree(src)
+        (index, id, d.get("id").asText, d.get("n").asInt, keyUid(d))
+      }.toSet
       // bad-magic value dropped (D6), undecodable avro key dropped (T2);
       // the rest decode through the live registry, route on topic+day,
       // and land once each under partition:offset ids
@@ -240,6 +248,7 @@ class StreamingSpec extends SparkSpec {
     } finally {
       q.stop()
       server.stop(0)
+      es.stop()
     }
     // a stopped stream flips the pod unready; liveness stays up so the
     // orchestrator restarts rather than force-kills (reference semantics)
@@ -248,15 +257,18 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("end-to-end: InjectorApp json record type with json keys") {
-    import graft.streaming.{InjectorApp, StreamingPipeline => SP}
+    import graft.streaming.InjectorApp
     import org.apache.spark.sql.types.{LongType, StructField => SF}
+    val es = new EsStubServer
+    val esPort = es.start()
     val dir = Files.createTempDirectory("graft-app-json").toString
-    val cfg = InjectorApp.fromEnv(Map(
+    val env = InjectorApp.fromEnv(Map(
       "KAFKA_TOPICS" -> "my-topic",
       "KAFKA_CONSUMER_RECORD_TYPE" -> "json",
       "KAFKA_CONSUMER_INCLUDE_KEY" -> "true",
       "PROBES_PORT" -> "0",
       "CHECKPOINT_LOCATION" -> s"$dir/cp"))
+    val cfg = env.copy(sink = env.sink.copy(url = s"http://localhost:$esPort"))
     val ts = Timestamp.valueOf("2024-03-05 10:11:12.345")
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[Msg]
@@ -265,32 +277,29 @@ class StreamingSpec extends SparkSpec {
         """{"id":"a","n":1}""".getBytes("UTF-8"), "my-topic", 0, 1L, ts, 0),
       Msg(null, """{"id":"b","n":2}""".getBytes("UTF-8"),
         "my-topic", 0, 2L, ts, 0)))
-    val sink = new EsBulkSink(s"$dir/index")
     val (q, probes) = InjectorApp.start(spark, cfg, jsonSchema = schema,
       jsonKeySchema = Some(StructType(Seq(SF("uid", LongType)))),
-      source = Some(stream.toDF()),
-      startSink = Some(a => SP.start(a, sink, s"$dir/cp")))
+      source = Some(stream.toDF()))
     try {
       q.processAllAvailable()
-      val docs = sink.contents(spark)
-        .select($"doc_id", $"payload.id", $"payload.key.uid")
-        .as[(String, String, Option[Long])].collect().toSet
+      val docs = es.documents.map { case (_, id, src) =>
+        val d = json.readTree(src)
+        (id, d.get("id").asText, keyUid(d))
+      }.toSet
       assert(docs == Set(("0:1", "a", Some(5L)), ("0:2", "b", None)))
-    } finally q.stop()
+    } finally { q.stop(); es.stop() }
     probes.stop()
     // fail-fast contract: include-key without a key schema is a caller
     // error at ASSEMBLY time for both record types, never a silent no-op
     intercept[IllegalArgumentException] {
       InjectorApp.start(spark, cfg, jsonSchema = schema,
-        source = Some(stream.toDF()),
-        startSink = Some(a => SP.start(a, sink, s"$dir/cp2")))
+        source = Some(stream.toDF()))
     }
     intercept[IllegalArgumentException] {
       InjectorApp.start(spark,
         cfg.copy(recordType = "avro",
           registryUrl = Some("http://registry:8081")),
-        jsonSchema = schema, source = Some(stream.toDF()),
-        startSink = Some(a => SP.start(a, sink, s"$dir/cp3")))
+        jsonSchema = schema, source = Some(stream.toDF()))
     }
   }
 
@@ -1375,112 +1384,137 @@ class StreamingSpec extends SparkSpec {
     assert(kept == Set(2L)) // the doc sharing "beta gamma delta epsilon" dropped
   }
 
+  /** Starts the assembled stream into `sink` with a checkpoint — the
+    * default deployment's sink wiring.
+    */
+  private def startInto(sink: EsHttpSink,
+      source: org.apache.spark.sql.DataFrame, checkpoint: String) =
+    StreamingPipeline.streamingPipeline(cfg, schema)(source).writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
+        sink.write(b, id))
+      .start()
+
   test("sink: redelivered micro-batch leaves exactly one doc per id (K2)") {
     implicit val sqlCtx = spark.sqlContext
+    val es = new EsStubServer
+    val port = es.start()
     val stream = MemoryStream[Msg]
     val dir = Files.createTempDirectory("graft-es").toString
-    val sink = new EsBulkSink(s"$dir/index")
-    val q = StreamingPipeline.start(
-      StreamingPipeline.streamingPipeline(cfg, schema)(stream.toDF()),
-      sink, s"$dir/cp")
+    val sink = new EsHttpSink(s"http://localhost:$port")
+    val q = startInto(sink, stream.toDF(), s"$dir/cp")
     try {
       stream.addData(batch1)
       q.processAllAvailable()
       stream.addData(batch1) // at-least-once redelivery
       q.processAllAvailable()
-    } finally q.stop()
-    val docs = sink.contents(spark).select($"doc_id").as[String].collect()
-    assert(docs.sorted.toSeq == Seq("0:1", "0:2", "1:1"))
+    } finally { q.stop(); es.stop() }
+    assert(es.documents.map(_._2).sorted == Seq("0:1", "0:2", "1:1"))
     assert(sink.conflicts.sum() == 3L)
     assert(sink.inserted.sum() == 3L)
   }
 
   test("sink: transient failures retry with backoff then succeed (K4)") {
-    val dir = Files.createTempDirectory("graft-es2").toString
-    var failures = 2
-    val sink = new EsBulkSink(s"$dir/index", maxRetries = 3,
-      transientFailure = () => { failures -= 1; failures >= 0 })
-    val df = StreamingPipeline.streamingPipeline(cfg, schema)(batch1.toDF())
-    sink.write(df, 0L)
-    assert(sink.retries.sum() == 2L)
-    assert(sink.contents(spark).count() == 3L)
-  }
-
-  test("sink: exhausted retries fail the batch instead of wedging (K4)") {
-    val dir = Files.createTempDirectory("graft-es3").toString
-    val sink = new EsBulkSink(s"$dir/index", maxRetries = 2,
-      transientFailure = () => true)
-    val df = StreamingPipeline.streamingPipeline(cfg, schema)(batch1.toDF())
-    intercept[RuntimeException] { sink.write(df, 0L) }
-    assert(sink.retries.sum() == 2L)
+    implicit val sqlCtx = spark.sqlContext
+    val es = new EsStubServer
+    val port = es.start()
+    val stream = MemoryStream[Msg]
+    val cp = Files.createTempDirectory("graft-es2").toString + "/cp"
+    val sink = new EsHttpSink(s"http://localhost:$port")
+    try {
+      es.failBulks.set(2) // within the retry budget
+      stream.addData(batch1)
+      val q = startInto(sink, stream.toDF(), cp)
+      try q.processAllAvailable() finally q.stop()
+      assert(sink.retries.sum() == 2L && sink.inserted.sum() == 3L)
+      assert(es.docCount == 3)
+      // K6: the batch commits once the retried write has succeeded
+      assert(new java.io.File(s"$cp/commits/0").exists)
+    } finally es.stop()
   }
 
   test("sink: bad records are counted and dropped, not retried (K3)") {
-    val dir = Files.createTempDirectory("graft-es4").toString
-    val sink = new EsBulkSink(s"$dir/index",
-      badRecord = Some(col("payload.n") < 0))
-    // a record MISSING the predicate field (null n) is malformed too —
-    // the null predicate must classify bad, not slip through as good
-    val bad = batch1 :+ msg(2, 9L, """{"id":"z","n":-5}""") :+
-      msg(2, 10L, """{"id":"y"}""")
-    sink.write(StreamingPipeline.streamingPipeline(cfg, schema)(bad.toDF()), 0L)
-    assert(sink.badRequests.sum() == 2L)
-    assert(sink.contents(spark).count() == 3L)
+    implicit val sqlCtx = spark.sqlContext
+    val es = new EsStubServer
+    val port = es.start()
+    val stream = MemoryStream[Msg]
+    val cp = Files.createTempDirectory("graft-es4").toString + "/cp"
+    val sink = new EsHttpSink(s"http://localhost:$port")
+    // the stub answers 400 for a doc whose `reject` field is true
+    val rejectSchema = schema.add(StructField("reject", BooleanType))
+    val q = StreamingPipeline.streamingPipeline(cfg, rejectSchema)(
+        stream.toDF()).writeStream
+      .option("checkpointLocation", cp)
+      .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
+        sink.write(b, id))
+      .start()
+    try {
+      stream.addData(batch1 :+
+        msg(2, 9L, """{"id":"z","n":-5,"reject":true}""") :+
+        msg(2, 10L, """{"id":"y","n":-6,"reject":true}"""))
+      q.processAllAvailable()
+    } finally { q.stop(); es.stop() }
+    assert(sink.badRequests.sum() == 2L && sink.retries.sum() == 0L)
+    assert(sink.inserted.sum() == 3L)
+    assert(es.documents.map(_._2).sorted == Seq("0:1", "0:2", "1:1"))
+    // a dropped doc does not hold the batch back
+    assert(new java.io.File(s"$cp/commits/0").exists)
   }
 
-  test("sink: one evaluation per batch, no full-index rescan (K2 scale)") {
-    val dir = Files.createTempDirectory("graft-es5").toString
-    val index = s"$dir/index"
-    val sink = new EsBulkSink(index)
-    // probe column: counts per-row evaluations of the micro-batch plan
-    val evals = spark.sparkContext.longAccumulator("batch-evals")
-    val probe = udf { (id: String) => evals.add(1L); id }
-    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
-    val ql = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit =
-        plans.synchronized { plans += qe.executedPlan.toString }
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(ql)
+  test("sink: exhausted retries fail the batch instead of wedging (K4)") {
+    implicit val sqlCtx = spark.sqlContext
+    val es = new EsStubServer
+    val port = es.start()
+    val stream = MemoryStream[Msg]
+    val cp = Files.createTempDirectory("graft-es3").toString + "/cp"
+    def sink() = new EsHttpSink(s"http://localhost:$port")
     try {
-      def batch() = StreamingPipeline.streamingPipeline(cfg, schema)(
-        batch1.toDF()).withColumn("probe", probe($"payload.id"))
-      val fresh2 = Seq(
+      es.failBulks.set(Int.MaxValue)
+      stream.addData(batch1)
+      val failing = sink()
+      val q = startInto(failing, stream.toDF(), cp)
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.processAllAvailable()
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains(
+          "failing the stream")), e.toString)
+      assert(!q.isActive && es.docCount == 0)
+      // K6: the failed batch's offsets were never committed, so a restart
+      // from the same checkpoint replays it once the cluster is back
+      assert(!new java.io.File(s"$cp/commits/0").exists)
+      es.failBulks.set(0)
+      val healthy = sink()
+      val q2 = startInto(healthy, stream.toDF(), cp)
+      try q2.processAllAvailable() finally q2.stop()
+      assert(healthy.inserted.sum() == 3L && es.docCount == 3)
+    } finally es.stop()
+  }
+
+  test("sink: one evaluation of the batch plan per write, 409s and retries included (K2 scale)") {
+    val es = new EsStubServer
+    val port = es.start()
+    try {
+      val sink = new EsHttpSink(s"http://localhost:$port")
+      // probe column: counts per-row evaluations of the micro-batch plan
+      val evals = spark.sparkContext.longAccumulator("batch-evals")
+      val probe = udf { (id: String) => evals.add(1L); id }
+      def batch(rows: Seq[Msg]) = StreamingPipeline.streamingPipeline(
+        cfg, schema)(rows.toDF()).withColumn("doc_id", probe($"doc_id"))
+      val fresh = Seq(
         msg(3, 1L, """{"id":"x","n":7}"""),
         msg(3, 2L, """{"id":"y","n":8}"""),
         msg(4, 1L, """{"id":"z","n":9}"""))
-      def batchFresh() = StreamingPipeline.streamingPipeline(cfg, schema)(
-        fresh2.toDF()).withColumn("probe", probe($"payload.id"))
-      sink.write(batch(), 0L)      // 3 fresh (bloom empty: store skipped)
-      sink.write(batch(), 1L)      // 3 conflicts — bloom hit, store consulted
-      sink.write(batchFresh(), 2L) // 3 fresh — bloom miss, store skipped
-      assert(sink.inserted.sum() == 6L && sink.conflicts.sum() == 3L)
-      // one evaluation of the 3-row batch per write (cache-backed counters
-      // + append), not one per counter as the old 4-action shape did
-      assert(evals.value == 9L, s"batch evaluated ${evals.value / 3.0}x")
-      val deadline = System.currentTimeMillis() + 10000
-      while (plans.synchronized(plans.size) < 6 &&
-        System.currentTimeMillis() < deadline) Thread.sleep(50)
-      val seen = plans.synchronized(plans.toList)
-      // conflict detection must read the compact id store, never re-scan
-      // the ever-growing document index
-      val indexScans = seen.filter(p =>
-        p.contains(s"$index]") && !p.contains("InsertIntoHadoopFsRelation"))
-      assert(indexScans.isEmpty,
-        s"found ${indexScans.size} plan(s) re-reading the full index")
-      // with the bloom gate engaged, even the ID STORE is consulted only
-      // for the one batch whose ids might be present (write 1) — the two
-      // all-fresh batches never read it
-      val idScans = seen.filter(p =>
-        p.contains(s"${index}_ids") &&
-          !p.contains("InsertIntoHadoopFsRelation"))
-      assert(idScans.size == 1,
-        s"id store consulted ${idScans.size}x, want 1 (bloom-gated)")
-    } finally spark.listenerManager.unregister(ql)
+      sink.write(batch(batch1), 0L)          // 3 fresh
+      sink.write(batch(batch1 ++ fresh), 1L) // 3 conflicts + 3 fresh
+      es.failBulks.set(1)
+      sink.write(batch(batch1), 2L)          // one 503, then 3 conflicts
+      assert(sink.inserted.sum() == 6L && sink.conflicts.sum() == 6L)
+      assert(sink.retries.sum() == 1L && es.docCount == 6)
+      // retries resend the rows already in hand; neither they nor the
+      // 409s re-run the upstream plan
+      assert(evals.value == 12L, s"batch rows evaluated ${evals.value}x, want 12")
+    } finally es.stop()
   }
 
   test("metrics listener reports throughput and batch duration (M1-M3)") {
