@@ -249,15 +249,8 @@ object AvroWire {
   }
 
   /** Column wrapper: decode a Confluent-framed Avro binary column into a
-    * struct of the reader schema, writer schemas from a config-map registry.
-    */
-  def fromConfluentAvro(value: Column, readerSchemaJson: String,
-      writerSchemaJsons: Map[Int, String]): Column =
-    fromConfluentAvro(value, readerSchemaJson,
-      MapSchemaProvider(writerSchemaJsons))
-
-  /** Column wrapper with an explicit [[SchemaProvider]] (config map or
-    * cached-HTTP registry client).
+    * struct of the reader schema, writer schemas from `provider` (a
+    * [[MapSchemaProvider]] config map or the cached-HTTP registry client).
     */
   def fromConfluentAvro(value: Column, readerSchemaJson: String,
       provider: SchemaProvider): Column =

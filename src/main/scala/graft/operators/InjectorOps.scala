@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.{MapSchemaProvider, SchemaProvider}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -16,7 +17,8 @@ import org.apache.spark.sql.types._
   *    src/kafka/consumer.go:148-159
   *  - T1 `@timestamp` = message time in epoch millis, overwrites any payload
   *    field of the same name: src/kafka/encode_decode.go:26,64,83-85,96
-  *  - T2 optional `key` inclusion (nil key skipped): encode_decode.go:27,66-72
+  *  - T2 optional decoded `key` inclusion (nil key skipped):
+  *    encode_decode.go:27,66-72,99-105
   *  - T3 top-level column blacklist: src/models/record.go:44-56
   *  - R1 routing value: string/int32 only, anything else errors:
   *    src/models/record.go:30-42
@@ -51,6 +53,8 @@ object InjectorOps {
       docIdColumn: Option[String] = None,
       timeSuffix: TimeSuffix = DaySuffix,
       blacklist: Seq[String] = Nil,
+      // KAFKA_CONSUMER_INCLUDE_KEY: read by the deployment to decide whether
+      // to build a key decoder; `pipeline` takes the decoder itself
       includeKey: Boolean = false)
 
   // ---------------------------------------------------------------- decode
@@ -93,34 +97,21 @@ object InjectorOps {
     df.withColumn("payload", // backticks: withField parses multipart names
       col("payload").withField("`@timestamp`", unix_millis(col("timestamp"))))
 
-  /** T2: optionally merge the decoded key into the payload as field `key`.
-    * The reference skips the field entirely for a nil key
-    * (encode_decode.go:66-72); Catalyst structs are fixed-schema, so the
-    * field is always present and null for a nil key — the JSON serialization
-    * dual (`to_json` with ignoreNullFields, Spark's default) emits the same
-    * bytes as the reference for that row.
-    */
-  def includeKey(include: Boolean, decodedKey: Column)(df: DataFrame): DataFrame =
-    if (!include) df
-    else df.withColumn("payload", col("payload").withField("key", decodedKey))
-
-  /** T2 full semantics: decode the message key ITSELF and merge the decoded
-    * struct into the payload as field `key` — the reference decodes the key
-    * with its own registry lookup (Avro: encode_decode.go:66-72; JSON:
-    * encode_decode.go:99-105), so the key is a nested record, not a string.
-    * Reference semantics preserved exactly:
-    *  - nil key → record kept, `key` field omitted (null here — fixed
-    *    Catalyst schema; the to_json dual emits identical bytes);
+  /** T2: decode the message key and merge the result into the payload as
+    * field `key`. The reference decodes the key with its own registry
+    * lookup (Avro: encode_decode.go:66-72; JSON: encode_decode.go:99-105),
+    * so the key is a nested record, not a string. Reference semantics
+    * preserved exactly:
+    *  - nil key → record kept, `key` field omitted (null here — Catalyst
+    *    structs are fixed-schema; the `to_json` dual with
+    *    ignoreNullFields, Spark's default, emits identical bytes);
     *  - non-nil key that fails decode → the whole record errors; under our
     *    D6 poison-drop policy that means the record is DROPPED.
     * The PlanBarrier stops the decode expression being re-evaluated by the
     * drop filter (one decode per row, same as the value path).
     */
-  def includeDecodedKey(include: Boolean, decode: Column => Column)(
-      df: DataFrame): DataFrame =
-    if (!include) df
-    else df
-      .withColumn("__key_dec",
+  def includeDecodedKey(decode: Column => Column)(df: DataFrame): DataFrame =
+    df.withColumn("__key_dec",
         graft.functions.PlanBarrier.opaque(decode(col("key"))))
       .filter(col("key").isNull || col("__key_dec").isNotNull)
       .withColumn("payload", col("payload").withField("key", col("__key_dec")))
@@ -131,7 +122,7 @@ object InjectorOps {
     * same [[graft.functions.SchemaProvider]] seam.
     */
   def avroKeyDecoder(readerSchemaJson: String,
-      provider: graft.functions.SchemaProvider): Column => Column =
+      provider: SchemaProvider): Column => Column =
     key => graft.functions.AvroWire.fromConfluentAvro(
       key, readerSchemaJson, provider)
 
@@ -208,33 +199,25 @@ object InjectorOps {
   /** D1: record-type dispatch — the reference's `DeserializerFor`
     * (src/kafka/encode_decode.go:34-40), selecting the decode transform at
     * plan-build time; an unknown type errors exactly like the reference's
-    * "Invalid parser type".
+    * "Invalid parser type". The avro branch resolves writer schemas through
+    * `provider` (a config map or the HTTP registry, cmd/injector.go:34-37);
+    * it is by-name, so the json branch never builds one.
     */
   def decoderFor(recordType: String, jsonSchema: StructType,
       avroReaderSchema: String = "",
-      avroWriterSchemas: Map[Int, String] = Map.empty)
+      provider: => SchemaProvider = MapSchemaProvider(Map.empty))
       : DataFrame => DataFrame = recordType match {
     case "json" => jsonDecode(jsonSchema)
-    case "avro" => df => df
-      .withColumn("payload", graft.functions.PlanBarrier.opaque(
-        graft.functions.AvroWire.fromConfluentAvro(
-          col("value"), avroReaderSchema, avroWriterSchemas)))
-      .filter(col("payload").isNotNull)
+    case "avro" =>
+      val writers = provider
+      df => df
+        .withColumn("payload", graft.functions.PlanBarrier.opaque(
+          graft.functions.AvroWire.fromConfluentAvro(
+            col("value"), avroReaderSchema, writers)))
+        .filter(col("payload").isNotNull)
     case other =>
       throw new IllegalArgumentException(s"Invalid parser type $other")
   }
-
-  /** D1 avro branch against a live [[graft.functions.SchemaProvider]]
-    * (registry-resolved writer schemas) instead of a config-frozen map —
-    * the deployment shape (`cmd/injector.go:34-37`).
-    */
-  def decoderForProvider(avroReaderSchema: String,
-      provider: graft.functions.SchemaProvider): DataFrame => DataFrame =
-    df => df
-      .withColumn("payload", graft.functions.PlanBarrier.opaque(
-        graft.functions.AvroWire.fromConfluentAvro(
-          col("value"), avroReaderSchema, provider)))
-      .filter(col("payload").isNotNull)
 
   // ----------------------------------------------------------------- sink
 
@@ -253,18 +236,30 @@ object InjectorOps {
       .drop("__rn")
   }
 
-  /** Full hot path (SURVEY.md §3.2): decode → enrich → route → assemble.
-    * One narrow pipeline, no shuffle until an (optional) dedup.
+  /** Full hot path (SURVEY.md §3.2): decode → enrich → route → assemble,
+    * the one composition both the oracle-checked `entry_pipeline` and the
+    * deployed stream (`InjectorApp.start`) run. `decoder` is the D1 seam
+    * ([[decoderFor]], default JSON into `schema`); `keyDecoder` set merges
+    * the decoded key (T2, [[includeDecodedKey]]). `dedupWatermark` bounds
+    * an in-stream K2 dedup: the reference's dedup state is the ES index
+    * (unbounded, free), a stream's must be bounded, so duplicate ids drop
+    * only within that delay of event time (SURVEY.md §7.5.4); `None`
+    * leaves K2 to the sink's create-op, like the reference.
     */
   def pipeline(cfg: InjectorConfig, schema: StructType,
-      decodedKey: Option[Column] = None)(df: DataFrame): DataFrame = {
-    val decoded = (nilMessageFilter()(_: DataFrame))
-      .andThen(jsonDecode(schema))
+      decoder: Option[DataFrame => DataFrame] = None,
+      keyDecoder: Option[Column => Column] = None,
+      dedupWatermark: Option[String] = None)(df: DataFrame): DataFrame = {
+    val routed = (nilMessageFilter()(_: DataFrame))
+      .andThen(decoder.getOrElse(jsonDecode(schema)(_)))
       .andThen(injectTimestamp)
-      .andThen(includeKey(cfg.includeKey && decodedKey.isDefined,
-        decodedKey.getOrElse(lit(null))))
+      .andThen(keyDecoder.fold(identity[DataFrame] _)(includeDecodedKey(_)))
       .andThen(blacklist(cfg.blacklist))
+      .andThen(indexName(cfg))
+      .andThen(docId(cfg))
       .apply(df)
-    assemble(docId(cfg)(indexName(cfg)(decoded)))
+    assemble(dedupWatermark.fold(routed)(delay =>
+      routed.withWatermark("timestamp", delay)
+        .dropDuplicatesWithinWatermark("doc_id")))
   }
 }

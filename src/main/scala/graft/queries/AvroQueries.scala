@@ -143,7 +143,7 @@ object AvroQueries {
     // single home.
     "d3_avro_decode" -> ((s, dir) =>
       InjectorOps.decoderFor("avro", KafkaShape.eventPayloadSchema,
-        reader, writers)(wire(s, dir))
+        reader, MapSchemaProvider(writers))(wire(s, dir))
         .select(col("event_id"), col("payload.event_type").as("event_type"),
           col("payload.value").as("value"))),
 
@@ -151,8 +151,9 @@ object AvroQueries {
     // decimal/date/timestamp logical types, enum, 3-branch union, nested
     // records-in-array, fixed. Every output re-derivable by the oracle.
     "d3_avro_rich" -> ((s, dir) =>
-      InjectorOps.decoderForProvider(richSchema,
-        MapSchemaProvider(Map(richId -> richSchema)))(richWire(s, dir))
+      InjectorOps.decoderFor("avro", KafkaShape.eventPayloadSchema,
+        richSchema, MapSchemaProvider(Map(richId -> richSchema)))(
+        richWire(s, dir))
         .withColumnRenamed("payload", "p")
         .select(
           col("event_id"),
@@ -178,8 +179,9 @@ object AvroQueries {
     // map-side-combined groupBy over |keys| buckets; sums stay exact
     // BIGINT (item values are longs).
     "es_nested_items" -> ((s, dir) =>
-      InjectorOps.decoderForProvider(richSchema,
-        MapSchemaProvider(Map(richId -> richSchema)))(richWire(s, dir))
+      InjectorOps.decoderFor("avro", KafkaShape.eventPayloadSchema,
+        richSchema, MapSchemaProvider(Map(richId -> richSchema)))(
+        richWire(s, dir))
         .select(col("event_id"),
           explode(col("payload.items")).as("item"))
         .select(col("event_id"), col("item.k").as("k"),
@@ -201,7 +203,7 @@ object AvroQueries {
             .otherwise(keyEncodeUdf(decode(col("key"), "UTF-8").cast("long"))))
       val decoded = InjectorOps.jsonDecode(KafkaShape.eventPayloadSchema)(
         InjectorOps.nilMessageFilter()(framed))
-      InjectorOps.includeDecodedKey(include = true,
+      InjectorOps.includeDecodedKey(
         InjectorOps.avroKeyDecoder(keySchema,
           MapSchemaProvider(Map(keyId -> keySchema))))(decoded)
         .select(col("offset").as("event_id"),

@@ -86,8 +86,7 @@ object InjectorQueries {
     // T2: decoded Kafka key merged into the payload as `key`.
     "t2_key_include" -> ((s, dir) => {
       val df = decoded(s, dir)
-      includeKey(include = true,
-        decodedKey = decode(col("key"), "UTF-8").cast("long"))(df)
+      includeDecodedKey(k => decode(k, "UTF-8").cast("long"))(df)
         .select(col("offset").as("event_id"), col("payload.key").as("key"))
     }),
 
@@ -102,7 +101,7 @@ object InjectorQueries {
           .when(col("offset") % 101 === 0, encode(lit("{bad"), "UTF-8"))
           .otherwise(encode(concat(lit("{\"uid\":"),
             decode(col("key"), "UTF-8"), lit("}")), "UTF-8")))
-      includeDecodedKey(include = true,
+      includeDecodedKey(
         jsonKeyDecoder(StructType(Seq(StructField("uid", LongType)))))(
         jsonDecode(schema)(nilMessageFilter()(framed)))
         .select(col("offset").as("event_id"),

@@ -63,7 +63,8 @@ object InjectorApp {
   }
 
   /** Env-var surface, name-for-name with the reference. Unset/empty vars
-    * take the reference's defaults. `ELASTICSEARCH_DISABLE_SNIFFING` is
+    * take the reference's defaults; a set value that does not parse fails
+    * here, naming its variable. `ELASTICSEARCH_DISABLE_SNIFFING` is
     * accepted and ignored: the sink talks to the one configured URL, so
     * there is no node discovery to disable.
     */
@@ -71,23 +72,32 @@ object InjectorApp {
     def get(k: String) = env.get(k).filter(_.nonEmpty)
     def csv(k: String) =
       get(k).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    def parsed[T](k: String, want: String)(parse: String => Option[T]) =
+      get(k).map(v => parse(v).getOrElse(
+        throw new IllegalArgumentException(s"$k=$v is invalid: want $want")))
+    def bool(k: String): Boolean =
+      parsed(k, "true or false")(_.toBooleanOption).getOrElse(false)
+    def long(k: String, min: Long, max: Long): Option[Long] =
+      parsed(k, s"an integer from $min to $max")(
+        _.toLongOption.filter(n => n >= min && n <= max))
     // a duration the JDK client cannot take fails here, naming its var,
     // instead of as an unready pod or a misleading bulk failure later
     def millis(k: String, min: Long, max: Long): Long =
-      get(k).fold(1000L) { v => // config.go:34-50: 1s default
-        val ms = parseDurationMs(v)
-        require(ms >= min && ms <= max,
-          s"$k=$v is out of range: want $min to $max ms")
-        ms
-      }
+      parsed(k, s"a Go duration from $min to $max ms")(v =>
+        scala.util.Try(parseDurationMs(v)).toOption
+          .filter(ms => ms >= min && ms <= max))
+        .getOrElse(1000L) // config.go:34-50: 1s default
     val topics = csv("KAFKA_TOPICS").getOrElse(Nil)
+    // Basic credentials must never fall back to plaintext on a typo
+    val scheme = parsed("ELASTICSEARCH_SCHEME", "http or https")(v =>
+      Some(v.toLowerCase).filter(s => s == "http" || s == "https"))
     AppConfig(
       source = StreamingPipeline.KafkaSourceConfig(
         bootstrapServers = get("KAFKA_ADDRESS").getOrElse("localhost:9092"),
         topics = topics,
         // S2: the reference's batch size bounds in-flight records
         maxOffsetsPerTrigger =
-          get("KAFKA_CONSUMER_BATCH_SIZE").map(_.toLong)),
+          long("KAFKA_CONSUMER_BATCH_SIZE", 1L, Long.MaxValue)),
       injector = InjectorConfig(
         topic = topics.headOption.getOrElse("events"),
         esIndex = get("ES_INDEX"),
@@ -99,22 +109,22 @@ object InjectorApp {
           case _ => InjectorOps.DaySuffix // config.go:51-57: day default
         },
         blacklist = csv("ES_BLACKLISTED_COLUMNS").getOrElse(Nil),
-        includeKey =
-          get("KAFKA_CONSUMER_INCLUDE_KEY").exists(_.toBoolean)),
+        includeKey = bool("KAFKA_CONSUMER_INCLUDE_KEY")),
       sink = EsHttpSink.Config(
-        url = get("ELASTICSEARCH_SCHEME").filter(_ == "https")
-          .getOrElse("http") + "://" +
+        url = scheme.getOrElse("http") + "://" +
           get("ELASTICSEARCH_HOST").getOrElse("localhost") + ":9200",
         user = get("ELASTICSEARCH_USER"),
         password = get("ELASTICSEARCH_PASSWORD"),
-        ignoreCert = get("ELASTICSEARCH_IGNORE_CERT").exists(_.toBoolean),
+        ignoreCert = bool("ELASTICSEARCH_IGNORE_CERT"),
         timeoutMs = millis("ES_BULK_TIMEOUT", 1L, Int.MaxValue).toInt,
         backoffMs = millis("ES_BULK_BACKOFF", 0L, Long.MaxValue)),
       registryUrl = get("SCHEMA_REGISTRY_URL"),
-      // the reference treats anything but "json" as avro
-      // (encode_decode.go:34-40) — unset means the avro default path
-      recordType = get("KAFKA_CONSUMER_RECORD_TYPE").getOrElse("avro"),
-      probesPort = get("PROBES_PORT").map(_.toInt),
+      // DeserializerFor (encode_decode.go:34-40): "json" is the special
+      // case, anything else — unset included — takes the avro path
+      recordType =
+        if (get("KAFKA_CONSUMER_RECORD_TYPE").contains("json")) "json"
+        else "avro",
+      probesPort = long("PROBES_PORT", 0L, 65535L).map(_.toInt),
       // the reference reads probe paths from env (probes.go:9-11) — a
       // deployment migrating env name-for-name keeps its configured routes
       livenessRoute = get("K8S_LIVENESS_ROUTE").getOrElse("/healthz"),
@@ -123,7 +133,7 @@ object InjectorApp {
       // leaves template install to a manual PUT its README prescribes
       // (README.md:53-67); ES_INDEX_TEMPLATE=true makes that documented
       // pre-create step part of startup
-      installTemplate = get("ES_INDEX_TEMPLATE").exists(_.toBoolean),
+      installTemplate = bool("ES_INDEX_TEMPLATE"),
       checkpoint = get("CHECKPOINT_LOCATION")
         .getOrElse("/tmp/graft-injector-checkpoint"))
   }
@@ -162,53 +172,57 @@ object InjectorApp {
       schemaProvider: Option[SchemaProvider] = None,
       sinkPing: Option[() => Boolean] = None)
       : (StreamingQuery, Probes) = {
-    def provider: SchemaProvider = schemaProvider.getOrElse(
+    // one registry client (and so one per-executor schema cache) shared by
+    // the value and key decoders; built only for avro records
+    lazy val provider: SchemaProvider = schemaProvider.getOrElse(
       new HttpSchemaProvider(
         cfg.registryUrl.getOrElse(throw new IllegalArgumentException(
           "SCHEMA_REGISTRY_URL is required for avro records"))))
-    // DeserializerFor semantics (encode_decode.go:34-40): "json" is the
-    // special case, EVERYTHING else takes the avro path
-    val decoder = cfg.recordType match {
-      case "json" => InjectorOps.decoderFor("json", jsonSchema)
-      case _ => InjectorOps.decoderForProvider(avroReaderSchema, provider)
-    }
-    // T2 full: the key decodes with the value's record type — Avro keys
-    // through their own registry lookup (encode_decode.go:66-72), JSON
-    // keys into the supplied struct (encode_decode.go:99-105). A config
-    // the reference honors must not silently no-op: missing key schema
+    val decoder = InjectorOps.decoderFor(cfg.recordType, jsonSchema,
+      avroReaderSchema, provider)
+    // T2: the key decodes with the value's record type (decoderFor has
+    // already refused any type but json and avro) — Avro keys through
+    // their own registry lookup (encode_decode.go:66-72), JSON keys into
+    // the supplied struct (encode_decode.go:99-105). A config the
+    // reference honors must not silently no-op: a missing key schema
     // with includeKey on is a caller error.
-    val keyDecoder =
-      if (!cfg.injector.includeKey) None
-      else cfg.recordType match {
-        case "json" => Some(InjectorOps.jsonKeyDecoder(
-          jsonKeySchema.getOrElse(throw new IllegalArgumentException(
-            "jsonKeySchema is required when KAFKA_CONSUMER_INCLUDE_KEY=true " +
-              "with json records"))))
-        case _ =>
-          require(avroKeyReaderSchema.nonEmpty,
-            "avroKeyReaderSchema is required when " +
-              "KAFKA_CONSUMER_INCLUDE_KEY=true with avro records")
-          Some(InjectorOps.avroKeyDecoder(avroKeyReaderSchema, provider))
+    val keyDecoder = Option.when(cfg.injector.includeKey) {
+      if (cfg.recordType == "json")
+        InjectorOps.jsonKeyDecoder(jsonKeySchema.getOrElse(
+          throw new IllegalArgumentException("jsonKeySchema is required " +
+            "when KAFKA_CONSUMER_INCLUDE_KEY=true with json records")))
+      else {
+        require(avroKeyReaderSchema.nonEmpty,
+          "avroKeyReaderSchema is required when " +
+            "KAFKA_CONSUMER_INCLUDE_KEY=true with avro records")
+        InjectorOps.avroKeyDecoder(avroKeyReaderSchema, provider)
       }
-    val assembled = StreamingPipeline.streamingPipeline(
-      cfg.injector, jsonSchema, decoder = Some(decoder),
-      keyDecoder = keyDecoder)(
+    }
+    val assembled = InjectorOps.pipeline(cfg.injector, jsonSchema,
+      decoder = Some(decoder), keyDecoder = keyDecoder)(
       source.getOrElse(StreamingPipeline.kafkaSource(spark, cfg.source)))
     val sink = new EsHttpSink(cfg.sink)
-    val query = startSink.getOrElse { (a: org.apache.spark.sql.DataFrame) =>
-      // the documented pre-create step, BEFORE the first insert: without
-      // a template, dynamic mapping guesses every field type
-      if (cfg.installTemplate)
-        sink.ensureTemplate(cfg.injector.indexPrefix +
-          cfg.injector.esIndex.getOrElse(cfg.injector.topic))
-      a.writeStream
-        .option("checkpointLocation", cfg.checkpoint)
-        .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
-          sink.write(b, id))
-        .start()
-    }.apply(assembled)
+    // probes bind their port BEFORE the stream starts, so a bad or busy
+    // port fails the start with no query left running; both checks read
+    // false until `bind` (probes.go:22-30)
     val probes = new Probes(cfg.probesPort.getOrElse(8080),
       cfg.livenessRoute, cfg.readinessRoute)
+    probes.serve()
+    val query = try startSink.getOrElse {
+      (a: org.apache.spark.sql.DataFrame) =>
+        // the documented pre-create step, BEFORE the first insert: without
+        // a template, dynamic mapping guesses every field type
+        if (cfg.installTemplate)
+          sink.ensureTemplate(cfg.injector.indexPrefix +
+            cfg.injector.esIndex.getOrElse(cfg.injector.topic))
+        a.writeStream
+          .option("checkpointLocation", cfg.checkpoint)
+          .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
+            sink.write(b, id))
+          .start()
+    }.apply(assembled) catch {
+      case e: Throwable => probes.stop(); throw e
+    }
     // liveness up; readiness tracks the stream AND the sink: the default
     // sink pings the configured ES host like the reference's
     // ReadinessCheck; an injected sink passes its own ping. An injected
@@ -217,7 +231,6 @@ object InjectorApp {
     val ping = sinkPing.orElse(
       if (startSink.isEmpty) Some(() => sink.ping()) else None)
     probes.bind(query, ping)
-    probes.serve()
     (query, probes)
   }
 }

@@ -1,11 +1,8 @@
 package graft.streaming
 
-import graft.operators.InjectorOps
-import graft.operators.InjectorOps.InjectorConfig
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.StructType
 
 /** One state row per Kafka partition: the consumer-group progress the
   * reference exports as gauges (M1, src/metrics/metrics.go) — highest
@@ -36,12 +33,12 @@ case class AnomalyState(open: Map[Long, Long], lastClosed: Long,
 case class HourVerdict(event_type: String, hour_start: Long,
     doc_count: Long, n_hist: Long, flagged: Boolean)
 
-/** The canonical deployment shape of the reference (SURVEY.md §3.2):
-  * Kafka consumer-group source → decode/enrich/route → Elasticsearch bulk
-  * sink, re-expressed as one Structured Streaming plan. Every transform is
-  * the *same* `DataFrame => DataFrame` used by the batch queries — nothing
-  * here is streaming-only logic, which is what the MemoryStream spec
-  * asserts (batch ≡ streaming).
+/** The Kafka source of the deployment and the Structured Streaming duals
+  * of the batch analytics (dedup, sessions, funnels, anomaly and SRM
+  * alerts, throughput). The injector's own composition is
+  * `InjectorOps.pipeline`, which runs unchanged on the frame
+  * [[StreamingPipeline.kafkaSource]] returns; `InjectorApp.start` wires
+  * the two to the sink.
   *
   * Reference operator mapping:
   *  - S1 consumer group/rebalance/offsets → the Kafka source + checkpoint
@@ -73,42 +70,6 @@ object StreamingPipeline {
       .option("startingOffsets", cfg.startingOffsets)
     cfg.maxOffsetsPerTrigger.fold(base)(n =>
       base.option("maxOffsetsPerTrigger", n)).load()
-  }
-
-  /** Full hot path on any Kafka-shaped frame (batch or streaming), with
-    * the streaming dedup stage (K2) bounded by a watermark: the reference
-    * outsources dedup state to the ES index (unbounded, free); a stream
-    * needs bounded state, so duplicates are dropped only within
-    * `dedupWatermark` of event time — the documented divergence
-    * (SURVEY.md §7.5.4). `None` disables in-stream dedup and leaves K2 to
-    * the sink's create-op, exactly like the reference.
-    *
-    * `decoder` is the D1 record-type dispatch seam
-    * (`InjectorOps.decoderFor`): the default is the JSON path; pass the
-    * avro decoder for Confluent-framed topics — every downstream
-    * transform is decode-agnostic, exactly like the reference's
-    * `Deserializer` interface (src/kafka/encode_decode.go:29-40).
-    */
-  def streamingPipeline(cfg: InjectorConfig, schema: StructType,
-      dedupWatermark: Option[String] = None,
-      keyDecoder: Option[Column => Column] = None,
-      decoder: Option[DataFrame => DataFrame] = None)(
-      df: DataFrame): DataFrame = {
-    val routed = (InjectorOps.nilMessageFilter()(_: DataFrame))
-      .andThen(decoder.getOrElse(InjectorOps.jsonDecode(schema)(_)))
-      .andThen(InjectorOps.injectTimestamp)
-      .andThen(InjectorOps.includeDecodedKey(keyDecoder.isDefined,
-        keyDecoder.getOrElse(identity[Column] _)))
-      .andThen(InjectorOps.blacklist(cfg.blacklist))
-      .andThen(InjectorOps.indexName(cfg))
-      .andThen(InjectorOps.docId(cfg))
-      .apply(df)
-    val deduped = dedupWatermark match {
-      case Some(delay) => routed.withWatermark("timestamp", delay)
-        .dropDuplicatesWithinWatermark("doc_id")
-      case None => routed
-    }
-    InjectorOps.assemble(deduped)
   }
 
   /** Streaming dual of the batch `dedup_exact` family: canonical-doc

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.AvroWire
+import graft.functions.{AvroWire, MapSchemaProvider}
 import org.apache.spark.sql.functions._
 
 /** Mirrors the reference's Avro fixtures (src/kafka/fixtures/fixtures.go:
@@ -23,7 +23,7 @@ class AvroWireSpec extends SparkSpec {
     val bytes = AvroWire.encodeConfluent(7, fixtureSchema, Map("id" -> 42))
     val out = wireDf(bytes).select(
       AvroWire.fromConfluentAvro($"value", fixtureSchema,
-        Map(7 -> fixtureSchema))("id")).as[Int].head()
+        MapSchemaProvider(Map(7 -> fixtureSchema)))("id")).as[Int].head()
     assert(out == 42)
   }
 
@@ -39,7 +39,7 @@ class AvroWireSpec extends SparkSpec {
     val bytes = AvroWire.encodeConfluent(9, fixtureSchema, Map("id" -> 1))
     val out = wireDf(bytes).select(
       AvroWire.fromConfluentAvro($"value", fixtureSchema,
-        Map(7 -> fixtureSchema)).isNull).as[Boolean].head()
+        MapSchemaProvider(Map(7 -> fixtureSchema))).isNull).as[Boolean].head()
     assert(out)
   }
 
@@ -49,7 +49,7 @@ class AvroWireSpec extends SparkSpec {
     val short = good.take(4)
     val out = wireDf(badMagic, short).select(
       AvroWire.fromConfluentAvro($"value", fixtureSchema,
-        Map(7 -> fixtureSchema)).isNull).as[Boolean].collect()
+        MapSchemaProvider(Map(7 -> fixtureSchema))).isNull).as[Boolean].collect()
     assert(out.toSeq == Seq(true, true))
   }
 
@@ -58,7 +58,8 @@ class AvroWireSpec extends SparkSpec {
       1700000000123456L)
     val row = wireDf(bytes).select(
       AvroWire.fromConfluentAvro($"value", graft.queries.AvroQueries.richSchema,
-        Map(7 -> graft.queries.AvroQueries.richSchema)).as("p"))
+        MapSchemaProvider(Map(7 -> graft.queries.AvroQueries.richSchema)))
+        .as("p"))
       .select($"p.tags"("uid"), $"p.amount".cast("string"),
         $"p.day".cast("string"), unix_millis($"p.ts_ms"),
         unix_micros($"p.ts_us"), $"p.flag", $"p.alt.member0",
@@ -143,7 +144,7 @@ class AvroWireSpec extends SparkSpec {
       Map("id" -> 6, "tag" -> "fresh"))
     val out = wireDf(oldMsg, newMsg).orderBy($"n")
       .select(AvroWire.fromConfluentAvro($"value", readerV2,
-        Map(1 -> writerV1, 2 -> readerV2)).as("p"))
+        MapSchemaProvider(Map(1 -> writerV1, 2 -> readerV2))).as("p"))
       .select($"p.id", $"p.tag").as[(Int, String)].collect()
     assert(out.toSeq == Seq((5, "none"), (6, "fresh")))
   }
@@ -189,7 +190,8 @@ class AvroWireSpec extends SparkSpec {
     val r0 = AvroWire.encodeConfluent(0, w0, Map("a" -> 1, "b" -> "x"))
     val r1 = AvroWire.encodeConfluent(1, w1, Map("a" -> 2, "b" -> "y"))
     val out = wireDf(r0, r1).orderBy($"n")
-      .select(AvroWire.fromConfluentAvro($"value", w0, Map(0 -> w0, 1 -> w1)))
+      .select(AvroWire.fromConfluentAvro($"value", w0,
+        MapSchemaProvider(Map(0 -> w0, 1 -> w1))))
       .select($"from_confluent_avro(value).a", $"from_confluent_avro(value).b")
       .as[(Int, String)].collect()
     assert(out.toSeq == Seq((1, "x"), (2, "y")))

@@ -3,8 +3,9 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import graft.operators.InjectorOps
 import graft.operators.InjectorOps.InjectorConfig
-import graft.streaming.{EsHttpSink, InjectorApp, StreamingPipeline}
+import graft.streaming.{EsHttpSink, InjectorApp}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -39,7 +40,7 @@ class EsHttpSinkSpec extends SparkSpec {
     assembledWith(cfg)(rows)
 
   private def assembledWith(c: InjectorConfig)(rows: Seq[(Int, Long, String)]) =
-    StreamingPipeline.streamingPipeline(c, schema)(kafkaFrame(rows))
+    InjectorOps.pipeline(c, schema)(kafkaFrame(rows))
 
   test("end-to-end over real HTTP: docs land at <topic>-<date>/_doc/<partition>:<offset> with @timestamp") {
     val es = new EsStubServer
@@ -49,7 +50,7 @@ class EsHttpSinkSpec extends SparkSpec {
       implicit val sqlCtx = spark.sqlContext
       val stream = MemoryStream[Msg]
       val cp = Files.createTempDirectory("graft-eshttp").toString
-      val q = StreamingPipeline.streamingPipeline(cfg, schema)(
+      val q = InjectorOps.pipeline(cfg, schema)(
           stream.toDF())
         .writeStream
         .option("checkpointLocation", s"$cp/cp")

@@ -61,7 +61,7 @@ class ExtensionsSpec extends SparkSpec {
       .withColumn("value", lit(
         graft.functions.AvroWire.encodeConfluent(1, fix, Map("id" -> "y"))))
     val viaAvro = InjectorOps.decoderFor("avro", jsonSchema, fix,
-      Map(1 -> fix))(avroDf)
+      graft.functions.MapSchemaProvider(Map(1 -> fix)))(avroDf)
     assert(viaAvro.select($"payload.id").as[String].head() == "y")
 
     val e = intercept[IllegalArgumentException] {

@@ -73,6 +73,12 @@ class InjectorAppSpec extends AnyFunSuite {
     // default with the var unset is the avro path
     assert(cfg.recordType == "avro")
     assert(cfg.source.maxOffsetsPerTrigger.isEmpty)
+    // ...and so does any value but "json": fromEnv maps the env onto the
+    // two types `InjectorOps.decoderFor` knows
+    for ((v, want) <- Seq("json" -> "json", "avro" -> "avro",
+        "protobuf" -> "avro", "JSON" -> "avro"))
+      assert(InjectorApp.fromEnv(Map("KAFKA_CONSUMER_RECORD_TYPE" -> v))
+        .recordType == want, v)
   }
 
   test("go-style durations parse like time.ParseDuration") {
@@ -111,7 +117,33 @@ class InjectorAppSpec extends AnyFunSuite {
     rejects("ES_BULK_TIMEOUT", "100us") // rounds to 0 ms
     rejects("ES_BULK_TIMEOUT", "600h")
     rejects("ES_BULK_BACKOFF", "-1ms")
+    rejects("ES_BULK_BACKOFF", "10fortnights")
+    // every other parsed variable names itself the same way
+    rejects("PROBES_PORT", "70000")
+    rejects("PROBES_PORT", "-1")
+    rejects("PROBES_PORT", "http")
+    rejects("KAFKA_CONSUMER_BATCH_SIZE", "0")
+    rejects("KAFKA_CONSUMER_BATCH_SIZE", "-5")
+    rejects("KAFKA_CONSUMER_BATCH_SIZE", "abc")
+    rejects("KAFKA_CONSUMER_INCLUDE_KEY", "1")
+    rejects("ELASTICSEARCH_IGNORE_CERT", "yes")
+    rejects("ES_INDEX_TEMPLATE", "on")
+    // a misspelt scheme must not downgrade Basic credentials to plaintext
+    rejects("ELASTICSEARCH_SCHEME", "ftp")
+    rejects("ELASTICSEARCH_SCHEME", "htps")
     // the edges that remain valid
+    assert(InjectorApp.fromEnv(Map("PROBES_PORT" -> "0")).probesPort
+      .contains(0))
+    assert(InjectorApp.fromEnv(Map("PROBES_PORT" -> "65535")).probesPort
+      .contains(65535))
+    assert(InjectorApp.fromEnv(Map("KAFKA_CONSUMER_BATCH_SIZE" -> "1"))
+      .source.maxOffsetsPerTrigger.contains(1L))
+    assert(InjectorApp.fromEnv(Map("KAFKA_CONSUMER_INCLUDE_KEY" -> "TRUE"))
+      .injector.includeKey)
+    assert(InjectorApp.fromEnv(Map("ELASTICSEARCH_SCHEME" -> "HTTPS"))
+      .sink.url == "https://localhost:9200")
+    assert(InjectorApp.fromEnv(Map("ELASTICSEARCH_SCHEME" -> "http"))
+      .sink.url == "http://localhost:9200")
     assert(InjectorApp.fromEnv(Map("ES_BULK_TIMEOUT" -> "1ms"))
       .sink.timeoutMs == 1)
     assert(InjectorApp.fromEnv(Map("ES_BULK_TIMEOUT" -> "596h"))

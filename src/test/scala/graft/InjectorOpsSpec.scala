@@ -70,19 +70,6 @@ class InjectorOpsSpec extends SparkSpec {
     assert(ms == 1709633472345L)
   }
 
-  test("T2: key inclusion merges decoded key as payload field `key`") {
-    val out = includeKey(include = true,
-      decodedKey = lit("the-key"))(decoded)
-      .select($"payload.key").as[String].head()
-    assert(out == "the-key")
-  }
-
-  test("T2: includeKey=false leaves payload untouched") {
-    val out = includeKey(include = false, decodedKey = lit("x"))(decoded)
-    assert(!out.schema("payload").dataType.asInstanceOf[StructType]
-      .fieldNames.contains("key"))
-  }
-
   test("T2 full: JSON key decode — nil kept, valid merged, corrupt dropped") {
     val keySchema = StructType(Seq(StructField("uid", LongType)))
     val three = kafkaDf(Seq(
@@ -93,13 +80,25 @@ class InjectorOpsSpec extends SparkSpec {
         when($"offset" === 1L, encode(lit("""{"uid":7}"""), "UTF-8"))
           .when($"offset" === 2L, lit(null).cast("binary"))
           .otherwise(encode(lit("{bad"), "UTF-8")))
-    val out = includeDecodedKey(include = true, jsonKeyDecoder(keySchema))(
-      jsonDecode(payloadSchema)(three))
-      .select($"offset", $"payload.key.uid").as[(Long, Option[Long])]
-      .collect().toSet
-    // offset 3's undecodable key drops the whole record (reference errors
-    // the batch there; our D6 poison policy drops the row)
-    assert(out == Set((1L, Some(7L)), (2L, None)))
+    val cfg = InjectorConfig(topic = "my-topic")
+    // no key decoder: the key is left out of the payload, every row kept
+    val noKey = pipeline(cfg, payloadSchema)(three)
+    assert(!noKey.schema("payload").dataType.asInstanceOf[StructType]
+      .fieldNames.contains("key"))
+    assert(noKey.count() == 3L)
+    // with one: the decoded key is merged, the same through the transform
+    // alone and through the whole pipeline
+    val viaTransform = includeDecodedKey(jsonKeyDecoder(keySchema))(
+      jsonDecode(payloadSchema)(three)).select($"offset", $"payload.key.uid")
+    val viaPipeline = pipeline(cfg, payloadSchema,
+      keyDecoder = Some(jsonKeyDecoder(keySchema)))(three)
+      .select(substring_index($"doc_id", ":", -1).cast("long"),
+        $"payload.key.uid")
+    for (out <- Seq(viaTransform, viaPipeline))
+      // offset 3's undecodable key drops the whole record (reference
+      // errors the batch there; our D6 poison policy drops the row)
+      assert(out.as[(Long, Option[Long])].collect().toSet ==
+        Set((1L, Some(7L)), (2L, None)))
   }
 
   // ----- record_test.go: GetValueForField / FilteredFieldsJSON

@@ -3,8 +3,9 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import graft.operators.InjectorOps
 import graft.operators.InjectorOps.InjectorConfig
-import graft.streaming.{Probes, StreamingPipeline}
+import graft.streaming.{InjectorApp, Probes}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.types._
 
@@ -55,7 +56,7 @@ class ProbesSpec extends SparkSpec {
     stream.addData(Seq(Msg(null, """{"id":"a","n":1}""".getBytes("UTF-8"),
       "my-topic", 0, 1L, Timestamp.valueOf("2024-03-05 10:11:12"), 0)))
     val out = Files.createTempDirectory("graft-probes").toString
-    val q = StreamingPipeline.streamingPipeline(
+    val q = InjectorOps.pipeline(
         InjectorConfig(topic = "my-topic"), schema)(stream.toDF())
       .writeStream.format("memory").queryName("probes_out")
       .option("checkpointLocation", s"$out/cp").start()
@@ -70,5 +71,30 @@ class ProbesSpec extends SparkSpec {
       assert(get(port, "/readiness") == 500) // stopped stream -> recycle pod
       assert(get(port, "/healthz") == 200)   // liveness is a separate switch
     } finally { p.stop(); if (q.isActive) q.stop() }
+  }
+
+  test("a busy PROBES_PORT fails InjectorApp.start with no stream left running") {
+    implicit val sqlCtx = spark.sqlContext
+    val held = new java.net.ServerSocket(0)
+    try {
+      val out = Files.createTempDirectory("graft-busy-port").toString
+      val cfg = InjectorApp.fromEnv(Map(
+        "KAFKA_TOPICS" -> "my-topic",
+        "KAFKA_CONSUMER_RECORD_TYPE" -> "json",
+        "PROBES_PORT" -> held.getLocalPort.toString,
+        "CHECKPOINT_LOCATION" -> s"$out/cp"))
+      val schema = StructType(Seq(StructField("id", StringType)))
+      val before = spark.streams.active.map(_.id).toSet
+      intercept[java.io.IOException] {
+        InjectorApp.start(spark, cfg, schema,
+          source = Some(MemoryStream[Msg].toDF()),
+          startSink = Some(_.writeStream.format("memory")
+            .queryName("busy_port_out")
+            .option("checkpointLocation", s"$out/cp").start()),
+          sinkPing = Some(() => true))
+      }
+      // the port is bound before the query starts, so none is left behind
+      assert(spark.streams.active.map(_.id).toSet == before)
+    } finally held.close()
   }
 }

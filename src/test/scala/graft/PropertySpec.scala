@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.MapSchemaProvider
 import graft.operators.{DedupOps, InjectorOps, TextOps}
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
@@ -69,7 +70,7 @@ class PropertySpec extends SparkSpec {
       val rows = blobs.zipWithIndex.map { case (b, i) => (i.toLong, b) }
         .toDF("n", "value")
         .select($"n", AvroWire.fromConfluentAvro($"value", schema,
-          Map(7 -> schema)).as("p"))
+          MapSchemaProvider(Map(7 -> schema))).as("p"))
         .select($"n", $"p".isNull, $"p.id")
         .as[(Long, Boolean, Option[Int])].collect()
       // the poison-record contract: every blob yields a row — either a

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import graft.operators.InjectorOps
 import graft.operators.InjectorOps.InjectorConfig
 import graft.streaming.{EsHttpSink, StreamingPipeline}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -90,7 +91,7 @@ class StreamingSpec extends SparkSpec {
     val stream = MemoryStream[Msg]
     stream.addData(batch1)
     val out = Files.createTempDirectory("graft-stream").toString
-    val q = StreamingPipeline.streamingPipeline(cfg, schema)(stream.toDF())
+    val q = InjectorOps.pipeline(cfg, schema)(stream.toDF())
       .writeStream.format("memory").queryName("stream_out")
       .option("checkpointLocation", s"$out/cp").start()
     try q.processAllAvailable() finally q.stop()
@@ -98,13 +99,53 @@ class StreamingSpec extends SparkSpec {
     val streamed = spark.table("stream_out")
       .select($"es_index", $"doc_id", $"payload.id", $"payload.n")
       .as[(String, String, String, Int)].collect().toSet
-    val batched = StreamingPipeline.streamingPipeline(cfg, schema)(
-      batch1.toDF())
+    val batched = InjectorOps.pipeline(cfg, schema)(batch1.toDF())
       .select($"es_index", $"doc_id", $"payload.id", $"payload.n")
       .as[(String, String, String, Int)].collect().toSet
     assert(streamed == batched)
     assert(streamed.map(_._2) == Set("0:1", "0:2", "1:1"))
     assert(streamed.forall(_._1 == "my-topic-2024-03-05"))
+  }
+
+  test("InjectorApp.start delivers what the oracle-checked entry_pipeline composition computes") {
+    import graft.operators.KafkaShape
+    import graft.streaming.InjectorApp
+    val ts = (s: String) => Timestamp.valueOf(s)
+    // hand-built `events` rows: two days, a null field, a blacklisted one
+    val events = Seq(
+      (1L, 10L, "view", 1.5, """{"k":1}""", ts("2024-03-05 10:11:12.345")),
+      (2L, 11L, "click", 2.0, null, ts("2024-03-05 23:59:59.999")),
+      (3L, 10L, "purchase", -3.25, """{"k":3}""", ts("2024-03-06 00:00:00")))
+      .toDF("event_id", "user_id", "event_type", "value", "props", "ts")
+    val kafka = KafkaShape.fromEvents(events)
+    // path 1: the batch composition `entry_pipeline` runs
+    val batched = InjectorOps.pipeline(
+        InjectorConfig(topic = "events", indexPrefix = "graft-",
+          blacklist = Seq("props")), KafkaShape.eventPayloadSchema)(kafka)
+      .select($"es_index", $"doc_id", to_json($"payload"))
+      .as[(String, String, String)].collect().toSet
+    // path 2: the deployment, from env, into a `_bulk` endpoint
+    val es = new EsStubServer
+    val esPort = es.start()
+    val dir = Files.createTempDirectory("graft-app-entry").toString
+    val env = InjectorApp.fromEnv(Map(
+      "KAFKA_TOPICS" -> "events",
+      "ES_INDEX_PREFIX" -> "graft-",
+      "ES_BLACKLISTED_COLUMNS" -> "props",
+      "KAFKA_CONSUMER_RECORD_TYPE" -> "json",
+      "PROBES_PORT" -> "0",
+      "CHECKPOINT_LOCATION" -> s"$dir/cp"))
+    implicit val sqlCtx = spark.sqlContext
+    val stream = MemoryStream[Msg]
+    stream.addData(kafka.as[Msg].collect().toSeq)
+    val (q, probes) = InjectorApp.start(spark,
+      env.copy(sink = env.sink.copy(url = s"http://localhost:$esPort")),
+      KafkaShape.eventPayloadSchema, source = Some(stream.toDF()))
+    try q.processAllAvailable()
+    finally { q.stop(); probes.stop(); es.stop() }
+    assert(es.documents.toSet == batched)
+    assert(batched.map(_._1) == Set("graft-events-2024-03-05",
+      "graft-events-2024-03-06") && batched.size == 3)
   }
 
   test("streaming pipeline decodes Avro-framed keys (T2 full)") {
@@ -124,7 +165,7 @@ class StreamingSpec extends SparkSpec {
     val dec = graft.operators.InjectorOps.avroKeyDecoder(keySchema,
       MapSchemaProvider(Map(5 -> keySchema)))
     val out = Files.createTempDirectory("graft-akey").toString
-    val q = StreamingPipeline.streamingPipeline(cfg, schema,
+    val q = InjectorOps.pipeline(cfg, schema,
         keyDecoder = Some(dec))(stream.toDF())
       .writeStream.format("memory").queryName("akey_out")
       .option("checkpointLocation", s"$out/cp").start()
@@ -150,10 +191,10 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[Msg]
     stream.addData(msgs)
-    val avroDecoder = graft.operators.InjectorOps.decoderFor(
-      "avro", schema, avroSchema, Map(4 -> avroSchema))
+    val avroDecoder = InjectorOps.decoderFor("avro", schema, avroSchema,
+      graft.functions.MapSchemaProvider(Map(4 -> avroSchema)))
     val out = Files.createTempDirectory("graft-avro-stream").toString
-    val q = StreamingPipeline.streamingPipeline(cfg, schema,
+    val q = InjectorOps.pipeline(cfg, schema,
         decoder = Some(avroDecoder))(stream.toDF())
       .writeStream.format("memory").queryName("avro_out")
       .option("checkpointLocation", s"$out/cp").start()
@@ -333,7 +374,7 @@ class StreamingSpec extends SparkSpec {
         1700000000123456L), "my-topic", 0, 2L, ts, 0),
       Msg(null, AvroQueries.richEncode(12L, 207L, "buy",
         1700000000123456L), "my-topic", 1, 1L, ts, 0))
-    val decoder = graft.operators.InjectorOps.decoderForProvider(
+    val decoder = InjectorOps.decoderFor("avro", schema,
       AvroQueries.richSchema, new HttpSchemaProvider(
         s"http://127.0.0.1:${server.getAddress.getPort}"))
     def pick(df: org.apache.spark.sql.DataFrame) = df.select(
@@ -349,7 +390,7 @@ class StreamingSpec extends SparkSpec {
     val stream = MemoryStream[Msg]
     stream.addData(msgs)
     val out = Files.createTempDirectory("graft-rich-stream").toString
-    val q = StreamingPipeline.streamingPipeline(cfg, schema,
+    val q = InjectorOps.pipeline(cfg, schema,
         decoder = Some(decoder))(stream.toDF())
       .writeStream.format("memory").queryName("rich_out")
       .option("checkpointLocation", s"$out/cp").start()
@@ -357,7 +398,7 @@ class StreamingSpec extends SparkSpec {
     val streamed = pick(spark.table("rich_out")).collect().toSet
     // batch dual resolves through the same (still-running) registry
     val batched =
-      try pick(StreamingPipeline.streamingPipeline(cfg, schema,
+      try pick(InjectorOps.pipeline(cfg, schema,
         decoder = Some(decoder))(msgs.toDF())).collect().toSet
       finally server.stop(0)
     assert(streamed == batched)
@@ -1389,7 +1430,7 @@ class StreamingSpec extends SparkSpec {
     */
   private def startInto(sink: EsHttpSink,
       source: org.apache.spark.sql.DataFrame, checkpoint: String) =
-    StreamingPipeline.streamingPipeline(cfg, schema)(source).writeStream
+    InjectorOps.pipeline(cfg, schema)(source).writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
         sink.write(b, id))
@@ -1442,7 +1483,7 @@ class StreamingSpec extends SparkSpec {
     val sink = new EsHttpSink(s"http://localhost:$port")
     // the stub answers 400 for a doc whose `reject` field is true
     val rejectSchema = schema.add(StructField("reject", BooleanType))
-    val q = StreamingPipeline.streamingPipeline(cfg, rejectSchema)(
+    val q = InjectorOps.pipeline(cfg, rejectSchema)(
         stream.toDF()).writeStream
       .option("checkpointLocation", cp)
       .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
@@ -1499,7 +1540,7 @@ class StreamingSpec extends SparkSpec {
       // probe column: counts per-row evaluations of the micro-batch plan
       val evals = spark.sparkContext.longAccumulator("batch-evals")
       val probe = udf { (id: String) => evals.add(1L); id }
-      def batch(rows: Seq[Msg]) = StreamingPipeline.streamingPipeline(
+      def batch(rows: Seq[Msg]) = InjectorOps.pipeline(
         cfg, schema)(rows.toDF()).withColumn("doc_id", probe($"doc_id"))
       val fresh = Seq(
         msg(3, 1L, """{"id":"x","n":7}"""),
@@ -1524,7 +1565,7 @@ class StreamingSpec extends SparkSpec {
     val stream = MemoryStream[Msg]
     stream.addData(batch1)
     val out = Files.createTempDirectory("graft-metrics").toString
-    val q = StreamingPipeline.streamingPipeline(cfg, schema)(stream.toDF())
+    val q = InjectorOps.pipeline(cfg, schema)(stream.toDF())
       .writeStream.format("memory").queryName("metrics_out")
       .option("checkpointLocation", s"$out/cp").start()
     try {
@@ -1546,7 +1587,7 @@ class StreamingSpec extends SparkSpec {
     // same (partition, offset) delivered twice in one batch
     stream.addData(batch1 ++ batch1)
     val out = Files.createTempDirectory("graft-stream2").toString
-    val q = StreamingPipeline.streamingPipeline(cfg, schema,
+    val q = InjectorOps.pipeline(cfg, schema,
       dedupWatermark = Some("1 hour"))(stream.toDF())
       .writeStream.format("memory").queryName("dedup_out")
       .option("checkpointLocation", s"$out/cp").start()
