@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.operators.TextOps.tokens
+import graft.sources.IndexManifest
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -464,7 +465,7 @@ object CorpusOps {
       phrases: Seq[(Long, String)], window: Int, k: Int, boost: Long,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val ph = phraseSearchIndex(spark, posDir, phrases)
-    rescoreTail(bm25ScoredFromTf(readTf(spark, bm25Dir), queryTerms,
+    rescoreTail(bm25ScoredFromTf(storedTf(spark, bm25Dir), queryTerms,
       k1, b), ph, window, k, boost)
   }
 
@@ -690,15 +691,17 @@ object CorpusOps {
     * between searches; that is a cache, not part of the contract.)
     *
     * The store lives under a [[graft.sources.IndexManifest]] manifest:
-    * builds and compactions publish a NEW version directory and
-    * atomically swap the pointer, so a crash mid-rewrite can never
-    * leave the index absent or half-written (the window the flat
-    * delete-then-rename compactors document). Appends write into the
-    * CURRENT version — legal here because stats derive from the rows.
+    * builds and compactions publish a new base, appends and deletes a
+    * delta, each behind one atomic pointer swap — a crash mid-write can
+    * never leave the index absent or half-written, and a failed append
+    * can be retried without duplicating postings.
+    * Deletes tombstone doc ids; df/dl/avgdl derive from the surviving
+    * posting rows at search time, so the stats stay consistent with the
+    * post-delete corpus with no reconciliation step.
     */
   def buildBm25Index(docs: DataFrame, dir: String): Unit =
-    graft.sources.IndexManifest.publish(docs.sparkSession, dir)(vdir =>
-      bm25Postings(docs).write.mode("overwrite").parquet(s"$vdir/tf"))
+    IndexManifest.publish(docs.sparkSession, dir)(vdir =>
+      bm25Postings(docs).write.parquet(s"$vdir/tf"))
 
   /** PRECONDITION: the batch must contain only doc_ids NOT already in
     * the index — re-appending an id stores a second posting row per
@@ -710,78 +713,26 @@ object CorpusOps {
     * the reference's ES `create` sink enforces.
     */
   def appendToBm25Index(newDocs: DataFrame, dir: String): Unit =
-    bm25Postings(newDocs).write.mode("append").parquet(
-      s"${graft.sources.IndexManifest.resolve(newDocs.sparkSession, dir)}/tf")
+    IndexManifest.append(newDocs, dir)(vdir =>
+      bm25Postings(newDocs).write.parquet(s"$vdir/tf"))
 
-  /** Small-files maintenance after repeated appends: rewrite the
-    * posting table clustered on (term, doc_id) — the df aggregate and
-    * query-term probes then read term-clustered row groups. Row-
-    * identical, so searches are unchanged (and the index stays
-    * append ≡ rebuild). Published as a NEW manifest version + atomic
-    * pointer swap — readers mid-search keep the old version's file
-    * list; the previous version survives until the post-swap prune's
-    * grace window (keep=2) passes.
+  /** Small-files maintenance after appends: fold the chain into one
+    * base with the posting table clustered on (term, doc_id) — the df
+    * aggregate and query-term probes then read term-clustered row
+    * groups. Tombstoned postings are purged (ES's segment-merge
+    * reclaim); searches are unchanged.
     */
   def compactBm25Index(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    val im = graft.sources.IndexManifest
-    im.publish(spark, dir) { vdir =>
-      // readTf still resolves the OLD version here (pointer swaps after
-      // this block): tombstoned postings are purged physically, so the
-      // new version starts tombstone-free (the deletes table is
-      // deliberately not carried over)
-      readTf(spark, dir)
-        .repartitionByRange(col("term"), col("doc_id"))
-        .sortWithinPartitions(col("term"), col("doc_id"))
-        .write.mode("overwrite").parquet(s"$vdir/tf")
-    }
-    im.prune(spark, dir, keep = 2)
-  }
+      dir: String): Unit =
+    IndexManifest.compact(spark, dir, "doc_id",
+      Map("tf" -> Seq("term", "doc_id")))
 
-  /** Delete documents from the persisted index by id — the ES
-    * delete-by-id half of the index lifecycle (the reference's sink
-    * only creates; its ES cluster still serves deletes for GDPR/TTL
-    * retirement, which a native index must match). Ids append to a
-    * TOMBSTONE table in the current version; every search anti-joins
-    * it, and the next [[compactBm25Index]] physically purges the
-    * postings (ES's segment-merge reclaim). A deleted id must not be
-    * re-appended before that purge — the tombstone would swallow the
-    * new rows too (same id-uniqueness precondition as
-    * [[appendToBm25Index]], extended across deletes).
+  /** Posting scan of the live chain, deleted ids anti-joined — the one
+    * read path every persisted-index search shares.
     */
-  def deleteFromBm25Index(spark: org.apache.spark.sql.SparkSession,
-      dir: String, docIds: Seq[Long]): Unit = {
-    import spark.implicits._
-    docIds.toDF("doc_id").write.mode("append").parquet(
-      s"${graft.sources.IndexManifest.resolve(spark, dir)}/deletes")
-  }
-
-  /** Posting scan of the CURRENT manifest version — the one read path
-    * every persisted-index search shares. Resolution happens at plan
-    * build; the resolved directory's files are immutable, so the scan
-    * is consistent even if a compaction publishes mid-query. Tombstoned
-    * doc_ids are anti-joined out, so deletes are search-invisible the
-    * moment they land; because df/dl/avgdl derive from the surviving
-    * posting rows at search time, the stats stay consistent with the
-    * post-delete corpus with no reconciliation step.
-    */
-  private def readTf(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val vdir = graft.sources.IndexManifest.resolve(spark, dir)
-    val tf = spark.read.parquet(s"$vdir/tf")
-    tombstones(spark, vdir) match {
-      case Some(dead) => tf.join(dead, Seq("doc_id"), "left_anti")
-      case None => tf
-    }
-  }
-
-  private def tombstones(spark: org.apache.spark.sql.SparkSession,
-      vdir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$vdir/deletes")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString).distinct())
-    else None
-  }
+  private def storedTf(spark: org.apache.spark.sql.SparkSession,
+      dir: String): DataFrame =
+    IndexManifest.snapshot(spark, dir).read("tf", "doc_id")
 
   /** Search the persisted index: identical scoring tail over the stored
     * postings — raw document text is never touched.
@@ -789,7 +740,7 @@ object CorpusOps {
   def searchBm25Index(spark: org.apache.spark.sql.SparkSession,
       dir: String, queryTerms: Seq[(Long, String)], k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25RankFromTf(readTf(spark, dir), queryTerms, k, k1, b)
+    bm25RankFromTf(storedTf(spark, dir), queryTerms, k, k1, b)
 
   /** The whole search DSL over ONE stored posting index: fuzzy, prefix,
     * more-like-this, and bool searches share the BM25 index's posting
@@ -801,20 +752,20 @@ object CorpusOps {
     */
   def searchFuzzyIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, queries: Seq[(Long, String)], k: Int): DataFrame =
-    fuzzySearchFromTf(readTf(spark, dir), queries, k)
+    fuzzySearchFromTf(storedTf(spark, dir), queries, k)
 
   def searchPrefixIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, queries: Seq[(Long, String)], k: Int): DataFrame =
-    prefixSearchFromTf(readTf(spark, dir), queries, k)
+    prefixSearchFromTf(storedTf(spark, dir), queries, k)
 
   def searchMltIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, seeds: Seq[(Long, Long)], m: Int, k: Int,
       scale: Double = MltScale): DataFrame =
-    moreLikeThisFromTf(readTf(spark, dir), seeds, m, k, scale)
+    moreLikeThisFromTf(storedTf(spark, dir), seeds, m, k, scale)
 
   def searchBoolIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, queries: Seq[BoolQuery], k: Int): DataFrame =
-    boolSearchFromTf(readTf(spark, dir), queries, k)
+    boolSearchFromTf(storedTf(spark, dir), queries, k)
 
   // ---------------------------------------------------------- phrase search
 
@@ -898,61 +849,34 @@ object CorpusOps {
       .agg(sort_array(collect_list(col("pos") + 1)).as("positions"))
 
   /** Persist the positional index under an [[graft.sources.IndexManifest]]
-    * manifest (same crash-safe publish/swap discipline as
-    * [[buildBm25Index]]), clustered on (term, doc_id) so query-term
-    * probes touch only their own row groups. Append ≡ rebuild holds for
-    * the same reason as BM25: the rows are pure per-(doc, term) facts
-    * with no cross-doc stats to reconcile.
+    * manifest (same crash-safe lifecycle as [[buildBm25Index]]),
+    * clustered on (term, doc_id) so query-term probes touch only their
+    * own row groups. Append ≡ rebuild holds for the same reason as BM25:
+    * the rows are pure per-(doc, term) facts with no cross-doc stats to
+    * reconcile.
     */
   def buildPositionalIndex(docs: DataFrame, dir: String): Unit =
-    graft.sources.IndexManifest.publish(docs.sparkSession, dir)(vdir =>
+    IndexManifest.publish(docs.sparkSession, dir)(vdir =>
       positionalPostings(docs)
         .repartitionByRange(col("term"), col("doc_id"))
         .sortWithinPartitions(col("term"), col("doc_id"))
-        .write.mode("overwrite").parquet(s"$vdir/pos"))
+        .write.parquet(s"$vdir/pos"))
 
   /** PRECONDITION: ids not already present (same as
     * [[appendToBm25Index]] — re-appending double-stores positions).
     */
   def appendToPositionalIndex(newDocs: DataFrame, dir: String): Unit =
-    positionalPostings(newDocs).write.mode("append").parquet(
-      s"${graft.sources.IndexManifest.resolve(newDocs.sparkSession, dir)}/pos")
+    IndexManifest.append(newDocs, dir)(vdir =>
+      positionalPostings(newDocs).write.parquet(s"$vdir/pos"))
 
-  /** Compact after appends: rewrite term-clustered as a new manifest
-    * version (row-identical; tombstones purge physically, as in
-    * [[compactBm25Index]]).
+  /** Compact after appends and deletes: the chain folds into one
+    * term-clustered base (row-identical; deleted rows purge physically,
+    * as in [[compactBm25Index]]).
     */
   def compactPositionalIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    val im = graft.sources.IndexManifest
-    im.publish(spark, dir) { vdir =>
-      readPos(spark, dir)
-        .repartitionByRange(col("term"), col("doc_id"))
-        .sortWithinPartitions(col("term"), col("doc_id"))
-        .write.mode("overwrite").parquet(s"$vdir/pos")
-    }
-    im.prune(spark, dir, keep = 2)
-  }
-
-  /** Delete-by-id: tombstone table, anti-joined by every read — the
-    * same lifecycle contract as [[deleteFromBm25Index]].
-    */
-  def deleteFromPositionalIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, docIds: Seq[Long]): Unit = {
-    import spark.implicits._
-    docIds.toDF("doc_id").write.mode("append").parquet(
-      s"${graft.sources.IndexManifest.resolve(spark, dir)}/deletes")
-  }
-
-  private def readPos(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val vdir = graft.sources.IndexManifest.resolve(spark, dir)
-    val pos = spark.read.parquet(s"$vdir/pos")
-    tombstones(spark, vdir) match {
-      case Some(dead) => pos.join(dead, Seq("doc_id"), "left_anti")
-      case None => pos
-    }
-  }
+      dir: String): Unit =
+    IndexManifest.compact(spark, dir, "doc_id",
+      Map("pos" -> Seq("term", "doc_id")))
 
   /** The shared retrieval stage of both positional searches: postings
     * of the query vocabulary only (the `isin` filter reaches the parquet
@@ -963,7 +887,7 @@ object CorpusOps {
     */
   private def posMaps(spark: org.apache.spark.sql.SparkSession,
       dir: String, vocab: Seq[String]): DataFrame =
-    readPos(spark, dir)
+    IndexManifest.snapshot(spark, dir).read("pos", "doc_id")
       .filter(col("term").isin(vocab: _*))
       .groupBy(col("doc_id"))
       .agg(map_from_entries(
@@ -1414,38 +1338,36 @@ object CorpusOps {
     */
   def buildPercolateIndex(spark: org.apache.spark.sql.SparkSession,
       queries: Seq[BoolQuery], dir: String): Unit =
-    writePercolate(spark, queries, dir, "overwrite")
+    IndexManifest.publish(spark, dir)(writePercolate(spark, queries, _))
 
   /** PRECONDITION: the batch must contain only query ids NOT already in
     * the index — same at-least-once discipline as [[appendToBm25Index]]
     * (a re-registered id would double its clause rows and break the
     * verdict sums). Append ≡ rebuild by construction: both paths store
-    * exactly the clause/requirement rows of the union.
+    * exactly the clause/requirement rows of the union, and both tables
+    * land in one delta behind one pointer swap.
     */
   def appendToPercolateIndex(spark: org.apache.spark.sql.SparkSession,
       queries: Seq[BoolQuery], dir: String): Unit =
-    writePercolate(spark, queries, dir, "append")
+    if (queries.nonEmpty)
+      IndexManifest.publishDelta(spark, dir)(writePercolate(spark, queries, _))
 
-  /** Build publishes both tables under one manifest pointer swap;
-    * append writes terms-then-meta into the current version — a crash
-    * between the two leaves clause rows without meta, which can only
-    * UNDER-alert (the verdict tail's meta join gates emission), never
-    * fire falsely. Recovery: re-append the batch after reconciling ids.
+  /** Compact the registry after appends and deletes: clause rows
+    * clustered on (term, query_id), requirement rows on query_id.
     */
+  def compactPercolateIndex(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Unit =
+    IndexManifest.compact(spark, dir, "query_id",
+      Map("terms" -> Seq("term", "query_id"), "meta" -> Seq("query_id")))
+
   private def writePercolate(spark: org.apache.spark.sql.SparkSession,
-      queries: Seq[BoolQuery], dir: String, mode: String): Unit = {
+      queries: Seq[BoolQuery], vdir: String): Unit = {
     validateBoolQueries(queries)
     import spark.implicits._
-    def writeTables(vdir: String): Unit = {
-      clauseRows(queries).toDF("query_id", "term", "kind")
-        .write.mode(mode).parquet(s"$vdir/terms")
-      metaRows(queries).toDF("query_id", "must_req", "min_should")
-        .write.mode(mode).parquet(s"$vdir/meta")
-    }
-    if (mode == "overwrite")
-      graft.sources.IndexManifest.publish(spark, dir)(writeTables)
-    else
-      writeTables(graft.sources.IndexManifest.resolve(spark, dir))
+    clauseRows(queries).toDF("query_id", "term", "kind")
+      .write.parquet(s"$vdir/terms")
+    metaRows(queries).toDF("query_id", "must_req", "min_should")
+      .write.parquet(s"$vdir/meta")
   }
 
   /** Match an arriving document batch against the stored registry.
@@ -1459,9 +1381,9 @@ object CorpusOps {
   def percolate(spark: org.apache.spark.sql.SparkSession, dir: String,
       k: Int)(docs: DataFrame): DataFrame = {
     val tf = DedupOps.materialize(bm25Postings(docs))
-    val vdir = graft.sources.IndexManifest.resolve(spark, dir)
-    val qt = spark.read.parquet(s"$vdir/terms")
-    val meta = spark.read.parquet(s"$vdir/meta")
+    val snap = IndexManifest.snapshot(spark, dir)
+    val qt = snap.read("terms", "query_id")
+    val meta = snap.read("meta", "query_id")
     boolVerdictTail(qt.join(broadcast(tf), Seq("term")), meta, k,
       broadcastCandidates = true)
   }

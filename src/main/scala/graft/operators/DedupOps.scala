@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.PortableHash.h15
+import graft.sources.IndexManifest
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -350,36 +351,36 @@ object DedupOps {
     * idiom for the winnowing family: the per-doc sketch ([[winnowBase]])
     * is computed ONCE at ingest; sets (verification payload) and the
     * exploded fingerprint postings (candidate key) land behind one
-    * manifest pointer with the build params (k, w). The df cap is NOT
-    * baked in: document frequency is a corpus-time statistic, so the
-    * store stays valid as it grows and `maxDf` remains a query knob.
-    * `dedup_winnowing` re-fingerprinted the whole corpus every run —
-    * 0.31 s/copy at 100×, all of it this ingest pass.
+    * manifest pointer, with the build params (k, w) as the base's model
+    * table. The df cap is NOT baked in: document frequency is a
+    * corpus-time statistic, so the store stays valid as it grows and
+    * `maxDf` remains a query knob. `dedup_winnowing` re-fingerprinted
+    * the whole corpus every run — 0.31 s/copy at 100×, all of it this
+    * ingest pass.
     */
   def buildWinnowingStore(docs: DataFrame, dir: String, k: Int = 5,
-      w: Int = 4): Unit =
-    graft.sources.IndexManifest.publish(docs.sparkSession, dir) { vdir =>
-      writeWinnowingParams(docs.sparkSession, vdir, k, w)
-      val base = winnowBase(docs, k, w)
-      base.select(col("doc_id"), col("shingles"))
-        .write.mode("overwrite").parquet(s"$vdir/sets")
-      base.select(col("doc_id"), explode(col("fps")).as("fp"))
-        .write.mode("overwrite").parquet(s"$vdir/fps")
+      w: Int = 4): Unit = {
+    val spark = docs.sparkSession
+    IndexManifest.publish(spark, dir) { vdir =>
+      import spark.implicits._
+      Seq((k, w)).toDF("k", "w")
+        .coalesce(1).write.parquet(s"$vdir/params")
+      writeWinnowing(docs, vdir, k, w)
     }
+  }
 
-  private def writeWinnowingParams(
-      spark: org.apache.spark.sql.SparkSession,
-      vdir: String, k: Int, w: Int): Unit = {
-    import spark.implicits._
-    Seq((k, w)).toDF("k", "w")
-      .coalesce(1).write.mode("overwrite").parquet(s"$vdir/params")
+  private def writeWinnowing(docs: DataFrame, vdir: String, k: Int,
+      w: Int): Unit = {
+    val base = winnowBase(docs, k, w)
+    base.select(col("doc_id"), col("shingles")).write.parquet(s"$vdir/sets")
+    base.select(col("doc_id"), explode(col("fps")).as("fp"))
+      .write.parquet(s"$vdir/fps")
   }
 
   /** The store's persisted build parameters (k, w). */
   def winnowingStoreParams(spark: org.apache.spark.sql.SparkSession,
       dir: String): (Int, Int) = {
-    val r = spark.read.parquet(
-      s"${graft.sources.IndexManifest.resolve(spark, dir)}/params").head()
+    val r = IndexManifest.snapshot(spark, dir).model("params").head()
     (r.getInt(0), r.getInt(1))
   }
 
@@ -388,16 +389,8 @@ object DedupOps {
     * params. O(batch) per append; history never re-fingerprinted.
     */
   def appendToWinnowingStore(newDocs: DataFrame, dir: String): Unit = {
-    val spark = newDocs.sparkSession
-    val (k, w) = winnowingStoreParams(spark, dir)
-    graft.sources.IndexManifest.publishDelta(spark, dir) { vdir =>
-      writeWinnowingParams(spark, vdir, k, w)
-      val base = winnowBase(newDocs, k, w)
-      base.select(col("doc_id"), col("shingles"))
-        .write.mode("overwrite").parquet(s"$vdir/sets")
-      base.select(col("doc_id"), explode(col("fps")).as("fp"))
-        .write.mode("overwrite").parquet(s"$vdir/fps")
-    }
+    val (k, w) = winnowingStoreParams(newDocs.sparkSession, dir)
+    IndexManifest.append(newDocs, dir)(writeWinnowing(newDocs, _, k, w))
   }
 
   /** Full-corpus [[winnowingPairs]] served from a persisted store:
@@ -407,30 +400,20 @@ object DedupOps {
     * re-hashed, or re-windowed.
     */
   def winnowingPairsStore(spark: org.apache.spark.sql.SparkSession,
-      dir: String, threshold: Double = 0.5, maxDf: Int = 50): DataFrame =
-    winnowingPairsFrom(
-      materialize(storeTable(spark, dir, "fps")),
-      materialize(storeTable(spark, dir, "sets")), threshold, maxDf)
+      dir: String, threshold: Double = 0.5, maxDf: Int = 50): DataFrame = {
+    val snap = IndexManifest.snapshot(spark, dir)
+    winnowingPairsFrom(materialize(snap.read("fps", "doc_id")),
+      materialize(snap.read("sets", "doc_id")), threshold, maxDf)
+  }
 
-  /** Small-files maintenance after repeated appends — the
-    * [[compactMinhashStore]] discipline: each table rewritten
-    * clustered on its probe key (sets by doc_id, fps by fp) into one
-    * full version behind one pointer swap.
+  /** Small-files maintenance after repeated appends: the chain folds
+    * into one base, each table clustered on its probe key (sets by
+    * doc_id, fps by fp).
     */
   def compactWinnowingStore(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    val im = graft.sources.IndexManifest
-    val chain = im.resolveChain(spark, dir)
-    val (k, w) = winnowingStoreParams(spark, dir)
-    im.publish(spark, dir) { vdir =>
-      writeWinnowingParams(spark, vdir, k, w)
-      rewriteClustered(spark, chain.map(v => s"$v/sets"),
-        s"$vdir/sets", Seq("doc_id"))
-      rewriteClustered(spark, chain.map(v => s"$v/fps"),
-        s"$vdir/fps", Seq("fp"))
-    }
-    im.prune(spark, dir, keep = 2)
-  }
+      dir: String): Unit =
+    IndexManifest.compact(spark, dir, "doc_id",
+      Map("sets" -> Seq("doc_id"), "fps" -> Seq("fp")))
 
   def minhashLshPairs(k: Int = 2, bands: Int = 8, rows: Int = 2,
       threshold: Double = 0.5)(df: DataFrame): DataFrame = {
@@ -482,54 +465,38 @@ object DedupOps {
     * LSH candidate key) and hashed shingle sets (the verification
     * payload) are written ONCE; history is never re-shingled. Store
     * size is O(corpus) longs — a constant factor of the text bytes, not
-    * a driver-side model. The build parameters (k, bands, rows) are
-    * persisted beside the tables and every later consumer — appends,
-    * incremental probes, the full pair miner — reads them back instead
-    * of taking its own: a store built with non-default geometry can
-    * never be silently probed with mismatched band keys.
+    * a driver-side model. The build parameters (k, bands, rows) are the
+    * base's model table and every later consumer — appends, incremental
+    * probes, the full pair miner — reads them back instead of taking
+    * its own: a store built with non-default geometry can never be
+    * silently probed with mismatched band keys.
     */
   def buildMinhashStore(docs: DataFrame, dir: String, k: Int = 2,
-      bands: Int = 8, rows: Int = 2): Unit =
-    graft.sources.IndexManifest.publish(docs.sparkSession, dir) { vdir =>
-      writeMinhashParams(docs.sparkSession, vdir, k, bands, rows)
-      val sets = mhSets(docs, k)
-      sets.write.mode("overwrite").parquet(s"$vdir/sets")
-      mhBands(sets, bands, rows).write.mode("overwrite")
-        .parquet(s"$vdir/bands")
+      bands: Int = 8, rows: Int = 2): Unit = {
+    val spark = docs.sparkSession
+    IndexManifest.publish(spark, dir) { vdir =>
+      import spark.implicits._
+      Seq((k, bands, rows)).toDF("k", "bands", "rows")
+        .coalesce(1).write.parquet(s"$vdir/params")
+      writeMinhash(docs, vdir, k, bands, rows)
     }
-
-  /** One-row (k, bands, rows) table, written into EVERY version dir
-    * (base, delta, compaction) so the newest version always answers.
-    */
-  private def writeMinhashParams(spark: org.apache.spark.sql.SparkSession,
-      vdir: String, k: Int, bands: Int, rows: Int): Unit = {
-    import spark.implicits._
-    Seq((k, bands, rows)).toDF("k", "bands", "rows")
-      .coalesce(1).write.mode("overwrite").parquet(s"$vdir/params")
   }
 
-  /** The store's persisted build parameters (k, bands, rows). Stores
-    * written before the params table existed (pre-r15 layout) fall
-    * back to the historical build defaults (k=2, bands=8, rows=2) with
-    * a warning — they were only ever buildable with those values, so
-    * the fallback is the store's actual geometry, and it keeps the old
-    * stores readable instead of failing with a bare path-not-found.
-    */
+  private def writeMinhash(docs: DataFrame, vdir: String, k: Int,
+      bands: Int, rows: Int): Unit = {
+    val sets = mhSets(docs, k)
+    sets.write.parquet(s"$vdir/sets")
+    mhBands(sets, bands, rows).write.parquet(s"$vdir/bands")
+  }
+
+  /** The store's persisted build parameters (k, bands, rows). */
   def minhashStoreParams(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (Int, Int, Int) = {
-    val pdir =
-      s"${graft.sources.IndexManifest.resolve(spark, dir)}/params"
-    try {
-      val r = spark.read.parquet(pdir).head()
-      (r.getInt(0), r.getInt(1), r.getInt(2))
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        System.err.println(s"[dedup] $dir has no persisted params " +
-          "table (pre-params store) — assuming the historical " +
-          "defaults k=2, bands=8, rows=2; rebuild the store to pin " +
-          "its geometry")
-        (2, 8, 2)
-    }
+      dir: String): (Int, Int, Int) =
+    minhashParams(IndexManifest.snapshot(spark, dir))
+
+  private def minhashParams(snap: IndexManifest.Snapshot): (Int, Int, Int) = {
+    val r = snap.model("params").head()
+    (r.getInt(0), r.getInt(1), r.getInt(2))
   }
 
   /** Append a batch's fingerprints to an existing store (the ingest
@@ -537,100 +504,28 @@ object DedupOps {
     * ATOMICALLY: both tables land in one delta version behind the
     * manifest's single pointer swap ([[graft.sources.IndexManifest
     * .publishDelta]]). A crash anywhere mid-append leaves the store
-    * exactly as it was (no stranded set rows without candidate keys —
-    * the pre-r11 in-place two-table append's window), and re-appending
-    * the batch converges to exactly-once rows. O(batch) per append.
+    * exactly as it was (no stranded set rows without candidate keys),
+    * and re-appending the batch converges to exactly-once rows.
+    * O(batch) per append.
     */
   def appendToMinhashStore(newDocs: DataFrame, dir: String): Unit = {
-    val spark = newDocs.sparkSession
-    val (k, bands, rows) = minhashStoreParams(spark, dir)
-    graft.sources.IndexManifest.publishDelta(spark, dir) { vdir =>
-      writeMinhashParams(spark, vdir, k, bands, rows)
-      val sets = mhSets(newDocs, k)
-      sets.write.mode("overwrite").parquet(s"$vdir/sets")
-      mhBands(sets, bands, rows).write.mode("overwrite")
-        .parquet(s"$vdir/bands")
-    }
+    val (k, bands, rows) = minhashStoreParams(newDocs.sparkSession, dir)
+    IndexManifest.append(newDocs, dir)(
+      writeMinhash(newDocs, _, k, bands, rows))
   }
-
-  /** One store table as a single multi-path scan over the live delta
-    * chain (base + every published append).
-    */
-  private def storeTable(spark: org.apache.spark.sql.SparkSession,
-      dir: String, table: String): DataFrame =
-    spark.read.parquet(graft.sources.IndexManifest
-      .resolveChain(spark, dir).map(v => s"$v/$table"): _*)
 
   /** Small-files maintenance after repeated appends (the [[graft
     * .operators.SimilarityOps.compactIndex]] analogue for the
-    * fingerprint store): rewrite each table range-partitioned and
-    * sorted on its probe key — sets by doc_id, bands by
-    * (band, band_key) — so the per-append file litter collapses to
-    * shuffle-partition-count sorted files and the band join reads
-    * clustered keys. Contents are row-identical, so probes are
-    * unchanged.
+    * fingerprint store): the chain folds into one base, each table
+    * range-partitioned and sorted on its probe key — sets by doc_id,
+    * bands by (band, band_key) — so the per-append file litter
+    * collapses and the band join reads clustered keys. Contents are
+    * row-identical, so probes are unchanged.
     */
   def compactMinhashStore(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    val im = graft.sources.IndexManifest
-    // the whole live chain (base + deltas) folds into ONE full version
-    // behind ONE atomic pointer swap; prune then retires the dead chain
-    val chain = im.resolveChain(spark, dir)
-    val (k, bands, rows) = minhashStoreParams(spark, dir)
-    im.publish(spark, dir) { vdir =>
-      writeMinhashParams(spark, vdir, k, bands, rows)
-      rewriteClustered(spark, chain.map(v => s"$v/sets"),
-        s"$vdir/sets", Seq("doc_id"))
-      rewriteClustered(spark, chain.map(v => s"$v/bands"),
-        s"$vdir/bands", Seq("band", "band_key"))
-    }
-    im.prune(spark, dir, keep = 2)
-  }
-
-  /** Range-partition + sort one table into a new location (the
-    * clustered-rewrite half of [[compactFlatTable]], for manifest-
-    * versioned stores where the swap is the manifest's job).
-    */
-  private def rewriteClustered(spark: org.apache.spark.sql.SparkSession,
-      from: Seq[String], to: String, keys: Seq[String]): Unit = {
-    val kc = keys.map(col)
-    spark.read.parquet(from: _*)
-      .repartitionByRange(kc: _*)
-      .sortWithinPartitions(kc: _*)
-      .write.mode("overwrite").parquet(to)
-  }
-
-  /** Rewrite one flat (non-partitioned) parquet table range-partitioned
-    * and sorted on its probe keys, replacing it in place — the shared
-    * kernel of every flat-store compactor (minhash sets/bands here, the
-    * BM25 posting table in [[CorpusOps.compactBm25Index]]). Contents
-    * are row-identical, so probes are unchanged.
-    */
-  private[operators] def compactFlatTable(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String, keys: Seq[String]): Unit = {
-    val tmp = dir.stripSuffix("/") + "_compacting"
-    val kc = keys.map(col)
-    spark.read.parquet(dir)
-      .repartitionByRange(kc: _*)
-      .sortWithinPartitions(kc: _*)
-      .write.mode("overwrite").parquet(tmp)
-    // delete-then-rename is not atomic on a raw filesystem: a crash
-    // between the two leaves the data in `tmp`, recoverable by renaming
-    // it back. Hadoop FS signals failure by RETURNING FALSE (renaming
-    // onto an existing dir would otherwise nest tmp INSIDE the live
-    // table) — treat both as hard errors, never as success.
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.delete(p, true))
-      throw new java.io.IOException(
-        s"compactFlatTable: could not delete $dir (compacted data " +
-          s"preserved at $tmp)")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), p))
-      throw new java.io.IOException(
-        s"compactFlatTable: rename $tmp -> $dir failed (compacted " +
-          s"data preserved at $tmp)")
-  }
+      dir: String): Unit =
+    IndexManifest.compact(spark, dir, "doc_id",
+      Map("sets" -> Seq("doc_id"), "bands" -> Seq("band", "band_key")))
 
   /** Incremental near-dup check of a new ingest batch AGAINST the
     * persisted store: the batch is shingled/banded once, equi-joined on
@@ -645,10 +540,10 @@ object DedupOps {
     */
   def incrementalNearDupPairs(newDocs: DataFrame, dir: String,
       threshold: Double = 0.5): DataFrame = {
-    val spark = newDocs.sparkSession
-    val (k, bands, rows) = minhashStoreParams(spark, dir)
-    val storeSets = storeTable(spark, dir, "sets")
-    val storeBands = storeTable(spark, dir, "bands")
+    val snap = IndexManifest.snapshot(newDocs.sparkSession, dir)
+    val (k, bands, rows) = minhashParams(snap)
+    val storeSets = snap.read("sets", "doc_id")
+    val storeBands = snap.read("bands", "doc_id")
     val nsets = mhSets(newDocs, k)
     val nbands = mhBands(nsets, bands, rows)
     val cand = storeBands
@@ -679,8 +574,9 @@ object DedupOps {
     */
   def minhashLshPairsStore(spark: org.apache.spark.sql.SparkSession,
       dir: String, threshold: Double = 0.5): DataFrame = {
-    val (_, bands, rows) = minhashStoreParams(spark, dir)
-    val sets = materialize(storeTable(spark, dir, "sets"))
+    val snap = IndexManifest.snapshot(spark, dir)
+    val (_, bands, rows) = minhashParams(snap)
+    val sets = materialize(snap.read("sets", "doc_id"))
     val cand = minhashCandidates(mhKeyArrays(sets, bands, rows), bands)
     mhVerify(cand, sets, sets, threshold)
   }
@@ -715,10 +611,10 @@ object DedupOps {
   def minhashPairFlagsStore(spark: org.apache.spark.sql.SparkSession,
       dir: String, pairs: DataFrame, threshold: Double = 0.5,
       flag: String = "is_textdup"): DataFrame = {
-    val (_, bands, rows) = minhashStoreParams(spark, dir)
-    minhashPairFlagsFromSets(pairs,
-      materialize(storeTable(spark, dir, "sets")), bands, rows,
-      threshold, flag)
+    val snap = IndexManifest.snapshot(spark, dir)
+    val (_, bands, rows) = minhashParams(snap)
+    minhashPairFlagsFromSets(pairs, materialize(snap.read("sets", "doc_id")),
+      bands, rows, threshold, flag)
   }
 
   private def minhashPairFlagsFromSets(pairs: DataFrame, sets: DataFrame,

@@ -46,7 +46,6 @@ object InjectorOps {
     * one configured deployment == one "query".
     */
   final case class InjectorConfig(
-      topic: String = "events",
       esIndex: Option[String] = None,
       indexPrefix: String = "",
       indexColumn: Option[String] = None,
@@ -171,7 +170,8 @@ object InjectorOps {
   def timeBucket(suffix: TimeSuffix): Column =
     date_format(col("timestamp"), suffix.pattern)
 
-  /** R3: index-name routing. A configured index column overrides the time
+  /** R3: index-name routing — each record by its own `topic` unless an
+    * index is configured. A configured index column overrides the time
     * bucket entirely.
     */
   def indexName(cfg: InjectorConfig)(df: DataFrame): DataFrame = {
@@ -179,8 +179,8 @@ object InjectorOps {
       .map(f => routingValue(df, f))
       .getOrElse(timeBucket(cfg.timeSuffix))
     df.withColumn("es_index",
-      concat(lit(cfg.indexPrefix), lit(cfg.esIndex.getOrElse(cfg.topic)),
-        lit("-"), suffixCol))
+      concat(lit(cfg.indexPrefix),
+        cfg.esIndex.map(lit).getOrElse(col("topic")), lit("-"), suffixCol))
   }
 
   /** R4: document id — replay-stable "partition:offset" by default, or a

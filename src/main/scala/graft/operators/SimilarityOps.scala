@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.PortableHash.h15
+import graft.sources.IndexManifest
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -479,139 +480,94 @@ object SimilarityOps {
 
   /** Materialize the IVF index on disk — the build-once/search-many
     * shape of a production ANN deployment: corpus rows (+ their
-    * precomputed norms) written PARTITIONED BY home cell, centroids
-    * alongside as a k-row side table. A search then reads ONLY the
-    * probed cell directories via partition pruning: cost is
-    * ~nprobe/k_cells of the corpus per query batch, and the assignment
-    * map never re-runs.
+    * precomputed norms) written to the `rows` table PARTITIONED BY home
+    * cell, centroids in the base's `centroids` model table. A search
+    * then reads ONLY the probed cell directories via partition pruning:
+    * cost is ~nprobe/k_cells of the corpus per query batch, and the
+    * assignment map never re-runs.
     */
   def buildIndex(corpus: DataFrame, centFrame: DataFrame, dir: String)
       : Unit = {
     val cents = collectCents(centFrame)
     val spark = corpus.sparkSession
-    graft.sources.IndexManifest.publish(spark, dir) { vdir =>
+    IndexManifest.publish(spark, dir) { vdir =>
       assignHome(cents)(withNorm(corpus))
-        .write.mode("overwrite").partitionBy("cell").parquet(vdir)
-      import spark.implicits._
-      cents.toDF("cent_id", "cent_emb")
-        .write.mode("overwrite").parquet(centroidsDir(dir))
+        .write.partitionBy("cell").parquet(s"$vdir/rows")
+      writeCents(spark, cents, vdir)
     }
   }
 
-  /** Append new vectors to an existing [[buildIndex]] directory: assign
-    * home cells with the STORED centroids (the model is unchanged — the
-    * standard IVF maintenance path; re-train and rebuild when centroid
-    * drift accumulates) and append into the cell partitions. A pure map
-    * plus a partitioned append; searches pick the rows up with no other
-    * change.
+  private def writeCents(spark: org.apache.spark.sql.SparkSession,
+      cents: Cents, vdir: String): Unit = {
+    import spark.implicits._
+    cents.toDF("cent_id", "cent_emb").write.parquet(s"$vdir/centroids")
+  }
+
+  private def storedCents(snap: IndexManifest.Snapshot): Cents =
+    collectCents(snap.model("centroids"))
+
+  /** Append new vectors to an existing [[buildIndex]] directory as one
+    * delta version: home cells come from the STORED centroids (the model
+    * is unchanged — the standard IVF maintenance path; re-train and
+    * rebuild when centroid drift accumulates). A pure map plus a
+    * partitioned write; searches pick the rows up with no other change.
     *
     * CONTRACT: `newVecs` ids must be NEW to the index — vec_id stays
     * unique across the live store. Re-ingesting an id means
-    * [[deleteFromIndex]] + [[compactIndex]] first (see deleteFromIndex's
-    * re-append caveat). Duplicate live ids would corrupt consumers that
-    * assume one row per vec_id — [[knnGraphIndex]]'s per-src top-k
-    * window keys on the (cell, bucket) a unique id implies.
+    * [[graft.sources.IndexManifest.delete]] + [[compactIndex]] first.
+    * Duplicate live ids would corrupt consumers that assume one row per
+    * vec_id — [[knnGraphIndex]]'s per-src top-k window keys on the
+    * (cell, bucket) a unique id implies.
     */
   def appendToIndex(newVecs: DataFrame, dir: String): Unit = {
-    val spark = newVecs.sparkSession
-    val cents = collectCents(spark.read.parquet(centroidsDir(dir)))
-    assignHome(cents)(withNorm(newVecs))
-      .write.mode("append").partitionBy("cell").parquet(
-        graft.sources.IndexManifest.resolve(spark, dir))
+    val cents = storedCents(IndexManifest.snapshot(newVecs.sparkSession, dir))
+    IndexManifest.append(newVecs, dir)(vdir =>
+      assignHome(cents)(withNorm(newVecs))
+        .write.partitionBy("cell").parquet(s"$vdir/rows"))
   }
 
-  /** Compact an index directory after repeated [[appendToIndex]] /
-    * [[appendToIvfPqIndex]] calls: each append adds at least one file
-    * per touched cell partition, and a daily-growing corpus accretes
-    * thousands of small files per cell — the classic small-files tax on
-    * every subsequent probed-cell scan. Hash-repartitioning on the cell
-    * key lands each cell wholly in one task, so the rewrite leaves ONE
-    * file per cell (rows vec_id-sorted for scan locality); the rewrite
-    * publishes a NEW manifest version behind one atomic pointer swap —
-    * no window where the live index is absent, and readers mid-search
-    * keep their resolved version until the post-swap prune's grace
-    * window passes. Model side tables are untouched.
+  /** Compact a [[buildIndex]] or [[buildIvfPqIndex]] store after
+    * appends and deletes: each append adds at least one file per
+    * touched cell, the small-files tax on every probed-cell scan. The
+    * chain folds into one base with ONE file per cell, tombstoned
+    * vectors purged, the model tables carried over. Cell leads the sort
+    * because a partitioned write needs its task rows ordered by the
+    * partition column (V1Writes would insert a second sort otherwise).
     */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    val im = graft.sources.IndexManifest
-    val cur = im.resolve(spark, dir)
-    im.publish(spark, dir) { vdir =>
-      // cell leads the sort: the partitioned write REQUIRES task rows
-      // ordered by the partition column (V1Writes would insert a second
-      // sort otherwise), and vec_id within it makes the per-file order
-      // contractual rather than an artifact of sort stability.
-      // Tombstoned vectors are purged physically here; the new version
-      // starts with no deletes_v<N+1> table, i.e. tombstone-free.
-      minusTombstones(spark, dir, spark.read.parquet(cur))
-        .repartition(col("cell"))
-        .sortWithinPartitions(col("cell"), col("vec_id"))
-        .write.mode("overwrite").partitionBy("cell").parquet(vdir)
-    }
-    // retire old versions AND their per-version tombstone tables
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    im.prune(spark, dir, keep = 2).foreach { v =>
-      val dp = new org.apache.hadoop.fs.Path(
-        s"${dir.stripSuffix("/")}/deletes_v$v")
-      if (fs.exists(dp) && !fs.delete(dp, true))
-        throw new java.io.IOException(
-          s"compactIndex: could not clear tombstones at $dp")
-    }
-  }
+      dir: String): Unit =
+    IndexManifest.compact(spark, dir, "vec_id",
+      Map("rows" -> Seq("cell", "vec_id")), partitionBy = Some("cell"))
 
-  /** Scan of an index directory restricted to the probed cells: the
-    * probed ids are |Q|·nprobe values — driver-side model scale — and as
-    * an IN literal they prune the partition directories. (The partition
-    * column comes back as the inferred int type; normalized to long for
-    * the join key.) Shared by both persisted-index search paths.
+  /** Compact a [[buildSq8Index]] store: the code table folds into one
+    * vec_id-clustered base; the quantizer is carried over.
     */
-  /** Delete vectors from a persisted index by id — GDPR/TTL retirement,
-    * the delete-by-id half of the lifecycle ES provides the reference.
-    * Ids append to a PER-VERSION tombstone table beside the manifest
-    * (the partitioned version directories must stay pure `cell=N`
-    * layout, so the table cannot live inside them; keying it by version
-    * lets an old-version reader keep its tombstones until that version
-    * prunes); every probed scan anti-joins it, making deletes
-    * search-invisible immediately; the next [[compactIndex]] physically
-    * purges the rows and starts the new version tombstone-free. Serves
-    * both [[buildIndex]] and [[buildIvfPqIndex]] stores (shared scan
-    * path). Re-appending a deleted id before the purge is illegal — the
-    * tombstone would swallow the new row too.
+  def compactSq8Index(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Unit =
+    IndexManifest.compact(spark, dir, "vec_id",
+      Map("codes" -> Seq("vec_id")))
+
+  /** The stored rows of an index store — live chain, deleted ids
+    * anti-joined, the partition column normalized back to long. Shared
+    * by the probed-cell searches and the index-served graph consumers.
     */
-  def deleteFromIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, vecIds: Seq[Long]): Unit = {
-    import spark.implicits._
-    vecIds.toDF("vec_id").write.mode("append")
-      .parquet(tombstoneDir(spark, dir))
-  }
+  def readIndex(spark: org.apache.spark.sql.SparkSession,
+      dir: String): DataFrame =
+    longCell(IndexManifest.snapshot(spark, dir).read("rows", "vec_id"))
 
-  private def tombstoneDir(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    val v = graft.sources.IndexManifest.currentVersion(spark, dir)
-      .getOrElse(throw new java.io.FileNotFoundException(
-        s"deleteFromIndex: no index published under $dir"))
-    s"${dir.stripSuffix("/")}/deletes_v$v"
-  }
+  private def longCell(rows: DataFrame): DataFrame =
+    rows.withColumn("cell", col("cell").cast("long"))
 
-  private def minusTombstones(spark: org.apache.spark.sql.SparkSession,
-      dir: String, scan: DataFrame): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(tombstoneDir(spark, dir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      scan.join(spark.read.parquet(p.toString).distinct(),
-        Seq("vec_id"), "left_anti")
-    else scan
-  }
-
-  private def probedCellScan(spark: org.apache.spark.sql.SparkSession,
-      dir: String, qcells: DataFrame): DataFrame = {
+  /** Scan of an index store restricted to the probed cells: the probed
+    * ids are |Q|·nprobe values — driver-side model scale — and as an IN
+    * literal they prune the partition directories of every version.
+    */
+  private def probedCellScan(snap: IndexManifest.Snapshot,
+      qcells: DataFrame): DataFrame = {
     val probed = qcells.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).toSeq
-    minusTombstones(spark, dir,
-      spark.read.parquet(graft.sources.IndexManifest.resolve(spark, dir))
-        .filter(col("cell").isInCollection(probed))
-        .withColumn("cell", col("cell").cast("long")))
+    longCell(snap.read("rows", "vec_id")
+      .filter(col("cell").isInCollection(probed)))
   }
 
   /** Search a [[buildIndex]] directory: assign probe cells to the query
@@ -621,20 +577,14 @@ object SimilarityOps {
   def searchIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       queries: DataFrame, k: Int, nprobe: Int = 1): DataFrame = {
     require(nprobe >= 1, "nprobe must be >= 1")
-    val cents = collectCents(spark.read.parquet(centroidsDir(dir)))
-    val qcells = assignProbes(cents, nprobe)(withNorm(queries))
-    searchCells(probedCellScan(spark, dir, qcells), qcells, k)
+    val snap = IndexManifest.snapshot(spark, dir)
+    val qcells = assignProbes(storedCents(snap), nprobe)(withNorm(queries))
+    searchCells(probedCellScan(snap, qcells), qcells, k)
   }
 
-  private def centroidsDir(dir: String): String =
-    dir.stripSuffix("/") + "_centroids"
-
-  private def booksDir(dir: String): String =
-    dir.stripSuffix("/") + "_books"
-
   /** Persisted IVF+PQ index: one corpus pass computes home cell + the m
-    * PQ codes, written partitionBy(cell); centroids AND codebooks live
-    * alongside as model-state side tables. A search reads ONLY the
+    * PQ codes, written partitionBy(cell) to `rows`; centroids AND
+    * codebooks are the base's model tables. A search reads ONLY the
     * probed cell partitions and scores candidates by ADC table lookups —
     * at 100 TB the scan is nprobe/k_cells of a table that holds m small
     * ints per vector instead of the embeddings themselves.
@@ -642,53 +592,51 @@ object SimilarityOps {
   def buildIvfPqIndex(corpus: DataFrame, centFrame: DataFrame,
       books: Seq[Seq[Seq[Double]]], dir: String): Unit = {
     val cents = collectCents(centFrame)
-    val m = books.length
     val spark = corpus.sparkSession
-    graft.sources.IndexManifest.publish(spark, dir) { vdir =>
-      assignHome(cents)(withNorm(corpus))
-        .select(col("vec_id") +: col("cell") +:
-          (0 until m).map(j => pqCodeCol(books, j).as(s"__c$j")): _*)
-        .write.mode("overwrite").partitionBy("cell").parquet(vdir)
+    IndexManifest.publish(spark, dir) { vdir =>
+      pqCoded(cents, books)(corpus)
+        .write.partitionBy("cell").parquet(s"$vdir/rows")
+      writeCents(spark, cents, vdir)
       import spark.implicits._
-      cents.toDF("cent_id", "cent_emb")
-        .write.mode("overwrite").parquet(centroidsDir(dir))
       books.zipWithIndex
         .flatMap { case (b, j) => b.zipWithIndex.map { case (c, i) =>
           (j, i + 1, c) } }
         .toDF("j", "code", "cvec")
-        .write.mode("overwrite").parquet(booksDir(dir))
+        .write.parquet(s"$vdir/books")
     }
   }
 
-  /** Reload the codebooks side table as driver model state (m × nc ×
+  /** One corpus pass: home cell + the m PQ codes. */
+  private def pqCoded(cents: Cents, books: Seq[Seq[Seq[Double]]])(
+      corpus: DataFrame): DataFrame =
+    assignHome(cents)(withNorm(corpus))
+      .select(col("vec_id") +: col("cell") +:
+        books.indices.map(j => pqCodeCol(books, j).as(s"__c$j")): _*)
+
+  /** Reload the codebooks model table as driver model state (m × nc ×
     * sub doubles), in (j, code) order.
     */
-  private def loadBooks(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Seq[Seq[Seq[Double]]] =
-    spark.read.parquet(booksDir(dir))
+  private def loadBooks(snap: IndexManifest.Snapshot)
+      : Seq[Seq[Seq[Double]]] =
+    snap.model("books")
       .orderBy(col("j"), col("code"))
       .select(col("j"), col("cvec"))
       .collect().map(r => (r.getInt(0), r.getSeq[Double](1): Seq[Double]))
       .groupBy(_._1).toSeq.sortBy(_._1).map(_._2.map(_._2).toSeq)
 
-  /** Append new vectors to an existing [[buildIvfPqIndex]] directory:
-    * home cells AND codes are computed with the STORED model (centroids
-    * + codebooks unchanged — the standard maintenance path for a daily
-    * growing corpus; re-train and rebuild when drift accumulates), one
-    * pure map plus a partitioned append. Append ≡ rebuild bit-exact
-    * because a vector's cell and codes depend only on the model, never
-    * on the rest of the corpus.
+  /** Append new vectors to an existing [[buildIvfPqIndex]] directory as
+    * one delta version: home cells AND codes are computed with the
+    * STORED model (centroids + codebooks unchanged — the standard
+    * maintenance path for a daily growing corpus; re-train and rebuild
+    * when drift accumulates). Append ≡ rebuild bit-exact because a
+    * vector's cell and codes depend only on the model, never on the
+    * rest of the corpus.
     */
   def appendToIvfPqIndex(newVecs: DataFrame, dir: String): Unit = {
-    val spark = newVecs.sparkSession
-    val cents = collectCents(spark.read.parquet(centroidsDir(dir)))
-    val books = loadBooks(spark, dir)
-    val m = books.length
-    assignHome(cents)(withNorm(newVecs))
-      .select(col("vec_id") +: col("cell") +:
-        (0 until m).map(j => pqCodeCol(books, j).as(s"__c$j")): _*)
-      .write.mode("append").partitionBy("cell").parquet(
-        graft.sources.IndexManifest.resolve(spark, dir))
+    val snap = IndexManifest.snapshot(newVecs.sparkSession, dir)
+    val coded = pqCoded(storedCents(snap), loadBooks(snap))(newVecs)
+    IndexManifest.append(newVecs, dir)(vdir =>
+      coded.write.partitionBy("cell").parquet(s"$vdir/rows"))
   }
 
   /** Search a [[buildIvfPqIndex]] directory: probe cells + ADC tables
@@ -700,14 +648,14 @@ object SimilarityOps {
       dir: String, queries: DataFrame, k: Int, nprobe: Int = 1)
       : DataFrame = {
     require(nprobe >= 1, "nprobe must be >= 1")
-    val cents = collectCents(spark.read.parquet(centroidsDir(dir)))
-    val books = loadBooks(spark, dir)
+    val snap = IndexManifest.snapshot(spark, dir)
+    val books = loadBooks(snap)
     val m = books.length
-    val qcells = assignProbes(cents, nprobe)(withNorm(queries))
+    val qcells = assignProbes(storedCents(snap), nprobe)(withNorm(queries))
     val qt = broadcast(qcells.select(col("vec_id").as("query_id") +:
       col("cell") +:
       (0 until m).map(j => pqTableCol(books, j).as(s"__t$j")): _*))
-    pqRank(probedCellScan(spark, dir, qcells).join(qt, Seq("cell"))
+    pqRank(probedCellScan(snap, qcells).join(qt, Seq("cell"))
       .filter(col("vec_id") =!= col("query_id")), m, k)
   }
 
@@ -975,16 +923,6 @@ object SimilarityOps {
       dir: String, k: Int, cellCap: Long = KnnCellTarget): DataFrame =
     knnFromAssigned(k, cellCap)(readIndex(spark, dir))
 
-  /** The stored-index scan shared by index-served graph consumers:
-    * live manifest version, tombstones anti-joined, the partition
-    * column normalized back to long.
-    */
-  def readIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    minusTombstones(spark, dir,
-      spark.read.parquet(graft.sources.IndexManifest.resolve(spark, dir))
-        .withColumn("cell", col("cell").cast("long")))
-
   /** The self-join + top-k tail shared by the in-memory and
     * persisted-index graph builds; `assigned` carries
     * (vec_id, embedding, nrm, cell).
@@ -1006,9 +944,9 @@ object SimilarityOps {
     // vec_id to be UNIQUE in `assigned`. In-memory builds get it from
     // the embeddings table (key-unique by fixture contract); persisted
     // builds from the index lifecycle — appendToIndex must only append
-    // NEW ids (re-ingest = compactIndex-purged deleteFromIndex first;
+    // NEW ids (re-ingest = IndexManifest.delete + compactIndex first;
     // re-appending a still-live vec_id is as illegal as re-appending a
-    // tombstoned one, see deleteFromIndex's doc), or per-(bucket,
+    // tombstoned one, see IndexManifest.delete's doc), or per-(bucket,
     // duplicate) top-ks would replace the global per-src top-k.
     // But HashPartitioning(cell, __bkt) from the self-join
     // already satisfies the clustered distribution and the fattest
@@ -1256,36 +1194,39 @@ object SimilarityOps {
         col("rank").cast("long").as("rank"), col("cos"))
   }
 
-  /** Persist the SQ8 index: the (2×dim)-double model and the uint8 code
-    * table — a quarter of the raw float32 bytes; searches never reopen
-    * the raw embeddings. The model is stored, not recomputed, so
-    * appends encode THROUGH it and append ≡ rebuild bit-exactly.
+  /** Persist the SQ8 index: the (2×dim)-double `model` table in the
+    * base and the uint8 `codes` table — a quarter of the raw float32
+    * bytes; searches never reopen the raw embeddings. The model is
+    * stored, not recomputed, so appends encode THROUGH it and append ≡
+    * rebuild bit-exactly.
     */
   def buildSq8Index(corpus: DataFrame,
       model: (Seq[Double], Seq[Double]), dir: String): Unit = {
     val (mns, mxs) = model
     val spark = corpus.sparkSession
     // model + codes publish together under one pointer swap
-    graft.sources.IndexManifest.publish(spark, dir) { vdir =>
+    IndexManifest.publish(spark, dir) { vdir =>
       import spark.implicits._
       mns.indices.map(i => (i, mns(i), mxs(i))).toDF("i", "mn", "mx")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/model")
-      corpus.select(col("vec_id"),
-          sq8Codes(mns, mxs)(col("embedding")).as("code"))
-        .write.mode("overwrite").parquet(s"$vdir/codes")
+        .coalesce(1).write.parquet(s"$vdir/model")
+      sq8Coded(model)(corpus).write.parquet(s"$vdir/codes")
     }
   }
 
-  /** Append new vectors through the STORED quantizer (a growing corpus
-    * must not re-derive min/max — that would re-encode history).
+  private def sq8Coded(model: (Seq[Double], Seq[Double]))(
+      vecs: DataFrame): DataFrame =
+    vecs.select(col("vec_id"),
+      sq8Codes(model._1, model._2)(col("embedding")).as("code"))
+
+  /** Append new vectors as one delta version, through the STORED
+    * quantizer (a growing corpus must not re-derive min/max — that would
+    * re-encode history).
     */
   def appendToSq8Index(newVecs: DataFrame, dir: String): Unit = {
-    val spark = newVecs.sparkSession
-    val vdir = graft.sources.IndexManifest.resolve(spark, dir)
-    val (mns, mxs) = loadSq8Model(spark, vdir)
-    newVecs.select(col("vec_id"),
-        sq8Codes(mns, mxs)(col("embedding")).as("code"))
-      .write.mode("append").parquet(s"$vdir/codes")
+    val coded = sq8Coded(loadSq8Model(
+      IndexManifest.snapshot(newVecs.sparkSession, dir)))(newVecs)
+    IndexManifest.append(newVecs, dir)(vdir =>
+      coded.write.parquet(s"$vdir/codes"))
   }
 
   /** Search the persisted index: dequantize the code scan (pure map)
@@ -1293,17 +1234,17 @@ object SimilarityOps {
     */
   def searchSq8Index(spark: org.apache.spark.sql.SparkSession,
       dir: String, queries: DataFrame, k: Int): DataFrame = {
-    val vdir = graft.sources.IndexManifest.resolve(spark, dir)
-    val (mns, mxs) = loadSq8Model(spark, vdir)
-    sq8Rank(spark.read.parquet(s"$vdir/codes")
+    val snap = IndexManifest.snapshot(spark, dir)
+    val (mns, mxs) = loadSq8Model(snap)
+    sq8Rank(snap.read("codes", "vec_id")
       .select(col("vec_id").as("neighbor_id"),
         sq8Dequantize(mns, mxs)(col("code")).as("dq")), queries, k)
   }
 
-  private def loadSq8Model(spark: org.apache.spark.sql.SparkSession,
-      vdir: String): (Seq[Double], Seq[Double]) = {
-    val rows = spark.read.parquet(s"$vdir/model").orderBy(col("i"))
-      .collect()
+  private def loadSq8Model(snap: IndexManifest.Snapshot)
+      : (Seq[Double], Seq[Double]) = {
+    val rows = snap.model("model")
+      .orderBy(col("i")).collect()
     (rows.map(_.getDouble(1)).toSeq, rows.map(_.getDouble(2)).toSeq)
   }
 

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.DedupOps
+import graft.sources.TempStores
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -106,17 +107,9 @@ object DedupQueries {
     * (the build-once/search-many discipline of the persisted ANN
     * indexes).
     */
-  private val mhStoreCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   private def builtMinhashStore(s: SparkSession, dir: String): String =
-    mhStoreCache.getOrElseUpdate((s, dir), {
-      val tmp = graft.sources.TempStores
-        .tempDir("graft-mh-store") + "/store"
-      DedupOps.buildMinhashStore(
-        docs(s, dir).filter(col("doc_id") < IncrSplitId), tmp)
-      tmp
-    })
+    TempStores.memo("graft-mh-store", s, dir)(DedupOps.buildMinhashStore(
+      docs(s, dir).filter(col("doc_id") < IncrSplitId), _))
 
   /** FULL-corpus persisted MinHash store (vs the history-half store
     * above), memoized per (session, dir) — the fingerprint substrate
@@ -124,31 +117,17 @@ object DedupQueries {
     * and their consumers (corpus_hard_negatives_persisted) read;
     * shared with SimilarityQueries.
     */
-  private val fullMhStoreCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   private[queries] def builtFullMinhashStore(s: SparkSession,
       dir: String): String =
-    fullMhStoreCache.getOrElseUpdate((s, dir), {
-      val tmp = graft.sources.TempStores
-        .tempDir("graft-mh-full-store") + "/store"
-      DedupOps.buildMinhashStore(docs(s, dir), tmp)
-      tmp
-    })
+    TempStores.memo("graft-mh-full-store", s, dir)(
+      DedupOps.buildMinhashStore(docs(s, dir), _))
 
   /** Full-corpus winnowing fingerprint store, memoized like the
     * minhash stores (build-once / serve-many).
     */
-  private val winnowStoreCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   private def builtWinnowingStore(s: SparkSession, dir: String): String =
-    winnowStoreCache.getOrElseUpdate((s, dir), {
-      val tmp = graft.sources.TempStores
-        .tempDir("graft-winnow-store") + "/store"
-      DedupOps.buildWinnowingStore(docs(s, dir), tmp, k = 5, w = 4)
-      tmp
-    })
+    TempStores.memo("graft-winnow-store", s, dir)(
+      DedupOps.buildWinnowingStore(docs(s, dir), _, k = 5, w = 4))
 
   val all: Map[String, Q] = Map(
     // Exact dedup: hash-groupBy on normalized content.

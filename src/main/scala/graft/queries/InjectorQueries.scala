@@ -26,7 +26,7 @@ object InjectorQueries {
       KafkaShape.fromEvents(Tables.events(s, dir)).localCheckpoint(false))
 
   private val schema = KafkaShape.eventPayloadSchema
-  private val baseCfg = InjectorConfig(topic = "events", indexPrefix = "graft-")
+  private val baseCfg = InjectorConfig(indexPrefix = "graft-")
 
   /** Decoded frame shared by most queries below — decoded ONCE per
     * (session, sf-dir) and fanned out, the shape a real deployment has: one

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.SimilarityOps
+import graft.sources.TempStores
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -106,33 +107,20 @@ object SimilarityQueries {
     lloydCache.getOrElseUpdate((s, dir),
       train(s, dir).localCheckpoint(false))
 
-  /** Persisted IVF index (build-once/search-many), memoized per
-    * (session, sf-dir) like the Lloyd model: the build cost is paid on
-    * first use, searches after that only read the probed cell
-    * partitions.
-    */
-  private val indexCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   /** Seed-centroid frame shared by every seeded-index builder. */
   private def seedCents(e: DataFrame): DataFrame =
     e.filter(col("vec_id").isInCollection(SEEDS.map(_.toLong)))
       .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"))
 
-  private def memoTempIndex(cache: scala.collection.concurrent.TrieMap[
-        (SparkSession, String), String],
-      s: SparkSession, dir: String, prefix: String)(
-      build: (DataFrame, String) => Unit): String =
-    cache.getOrElseUpdate((s, dir), {
-      val tmp = graft.sources.TempStores
-        .tempDir(prefix) + "/idx"
-      build(embs(s, dir), tmp)
-      tmp
-    })
-
+  /** Persisted IVF index (build-once/search-many), memoized per
+    * (session, sf-dir) like the Lloyd model: the build cost is paid on
+    * first use, searches after that only read the probed cell
+    * partitions.
+    */
   private def builtIndex(s: SparkSession, dir: String): String =
-    memoTempIndex(indexCache, s, dir, "graft-ivf-index") { (e, tmp) =>
-      SimilarityOps.buildIndex(e, seedCents(e), tmp)
+    TempStores.memo("graft-ivf-index", s, dir) { root =>
+      val e = embs(s, dir)
+      SimilarityOps.buildIndex(e, seedCents(e), root)
     }
 
   /** Persisted index under the TRAINED Lloyd model (the seed-centroid
@@ -140,26 +128,18 @@ object SimilarityQueries {
     * model is the trained one) — the store corpus_hard_negatives_persisted
     * reads its assignments and norms from.
     */
-  private val trainedIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   private def builtTrainedIndex(s: SparkSession, dir: String): String =
-    memoTempIndex(trainedIndexCache, s, dir, "graft-knn-index") {
-      (e, tmp) =>
-        SimilarityOps.buildIndex(e,
-          trained(s, dir).select(col("cell").as("cent_id"),
-            col("centroid").as("cent_emb")), tmp)
-    }
-
-  private val ivfPqIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
+    TempStores.memo("graft-knn-index", s, dir)(
+      SimilarityOps.buildIndex(embs(s, dir),
+        trained(s, dir).select(col("cell").as("cent_id"),
+          col("centroid").as("cent_emb")), _))
 
   private def builtIvfPqIndex(s: SparkSession, dir: String): String =
-    memoTempIndex(ivfPqIndexCache, s, dir, "graft-ivfpq-index") {
-      (e, tmp) =>
-        SimilarityOps.buildIvfPqIndex(e, seedCents(e),
-          SimilarityOps.pqBooksOf(e, SEEDS.map(_.toLong), m = 4, dim = 64),
-          tmp)
+    TempStores.memo("graft-ivfpq-index", s, dir) { root =>
+      val e = embs(s, dir)
+      SimilarityOps.buildIvfPqIndex(e, seedCents(e),
+        SimilarityOps.pqBooksOf(e, SEEDS.map(_.toLong), m = 4, dim = 64),
+        root)
     }
 
   /** Per-subspace PQ codebook training, memoized per (session, sf-dir)
@@ -198,13 +178,9 @@ object SimilarityQueries {
     sq8Cache.getOrElseUpdate((s, dir),
       SimilarityOps.sq8Model(embs(s, dir)))
 
-  private val sq8IndexCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   private def builtSq8Index(s: SparkSession, dir: String): String =
-    memoTempIndex(sq8IndexCache, s, dir, "graft-sq8-index") { (e, tmp) =>
-      SimilarityOps.buildSq8Index(e, sq8ModelOf(s, dir), tmp)
-    }
+    TempStores.memo("graft-sq8-index", s, dir)(
+      SimilarityOps.buildSq8Index(embs(s, dir), sq8ModelOf(s, dir), _))
 
   /** Shared tail of the hard-negative miners: sort each anchor's k-NN
     * edges into (pa, pb) pair keys, flag textual near-dups via the

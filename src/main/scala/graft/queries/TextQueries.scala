@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.operators.TextOps
 import graft.operators.TextOps._
+import graft.sources.TempStores
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -505,45 +506,24 @@ object TextQueries {
   /** Persisted BM25 posting index, built once per (session, sf-dir) —
     * the build-once/search-many discipline of the ANN index caches.
     */
-  private val bm25IndexCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   private def builtBm25Index(s: SparkSession, dir: String): String =
-    bm25IndexCache.getOrElseUpdate((s, dir), {
-      val tmp = graft.sources.TempStores
-        .tempDir("graft-bm25-index") + "/idx"
-      graft.operators.CorpusOps.buildBm25Index(docs(s, dir), tmp)
-      tmp
-    })
+    TempStores.memo("graft-bm25-index", s, dir)(
+      graft.operators.CorpusOps.buildBm25Index(docs(s, dir), _))
 
   /** Persisted positional index (phrase/span search), same build-once
     * discipline.
     */
-  private val posIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   private def builtPosIndex(s: SparkSession, dir: String): String =
-    posIndexCache.getOrElseUpdate((s, dir), {
-      val tmp = graft.sources.TempStores
-        .tempDir("graft-pos-index") + "/idx"
-      graft.operators.CorpusOps.buildPositionalIndex(docs(s, dir), tmp)
-      tmp
-    })
+    TempStores.memo("graft-pos-index", s, dir)(
+      graft.operators.CorpusOps.buildPositionalIndex(docs(s, dir), _))
 
   /** Persisted percolator registry, built once per session (the stored
-    * queries don't vary by sf-dir, but the cache key keeps the
-    * one-build-per-input discipline of the other index caches).
+    * queries don't vary by sf-dir, but the memo key keeps the
+    * one-build-per-input discipline of the other index stores).
     */
-  private val percolateIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
   private def builtPercolateIndex(s: SparkSession, dir: String): String =
-    percolateIndexCache.getOrElseUpdate((s, dir), {
-      val tmp = graft.sources.TempStores
-        .tempDir("graft-percolate-index") + "/idx"
-      graft.operators.CorpusOps.buildPercolateIndex(s, BoolQueries, tmp)
-      tmp
-    })
+    TempStores.memo("graft-percolate-index", s, dir)(
+      graft.operators.CorpusOps.buildPercolateIndex(s, BoolQueries, _))
 
   /** Phrase-search query set, interpolated into BOTH engines. */
   private[queries] val PhraseQueries: Seq[(Long, String)] = Seq(

@@ -28,6 +28,21 @@ object TempStores {
     f.delete()
   }
 
+  private val memos = scala.collection.concurrent.TrieMap
+    .empty[(String, org.apache.spark.sql.SparkSession, String), String]
+
+  /** The store root a query serves from, built once per (prefix,
+    * session, sf-dir): on first use `build` is handed a fresh root under
+    * a registered temp directory; later calls return the same root.
+    */
+  def memo(prefix: String, spark: org.apache.spark.sql.SparkSession,
+      dir: String)(build: String => Unit): String =
+    memos.getOrElseUpdate((prefix, spark, dir), {
+      val root = tempDir(prefix) + "/store"
+      build(root)
+      root
+    })
+
   /** Create a temp directory registered for deletion at JVM exit. */
   def tempDir(prefix: String): String = {
     hookInstalled

@@ -99,15 +99,17 @@ object InjectorApp {
         maxOffsetsPerTrigger =
           long("KAFKA_CONSUMER_BATCH_SIZE", 1L, Long.MaxValue)),
       injector = InjectorConfig(
-        topic = topics.headOption.getOrElse("events"),
         esIndex = get("ES_INDEX"),
         indexPrefix = get("ES_INDEX_PREFIX").getOrElse(""),
         indexColumn = get("ES_INDEX_COLUMN"),
         docIdColumn = get("ES_DOC_ID_COLUMN"),
-        timeSuffix = get("ES_TIME_SUFFIX") match {
-          case Some("hour") => InjectorOps.HourSuffix
-          case _ => InjectorOps.DaySuffix // config.go:51-57: day default
-        },
+        // config.go:51-57: day default
+        timeSuffix = parsed("ES_TIME_SUFFIX", "day or hour")(
+          _.toLowerCase match {
+            case "day" => Some(InjectorOps.DaySuffix)
+            case "hour" => Some(InjectorOps.HourSuffix)
+            case _ => None
+          }).getOrElse(InjectorOps.DaySuffix),
         blacklist = csv("ES_BLACKLISTED_COLUMNS").getOrElse(Nil),
         includeKey = bool("KAFKA_CONSUMER_INCLUDE_KEY")),
       sink = EsHttpSink.Config(
@@ -213,8 +215,8 @@ object InjectorApp {
         // the documented pre-create step, BEFORE the first insert: without
         // a template, dynamic mapping guesses every field type
         if (cfg.installTemplate)
-          sink.ensureTemplate(cfg.injector.indexPrefix +
-            cfg.injector.esIndex.getOrElse(cfg.injector.topic))
+          cfg.injector.esIndex.fold(cfg.source.topics)(Seq(_)).foreach(
+            t => sink.ensureTemplate(cfg.injector.indexPrefix + t))
         a.writeStream
           .option("checkpointLocation", cfg.checkpoint)
           .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>

@@ -204,17 +204,20 @@ class AsofJoinSpec extends SparkSpec {
     def rows() = SimilarityOps.searchIndex(spark, dir, q, 2)
       .select($"query_id", $"neighbor_id", $"rank", $"cos")
       .as[(Long, Long, Long, Double)].collect().sortBy(r => (r._1, r._3))
-    def filesPerCell() = new java.io.File(
-      graft.sources.IndexManifest.resolve(spark, dir)).listFiles
+    import graft.sources.IndexManifest
+    // parquet files per cell, summed over every version of the live chain
+    def filesPerCell() = IndexManifest.resolveChain(spark, dir)
+      .flatMap(v => Option(new java.io.File(s"$v/rows").listFiles)
+        .getOrElse(Array.empty[java.io.File]).toSeq)
       .filter(_.getName.startsWith("cell=")).map(d =>
         d.getName -> d.listFiles.count(_.getName.endsWith(".parquet")))
-      .toMap
+      .groupMapReduce(_._1)(_._2)(_ + _)
     val before = rows()
+    assert(IndexManifest.chainVersions(spark, dir) == Seq(3, 2, 1))
     assert(filesPerCell().values.exists(_ > 1), "appends made no files")
     SimilarityOps.compactIndex(spark, dir)
-    // the compaction published a new version atomically
-    assert(graft.sources.IndexManifest
-      .currentVersion(spark, dir).contains(2))
+    // the compaction published ONE new version, a chain of one
+    assert(IndexManifest.chainVersions(spark, dir) == Seq(4))
     val fpc = filesPerCell()
     assert(fpc.nonEmpty && fpc.values.forall(_ == 1), fpc.toString)
     assert(rows().sameElements(before), "compaction changed the result")
@@ -234,7 +237,7 @@ class AsofJoinSpec extends SparkSpec {
     val dirB = java.nio.file.Files
       .createTempDirectory("graft-ivf-delB").toString + "/idx"
     SimilarityOps.buildIndex(full, cents(full), dir)
-    SimilarityOps.deleteFromIndex(spark, dir, Seq(1L))
+    graft.sources.IndexManifest.delete(spark, dir, Seq(1L))
     // reference: an index that never contained vector 1
     SimilarityOps.buildIndex(
       all.filterNot(_._1 == 1L).toDF("vec_id", "embedding"),
@@ -248,16 +251,19 @@ class AsofJoinSpec extends SparkSpec {
     assert(rows(dir).sameElements(want)) // hidden immediately
     SimilarityOps.compactIndex(spark, dir)
     assert(rows(dir).sameElements(want)) // still gone after the purge
-    // physically purged; the new version is tombstone-free while v1
-    // keeps its table for old readers inside the keep=2 grace window
-    val data = spark.read.parquet(
-      graft.sources.IndexManifest.resolve(spark, dir))
+    // physically purged; the new base (v3) is tombstone-free while the
+    // old chain (v1 + its delete delta v2) stays for old readers inside
+    // the keep=2 grace window
+    import graft.sources.IndexManifest
+    def deletes(v: Int) =
+      new java.io.File(s"${IndexManifest.versionDir(dir, v)}/deletes")
+    assert(IndexManifest.chainVersions(spark, dir) == Seq(3))
+    val data = spark.read.parquet(s"${IndexManifest.versionDir(dir, 3)}/rows")
     assert(!data.select($"vec_id").as[Long].collect().contains(1L))
-    assert(!new java.io.File(s"$dir/deletes_v2").exists())
-    assert(new java.io.File(s"$dir/deletes_v1").exists())
-    // the second compaction retires v1 and clears its tombstones with it
+    assert(!deletes(3).exists() && deletes(2).exists())
+    // the second compaction retires the old chain, tombstones with it
     SimilarityOps.compactIndex(spark, dir)
-    assert(!new java.io.File(s"$dir/deletes_v1").exists())
+    assert(!deletes(2).exists())
     assert(rows(dir).sameElements(want))
   }
 

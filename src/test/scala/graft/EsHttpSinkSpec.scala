@@ -28,7 +28,7 @@ class EsHttpSinkSpec extends SparkSpec {
   private val schema = StructType(Seq(
     StructField("id", StringType), StructField("n", IntegerType),
     StructField("reject", BooleanType)))
-  private val cfg = InjectorConfig(topic = "my-topic")
+  private val cfg = InjectorConfig()
 
   private def kafkaFrame(rows: Seq[(Int, Long, String)]) =
     rows.map { case (p, o, json) =>
@@ -175,7 +175,7 @@ class EsHttpSinkSpec extends SparkSpec {
       // R4 column-routed doc id: the payload column supplies ARBITRARY
       // strings (the reference accepts any), including JSON metachars
       // that would frame-shift a string-interpolated NDJSON action line
-      val idCfg = InjectorConfig(topic = "my-topic", docIdColumn = Some("id"))
+      val idCfg = InjectorConfig(docIdColumn = Some("id"))
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
       def payload(id: String, n: Int): String = {
         val o = mapper.createObjectNode()
@@ -291,7 +291,7 @@ class EsHttpSinkSpec extends SparkSpec {
           pattern.split("\\*", -1).map(java.util.regex.Pattern.quote)
             .mkString(".*"), index)
       // hour-suffixed pipeline over the wire
-      val hourCfg = InjectorConfig(topic = "my-topic",
+      val hourCfg = InjectorConfig(
         timeSuffix = graft.operators.InjectorOps.HourSuffix)
       sink.write(assembledWith(hourCfg)(
         Seq((0, 1L, """{"id":"a","n":1}"""))), 0L)
@@ -351,7 +351,7 @@ class EsHttpSinkSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-app-default").toString
     try {
       val env = InjectorApp.fromEnv(Map(
-        "KAFKA_TOPICS" -> "my-topic",
+        "KAFKA_TOPICS" -> "my-topic,views",
         "KAFKA_CONSUMER_RECORD_TYPE" -> "json",
         "ES_INDEX_TEMPLATE" -> "true",
         "PROBES_PORT" -> "0",
@@ -361,7 +361,9 @@ class EsHttpSinkSpec extends SparkSpec {
       val stream = MemoryStream[Msg]
       stream.addData(Seq(
         Msg(null, """{"id":"a","n":1}""".getBytes("UTF-8"), "my-topic",
-          0, 1L, Timestamp.valueOf("2024-03-05 10:11:12.345"), 0)))
+          0, 1L, Timestamp.valueOf("2024-03-05 10:11:12.345"), 0),
+        Msg(null, """{"id":"v","n":2}""".getBytes("UTF-8"), "views",
+          0, 2L, Timestamp.valueOf("2024-03-05 10:11:12.345"), 0)))
       // no startSink, no sinkPing: the production defaults
       val (q, probes) = InjectorApp.start(spark, cfg, jsonSchema = schema,
         source = Some(stream.toDF()))
@@ -375,10 +377,16 @@ class EsHttpSinkSpec extends SparkSpec {
         q.processAllAvailable()
         assert(es.doc("my-topic-2024-03-05", "0:1").exists(
           _.contains(""""id":"a"""")))
+        // each record lands in its own topic's index
+        assert(es.doc("views-2024-03-05", "0:2").exists(
+          _.contains(""""id":"v"""")))
+        assert(es.doc("my-topic-2024-03-05", "0:2").isEmpty)
         val calls = es.requests.asScala.toSeq.map(r => s"${r._1} ${r._2}")
-        val put = calls.indexOf("PUT /_template/my-topic")
-        assert(put >= 0 && put < calls.indexOf("POST /_bulk"),
-          s"template must be installed before the first insert: $calls")
+        for (t <- Seq("my-topic", "views")) {
+          val put = calls.indexOf(s"PUT /_template/$t")
+          assert(put >= 0 && put < calls.indexOf("POST /_bulk"),
+            s"template must be installed before the first insert: $calls")
+        }
         assert(ready() == 200)
         es.healthDown.set(true)
         assert(ready() == 500, "the default ping must follow GET /")

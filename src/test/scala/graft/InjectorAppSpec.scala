@@ -42,7 +42,6 @@ class InjectorAppSpec extends AnyFunSuite {
     assert(cfg.source.bootstrapServers == "broker:9092")
     assert(cfg.source.topics == Seq("clicks", "views"))
     assert(cfg.source.maxOffsetsPerTrigger.contains(5000L))
-    assert(cfg.injector.topic == "clicks")
     assert(cfg.injector.esIndex.contains("events-idx"))
     assert(cfg.injector.indexPrefix == "pre-")
     assert(cfg.injector.indexColumn.contains("route"))
@@ -131,6 +130,8 @@ class InjectorAppSpec extends AnyFunSuite {
     // a misspelt scheme must not downgrade Basic credentials to plaintext
     rejects("ELASTICSEARCH_SCHEME", "ftp")
     rejects("ELASTICSEARCH_SCHEME", "htps")
+    // a misspelt bucket must not silently route to daily indices
+    rejects("ES_TIME_SUFFIX", "weekly")
     // the edges that remain valid
     assert(InjectorApp.fromEnv(Map("PROBES_PORT" -> "0")).probesPort
       .contains(0))
@@ -144,6 +145,10 @@ class InjectorAppSpec extends AnyFunSuite {
       .sink.url == "https://localhost:9200")
     assert(InjectorApp.fromEnv(Map("ELASTICSEARCH_SCHEME" -> "http"))
       .sink.url == "http://localhost:9200")
+    assert(InjectorApp.fromEnv(Map("ES_TIME_SUFFIX" -> "HOUR"))
+      .injector.timeSuffix == InjectorOps.HourSuffix)
+    assert(InjectorApp.fromEnv(Map("ES_TIME_SUFFIX" -> "Day"))
+      .injector.timeSuffix == InjectorOps.DaySuffix)
     assert(InjectorApp.fromEnv(Map("ES_BULK_TIMEOUT" -> "1ms"))
       .sink.timeoutMs == 1)
     assert(InjectorApp.fromEnv(Map("ES_BULK_TIMEOUT" -> "596h"))

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.InjectorOps._
+import graft.streaming.InjectorApp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -80,7 +81,7 @@ class InjectorOpsSpec extends SparkSpec {
         when($"offset" === 1L, encode(lit("""{"uid":7}"""), "UTF-8"))
           .when($"offset" === 2L, lit(null).cast("binary"))
           .otherwise(encode(lit("{bad"), "UTF-8")))
-    val cfg = InjectorConfig(topic = "my-topic")
+    val cfg = InjectorConfig()
     // no key decoder: the key is left out of the payload, every row kept
     val noKey = pipeline(cfg, payloadSchema)(three)
     assert(!noKey.schema("payload").dataType.asInstanceOf[StructType]
@@ -140,11 +141,20 @@ class InjectorOpsSpec extends SparkSpec {
 
   // ----- codec_test.go: index naming, doc id, assembly
 
-  private val cfg = InjectorConfig(topic = "my-topic")
+  private val cfg = InjectorConfig()
 
   test("R2/R3: default index is topic + day suffix") {
     val idx = indexName(cfg)(decoded).select($"es_index").as[String].head()
     assert(idx == "my-topic-2024-03-05")
+    // each record routes by its OWN topic (codec.go:50-75), also under a
+    // multi-topic subscription; a configured index overrides every topic
+    val two = decoded.unionByName(decoded.withColumn("topic", lit("views")))
+    val multi = InjectorApp.fromEnv(Map("KAFKA_TOPICS" -> "clicks,views"))
+    assert(indexName(multi.injector)(two).select($"es_index").as[String]
+      .collect().toSet == Set("my-topic-2024-03-05", "views-2024-03-05"))
+    assert(indexName(cfg.copy(esIndex = Some("custom")))(two)
+      .select($"es_index").as[String].collect().toSet ==
+      Set("custom-2024-03-05"))
   }
 
   test("R3: hour suffix variant") {

@@ -57,7 +57,7 @@ class ProbesSpec extends SparkSpec {
       "my-topic", 0, 1L, Timestamp.valueOf("2024-03-05 10:11:12"), 0)))
     val out = Files.createTempDirectory("graft-probes").toString
     val q = InjectorOps.pipeline(
-        InjectorConfig(topic = "my-topic"), schema)(stream.toDF())
+        InjectorConfig(), schema)(stream.toDF())
       .writeStream.format("memory").queryName("probes_out")
       .option("checkpointLocation", s"$out/cp").start()
     val p = new Probes(0)

@@ -46,7 +46,7 @@ class StreamingSpec extends SparkSpec {
 
   private val schema = StructType(Seq(
     StructField("id", StringType), StructField("n", IntegerType)))
-  private val cfg = InjectorConfig(topic = "my-topic")
+  private val cfg = InjectorConfig()
 
   private def msg(partition: Int, offset: Long, json: String,
       ts: String = "2024-03-05 10:11:12.345"): Msg =
@@ -120,7 +120,7 @@ class StreamingSpec extends SparkSpec {
     val kafka = KafkaShape.fromEvents(events)
     // path 1: the batch composition `entry_pipeline` runs
     val batched = InjectorOps.pipeline(
-        InjectorConfig(topic = "events", indexPrefix = "graft-",
+        InjectorConfig(indexPrefix = "graft-",
           blacklist = Seq("props")), KafkaShape.eventPayloadSchema)(kafka)
       .select($"es_index", $"doc_id", to_json($"payload"))
       .as[(String, String, String)].collect().toSet

@@ -417,17 +417,17 @@ class TextDedupSpec extends SparkSpec {
     val mem = CorpusOps.bm25Search(qs, 3)(all)
       .as[(Long, Long, Long, Long, Long)].collect().sortBy(_._5).toSeq
     assert(persisted == mem && persisted.nonEmpty)
-    // compaction: term-clustered rewrite published as a NEW manifest
-    // version (atomic pointer swap, no delete-then-rename window) —
-    // fewer files, search unchanged
+    // compaction: the build + append chain folds into a term-clustered
+    // base published as ONE new manifest version (atomic pointer swap) —
+    // fewer files over the chain, search unchanged
     import graft.sources.IndexManifest
-    def tfFiles() = new java.io.File(
-      s"${IndexManifest.resolve(spark, dir)}/tf").listFiles()
-      .count(_.getName.endsWith(".parquet"))
+    def tfFiles() = IndexManifest.resolveChain(spark, dir).map(v =>
+      new java.io.File(s"$v/tf").listFiles()
+        .count(_.getName.endsWith(".parquet"))).sum
     val filesBefore = tfFiles()
-    assert(IndexManifest.currentVersion(spark, dir).contains(1))
+    assert(IndexManifest.chainVersions(spark, dir) == Seq(2, 1))
     CorpusOps.compactBm25Index(spark, dir)
-    assert(IndexManifest.currentVersion(spark, dir).contains(2))
+    assert(IndexManifest.chainVersions(spark, dir) == Seq(3))
     val filesAfter = tfFiles()
     val compacted = CorpusOps.searchBm25Index(spark, dir, qs, 3)
       .as[(Long, Long, Long, Long, Long)].collect().sortBy(_._5).toSeq
@@ -443,7 +443,7 @@ class TextDedupSpec extends SparkSpec {
     val dir = java.nio.file.Files
       .createTempDirectory("bm25-del").toString + "/idx"
     CorpusOps.buildBm25Index(d, dir)
-    CorpusOps.deleteFromBm25Index(spark, dir, Seq(2L))
+    IndexManifest.delete(spark, dir, Seq(2L))
     def got() = CorpusOps.searchBm25Index(spark, dir, qs, 10)
       .as[(Long, Long, Long, Long, Long)].collect()
       .sortBy(r => (r._1, r._5)).toSeq
@@ -454,10 +454,15 @@ class TextDedupSpec extends SparkSpec {
       .sortBy(r => (r._1, r._5)).toSeq
     assert(got() == want && want.nonEmpty)
     assert(got().map(_._2).forall(_ != 2L))
-    // compaction physically purges and drops the tombstone table
+    // the delete is a delta holding only the tombstone table
+    assert(IndexManifest.chainVersions(spark, dir) == Seq(2, 1))
+    assert(new java.io.File(s"$dir/versions/v2").list().toSet
+      .filterNot(_.startsWith(".")) == Set("PARENT", "deletes"))
+    // compaction physically purges into a tombstone-free base
     CorpusOps.compactBm25Index(spark, dir)
     assert(got() == want)
-    val vdir = IndexManifest.resolve(spark, dir)
+    assert(IndexManifest.chainVersions(spark, dir) == Seq(3))
+    val vdir = IndexManifest.versionDir(dir, 3)
     assert(!new java.io.File(s"$vdir/deletes").exists())
     val ids = spark.read.parquet(s"$vdir/tf")
       .select($"doc_id").distinct().as[Long].collect().toSet
@@ -1134,7 +1139,7 @@ class TextDedupSpec extends SparkSpec {
       .select($"doc_id", $"n_hits").as[(Long, Long)]
       .collect().sortBy(_._1).toSeq
     assert(rows(dirA) == rows(dirB) && rows(dirA).map(_._1) == Seq(1L, 3L))
-    CorpusOps.deleteFromPositionalIndex(spark, dirA, Seq(1L))
+    graft.sources.IndexManifest.delete(spark, dirA, Seq(1L))
     assert(rows(dirA).map(_._1) == Seq(3L))
     // compaction purges tombstoned rows physically; results unchanged
     CorpusOps.compactPositionalIndex(spark, dirA)
@@ -1389,7 +1394,7 @@ class TextDedupSpec extends SparkSpec {
       s"index-served graph drifted: $idx vs $mem")
     // deletes are graph-invisible on BOTH join sides the moment the
     // tombstone lands
-    SimilarityOps.deleteFromIndex(spark, dir, Seq(4L))
+    graft.sources.IndexManifest.delete(spark, dir, Seq(4L))
     val afterDel = rows(SimilarityOps.knnGraphIndex(spark, dir, k = 2))
     assert(afterDel ==
       rows(SimilarityOps.knnGraph(cents, k = 2)(
