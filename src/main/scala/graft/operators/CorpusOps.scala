@@ -119,12 +119,12 @@ object CorpusOps {
   def stripBoilerplateAuto(model: DataFrame, segTokens: Int = 16,
       maxDriverModel: Long = 1000000L)(docs: DataFrame): DataFrame = {
     // one model evaluation: the probe rows ARE the collected model when
-    // they fit (limit+1 proves over/under without counting the world)
-    val probe = model.limit(
-      math.min(maxDriverModel + 1, Int.MaxValue.toLong).toInt).collect()
-    if (probe.length <= maxDriverModel)
-      stripBoilerplate(probe.map(_.getString(0)).toSet, segTokens)(docs)
-    else stripBoilerplateJoin(model, segTokens)(docs)
+    // they fit
+    DriverModel.collectBounded(model, driverCap(maxDriverModel)) match {
+      case Some(rows) =>
+        stripBoilerplate(rows.map(_.getString(0)).toSet, segTokens)(docs)
+      case None => stripBoilerplateJoin(model, segTokens)(docs)
+    }
   }
 
   /** Remove segments that occur in >= `maxDf` DISTINCT documents (the
@@ -1686,30 +1686,27 @@ object CorpusOps {
     // a fixed workload.
     lazy val cn = cv.groupBy(col("doc_id"), col("chunk_no"))
       .agg(sum(col("v") * col("v")).as("cn"))
-    // ONE bounded collect decides the path AND fetches the matrix: a
-    // query workload of ≤ litCap docs has ≤ litCap·dims vector rows, so
-    // a limit(litCap·dims + 1) probe either returns the complete matrix
-    // (deterministic — nothing was cut) or proves the workload is
-    // oversized and the join path takes over. A separate count-then-
-    // collect pair cost two extra scans per DataFrame CONSTRUCTION
-    // (bench passes rebuild the frame, so it showed up as +2 s at
-    // sf0.1). The literal path additionally requires (a) a NON-EMPTY
-    // matrix — explode(array()) of zero query structs yields a NullType
-    // element and the q.* field extraction fails, whereas the join path
-    // returns the correct empty frame for a zero-query workload — and
-    // (b) ≤ litCap DISTINCT query ids: the row-count probe alone would
-    // let >litCap sparse queries (fewer than dims non-zero buckets
-    // each) embed an oversized constant matrix, the exact plan-size
-    // bloat the cap exists to bound.
+    // ONE bounded collect decides the path AND fetches the matrix: a query
+    // workload of ≤ litCap docs has ≤ litCap·dims vector rows, so
+    // DriverModel.collectBounded either returns the complete matrix or proves
+    // the workload is oversized and the join path takes over. A separate
+    // count-then-collect pair cost two extra scans per DataFrame CONSTRUCTION
+    // (bench passes rebuild the frame, so it showed up as +2 s at sf0.1). The
+    // literal path additionally requires (a) a NON-EMPTY matrix —
+    // explode(array()) of zero query structs yields a NullType element and the
+    // q.* field extraction fails, whereas the join path returns the correct
+    // empty frame for a zero-query workload — and (b) ≤ litCap DISTINCT query
+    // ids: the row-count probe alone would let >litCap sparse queries (fewer
+    // than dims non-zero buckets each) embed an oversized constant matrix, the
+    // exact plan-size bloat the cap exists to bound.
     val qMatrix: Option[Array[org.apache.spark.sql.Row]] =
-      if (dims <= 64 && litCap > 0) {
-        val rows = qvRaw.select(col("query_id"), col("dim"), col("v"))
-          .limit(litCap * dims + 1).collect()
-        if (rows.nonEmpty && rows.length <= litCap * dims &&
+      if (dims <= 64 && litCap > 0)
+        DriverModel.collectBounded(
+            qvRaw.select(col("query_id"), col("dim"), col("v")),
+            litCap * dims)
+          .filter(rows => rows.nonEmpty &&
             rows.iterator.map(_.getLong(0)).toSet.size <= litCap)
-          Some(rows)
-        else None
-      } else None
+      else None
     val scoredRaw =
       if (qMatrix.isDefined) {
         val qStructs = qMatrix.get.groupBy(_.getLong(0)).toSeq.sortBy(_._1)
@@ -1997,14 +1994,17 @@ object CorpusOps {
   def bigramLmScoreAuto(vocab: Set[String], model: DataFrame,
       vocabSize: Int, keepAbove: Double,
       maxDriverModel: Long = 1000000L)(docs: DataFrame): DataFrame = {
-    val probe = model.limit(
-      math.min(maxDriverModel + 1, Int.MaxValue.toLong).toInt).collect()
-    if (probe.length <= maxDriverModel)
-      bigramLmScore(vocab,
-        probe.map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
-          .toMap, vocabSize, keepAbove)(docs)
-    else bigramLmScoreJoin(vocab, model, vocabSize, keepAbove)(docs)
+    DriverModel.collectBounded(model, driverCap(maxDriverModel)) match {
+      case Some(rows) =>
+        bigramLmScore(vocab,
+          rows.map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
+            .toMap, vocabSize, keepAbove)(docs)
+      case None => bigramLmScoreJoin(vocab, model, vocabSize, keepAbove)(docs)
+    }
   }
+
+  private def driverCap(maxDriverModel: Long): Int =
+    math.min(maxDriverModel, Int.MaxValue - 1L).toInt
 
   // --------------------------------------------------- DSIR resampling
 

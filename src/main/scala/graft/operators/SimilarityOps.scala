@@ -2,8 +2,11 @@ package graft.operators
 
 import graft.functions.PortableHash.h15
 import graft.sources.IndexManifest
-import org.apache.spark.sql.{Column, DataFrame}
+import java.math.BigInteger
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`Array[Float]`), for the `embeddings` table
@@ -160,12 +163,15 @@ object SimilarityOps {
     * sims are computed distributed and collected ONCE (|Q|·window and
     * |Q|·window² rows — bounded by the query batch, not the corpus);
     * the k greedy argmax rounds replay on the driver as model state
-    * (see the inline note for the exact-arithmetic argument). `penalty`
-    * is passed explicitly rather than computed as 1−lambda so both
-    * engines share the exact double literal.
+    * (see the inline note for the exact-arithmetic argument). Each
+    * collect is bounded by `cap` rows; a query batch whose window
+    * exceeds it fails with [[DriverModel.CapExceeded]]. `penalty` is
+    * passed explicitly rather than computed as 1−lambda so both engines
+    * share the exact double literal.
     */
   def mmrRerank(corpus: DataFrame, queries: DataFrame, window: Int,
-      k: Int, lambda: Double, penalty: Double): DataFrame = {
+      k: Int, lambda: Double, penalty: Double,
+      cap: Int = DriverModel.DefaultCap): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val q = broadcast(queries.select(col("vec_id").as("query_id"),
       col("embedding").as("q_emb"),
@@ -209,11 +215,20 @@ object SimilarityOps {
     // smaller id — and return the picks as a literal frame. The
     // corpus-scale work (the exact top-window scoring and the pairwise
     // sims) stays distributed; only the window²-bounded argmax loop
-    // moved, so the 100 TB shape is unchanged.
-    val mcRows = mc.select(col("query_id"), col("cid"), col("rel"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val sims = mp.select(col("query_id"), col("ca"), col("cb"),
-        col("sim")).collect()
+    // moved, so the 100 TB shape is unchanged. A query batch that is
+    // data-sized instead fails here, by name, before it reaches the
+    // driver.
+    def fetch(df: DataFrame): Array[Row] =
+      DriverModel.collectBounded(df, cap).getOrElse {
+        val nq = queries.count()
+        throw new DriverModel.CapExceeded(s"mmrRerank: the candidate " +
+          s"window exceeds the driver cap of $cap rows (|Q|·window = " +
+          s"${nq * window}, |Q|·window² = ${nq * window * window})")
+      }
+    val mcRows = fetch(mc.select(col("query_id"), col("cid"), col("rel")))
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val sims = fetch(mp.select(col("query_id"), col("ca"), col("cb"),
+        col("sim")))
       .map(r => ((r.getLong(0), r.getLong(1), r.getLong(2)),
         r.getDouble(3))).toMap
     // Spark's double sort order: -0.0 == 0.0, NaN greater than anything
@@ -1251,138 +1266,252 @@ object SimilarityOps {
   /** Top principal component of the embedding matrix by power iteration
     * — the "embedding health" axis (a collapsed/anisotropic embedding
     * model shows one dominated direction; the loading vector says which
-    * dims carry it). EVERY arithmetic step is exact integer/decimal, so
-    * the result is bit-identical at any partitioning and the oracle
-    * replays all rounds:
+    * dims carry it). Output: one `(dim, sum_q, v_fp)` row per dim. Every
+    * arithmetic step is exact integer/decimal, so the result is
+    * bit-identical at any partitioning and the oracle replays all
+    * rounds:
     *
     *  - embeddings quantize once to `floor(x·qScale)` BIGINT (both
     *    engines floor the same IEEE product);
     *  - centering multiplies through by n: c = n·q − Σq — no division,
-    *    no mean rounding (direction is scale-invariant);
-    *  - each round computes t = C·v and w = Cᵀ·t in DECIMAL(38,0)
-    *    (overflow-free at any corpus size), then renormalizes to
-    *    `±(|·|·vScale) div max|·|` — sign handled explicitly because
-    *    Spark `div` truncates while DuckDB `//` floors (they agree only
-    *    on non-negatives).
+    *    no mean rounding (direction is scale-invariant); n counts every
+    *    row, null embeddings included;
+    *  - each round computes t = C·v per vec_id and w = Cᵀ·t' per dim in
+    *    DECIMAL(38,0), renormalizing each to `±(|·|·vScale) div
+    *    max(max|·|, 1)` — sign handled explicitly because Spark `div`
+    *    truncates while DuckDB `//` floors (they agree only on
+    *    non-negatives).
     *
-    * Scale shape: the quantized (vec_id, dim, c) frame materializes
-    * once; per round, t = C·v is one map + vec_id aggregate (v is a
-    * dim-sized LITERAL array — no join at all) and w = Cᵀ·t is one
-    * vec_id equi-join + dim aggregate (the honest distributed pair —
-    * the corpus shuffles on its own key, never ×k). The direction
-    * vector and both renormalizers are MODEL STATE (dim decimals + one
-    * scalar each): round r14 measured 7.3 s of the query's 7.4 s as
-    * fixed job-count overhead — ~3 driver-coordinated broadcast/agg
-    * actions per round. Since r16 the t-renormalizer stays IN the plan
-    * as a broadcast 1-row aggregate (crossJoin(broadcast(max(abs(t)))),
-    * `greatest(__mt, 1)` preserving the empty-corpus guard), so each
-    * round is ONE driver job — the w collect, whose dim-sized decimals
-    * re-enter the next round as literals — at the price of one
-    * broadcast exchange per round inside the job. Arithmetic is
-    * bit-identical either way (the same decimal(38,0) multiply/div on
-    * the same values; driver divideToIntegralValue ≡ the engine's
-    * integer div on non-negatives).
+    * Two paths compute it, chosen by input size alone:
+    *
+    *  - **Driver**, when the input has at most `cellCap` cells (a null
+    *    or empty embedding counts as one): one
+    *    [[DriverModel.collectBounded]] fetch of the (vec_id, dim, x)
+    *    cells, then every round on the driver. At this size the matrix
+    *    is model state (sf0.1: 2,000 × 64 = 128k cells) and a
+    *    distributed round is all fixed per-job overhead.
+    *  - **Distributed** above the cap: [[pcaCentered]] materializes the
+    *    centered matrix once, hash-partitioned on vec_id, and each round
+    *    is one exchange-free [[pcaRound]] job whose dim-sized w returns
+    *    to the driver as the next round's literal direction vector.
+    *
+    * The driver path is exact because it performs the same operations
+    * on the same values, not because it is close. It floors the same
+    * double product; it uses `Math.*Exact` where ANSI BIGINT arithmetic
+    * raises; its products and sums are exact BigIntegers, checked
+    * against DECIMAL(38,0) wherever the engine checks (a product of two
+    * longs always fits); integer division of non-negatives truncates in
+    * both. It groups like the SQL: t sums per vec_id (duplicate ids
+    * merge; a null id is its own group, which w's join then drops), and
+    * SUM skips NULL terms and is NULL when all are. Where the engine
+    * raises, the driver raises an ArithmeticException naming the
+    * overflow. (A non-ANSI session wraps or NULLs where both raise here;
+    * results without overflow are the same.) The distributed path is the
+    * reference the equivalence spec compares against, bit for bit.
     */
-  def pcaPower(embs: DataFrame, iters: Int, qScale: Long,
-      vScale: Long): DataFrame = {
+  def pcaPower(embs: DataFrame, iters: Int, qScale: Long, vScale: Long,
+      cellCap: Int = DriverModel.DefaultCap): DataFrame = {
+    val cells = embs
+      .select(col("vec_id"),
+        posexplode_outer(col("embedding")).as(Seq("pos", "x")))
+      .select(col("vec_id"), col("pos").cast("long"),
+        col("x").cast("double"))
+    DriverModel.collectBounded(cells, cellCap) match {
+      case Some(rows) =>
+        pcaOnDriver(embs.sparkSession, rows, iters, qScale, vScale)
+      case None => pcaDistributed(embs, iters, qScale, vScale)
+    }
+  }
+
+  private val PcaSchema = StructType(Seq(
+    StructField("dim", LongType, nullable = false),
+    StructField("sum_q", LongType),
+    StructField("v_fp", LongType, nullable = false)))
+
+  private val Dec38 = BigInteger.TEN.pow(38)
+
+  private def pcaOverflow(what: String): Nothing =
+    throw new ArithmeticException(s"pcaPower: $what overflows — the " +
+      "corpus magnitude exceeds the fixed-point headroom; lower qScale " +
+      "or vScale")
+
+  private def wNull(dim: Long): String =
+    s"pcaPower: w[dim=$dim] is NULL — every term was NULL or the " +
+      "decimal(38,0) sum overflowed"
+
+  // fixed-point renormalize: sign·((|x|·vScale) div max(m, 1)), with
+  // m ≥ |x|, so the result stays within ±vScale (longValueExact is a
+  // proof, not a hope)
+  private def renorm(x: BigInteger, m: BigInteger, vScale: Long): Long = {
+    val r = x.abs.multiply(BigInteger.valueOf(vScale))
+      .divide(m.max(BigInteger.ONE)).longValueExact
+    if (x.signum < 0) -r else r
+  }
+
+  /** The driver path over the fetched `(vec_id, pos, x)` cells; `pos`
+    * is NULL for a null or empty embedding.
+    */
+  private def pcaOnDriver(spark: SparkSession, rows: Array[Row],
+      iters: Int, qScale: Long, vScale: Long): DataFrame = {
+    def exact[T](what: String)(f: => T): T =
+      try f catch { case _: ArithmeticException => pcaOverflow(what) }
+    def dec38(what: String)(x: BigInteger): BigInteger =
+      if (x.abs.compareTo(Dec38) < 0) x
+      else pcaOverflow(s"$what (decimal(38,0))")
+    def add(acc: BigInteger, x: BigInteger): BigInteger =
+      if (acc == null) x else acc.add(x)
+    // every row holds pos 0 or, with no cells, one NULL pos: n = count(*)
+    val n = rows.count(r => r.isNullAt(1) || r.getLong(1) == 0L).toLong
+    val cells = rows.filter(!_.isNullAt(1))
+    val k = cells.length
+    val dim = cells.map(_.getLong(1).toInt)
+    val d = if (k == 0) 0 else dim.max + 1
+    val q: Array[java.lang.Long] = cells.map(r =>
+      if (r.isNullAt(2)) null
+      else Long.box(math.floor(r.getDouble(2) * qScale.toDouble).toLong))
+    val sAcc = new Array[BigInteger](d)
+    for (i <- 0 until k if q(i) != null)
+      sAcc(dim(i)) = add(sAcc(dim(i)), BigInteger.valueOf(q(i)))
+    val s: Array[java.lang.Long] = sAcc.map(x =>
+      if (x == null) null else Long.box(exact("sum(q) (bigint)")(
+        x.longValueExact)))
+    val c: Array[BigInteger] = Array.tabulate(k) { i =>
+      val sd = s(dim(i))
+      if (q(i) == null || sd == null) null
+      else BigInteger.valueOf(exact("c = n·q − s (bigint)")(
+        Math.subtractExact(Math.multiplyExact(n, q(i).longValue),
+          sd.longValue)))
+    }
+    // t's GROUP BY vec_id: duplicate ids merge; a NULL id is a group of
+    // its own, in max|t|, that w's equi-join on vec_id drops
+    val groupOf = scala.collection.mutable.HashMap.empty[Any, Int]
+    val g = cells.map { r =>
+      val id = r.get(0)
+      groupOf.getOrElse(id, { val gi = groupOf.size; groupOf(id) = gi; gi })
+    }
+    val nullGroup = groupOf.getOrElse(null, -1)
+    var v = Array.fill(d)(vScale)
+    for (_ <- 1 to iters) {
+      val tAcc = new Array[BigInteger](groupOf.size)
+      for (i <- 0 until k if c(i) != null)
+        tAcc(g(i)) = add(tAcc(g(i)),
+          c(i).multiply(BigInteger.valueOf(v(dim(i)))))
+      val t = tAcc.map(x => if (x == null) null else dec38("t = C·v")(x))
+      val mt = t.iterator.filter(_ != null).map(_.abs)
+        .foldLeft(BigInteger.ZERO)(_ max _)
+      val tp: Array[BigInteger] = t.map { x =>
+        if (x == null) null
+        else {
+          dec38("|t|·vScale")(x.abs.multiply(BigInteger.valueOf(vScale)))
+          BigInteger.valueOf(renorm(x, mt, vScale))
+        }
+      }
+      // a dim has a w row iff some cell survives the join; that row is
+      // NULL when every term is
+      val wAcc = new Array[BigInteger](d)
+      val joined = new Array[Boolean](d)
+      for (i <- 0 until k if g(i) != nullGroup) {
+        joined(dim(i)) = true
+        if (c(i) != null && tp(g(i)) != null)
+          wAcc(dim(i)) = add(wAcc(dim(i)), c(i).multiply(tp(g(i))))
+      }
+      val w = Array.tabulate(d) { j =>
+        if (!joined(j)) BigInteger.ZERO
+        else {
+          require(wAcc(j) != null, wNull(j))
+          dec38("w = Cᵀ·t")(wAcc(j))
+        }
+      }
+      val mw = w.foldLeft(BigInteger.ZERO)((a, x) => a.max(x.abs))
+      v = w.map(renorm(_, mw, vScale))
+    }
+    spark.createDataFrame(
+      (0 until d).map(j => Row(j.toLong, s(j), v(j))).asJava, PcaSchema)
+  }
+
+  /** The distributed path's one-time state: the centered matrix
+    * `c(vec_id, dim, c)`, hash-partitioned on vec_id across its
+    * checkpoint, the per-dim sums and the dim list.
+    */
+  private[graft] final case class PcaCentered(c: DataFrame,
+      sums: DataFrame, dims: IndexedSeq[Long])
+
+  private[graft] def pcaCentered(embs: DataFrame, qScale: Long)
+      : PcaCentered = {
     val spark = embs.sparkSession
     val qrows = DedupOps.materialize(embs
       .select(col("vec_id"), posexplode(col("embedding")))
       .select(col("vec_id"), col("pos").cast("long").as("dim"),
         floor(col("col").cast("double") * lit(qScale.toDouble))
           .cast("long").as("q")))
-    val n = embs.count() // 1-value driver action (the pageRank n)
+    val n = embs.count()
     val sums = DedupOps.materialize(
       qrows.groupBy(col("dim")).agg(sum(col("q")).as("s")))
     // dims are contiguous 0..d-1 from posexplode, so the dim list IS
-    // the dimension count — the old separate size() probe was one more
-    // fixed-overhead driver job in a query that is nothing but driver
-    // jobs (moved above c so nParts can use it)
-    val dims: Seq[Long] = sums.select(col("dim")).orderBy(col("dim"))
+    // the dimension count
+    val dims = sums.select(col("dim")).orderBy(col("dim"))
       .collect().map(_.getLong(0)).toIndexedSeq
-    val dimCount = dims.length.toLong
-    // c is hash-partitioned on vec_id ONCE before the checkpoint (the
-    // LogicalRDD keeps the partitioning): every round's C·v groupBy and
-    // Cᵀ·t join then run exchange-free on the cached layout — 6 rounds
-    // re-shuffled the same frame 12 times before this. Partition count
-    // is sized to the data (~32k rows per task, capped at the session's
-    // shuffle parallelism): 12 fixed-overhead jobs × 32 near-empty
-    // tasks was most of the query's wall time at verify scale, while at
-    // 100× the cap keeps full parallelism. Results are partitioning-
-    // independent (exact decimal arithmetic throughout).
+    // c is hash-partitioned on vec_id ONCE before the checkpoint, so
+    // every round's C·v groupBy and Cᵀ·t join run exchange-free on the
+    // cached layout. Partition count is sized to the data (~32k rows
+    // per task, capped at the session's shuffle parallelism). Results
+    // are partitioning-independent (exact decimal arithmetic).
     val nParts = math.max(1L, math.min(
       spark.conf.get("spark.sql.shuffle.partitions").toLong,
-      n * dimCount / 32768L + 1L)).toInt
+      n * dims.length / 32768L + 1L)).toInt
     val c = DedupOps.materializeKeyed(qrows
       .join(broadcast(sums), Seq("dim"))
       .select(col("vec_id"), col("dim"),
         (lit(n) * col("q") - col("s")).as("c"))
       .repartition(nParts, col("vec_id")))
-    import java.math.BigDecimal
-    // fixed-point renormalize: sign * ((|x|*vScale) div max(m, 1)) —
-    // divideToIntegralValue on non-negatives ≡ both engines' integer
-    // div, and the engine `div` yields BIGINT, so v stays Long (bounded
-    // by ±vScale by construction — longValueExact is a proof, not a hope)
-    def renorm(x: BigDecimal, m: BigDecimal): Long = {
-      val mm = if (m.signum > 0) m else BigDecimal.ONE
-      val r = x.abs.multiply(BigDecimal.valueOf(vScale))
-        .divideToIntegralValue(mm).longValueExact
-      if (x.signum < 0) -r else r
-    }
-    // v as a dim-indexed literal LONG array (dims are contiguous
-    // 0..d-1 from posexplode; element_at is 1-based) — same
-    // decimal(38,0) × bigint multiply the broadcast-join plan ran
-    def vArray(v: Map[Long, Long]): Column =
-      array(dims.map(d => lit(v(d))): _*)
-    var v: Map[Long, Long] = dims.map(_ -> vScale).toMap
+    PcaCentered(c, sums, dims)
+  }
+
+  /** One distributed round as a `(dim, w)` frame: t = C·v per vec_id
+    * (v is a dim-indexed LITERAL array — no join), t' its renormalized
+    * form, w = Cᵀ·t' per dim. t's renormalizer stays in the plan as a
+    * broadcast 1-row aggregate, so the round is one job;
+    * `greatest(__mt, 1)` skips the NULL an empty t produces, so the
+    * empty-corpus case divides by 1.
+    */
+  private[graft] def pcaRound(c: DataFrame, dims: IndexedSeq[Long],
+      v: Map[Long, Long], vScale: Long): DataFrame = {
+    val vArray = array(dims.map(d => lit(v(d))): _*)
+    val t = c
+      .select(col("vec_id"), (col("c").cast("decimal(38,0)") *
+        element_at(vArray, (col("dim") + 1).cast("int"))).as("ct"))
+      .groupBy(col("vec_id")).agg(sum(col("ct")).as("t"))
+    val mtF = t.agg(max(abs(col("t"))).as("__mt"))
+    val tp = t.crossJoin(broadcast(mtF))
+      .select(col("vec_id"),
+        (when(col("t") < 0, lit(-1L)).otherwise(lit(1L)) *
+          expr(s"(abs(t) * $vScale) div greatest(" +
+            s"__mt, cast(1 as decimal(38,0)))"))
+          .as("tp"))
+    c.join(tp, Seq("vec_id"))
+      .groupBy(col("dim"))
+      .agg(sum(col("c").cast("decimal(38,0)") * col("tp")).as("w"))
+  }
+
+  private[graft] def pcaDistributed(embs: DataFrame, iters: Int, qScale: Long,
+      vScale: Long): DataFrame = {
+    val pc = pcaCentered(embs, qScale)
+    var v: Map[Long, Long] = pc.dims.map(_ -> vScale).toMap
     for (_ <- 1 to iters) {
-      // no checkpoint on t: from the co-partitioned cached c it is one
-      // narrow map + exchange-free in-partition aggregate, so the w job
-      // recomputes it cheaper than a persist round-trip costs
-      val t = c
-        .select(col("vec_id"), (col("c").cast("decimal(38,0)") *
-          element_at(vArray(v), (col("dim") + 1).cast("int"))).as("ct"))
-        .groupBy(col("vec_id")).agg(sum(col("ct")).as("t"))
-      // t's renormalizer stays IN the plan as a broadcast 1-row
-      // aggregate instead of a separate driver round-trip: the round
-      // collapses to ONE job (the w collect below), halving the
-      // per-round fixed job overhead that r14 measured as ~all of this
-      // query's wall time. Arithmetic is unchanged — max(abs(t)) over
-      // the same decimal(38,0) values, the same `div greatest(mt, 1)`
-      // expression (greatest skips the NULL an empty t produces, so
-      // the empty-corpus case still divides by 1, exactly like the old
-      // driver-side ZERO→ONE guard).
-      val mtF = t.agg(max(abs(col("t"))).as("__mt"))
-      val tp = t.crossJoin(broadcast(mtF))
-        .select(col("vec_id"),
-          (when(col("t") < 0, lit(-1L)).otherwise(lit(1L)) *
-            expr(s"(abs(t) * $vScale) div greatest(" +
-              s"__mt, cast(1 as decimal(38,0)))"))
-            .as("tp"))
-      // the round's ONE job: w = Cᵀ·t collapses to dim rows — the
-      // dim-sized model read
-      val wRows = c.join(tp, Seq("vec_id"))
-        .groupBy(col("dim"))
-        .agg(sum(col("c").cast("decimal(38,0)") * col("tp")).as("w"))
-        .collect()
-        .map { r =>
-          // a decimal(38,0) sum overflow is NULL under non-ANSI mode;
-          // the driver-side model fold must surface that as the
-          // overflow it is, not NPE inside abs()
-          require(!r.isNullAt(1), s"pcaPower: w[dim=${r.getLong(0)}] " +
-            "overflowed decimal(38,0) (sum returned NULL) — corpus " +
-            "magnitude exceeds the fixed-point headroom; lower vScale")
-          r.getLong(0) -> r.getDecimal(1)
-        }.toMap
-      val mw = wRows.values.foldLeft(BigDecimal.ZERO)((a, x) =>
-        a.max(x.abs))
-      // empty cells keep nothing here — every dim present in c has a w
-      v = dims.map(d => d ->
-        renorm(wRows.getOrElse(d, BigDecimal.ZERO), mw)).toMap
+      // the round's one job: w collapses to dim rows, the model read
+      val w = pcaRound(pc.c, pc.dims, v, vScale).collect().map { r =>
+        require(!r.isNullAt(1), wNull(r.getLong(0)))
+        r.getLong(0) -> r.getDecimal(1).toBigIntegerExact
+      }.toMap
+      val mw = w.values.foldLeft(BigInteger.ZERO)((a, x) => a.max(x.abs))
+      // a dim with no joined row (only null vec_ids) has no w
+      v = pc.dims.map(d =>
+        d -> renorm(w.getOrElse(d, BigInteger.ZERO), mw, vScale)).toMap
     }
+    val spark = embs.sparkSession
     import spark.implicits._
-    val vDf = dims.map(d => (d, v(d))).toDF("dim", "v")
-    sums.join(broadcast(vDf), Seq("dim"))
+    val vDf = pc.dims.map(d => (d, v(d))).toDF("dim", "v")
+    pc.sums.join(broadcast(vDf), Seq("dim"))
       .select(col("dim"), col("s").as("sum_q"), col("v").as("v_fp"))
   }
 }

@@ -492,10 +492,12 @@ object PlanSpec {
     "events_attribution" -> 1, // share window over the 3-row channel frame
     "events_markov" -> 1)     // obs-share window over the |types|-row frame
     // (events_anomaly's 1-row bounds aggregate runs behind its
-    // checkpoint barrier, so the swept plan shows none; sim_pca_power's
-    // per-round renormalizer maxes are driver-side decimal model state
-    // since r15 — the registered plan is a broadcast join of the
-    // checkpointed sums against a dim-row literal, nothing global)
+    // checkpoint barrier, so the swept plan shows none; sim_pca_power
+    // runs its rounds on the driver at sweep scale and returns a local
+    // relation — above its cell cap the fallback's per-round 1-row max
+    // runs inside the round jobs at construction, never in the
+    // returned plan, which is a broadcast join of the checkpointed sums
+    // against a dim-row literal)
 
   /** BroadcastNestedLoopJoin instances per plan, measured by PlanDump
     * at sf0.001 and hand-audited: every entry is a
