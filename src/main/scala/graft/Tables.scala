@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.SessionBridge
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   * At cluster scale these would be partitioned external tables; the API is
@@ -64,27 +65,30 @@ object Tables {
     * and truncate with integer division, no double-mantissa loss) and plain
     * TIMESTAMP(MICROS) (read natively). Branch on the decoded type so both
     * generations load identically; downstream comparisons are at ms
-    * precision (the reference's own unit).
+    * precision (the reference's own unit). The read and the spread are
+    * planned on a clone of `spark` that carries the nanos flag, on a
+    * cache miss only; the caller's session conf is never written.
     */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    cachedSpread(spark, dir, "events") {
-      val raw = load(spark, dir, "events")
-      raw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          raw.withColumn("ts",
-            org.apache.spark.sql.functions.timestamp_micros(
-              org.apache.spark.sql.functions.expr("ts div 1000")))
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          // NTZ parquet (isAdjustedToUTC=false). Sessions pin UTC, so the
-          // cast is wall-clock-preserving and matches DuckDB's naive read;
-          // downstream code (unix_millis, window()) needs TIMESTAMP.
-          raw.withColumn("ts",
-            raw("ts").cast(org.apache.spark.sql.types.TimestampType))
-        case _ => raw
-      }
-    }
-  }
+  def events(spark: SparkSession, dir: String): DataFrame =
+    spreadCache.getOrElseUpdate((spark, dir, "events"),
+      SessionBridge.withConf(spark,
+        "spark.sql.legacy.parquet.nanosAsLong", "true") { s =>
+        val raw = load(s, dir, "events")
+        spread(s, raw.schema("ts").dataType match {
+          case org.apache.spark.sql.types.LongType =>
+            raw.withColumn("ts",
+              org.apache.spark.sql.functions.timestamp_micros(
+                org.apache.spark.sql.functions.expr("ts div 1000")))
+          case org.apache.spark.sql.types.TimestampNTZType =>
+            // NTZ parquet (isAdjustedToUTC=false). Sessions pin UTC, so
+            // the cast is wall-clock-preserving and matches DuckDB's
+            // naive read; downstream code (unix_millis, window()) needs
+            // TIMESTAMP.
+            raw.withColumn("ts",
+              raw("ts").cast(org.apache.spark.sql.types.TimestampType))
+          case _ => raw
+        })
+      })
   def documents(spark: SparkSession, dir: String): DataFrame =
     cachedSpread(spark, dir, "documents")(load(spark, dir, "documents"))
   /** Spread lineitem for CPU-heavy whole-table aggregates (the wide

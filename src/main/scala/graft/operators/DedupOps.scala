@@ -2,8 +2,10 @@ package graft.operators
 
 import graft.functions.PortableHash.h15
 import graft.sources.IndexManifest
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Deduplication operators for training-data pipelines, over `documents`
   * (text) and `embeddings` (vectors). All are designed around the one rule
@@ -72,39 +74,243 @@ object DedupOps {
   def shingleSet(text: Column, k: Int): Column =
     graft.functions.TextExprs.shingleSet(tokens(text), k)
 
-  /** N-gram Jaccard near-dup pairs — EXACT result via prefix-filtered
-    * inverted index (AllPairs/PPJoin family):
+  /** N-gram Jaccard near-dup pairs: every pair `(a, b)` with `a < b`
+    * whose distinct k-shingle hash sets have Jaccard `>= threshold`
+    * (for threshold 0, every pair sharing a shingle), with the exact
+    * intersection size `inter` and `jaccard = inter / (|A| + |B| −
+    * inter)` in double. Both paths run the same AllPairs/PPJoin plan:
     *
     *  1. Global canonical shingle order = ascending (document frequency,
     *     shingle): rarest first.
-    *  2. J(A,B) ≥ t ⇒ |A∩B| ≥ ⌈t·|A|⌉, so any qualifying partner must hit
-    *     one of the first `|A| − ⌈t·|A|⌉ + 1` shingles of A in that order —
-    *     only those *prefix* postings are self-joined.
-    *  3. Candidates are verified with the exact Jaccard of the full
-    *     shingle sets.
+    *  2. Prefix filter: J(A,B) ≥ t ⇒ |A∩B| ≥ ⌈t·|A|⌉, so a qualifying
+    *     partner must hit one of the first `|A| − ⌈t·|A|⌉ + 1` shingles
+    *     of A in that order; only those prefix postings are joined.
+    *  3. Positional filter: a hit on a shingle at ranks (rnA, rnB)
+    *     bounds the overlap by 1 + min(|A| − rnA, |B| − rnB), and J ≥ t
+    *     needs overlap ≥ ⌈t/(1+t)·(|A|+|B|)⌉. The FIRST shared prefix
+    *     shingle of a true pair always passes (every common shingle
+    *     ranks at or after it), so keeping a pair when ANY hit passes
+    *     loses nothing, while deep-rank hits on boilerplate shingles
+    *     stop seeding candidates.
+    *  4. Candidates are verified with an exact sorted-merge intersect.
     *
+    * Two paths compute it:
+    *
+    *  - **Driver**, when the input has at most `cellCap` shingle cells
+    *    (a null, empty or too-short text counts as one), `doc_id` is a
+    *    BIGINT, no two rows share a non-null `doc_id`, and the answer
+    *    has at most `cellCap` pairs: one [[DriverModel.collectBounded]]
+    *    fetch of the `(doc_id, pos, shingle hash)` cells, then the plan
+    *    above over primitive arrays (dense shingle ranks, int-array
+    *    inverted prefix lists, a per-probe candidate mark) and a local
+    *    frame with the distributed path's schema. At sf0.1 (5,000
+    *    documents, 261k cells) the corpus is model-sized and a
+    *    distributed plan is all fixed per-job overhead.
+    *  - **Distributed** otherwise: [[ngramJaccardDistributed]], the
+    *    same plan as equi-joins. It is the reference the equivalence
+    *    spec compares against, bit for bit.
+    *
+    * The paths return the same rows because the answer is a set
+    * defined without reference to the plan: {(a < b) : J ≥ t}. Any
+    * sound candidate generation finds all of it, verification is the
+    * same integer count, and the same `inter.toDouble / (|A| + |B| −
+    * inter).toDouble` division gives the same double bits. A null
+    * `doc_id` never pairs on either path (its comparisons are NULL);
+    * duplicate ids take the distributed path, whose per-row output
+    * they shape.
+    */
+  def ngramJaccardPairs(k: Int = 3, threshold: Double = 0.5,
+      cellCap: Int = DriverModel.DefaultCap)(df: DataFrame): DataFrame = {
+    val id = df.schema("doc_id")
+    val onDriver = if (id.dataType != LongType) None else {
+      val cells = df.select(col("doc_id"), posexplode_outer(
+        graft.functions.TextExprs.h15Array(shingleSet(col("text"), k)))
+        .as(Seq("pos", "shingle")))
+      DriverModel.collectBounded(cells, cellCap)
+        .flatMap(ngramJaccardOnDriver(_, threshold, cellCap))
+    }
+    onDriver match {
+      case Some(pairs) =>
+        df.sparkSession.createDataFrame(pairs.toSeq.asJava, StructType(Seq(
+          StructField("a", LongType, id.nullable),
+          StructField("b", LongType, id.nullable),
+          StructField("inter", LongType, df.schema("text").nullable),
+          StructField("jaccard", DoubleType))))
+      case None => ngramJaccardDistributed(k, threshold)(df)
+    }
+  }
+
+  /** The driver path of [[ngramJaccardPairs]] over the fetched
+    * `(doc_id, pos, shingle)` cells (`pos` is NULL for a null text).
+    * None when two rows share a doc id or the answer has more than
+    * `pairCap` pairs.
+    */
+  private def ngramJaccardOnDriver(rows: Array[Row], threshold: Double,
+      pairCap: Int): Option[Array[Row]] = {
+    // one dense doc per input row: its pos-0 cell, or its one NULL-pos
+    // cell; a NULL doc_id never pairs, so it gets no doc
+    val docOf = scala.collection.mutable.LongMap.empty[Int]
+    val ids = scala.collection.mutable.ArrayBuilder.make[Long]
+    val unique = rows.forall { r =>
+      r.isNullAt(0) || !(r.isNullAt(1) || r.getInt(1) == 0) || {
+        val fresh = !docOf.contains(r.getLong(0))
+        if (fresh) { docOf(r.getLong(0)) = docOf.size; ids += r.getLong(0) }
+        fresh
+      }
+    }
+    if (!unique) None
+    else {
+      // every shingle cell counts in df, NULL-id rows too as in the
+      // engine's posting; their doc is -1
+      val hash = new Array[Long](rows.length)
+      val doc = new Array[Int](rows.length)
+      var n = 0
+      for (r <- rows if !r.isNullAt(1) && !r.isNullAt(2)) {
+        hash(n) = r.getLong(2)
+        doc(n) = if (r.isNullAt(0)) -1 else docOf(r.getLong(0))
+        n += 1
+      }
+      new AllPairs(ids.result(), java.util.Arrays.copyOf(hash, n),
+        java.util.Arrays.copyOf(doc, n), threshold).pairs(pairCap)
+    }
+  }
+
+  /** The driver kernel of [[ngramJaccardPairs]] over primitive arrays:
+    * shingle cells `(doc(i), hash(i))` of the docs `ids`, a doc of -1
+    * counting in df only. Shingles become dense ranks in canonical
+    * (df, shingle) order, each doc an ascending rank run of one CSR
+    * array, and the prefix postings int-array lists.
+    */
+  private final class AllPairs(ids: Array[Long], hash: Array[Long],
+      doc: Array[Int], threshold: Double) {
+    private val nDocs = ids.length
+    // dense shingle ranks: distinct hashes ascending, then a stable sort
+    // on df packed into the high word
+    private val (distinct, rankOf) = {
+      val sorted = hash.clone()
+      java.util.Arrays.sort(sorted)
+      val distinct = new Array[Long](sorted.length)
+      val df = new Array[Int](sorted.length)
+      var u = -1
+      for (i <- sorted.indices) {
+        if (i == 0 || sorted(i) != sorted(i - 1)) { u += 1; distinct(u) = sorted(i) }
+        df(u) += 1
+      }
+      val byRarity = Array.tabulate(u + 1)(v => (df(v).toLong << 32) | v)
+      java.util.Arrays.sort(byRarity)
+      val rankOf = new Array[Int](u + 1)
+      for (r <- byRarity.indices) rankOf(byRarity(r).toInt) = r
+      (java.util.Arrays.copyOf(distinct, u + 1), rankOf)
+    }
+    // doc d's shingle ranks, ascending: ranks(start(d) until start(d + 1))
+    private val start = new Array[Int](nDocs + 1)
+    private val ranks = {
+      for (d <- doc if d >= 0) start(d + 1) += 1
+      for (d <- 0 until nDocs) start(d + 1) += start(d)
+      val fill = start.clone()
+      val ranks = new Array[Int](start(nDocs))
+      for (i <- doc.indices if doc(i) >= 0) {
+        ranks(fill(doc(i))) =
+          rankOf(java.util.Arrays.binarySearch(distinct, hash(i)))
+        fill(doc(i)) += 1
+      }
+      for (d <- 0 until nDocs) java.util.Arrays.sort(ranks, start(d), start(d + 1))
+      ranks
+    }
+    private def size(d: Int): Int = start(d + 1) - start(d)
+    // the engine's prefix bound, in the same double arithmetic
+    private val prefix = Array.tabulate(nDocs) { d =>
+      val sz = size(d)
+      math.max(0L, math.min(sz.toLong,
+        sz - math.ceil(threshold * sz).toLong + 1)).toInt
+    }
+    private val alpha = threshold / (1.0 + threshold)
+
+    /** |A ∩ B| over two docs' ascending rank runs, distinct values. */
+    private def inter(a: Int, b: Int): Int = {
+      var i = start(a); var j = start(b); var c = 0
+      val ea = start(a + 1); val eb = start(b + 1)
+      while (i < ea && j < eb) {
+        val ra = ranks(i); val rb = ranks(j)
+        if (ra < rb) i += 1
+        else if (ra > rb) j += 1
+        else {
+          c += 1
+          while (i < ea && ranks(i) == ra) i += 1
+          while (j < eb && ranks(j) == rb) j += 1
+        }
+      }
+      c
+    }
+
+    /** Every pair with Jaccard ≥ threshold as `(a, b, inter, jaccard)`
+      * rows, or None past `cap` of them. Each doc probes the prefix
+      * lists of the docs before it, then joins them.
+      */
+    def pairs(cap: Int): Option[Array[Row]] = {
+      // inverted prefix lists: (doc, 1-based rank position) per shingle
+      val listStart = new Array[Int](rankOf.length + 1)
+      for (d <- 0 until nDocs; i <- 0 until prefix(d))
+        listStart(ranks(start(d) + i) + 1) += 1
+      for (r <- rankOf.indices) listStart(r + 1) += listStart(r)
+      val listEnd = listStart.clone()
+      val entDoc = new Array[Int](listStart.last)
+      val entPos = new Array[Int](listStart.last)
+      // candidates of the current probe, each marked once
+      val mark = Array.fill(nDocs)(-1)
+      val cand = new Array[Int](nDocs)
+      val out = scala.collection.mutable.ArrayBuffer.empty[Row]
+      var x = 0
+      while (x < nDocs && out.length <= cap) {
+        val sx = size(x)
+        var nc = 0
+        var i = 0
+        while (i < prefix(x)) {
+          val r = ranks(start(x) + i)
+          var e = listStart(r)
+          while (e < listEnd(r)) {
+            val y = entDoc(e)
+            // positional filter: the overlap bound at this hit must
+            // reach α = ⌈t/(1+t)·(|A|+|B|)⌉, with the engine's slack
+            if (mark(y) != x && 1 + math.min(sx - i - 1, size(y) - entPos(e))
+                >= math.ceil(alpha * (sx + size(y)) - 1e-9).toLong) {
+              mark(y) = x; cand(nc) = y; nc += 1
+            }
+            e += 1
+          }
+          i += 1
+        }
+        var c = 0
+        while (c < nc) {
+          val y = cand(c)
+          val n = inter(x, y)
+          val jaccard = n.toDouble / (sx + size(y) - n).toDouble
+          if (jaccard >= threshold)
+            out += Row(math.min(ids(x), ids(y)), math.max(ids(x), ids(y)),
+              n.toLong, jaccard)
+          c += 1
+        }
+        i = 0
+        while (i < prefix(x)) {
+          val r = ranks(start(x) + i)
+          entDoc(listEnd(r)) = x; entPos(listEnd(r)) = i + 1
+          listEnd(r) += 1
+          i += 1
+        }
+        x += 1
+      }
+      if (out.length <= cap) Some(out.toArray) else None
+    }
+  }
+
+  /** The distributed path of [[ngramJaccardPairs]]: the same plan as
+    * equi-joins over materialized shingle sets and prefix postings.
     * Versus the naive full inverted index, the join fanout drops from
-    * Σ df² over *all* shingles to Σ df_prefix² over mostly-rare ones —
-    * the difference between quadratic blowup on stop-shingles and linear
-    * work, and exactly the trick that keeps this runnable at 100 TB
-    * (the df-ascending order concentrates prefixes on low-fanout keys).
-    * On top of the prefix filter, each join hit passes PPJoin's
-    * POSITIONAL filter before it can seed a candidate: a hit on token w
-    * at ranks (rnA, rnB) of the shared canonical order bounds the
-    * overlap by 1 + min(|A| − rnA, |B| − rnB), and J ≥ t needs overlap
-    * ≥ ⌈t/(1+t)·(|A|+|B|)⌉ — for a TRUE pair the FIRST shared prefix
-    * token always passes (every common token ranks at or after it, and
-    * the prefix lemma puts it inside both prefixes), so keeping a pair
-    * when ANY hit passes loses nothing, while boilerplate-grade prefix
-    * tokens (whose deep-rank hits bound the overlap away) stop feeding
-    * the candidate distinct — the df² growth term of common shingles at
-    * corpus scale (the 100× probe measured 1.36×/copy without it). The
-    * length filter (t·|A| ≤ |B| ≤ |A|/t) is the rnA=rnB=1 special case,
-    * subsumed. Exactness is untouched: candidates are a superset of the
-    * qualifying pairs, and verification is the full exact Jaccard.
+    * Σ df² over all shingles to Σ df_prefix² over mostly-rare ones,
+    * which is what keeps it linear on stop-shingles at corpus scale.
     * All joins are equi-joins; AQE's skew splitting covers the residue.
     */
-  def ngramJaccardPairs(k: Int = 3, threshold: Double = 0.5)(
+  private[graft] def ngramJaccardDistributed(k: Int, threshold: Double)(
       df: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // work on 60-bit shingle hashes throughout: long keys make the

@@ -1454,9 +1454,11 @@ object SimilarityOps {
     // c is hash-partitioned on vec_id ONCE before the checkpoint, so
     // every round's C·v groupBy and Cᵀ·t join run exchange-free on the
     // cached layout. Partition count is sized to the data (~32k rows
-    // per task, capped at the session's shuffle parallelism). Results
-    // are partitioning-independent (exact decimal arithmetic).
-    val nParts = math.max(1L, math.min(
+    // per task, capped at the session's shuffle parallelism) and
+    // floored at 2: Spark reports a 1-partition layout as
+    // SinglePartition, which a join on vec_id re-shuffles every round.
+    // Results are partitioning-independent (exact decimal arithmetic).
+    val nParts = math.max(2L, math.min(
       spark.conf.get("spark.sql.shuffle.partitions").toLong,
       n * dims.length / 32768L + 1L)).toInt
     val c = DedupOps.materializeKeyed(qrows

@@ -1,15 +1,16 @@
 package graft
 
-import graft.operators.{DriverModel, SimilarityOps}
+import graft.functions.TextExprs
+import graft.operators.{DedupOps, DriverModel, SimilarityOps}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, posexplode_outer}
 import org.apache.spark.sql.types._
 
 /** Bounded driver fetches ([[DriverModel.collectBounded]]) and the
-  * kernels that finish on the driver behind them: `pcaPower`'s driver
-  * path against its distributed path, bit for bit, and `mmrRerank`'s
-  * capped collects.
+  * kernels that finish on the driver behind them: `pcaPower`'s and
+  * `ngramJaccardPairs`'s driver paths against their distributed paths,
+  * bit for bit, and `mmrRerank`'s capped collects.
   */
 class DriverModelSpec extends SparkSpec {
   import spark.implicits._
@@ -124,18 +125,115 @@ class DriverModelSpec extends SparkSpec {
   }
 
   test("pcaPower fallback: per-round join and aggregate on vec_id plan no exchange") {
-    // 600 × 64 cells lay c out in 2 hash partitions; a 1-partition
-    // layout reads as SinglePartition, which a join re-shuffles anyway
-    val df = embs(matrix(600, 64, 7L))
-    val pc = SimilarityOps.pcaCentered(df, 10000L)
-    val round = SimilarityOps.pcaRound(pc.c, pc.dims,
-      pc.dims.map(_ -> 100000L).toMap, 100000L)
-    val p = round.queryExecution.executedPlan.toString
-    assert(!p.contains("hashpartitioning(vec_id"), p)
-    assert(p.contains("hashpartitioning(dim"), p)
+    // 600 × 64 cells size c's layout at 2 hash partitions, 40 × 6 at
+    // the floor of 2: a 1-partition layout reads as SinglePartition,
+    // which a join on vec_id re-shuffles every round
+    for ((n, d) <- Seq((600, 64), (40, 6))) {
+      val df = embs(matrix(n, d, 7L))
+      val pc = SimilarityOps.pcaCentered(df, 10000L)
+      val round = SimilarityOps.pcaRound(pc.c, pc.dims,
+        pc.dims.map(_ -> 100000L).toMap, 100000L)
+      val p = round.queryExecution.executedPlan.toString
+      assert(!p.contains("hashpartitioning(vec_id"), s"$n × $d: $p")
+      assert(p.contains("hashpartitioning(dim"), s"$n × $d: $p")
+    }
     // the keyed checkpoint leaves the caller's session conf alone
     assert(spark.conf.getOption("spark.sql.adaptive.enabled")
       .forall(_ == "true"))
+  }
+
+  /** One `documents` row: (doc_id, text), either may be null. */
+  private type Doc = (java.lang.Long, String)
+
+  private val docSchema = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("text", StringType)))
+
+  private def docs(rows: Seq[Doc]): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      rows.map { case (id, t) => Row(id, t) }, 3), docSchema)
+
+  /** `n` seeded documents over a 40-word vocabulary, in families of
+    * three: a base text and two copies with some tokens redrawn, so
+    * pairs span the whole Jaccard range.
+    */
+  private def corpus(n: Int, seed: Long): Seq[Doc] = {
+    val rnd = new scala.util.Random(seed)
+    def word() = s"w${rnd.nextInt(40)}"
+    (0 until n).grouped(3).flatMap { fam =>
+      val base = Seq.fill(6 + rnd.nextInt(10))(word())
+      fam.zipWithIndex.map { case (id, i) =>
+        (Long.box(id.toLong), base.map(w =>
+          if (i > 0 && rnd.nextInt(8) < i) word() else w).mkString(" "))
+      }
+    }.toSeq
+  }
+
+  /** Shingle cells as the driver path counts them: a null text is one. */
+  private def shingleCells(df: DataFrame, k: Int): Int =
+    df.select(posexplode_outer(TextExprs.h15Array(
+      DedupOps.shingleSet(col("text"), k)))).count().toInt
+
+  /** (a, b, inter, jaccard bits), sorted. */
+  private def pairsOf(df: DataFrame): Seq[(Long, Long, Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+      java.lang.Double.doubleToRawLongBits(r.getDouble(3)))).sorted.toSeq
+
+  test("ngramJaccardPairs: driver path ≡ distributed path bit-exactly, either side of the cap") {
+    val base = corpus(30, 5L)
+    val fixtures: Seq[(String, Seq[Doc])] = Seq(
+      "corpus" -> base,
+      "identical documents" -> (base ++ Seq.tabulate(3)(i =>
+        (Long.box(50L + i), base(4)._2))),
+      "null text" -> (base ++ Seq((Long.box(50L), null),
+        (Long.box(51L), null))),
+      "empty text" -> (base ++ Seq((Long.box(50L), ""),
+        (Long.box(51L), "   "))),
+      "text shorter than k" -> (base ++ Seq((Long.box(50L), "w1"),
+        (Long.box(51L), "w1"), (Long.box(52L), "w1 w2"),
+        (Long.box(53L), "w1 w2"))),
+      "null doc_id" -> (base ++ Seq((null, base(4)._2),
+        (null, base(4)._2))),
+      "more pairs than cells" -> Seq.tabulate(6)(i =>
+        (Long.box(i.toLong), "w1 w2 w3")),
+      "duplicate doc_id" -> (base :+ ((base(7)._1, base(4)._2))),
+      "empty input" -> Seq.empty)
+    for ((name, rows) <- fixtures; k <- Seq(2, 3);
+        t <- Seq(0.0, 0.3, 0.5, 0.9, 1.0)) {
+      val df = docs(rows)
+      val ref = DedupOps.ngramJaccardDistributed(k, t)(df)
+      val want = pairsOf(ref)
+      val n = shingleCells(df, k)
+      val ids = rows.flatMap(r => Option(r._1))
+      for (cap <- Seq(n - 1, n, n + 1) if cap >= 0) {
+        val got = DedupOps.ngramJaccardPairs(k, t, cap)(df)
+        val ctx = s"$name, k=$k, t=$t, cells=$n, cap=$cap"
+        assert(onDriver(got) == (cap >= n && ids.distinct == ids &&
+          want.length <= cap), s"$ctx: wrong path")
+        assert(got.schema == ref.schema, s"$ctx: ${got.schema}")
+        assert(pairsOf(got) == want, s"$ctx: paths diverge")
+      }
+      if (name == "corpus" && t == 0.5)
+        assert(want.nonEmpty, s"$name, k=$k: no pairs to compare")
+    }
+    // non-nullable input columns: the local frame's nullability follows
+    val strict = spark.createDataFrame(docs(base).rdd,
+      StructType(docSchema.map(_.copy(nullable = false))))
+    val got = DedupOps.ngramJaccardPairs(3, 0.5)(strict)
+    val ref = DedupOps.ngramJaccardDistributed(3, 0.5)(strict)
+    assert(onDriver(got) && got.schema == ref.schema, got.schema)
+    assert(pairsOf(got) == pairsOf(ref))
+  }
+
+  test("ngramJaccardPairs: the registered query takes the driver path and matches the distributed path") {
+    val got = SparkEntry.queries("dedup_ngram_jaccard")(spark, dir)
+    val ref = DedupOps.ngramJaccardDistributed(3, 0.5)(
+      Tables.documents(spark, dir))
+    assert(onDriver(got))
+    assert(got.schema == ref.schema, got.schema)
+    val want = pairsOf(ref)
+    assert(want.nonEmpty)
+    assert(pairsOf(got) == want)
   }
 
   test("mmrRerank: a tiny cap fails by name; the default cap changes nothing") {

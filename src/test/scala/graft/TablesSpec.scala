@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
 
@@ -33,5 +35,51 @@ class TablesSpec extends SparkSpec {
       }
       assert(df.limit(1).count() == 1L, s"$n is empty")
     }
+  }
+
+  private val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
+
+  // each conf test loads on a fresh session: its own conf, and a cache
+  // miss in Tables' per-session spread cache
+  test("events: the caller's session conf is untouched and ts loads as TIMESTAMP at every scale") {
+    val caller = spark.newSession()
+    val before = caller.conf.getOption(nanosKey)
+    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
+      val e = Tables.events(caller, s"${new java.io.File(dir).getParent}/$sf")
+      assert(e.schema("ts").dataType == TimestampType, sf)
+    }
+    assert(firstMillis(Tables.events(caller, dir)) > 0L)
+    assert(caller.conf.getOption(nanosKey) == before)
+  }
+
+  private def firstMillis(e: org.apache.spark.sql.DataFrame): Long =
+    e.select(unix_millis(col("ts"))).limit(1).collect().head.getLong(0)
+
+  test("events: a TIMESTAMP(NANOS) file loads as TIMESTAMP, truncated to µs, without the caller setting the nanos flag") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val d = Files.createTempDirectory("graft-nanos").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 user_id; " +
+        "required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val w = ExampleParquetWriter.builder(
+      new org.apache.hadoop.fs.Path(s"$d/events.parquet"))
+      .withType(schema)
+      .withConf(new org.apache.hadoop.conf.Configuration())
+      .build()
+    val rows = Seq(1L -> 1709596800123456789L, 2L -> 1709683200000000999L)
+    val groups = new SimpleGroupFactory(schema)
+    rows.foreach { case (u, ns) =>
+      w.write(groups.newGroup().append("user_id", u).append("ts", ns)) }
+    w.close()
+    val caller = spark.newSession()
+    val before = caller.conf.getOption(nanosKey)
+    val e = Tables.events(caller, d)
+    assert(e.schema("ts").dataType == TimestampType)
+    val got = e.select(col("user_id"), unix_micros(col("ts")))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == rows.map { case (u, ns) => u -> ns / 1000L }.toMap)
+    assert(caller.conf.getOption(nanosKey) == before)
   }
 }
