@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.SessionBridge
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   * At cluster scale these would be partitioned external tables; the API is
@@ -13,8 +15,53 @@ object Tables {
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** `dir/name.parquet` as a DataFrame. Inferring a parquet schema
+    * starts a Spark job that reads a footer (about 0.1 s), and every
+    * query construction loads its tables afresh, so the schema is
+    * inferred on a table's first load only and handed to
+    * `spark.read.schema(s)` on later loads, which start no job. A memo
+    * entry is keyed on the path and the session's set `*parquet*` confs
+    * (they change what inference decodes, e.g. nanosAsLong), and holds
+    * the file listing (name, length, mtime) it was inferred from: a
+    * rewritten file infers again. A path that cannot be listed is read
+    * as before, so it fails as before.
+    */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    listing(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some(files) =>
+        val key = (path, spark.conf.getAll.filter(_._1.contains("parquet")))
+        schemas.get(key) match {
+          case Some((`files`, schema)) => spark.read.schema(schema).parquet(path)
+          case _ =>
+            val df = spark.read.parquet(path)
+            schemas.put(key, (files, df.schema))
+            df
+        }
+    }
+  }
+
+  private type Listing = Seq[(String, Long, Long)]
+
+  private val schemas = scala.collection.concurrent.TrieMap
+    .empty[(String, Map[String, String]), (Listing, StructType)]
+
+  /** Every file under `path` (or `path` itself) as (name, length, mtime),
+    * or None when the path cannot be listed.
+    */
+  private def listing(spark: SparkSession, path: String): Option[Listing] =
+    scala.util.Try {
+      val p = new Path(path)
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listFiles(p, true)
+      val b = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      b.result().sorted
+    }.toOption
 
   /** The driver's test parquet files are written as a single row group, so
     * a scan gets exactly ONE task no matter the cluster size — every

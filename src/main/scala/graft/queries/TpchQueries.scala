@@ -235,8 +235,17 @@ object TpchQueries {
     // Q21 sole-late supplier: on multi-supplier finalized orders where
     // EXACTLY ONE supplier shipped late, count such orders per supplier.
     // The exists / not-exists pair collapses into one aggregate pass per
-    // order (distinct suppliers vs distinct late suppliers) — one shuffle
-    // on the order key instead of two extra self-joins.
+    // order — one shuffle on the order key instead of two extra
+    // self-joins. Among a column's non-null values, count(DISTINCT x) > 1
+    // iff min(x) < max(x), and count(DISTINCT x) = 1 iff min(x) = max(x)
+    // (both null when there are none), so min/max of the supplier and of
+    // the late supplier decide it. Two count(DISTINCT)s on different
+    // columns would plan an Expand that copies every joined row once per
+    // distinct column and shuffles twice (first on order × supplier ×
+    // late × group id, then on the order); min/max are decomposable, so
+    // a partial aggregate runs on the scan side and the one shuffle on
+    // l_orderkey moves one row per order and task. The oracle keeps the
+    // count(DISTINCT) form.
     "q21_sole_late_supplier" -> ((s, dir) => {
       val perOrder = t(s, dir, "lineitem")
         .join(t(s, dir, "orders").filter(col("o_orderstatus") === "F"),
@@ -245,10 +254,10 @@ object TpchQueries {
           when(col("l_shipdate") > col("o_orderdate"), col("l_suppkey")))
         .groupBy(col("l_orderkey"))
         .agg(
-          countDistinct(col("l_suppkey")).as("n_supp"),
-          countDistinct(col("late_supp")).as("n_late"),
-          min(col("late_supp")).as("the_late_supp"))
-        .filter(col("n_supp") > 1 && col("n_late") === 1)
+          min(col("l_suppkey")).as("mn"), max(col("l_suppkey")).as("mx"),
+          min(col("late_supp")).as("the_late_supp"),
+          max(col("late_supp")).as("lmx"))
+        .filter(col("mn") =!= col("mx") && col("the_late_supp") === col("lmx"))
       perOrder
         .groupBy(col("the_late_supp"))
         .agg(count(lit(1)).as("numwait"))

@@ -5,6 +5,7 @@ import graft.operators.{DedupOps, DriverModel, SimilarityOps}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.{col, posexplode_outer}
+import org.apache.spark.sql.graftbridge.JobCount
 import org.apache.spark.sql.types._
 
 /** Bounded driver fetches ([[DriverModel.collectBounded]]) and the
@@ -24,6 +25,23 @@ class DriverModelSpec extends SparkSpec {
     assert(DriverModel.collectBounded(df, 4).isEmpty)
     assert(DriverModel.collectBounded(df.filter(col("x") < 0), 0)
       .exists(_.isEmpty))
+  }
+
+  test("collectBounded: one job over 4 partitions, Some iff rows <= cap, at cap - 1, cap and cap + 1") {
+    val key = "spark.sql.limit.initialNumPartitions"
+    val before = spark.conf.getOption(key)
+    val df = spark.sparkContext.parallelize(0L until 40L, 4).toDF("x")
+    // the plain collected limit takes the first partition, then the rest
+    assert(JobCount(spark.sparkContext)(df.limit(40).collect())._2 == 2)
+    for (cap <- Seq(39, 40, 41)) {
+      val (got, jobs) =
+        JobCount(spark.sparkContext)(DriverModel.collectBounded(df, cap))
+      assert(jobs == 1, s"cap $cap: $jobs jobs")
+      assert(got.isDefined == (40 <= cap), s"cap $cap")
+      got.foreach(rows =>
+        assert(rows.map(_.getLong(0)).sorted.toSeq == (0L until 40L)))
+    }
+    assert(spark.conf.getOption(key) == before)
   }
 
   /** One `embeddings` row: (vec_id, embedding), either may be null. */

@@ -1,7 +1,12 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{ExpandExec, SparkPlan}
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** Physical-plan shape regressions: the scale properties the queries are
   * DESIGNED around (dimension joins broadcast, filters reaching the
@@ -103,6 +108,32 @@ class PlanSpec extends SparkSpec {
     val p = planString("q8_market_share")
     assert(count(p, "BroadcastHashJoin") >= 5, p.take(2000))
     assert(!p.contains("SortMergeJoin"))
+  }
+
+  test("q21: no Expand; the fact side shuffles once, on l_orderkey, above a partial aggregate") {
+    // planned without AQE, so the exchanges are in the tree up front
+    val static = spark.newSession()
+    static.conf.set("spark.sql.adaptive.enabled", "false")
+    val p = planOf(SparkEntry.queries("q21_sole_late_supplier")(static, dir))
+    assert(p.collect { case e: ExpandExec => e }.isEmpty, p.toString)
+    def keys(e: ShuffleExchangeExec): Seq[String] = e.outputPartitioning match {
+      case h: HashPartitioning =>
+        h.expressions.collect { case a: Attribute => a.name }
+      case _ => Nil
+    }
+    val onOrder = p.collect {
+      case e: ShuffleExchangeExec if keys(e) == Seq("l_orderkey") => e
+    }
+    assert(onOrder.size == 1, p.toString)
+    val below = onOrder.head.child
+    assert(below.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+      s"another shuffle on the fact side\n$p")
+    below.collectFirst { case a: HashAggregateExec => a } match {
+      case Some(a) =>
+        assert(a.aggregateExpressions.nonEmpty &&
+          a.aggregateExpressions.forall(_.mode == Partial), p.toString)
+      case None => fail(s"no partial aggregate below the shuffle\n$p")
+    }
   }
 
   test("sample_stratified: hash filter is a scan-adjacent Filter") {

@@ -2,8 +2,10 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.TimestampType
+import org.apache.spark.sql.graftbridge.JobCount
+import org.apache.spark.sql.types.{LongType, TimestampType}
 
 /** Loader normalization guards. The driver regenerates testdata between
   * rounds and has already shipped `events.ts` under two different
@@ -55,7 +57,13 @@ class TablesSpec extends SparkSpec {
   private def firstMillis(e: org.apache.spark.sql.DataFrame): Long =
     e.select(unix_millis(col("ts"))).limit(1).collect().head.getLong(0)
 
-  test("events: a TIMESTAMP(NANOS) file loads as TIMESTAMP, truncated to µs, without the caller setting the nanos flag") {
+  private val nanosRows =
+    Seq(1L -> 1709596800123456789L, 2L -> 1709683200000000999L)
+
+  /** A dir whose events.parquet holds `nanosRows` as (user_id,
+    * ts TIMESTAMP(NANOS)).
+    */
+  private def nanosEvents(): String = {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.schema.MessageTypeParser
@@ -68,18 +76,88 @@ class TablesSpec extends SparkSpec {
       .withType(schema)
       .withConf(new org.apache.hadoop.conf.Configuration())
       .build()
-    val rows = Seq(1L -> 1709596800123456789L, 2L -> 1709683200000000999L)
     val groups = new SimpleGroupFactory(schema)
-    rows.foreach { case (u, ns) =>
+    nanosRows.foreach { case (u, ns) =>
       w.write(groups.newGroup().append("user_id", u).append("ts", ns)) }
     w.close()
+    d
+  }
+
+  test("events: a TIMESTAMP(NANOS) file loads as TIMESTAMP, truncated to µs, without the caller setting the nanos flag") {
+    val d = nanosEvents()
     val caller = spark.newSession()
     val before = caller.conf.getOption(nanosKey)
     val e = Tables.events(caller, d)
     assert(e.schema("ts").dataType == TimestampType)
     val got = e.select(col("user_id"), unix_micros(col("ts")))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == rows.map { case (u, ns) => u -> ns / 1000L }.toMap)
+    assert(got == nanosRows.map { case (u, ns) => u -> ns / 1000L }.toMap)
     assert(caller.conf.getOption(nanosKey) == before)
+  }
+
+  // the schema memo: a table's schema is inferred on its first load only
+
+  private def jobs[T](body: => T): Int = JobCount(spark.sparkContext)(body)._2
+
+  private def tmpTable(name: String, df: org.apache.spark.sql.DataFrame): String = {
+    val d = Files.createTempDirectory("graft-memo").toString
+    df.write.parquet(s"$d/$name.parquet")
+    d
+  }
+
+  test("load: a warm load starts no job and its schema is the inferred one, for a directory and a single-file table") {
+    import spark.implicits._
+    val dirTable = tmpTable("t",
+      Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("k", "s", "x").repartition(2))
+    assert(new java.io.File(s"$dirTable/t.parquet").isDirectory)
+    assert(new java.io.File(s"$dir/lineitem.parquet").isFile)
+    for ((d, n) <- Seq(dirTable -> "t", dir -> "lineitem")) {
+      Tables.load(spark, d, n)
+      val (df, started) = JobCount(spark.sparkContext)(Tables.load(spark, d, n))
+      assert(started == 0, s"$n: a warm load started $started jobs")
+      assert(df.schema == spark.read.parquet(s"$d/$n.parquet").schema, n)
+      assert(df.count() == spark.read.parquet(s"$d/$n.parquet").count(), n)
+    }
+  }
+
+  test("load: a rewritten table with an added column infers again") {
+    import spark.implicits._
+    val d = tmpTable("t", Seq((1L, "a")).toDF("k", "s"))
+    Tables.load(spark, d, "t")
+    assert(jobs(Tables.load(spark, d, "t")) == 0)
+    Seq((2L, "b", 3.0)).toDF("k", "s", "x")
+      .write.mode("overwrite").parquet(s"$d/t.parquet")
+    val (df, started) = JobCount(spark.sparkContext)(Tables.load(spark, d, "t"))
+    assert(started > 0)
+    assert(df.columns.toSeq == Seq("k", "s", "x"))
+    assert(df.collect().toSeq == Seq(Row(2L, "b", 3.0)))
+  }
+
+  test("load: a missing path fails as an unmemoized read does") {
+    val d = Files.createTempDirectory("graft-missing").toString
+    val want = scala.util.Try(spark.read.parquet(s"$d/absent.parquet"))
+    val got = scala.util.Try(Tables.load(spark, d, "absent"))
+    assert(want.isFailure && got.isFailure)
+    assert(got.failed.get.getClass == want.failed.get.getClass)
+  }
+
+  test("load: sessions with different parquet confs do not share a schema entry") {
+    val d = nanosEvents()
+    val path = s"$d/events.parquet"
+    val flagged = spark.newSession()
+    flagged.conf.set(nanosKey, "true")
+    assert(Tables.load(flagged, d, "events").schema("ts").dataType == LongType)
+    assert(Tables.events(spark.newSession(), d).schema("ts").dataType ==
+      TimestampType)
+    assert(jobs(Tables.load(flagged, d, "events")) == 0)
+    // the unflagged session decodes as a plain read does, not as the
+    // flagged entries
+    val plain = spark.newSession()
+    val want = scala.util.Try(plain.read.parquet(path).schema)
+    val got = scala.util.Try(Tables.load(plain, d, "events").schema)
+    assert(got.toOption == want.toOption)
+    assert(got.failed.toOption.map(_.getClass) ==
+      want.failed.toOption.map(_.getClass))
+    assert(!want.toOption.exists(_("ts").dataType == LongType))
   }
 }
