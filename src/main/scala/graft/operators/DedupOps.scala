@@ -99,13 +99,15 @@ object DedupOps {
     *  - **Driver**, when the input has at most `cellCap` shingle cells
     *    (a null, empty or too-short text counts as one), `doc_id` is a
     *    BIGINT, no two rows share a non-null `doc_id`, and the answer
-    *    has at most `cellCap` pairs: one [[DriverModel.collectBounded]]
-    *    fetch of the `(doc_id, pos, shingle hash)` cells, then the plan
-    *    above over primitive arrays (dense shingle ranks, int-array
-    *    inverted prefix lists, a per-probe candidate mark) and a local
-    *    frame with the distributed path's schema. At sf0.1 (5,000
-    *    documents, 261k cells) the corpus is model-sized and a
-    *    distributed plan is all fixed per-job overhead.
+    *    has at most `cellCap` pairs: one [[DriverModel.fetchArrays]]
+    *    fetch of each row's `(doc_id, shingle hashes)` as flat primitive
+    *    arrays, then the plan above over them (dense shingle ranks from
+    *    one primitive hash table, int-array inverted prefix lists, a
+    *    per-probe candidate mark, a verification merge that stops once
+    *    the pair can no longer reach the threshold) and a local frame
+    *    with the distributed path's schema. At sf0.1 (5,000 documents,
+    *    261k cells) the corpus is model-sized and a distributed plan is
+    *    all fixed per-job overhead.
     *  - **Distributed** otherwise: [[ngramJaccardDistributed]], the
     *    same plan as equi-joins. It is the reference the equivalence
     *    spec compares against, bit for bit.
@@ -120,58 +122,69 @@ object DedupOps {
     * they shape.
     */
   def ngramJaccardPairs(k: Int = 3, threshold: Double = 0.5,
-      cellCap: Int = DriverModel.DefaultCap)(df: DataFrame): DataFrame = {
-    val id = df.schema("doc_id")
-    val onDriver = if (id.dataType != LongType) None else {
-      val cells = df.select(col("doc_id"), posexplode_outer(
-        graft.functions.TextExprs.h15Array(shingleSet(col("text"), k)))
-        .as(Seq("pos", "shingle")))
-      DriverModel.collectBounded(cells, cellCap)
+      cellCap: Int = DriverModel.DefaultCap)(df: DataFrame): DataFrame =
+    hashJaccardPairs(threshold, cellCap)(shingleHashes(df, k))
+
+  /** `(doc_id, shingles)`: each document's k-shingle hashes. */
+  private def shingleHashes(df: DataFrame, k: Int): DataFrame =
+    df.select(col("doc_id"), graft.functions.TextExprs.h15Array(
+      shingleSet(col("text"), k)).as("shingles"))
+
+  /** [[ngramJaccardPairs]] from a `(doc_id, shingles array<bigint>)`
+    * frame of hash arrays; an array holds each of its hashes once or
+    * more.
+    */
+  private[graft] def hashJaccardPairs(threshold: Double, cellCap: Int)(
+      sets: DataFrame): DataFrame = {
+    val id = sets.schema("doc_id")
+    val onDriver = if (id.dataType != LongType) None else
+      DriverModel.fetchArrays(sets, cellCap)
         .flatMap(ngramJaccardOnDriver(_, threshold, cellCap))
-    }
     onDriver match {
       case Some(pairs) =>
-        df.sparkSession.createDataFrame(pairs.toSeq.asJava, StructType(Seq(
+        sets.sparkSession.createDataFrame(pairs.toSeq.asJava, StructType(Seq(
           StructField("a", LongType, id.nullable),
           StructField("b", LongType, id.nullable),
-          StructField("inter", LongType, df.schema("text").nullable),
+          StructField("inter", LongType, sets.schema("shingles").nullable),
           StructField("jaccard", DoubleType))))
-      case None => ngramJaccardDistributed(k, threshold)(df)
+      case None => hashJaccardDistributed(threshold)(sets)
     }
   }
 
-  /** The driver path of [[ngramJaccardPairs]] over the fetched
-    * `(doc_id, pos, shingle)` cells (`pos` is NULL for a null text).
-    * None when two rows share a doc id or the answer has more than
-    * `pairCap` pairs.
+  /** The driver path of [[ngramJaccardPairs]] over the fetched rows,
+    * one per document. None when two rows share a doc id or the answer
+    * has more than `pairCap` pairs.
     */
-  private def ngramJaccardOnDriver(rows: Array[Row], threshold: Double,
-      pairCap: Int): Option[Array[Row]] = {
-    // one dense doc per input row: its pos-0 cell, or its one NULL-pos
-    // cell; a NULL doc_id never pairs, so it gets no doc
+  private def ngramJaccardOnDriver(m: DriverModel.ArrayRows,
+      threshold: Double, pairCap: Int): Option[Array[Row]] = {
+    // one dense doc per row; a NULL doc_id never pairs, so it gets none
     val docOf = scala.collection.mutable.LongMap.empty[Int]
     val ids = scala.collection.mutable.ArrayBuilder.make[Long]
-    val unique = rows.forall { r =>
-      r.isNullAt(0) || !(r.isNullAt(1) || r.getInt(1) == 0) || {
-        val fresh = !docOf.contains(r.getLong(0))
-        if (fresh) { docOf(r.getLong(0)) = docOf.size; ids += r.getLong(0) }
-        fresh
-      }
+    val doc = new Array[Int](m.rows)
+    var unique = true
+    var r = 0
+    while (unique && r < m.rows) {
+      if (m.idNull(r)) doc(r) = -1
+      else if (docOf.contains(m.ids(r))) unique = false
+      else { doc(r) = docOf.size; docOf(m.ids(r)) = doc(r); ids += m.ids(r) }
+      r += 1
     }
     if (!unique) None
     else {
       // every shingle cell counts in df, NULL-id rows too as in the
       // engine's posting; their doc is -1
-      val hash = new Array[Long](rows.length)
-      val doc = new Array[Int](rows.length)
+      val hash = new Array[Long](m.bits.length)
+      val cellDoc = new Array[Int](m.bits.length)
       var n = 0
-      for (r <- rows if !r.isNullAt(1) && !r.isNullAt(2)) {
-        hash(n) = r.getLong(2)
-        doc(n) = if (r.isNullAt(0)) -1 else docOf(r.getLong(0))
-        n += 1
+      for (r <- 0 until m.rows) {
+        var i = m.start(r)
+        while (i < m.start(r + 1)) {
+          if (!m.elemNull(i)) { hash(n) = m.bits(i); cellDoc(n) = doc(r); n += 1 }
+          i += 1
+        }
       }
       new AllPairs(ids.result(), java.util.Arrays.copyOf(hash, n),
-        java.util.Arrays.copyOf(doc, n), threshold).pairs(pairCap)
+        java.util.Arrays.copyOf(cellDoc, n), threshold).pairs(pairCap)
     }
   }
 
@@ -184,39 +197,10 @@ object DedupOps {
   private final class AllPairs(ids: Array[Long], hash: Array[Long],
       doc: Array[Int], threshold: Double) {
     private val nDocs = ids.length
-    // dense shingle ranks: distinct hashes ascending, then a stable sort
-    // on df packed into the high word
-    private val (distinct, rankOf) = {
-      val sorted = hash.clone()
-      java.util.Arrays.sort(sorted)
-      val distinct = new Array[Long](sorted.length)
-      val df = new Array[Int](sorted.length)
-      var u = -1
-      for (i <- sorted.indices) {
-        if (i == 0 || sorted(i) != sorted(i - 1)) { u += 1; distinct(u) = sorted(i) }
-        df(u) += 1
-      }
-      val byRarity = Array.tabulate(u + 1)(v => (df(v).toLong << 32) | v)
-      java.util.Arrays.sort(byRarity)
-      val rankOf = new Array[Int](u + 1)
-      for (r <- byRarity.indices) rankOf(byRarity(r).toInt) = r
-      (java.util.Arrays.copyOf(distinct, u + 1), rankOf)
-    }
+    private val (rankOfCell, nRanks) = AllPairs.denseRanks(hash)
     // doc d's shingle ranks, ascending: ranks(start(d) until start(d + 1))
     private val start = new Array[Int](nDocs + 1)
-    private val ranks = {
-      for (d <- doc if d >= 0) start(d + 1) += 1
-      for (d <- 0 until nDocs) start(d + 1) += start(d)
-      val fill = start.clone()
-      val ranks = new Array[Int](start(nDocs))
-      for (i <- doc.indices if doc(i) >= 0) {
-        ranks(fill(doc(i))) =
-          rankOf(java.util.Arrays.binarySearch(distinct, hash(i)))
-        fill(doc(i)) += 1
-      }
-      for (d <- 0 until nDocs) java.util.Arrays.sort(ranks, start(d), start(d + 1))
-      ranks
-    }
+    private val ranks = AllPairs.runs(doc, rankOfCell, start)
     private def size(d: Int): Int = start(d + 1) - start(d)
     // the engine's prefix bound, in the same double arithmetic
     private val prefix = Array.tabulate(nDocs) { d =>
@@ -226,11 +210,21 @@ object DedupOps {
     }
     private val alpha = threshold / (1.0 + threshold)
 
-    /** |A ∩ B| over two docs' ascending rank runs, distinct values. */
-    private def inter(a: Int, b: Int): Int = {
+    /** J ≥ t needs overlap ≥ ⌈t/(1+t)·(|A|+|B|)⌉, with the engine's
+      * slack: double rounding never pushes it one above the exact value.
+      */
+    private def needed(a: Int, b: Int): Long =
+      math.ceil(alpha * (size(a) + size(b)) - 1e-9).toLong
+
+    /** |A ∩ B| over two docs' ascending rank runs, distinct values, or
+      * -1 once even a match on every remaining cell stays below `need`.
+      * A pair that can still reach it is counted in full.
+      */
+    private def inter(a: Int, b: Int, need: Long): Int = {
       var i = start(a); var j = start(b); var c = 0
       val ea = start(a + 1); val eb = start(b + 1)
       while (i < ea && j < eb) {
+        if (c + math.min(ea - i, eb - j) < need) return -1
         val ra = ranks(i); val rb = ranks(j)
         if (ra < rb) i += 1
         else if (ra > rb) j += 1
@@ -249,10 +243,10 @@ object DedupOps {
       */
     def pairs(cap: Int): Option[Array[Row]] = {
       // inverted prefix lists: (doc, 1-based rank position) per shingle
-      val listStart = new Array[Int](rankOf.length + 1)
+      val listStart = new Array[Int](nRanks + 1)
       for (d <- 0 until nDocs; i <- 0 until prefix(d))
         listStart(ranks(start(d) + i) + 1) += 1
-      for (r <- rankOf.indices) listStart(r + 1) += listStart(r)
+      for (r <- 0 until nRanks) listStart(r + 1) += listStart(r)
       val listEnd = listStart.clone()
       val entDoc = new Array[Int](listStart.last)
       val entPos = new Array[Int](listStart.last)
@@ -271,9 +265,9 @@ object DedupOps {
           while (e < listEnd(r)) {
             val y = entDoc(e)
             // positional filter: the overlap bound at this hit must
-            // reach α = ⌈t/(1+t)·(|A|+|B|)⌉, with the engine's slack
-            if (mark(y) != x && 1 + math.min(sx - i - 1, size(y) - entPos(e))
-                >= math.ceil(alpha * (sx + size(y)) - 1e-9).toLong) {
+            // reach the overlap J ≥ t needs
+            if (mark(y) != x &&
+                1 + math.min(sx - i - 1, size(y) - entPos(e)) >= needed(x, y)) {
               mark(y) = x; cand(nc) = y; nc += 1
             }
             e += 1
@@ -283,11 +277,13 @@ object DedupOps {
         var c = 0
         while (c < nc) {
           val y = cand(c)
-          val n = inter(x, y)
-          val jaccard = n.toDouble / (sx + size(y) - n).toDouble
-          if (jaccard >= threshold)
-            out += Row(math.min(ids(x), ids(y)), math.max(ids(x), ids(y)),
-              n.toLong, jaccard)
+          val n = inter(x, y, needed(x, y))
+          if (n >= 0) {
+            val jaccard = n.toDouble / (sx + size(y) - n).toDouble
+            if (jaccard >= threshold)
+              out += Row(math.min(ids(x), ids(y)), math.max(ids(x), ids(y)),
+                n.toLong, jaccard)
+          }
           c += 1
         }
         i = 0
@@ -303,6 +299,90 @@ object DedupOps {
     }
   }
 
+  /** [[AllPairs]]' set-up, kept out of its constructor so that the JIT
+    * compiles each loop as a method of its own.
+    */
+  private object AllPairs {
+    /** Each cell's dense shingle rank, and the number of ranks. One
+      * open-addressing pass numbers the distinct hashes u in first-seen
+      * order and counts their df; a rank is the place of (df(u), hash(u))
+      * in canonical order, which sorts only the distinct hashes.
+      */
+    def denseRanks(hash: Array[Long]): (Array[Int], Int) = {
+      val slots = Integer.highestOneBit(math.max(hash.length, 1)) << 2
+      val mask = slots - 1
+      val slotKey = new Array[Long](slots)
+      val slotU = new Array[Int](slots)
+      java.util.Arrays.fill(slotU, -1)
+      def slotOf(h: Long): Int = {
+        var p = java.lang.Long.hashCode(h * 0x9E3779B97F4A7C15L) & mask
+        while (slotU(p) >= 0 && slotKey(p) != h) p = (p + 1) & mask
+        p
+      }
+      val distinct = new Array[Long](hash.length)
+      val df = new Array[Int](hash.length)
+      val uOf = new Array[Int](hash.length)
+      var nu = 0
+      var i = 0
+      while (i < hash.length) {
+        val p = slotOf(hash(i))
+        if (slotU(p) < 0) {
+          slotKey(p) = hash(i); slotU(p) = nu; distinct(nu) = hash(i); nu += 1
+        }
+        uOf(i) = slotU(p)
+        df(uOf(i)) += 1
+        i += 1
+      }
+      // v = place in ascending hash order; then a stable order on df
+      // packed into the high word
+      val ascending = java.util.Arrays.copyOf(distinct, nu)
+      java.util.Arrays.sort(ascending)
+      val byRarity = new Array[Long](nu)
+      var v = 0
+      while (v < nu) {
+        byRarity(v) = (df(slotU(slotOf(ascending(v)))).toLong << 32) | v
+        v += 1
+      }
+      java.util.Arrays.sort(byRarity)
+      val rankOfU = new Array[Int](nu)
+      var rank = 0
+      while (rank < nu) {
+        rankOfU(slotU(slotOf(ascending(byRarity(rank).toInt)))) = rank
+        rank += 1
+      }
+      i = 0
+      while (i < uOf.length) { uOf(i) = rankOfU(uOf(i)); i += 1 }
+      (uOf, nu)
+    }
+
+    /** Each doc's ranks as an ascending run of one CSR array; fills
+      * `start`, of length docs + 1, with the run offsets.
+      */
+    def runs(doc: Array[Int], rankOfCell: Array[Int],
+        start: Array[Int]): Array[Int] = {
+      val nDocs = start.length - 1
+      var i = 0
+      while (i < doc.length) {
+        if (doc(i) >= 0) start(doc(i) + 1) += 1
+        i += 1
+      }
+      var d = 0
+      while (d < nDocs) { start(d + 1) += start(d); d += 1 }
+      val fill = start.clone()
+      val ranks = new Array[Int](start(nDocs))
+      i = 0
+      while (i < doc.length) {
+        if (doc(i) >= 0) { ranks(fill(doc(i))) = rankOfCell(i); fill(doc(i)) += 1 }
+        i += 1
+      }
+      d = 0
+      while (d < nDocs) {
+        java.util.Arrays.sort(ranks, start(d), start(d + 1)); d += 1
+      }
+      ranks
+    }
+  }
+
   /** The distributed path of [[ngramJaccardPairs]]: the same plan as
     * equi-joins over materialized shingle sets and prefix postings.
     * Versus the naive full inverted index, the join fanout drops from
@@ -311,16 +391,21 @@ object DedupOps {
     * All joins are equi-joins; AQE's skew splitting covers the residue.
     */
   private[graft] def ngramJaccardDistributed(k: Int, threshold: Double)(
-      df: DataFrame): DataFrame = {
+      df: DataFrame): DataFrame =
+    hashJaccardDistributed(threshold)(shingleHashes(df, k))
+
+  /** [[ngramJaccardDistributed]] from the frame [[hashJaccardPairs]]
+    * takes.
+    */
+  private[graft] def hashJaccardDistributed(threshold: Double)(
+      hashes: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // work on 60-bit shingle hashes throughout: long keys make the
     // posting shuffle, the rarity window, the prefix self-join, and the
     // verify intersect ~an order of magnitude cheaper than ~20-char
     // strings, and the oracle recomputes identical hashes
-    val sets = materialize(df.select(col("doc_id"),
-      graft.functions.TextExprs.sortedLongs(
-        graft.functions.TextExprs.h15Array(shingleSet(col("text"), k)))
-        .as("shingles"))
+    val sets = materialize(hashes.select(col("doc_id"),
+      graft.functions.TextExprs.sortedLongs(col("shingles")).as("shingles"))
       .withColumn("set_size", size(col("shingles"))))
     val posting = sets
       .select(col("doc_id"), col("set_size"),

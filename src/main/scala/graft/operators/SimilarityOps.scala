@@ -5,7 +5,8 @@ import graft.sources.IndexManifest
 import java.math.BigInteger
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType,
+  StructField, StructType}
 import scala.jdk.CollectionConverters._
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -1284,13 +1285,14 @@ object SimilarityOps {
     *
     * Two paths compute it, chosen by input size alone:
     *
-    *  - **Driver**, when the input has at most `cellCap` cells (a null
-    *    or empty embedding counts as one): one
-    *    [[DriverModel.collectBounded]] fetch of the (vec_id, dim, x)
-    *    cells, then every round on the driver. At this size the matrix
-    *    is model state (sf0.1: 2,000 × 64 = 128k cells) and a
-    *    distributed round is all fixed per-job overhead.
-    *  - **Distributed** above the cap: [[pcaCentered]] materializes the
+    *  - **Driver**, when `vec_id` is an integer type and the input has
+    *    at most `cellCap` cells (a null or empty embedding counts as
+    *    one): one [[DriverModel.fetchArrays]] fetch of the
+    *    `(vec_id, embedding)` rows as flat primitive arrays, then every
+    *    round on the driver. At this size the matrix is model state
+    *    (sf0.1: 2,000 × 64 = 128k cells) and a distributed round is all
+    *    fixed per-job overhead.
+    *  - **Distributed** otherwise: [[pcaCentered]] materializes the
     *    centered matrix once, hash-partitioned on vec_id, and each round
     *    is one exchange-free [[pcaRound]] job whose dim-sized w returns
     *    to the driver as the next round's literal direction vector.
@@ -1298,27 +1300,28 @@ object SimilarityOps {
     * The driver path is exact because it performs the same operations
     * on the same values, not because it is close. It floors the same
     * double product; it uses `Math.*Exact` where ANSI BIGINT arithmetic
-    * raises; its products and sums are exact BigIntegers, checked
-    * against DECIMAL(38,0) wherever the engine checks (a product of two
-    * longs always fits); integer division of non-negatives truncates in
-    * both. It groups like the SQL: t sums per vec_id (duplicate ids
-    * merge; a null id is its own group, which w's join then drops), and
-    * SUM skips NULL terms and is NULL when all are. Where the engine
-    * raises, the driver raises an ArithmeticException naming the
-    * overflow. (A non-ANSI session wraps or NULLs where both raise here;
-    * results without overflow are the same.) The distributed path is the
+    * raises; its products and sums are exact (128-bit words per sum,
+    * widened to a BigInteger only past 128 bits), checked against
+    * DECIMAL(38,0) wherever the engine checks (a product of two longs
+    * always fits); integer division of non-negatives truncates in both.
+    * It groups like the SQL: t sums per vec_id (duplicate ids merge; a
+    * null id is its own group, which w's join then drops), and SUM skips
+    * NULL terms and is NULL when all are. Where the engine raises, the
+    * driver raises an ArithmeticException naming the overflow. (A
+    * non-ANSI session wraps or NULLs where both raise here; results
+    * without overflow are the same.) The distributed path is the
     * reference the equivalence spec compares against, bit for bit.
     */
   def pcaPower(embs: DataFrame, iters: Int, qScale: Long, vScale: Long,
       cellCap: Int = DriverModel.DefaultCap): DataFrame = {
-    val cells = embs
-      .select(col("vec_id"),
-        posexplode_outer(col("embedding")).as(Seq("pos", "x")))
-      .select(col("vec_id"), col("pos").cast("long"),
-        col("x").cast("double"))
-    DriverModel.collectBounded(cells, cellCap) match {
-      case Some(rows) =>
-        pcaOnDriver(embs.sparkSession, rows, iters, qScale, vScale)
+    val fetched = embs.schema("vec_id").dataType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+        DriverModel.fetchArrays(embs.select(col("vec_id").cast("long"),
+          col("embedding").cast("array<double>")), cellCap)
+      case _ => None
+    }
+    fetched match {
+      case Some(m) => pcaOnDriver(embs.sparkSession, m, iters, qScale, vScale)
       case None => pcaDistributed(embs, iters, qScale, vScale)
     }
   }
@@ -1348,78 +1351,152 @@ object SimilarityOps {
     if (x.signum < 0) -r else r
   }
 
-  /** The driver path over the fetched `(vec_id, pos, x)` cells; `pos`
-    * is NULL for a null or empty embedding.
+  private val TwoTo64 = BigInteger.ONE.shiftLeft(64)
+
+  /** Exact sums of long products, one per slot, as 128-bit two's
+    * complement (hi, lo) words; a slot whose running sum leaves 128 bits
+    * goes on as a BigInteger. Adding a term allocates nothing while its
+    * slot fits.
     */
-  private def pcaOnDriver(spark: SparkSession, rows: Array[Row],
+  private final class ExactSums(n: Int) {
+    private val hi = new Array[Long](n)
+    private val lo = new Array[Long](n)
+    private var big: Array[BigInteger] = null
+    /** Some term was added: a SUM over no term is NULL. */
+    val any = new Array[Boolean](n)
+
+    def add(j: Int, a: Long, b: Long): Unit = {
+      any(j) = true
+      val pl = a * b
+      val ph = Math.multiplyHigh(a, b)
+      if (big != null && big(j) != null)
+        big(j) = big(j).add(wide(ph, pl))
+      else {
+        val l = lo(j) + pl
+        val h = hi(j) + ph +
+          (if (java.lang.Long.compareUnsigned(l, pl) < 0) 1L else 0L)
+        // signed overflow: like-signed high words, a result of the other
+        if ((~(hi(j) ^ ph) & (hi(j) ^ h)) < 0) {
+          if (big == null) big = new Array[BigInteger](n)
+          big(j) = wide(hi(j), lo(j)).add(wide(ph, pl))
+        } else { hi(j) = h; lo(j) = l }
+      }
+    }
+
+    def fitsLong(j: Int): Boolean =
+      (big == null || big(j) == null) && hi(j) == (lo(j) >> 63)
+
+    def long(j: Int): Long = lo(j)
+
+    def value(j: Int): BigInteger =
+      if (big != null && big(j) != null) big(j) else wide(hi(j), lo(j))
+
+    private def wide(h: Long, l: Long): BigInteger = {
+      val low = BigInteger.valueOf(l)
+      BigInteger.valueOf(h).shiftLeft(64)
+        .add(if (l < 0) low.add(TwoTo64) else low)
+    }
+  }
+
+  /** The driver path over the fetched rows. Cell i of row r is dim
+    * i − start(r); a null or empty embedding has no cells but counts in
+    * n. The per-cell loops do primitive arithmetic only; per-group and
+    * per-dim values are BigIntegers, as in the SQL's DECIMAL(38,0).
+    */
+  private def pcaOnDriver(spark: SparkSession, m: DriverModel.ArrayRows,
       iters: Int, qScale: Long, vScale: Long): DataFrame = {
     def exact[T](what: String)(f: => T): T =
       try f catch { case _: ArithmeticException => pcaOverflow(what) }
     def dec38(what: String)(x: BigInteger): BigInteger =
       if (x.abs.compareTo(Dec38) < 0) x
       else pcaOverflow(s"$what (decimal(38,0))")
-    def add(acc: BigInteger, x: BigInteger): BigInteger =
-      if (acc == null) x else acc.add(x)
-    // every row holds pos 0 or, with no cells, one NULL pos: n = count(*)
-    val n = rows.count(r => r.isNullAt(1) || r.getLong(1) == 0L).toLong
-    val cells = rows.filter(!_.isNullAt(1))
-    val k = cells.length
-    val dim = cells.map(_.getLong(1).toInt)
-    val d = if (k == 0) 0 else dim.max + 1
-    val q: Array[java.lang.Long] = cells.map(r =>
-      if (r.isNullAt(2)) null
-      else Long.box(math.floor(r.getDouble(2) * qScale.toDouble).toLong))
-    val sAcc = new Array[BigInteger](d)
-    for (i <- 0 until k if q(i) != null)
-      sAcc(dim(i)) = add(sAcc(dim(i)), BigInteger.valueOf(q(i)))
-    val s: Array[java.lang.Long] = sAcc.map(x =>
-      if (x == null) null else Long.box(exact("sum(q) (bigint)")(
-        x.longValueExact)))
-    val c: Array[BigInteger] = Array.tabulate(k) { i =>
-      val sd = s(dim(i))
-      if (q(i) == null || sd == null) null
-      else BigInteger.valueOf(exact("c = n·q − s (bigint)")(
-        Math.subtractExact(Math.multiplyExact(n, q(i).longValue),
-          sd.longValue)))
+    val rows = m.rows
+    val start = m.start
+    val isNull = m.elemNull
+    val n = rows.toLong
+    val d = (0 until rows).foldLeft(0)((a, r) =>
+      math.max(a, start(r + 1) - start(r)))
+    val q = new Array[Long](m.bits.length)
+    val sSum = new ExactSums(d)
+    for (r <- 0 until rows) {
+      var i = start(r)
+      while (i < start(r + 1)) {
+        if (!isNull(i)) {
+          q(i) = math.floor(m.double(i) * qScale.toDouble).toLong
+          sSum.add(i - start(r), q(i), 1L)
+        }
+        i += 1
+      }
     }
-    // t's GROUP BY vec_id: duplicate ids merge; a NULL id is a group of
-    // its own, in max|t|, that w's equi-join on vec_id drops
-    val groupOf = scala.collection.mutable.HashMap.empty[Any, Int]
-    val g = cells.map { r =>
-      val id = r.get(0)
-      groupOf.getOrElse(id, { val gi = groupOf.size; groupOf(id) = gi; gi })
+    val s: Array[java.lang.Long] = Array.tabulate(d) { j =>
+      if (!sSum.any(j)) null
+      else if (sSum.fitsLong(j)) Long.box(sSum.long(j))
+      else pcaOverflow("sum(q) (bigint)")
     }
-    val nullGroup = groupOf.getOrElse(null, -1)
+    // c = n·q − s, NULL exactly where q is (a non-NULL q makes s(dim)
+    // non-NULL)
+    val c = new Array[Long](q.length)
+    exact("c = n·q − s (bigint)") {
+      for (r <- 0 until rows) {
+        var i = start(r)
+        while (i < start(r + 1)) {
+          if (!isNull(i)) c(i) = Math.subtractExact(
+            Math.multiplyExact(n, q(i)), s(i - start(r)).longValue)
+          i += 1
+        }
+      }
+    }
+    // t's GROUP BY vec_id: duplicate ids merge; the NULL ids are a group
+    // of their own, in max|t|, that w's equi-join on vec_id drops
+    val groupOf = scala.collection.mutable.LongMap.empty[Int]
+    var nGroups = 0
+    var nullGroup = -1
+    val g = Array.tabulate(rows) { r =>
+      if (m.idNull(r)) {
+        if (nullGroup < 0) { nullGroup = nGroups; nGroups += 1 }
+        nullGroup
+      } else groupOf.getOrElseUpdate(m.ids(r), { nGroups += 1; nGroups - 1 })
+    }
     var v = Array.fill(d)(vScale)
     for (_ <- 1 to iters) {
-      val tAcc = new Array[BigInteger](groupOf.size)
-      for (i <- 0 until k if c(i) != null)
-        tAcc(g(i)) = add(tAcc(g(i)),
-          c(i).multiply(BigInteger.valueOf(v(dim(i)))))
-      val t = tAcc.map(x => if (x == null) null else dec38("t = C·v")(x))
+      val tSum = new ExactSums(nGroups)
+      for (r <- 0 until rows) {
+        var i = start(r)
+        while (i < start(r + 1)) {
+          if (!isNull(i)) tSum.add(g(r), c(i), v(i - start(r)))
+          i += 1
+        }
+      }
+      val t = Array.tabulate(nGroups)(gi =>
+        if (!tSum.any(gi)) null else dec38("t = C·v")(tSum.value(gi)))
       val mt = t.iterator.filter(_ != null).map(_.abs)
         .foldLeft(BigInteger.ZERO)(_ max _)
-      val tp: Array[BigInteger] = t.map { x =>
-        if (x == null) null
+      val tpNull = t.map(_ == null)
+      val tp = t.map { x =>
+        if (x == null) 0L
         else {
           dec38("|t|·vScale")(x.abs.multiply(BigInteger.valueOf(vScale)))
-          BigInteger.valueOf(renorm(x, mt, vScale))
+          renorm(x, mt, vScale)
         }
       }
       // a dim has a w row iff some cell survives the join; that row is
       // NULL when every term is
-      val wAcc = new Array[BigInteger](d)
+      val wSum = new ExactSums(d)
       val joined = new Array[Boolean](d)
-      for (i <- 0 until k if g(i) != nullGroup) {
-        joined(dim(i)) = true
-        if (c(i) != null && tp(g(i)) != null)
-          wAcc(dim(i)) = add(wAcc(dim(i)), c(i).multiply(tp(g(i))))
+      for (r <- 0 until rows) {
+        val gr = g(r)
+        var i = if (gr == nullGroup) start(r + 1) else start(r)
+        while (i < start(r + 1)) {
+          joined(i - start(r)) = true
+          if (!isNull(i) && !tpNull(gr)) wSum.add(i - start(r), c(i), tp(gr))
+          i += 1
+        }
       }
       val w = Array.tabulate(d) { j =>
         if (!joined(j)) BigInteger.ZERO
         else {
-          require(wAcc(j) != null, wNull(j))
-          dec38("w = Cᵀ·t")(wAcc(j))
+          require(wSum.any(j), wNull(j))
+          dec38("w = Cᵀ·t")(wSum.value(j))
         }
       }
       val mw = w.foldLeft(BigInteger.ZERO)((a, x) => a.max(x.abs))

@@ -30,51 +30,53 @@ object SessionBridge {
     * `key = value`, returned on `spark` itself. Reads planned on the
     * clone carry the setting into their scans; `spark`'s conf is never
     * written. `mk` should end in a checkpoint, so that nothing under it
-    * is re-planned on `spark`.
+    * is re-planned on `spark`. The clone is reused as in
+    * [[collectWithConf]].
     */
   def withConf(spark: ApiSession, key: String, value: String)(
       mk: ApiSession => DataFrame): DataFrame = {
     val own = spark.asInstanceOf[SparkSession]
     Dataset.ofRows(own,
-      mk(cloneWith(own, key, value)).asInstanceOf[Dataset[_]].logicalPlan)
+      mk(reusedClone(own, key, value)).asInstanceOf[Dataset[_]].logicalPlan)
   }
 
   /** `df.collect()`, planned and run on a clone of `df`'s session whose
     * conf also holds `key = value`; `df`'s session conf is never written.
-    * The clone is reused while the session's conf and the setting stay
-    * the same: a fresh clone plans its first query about 0.1 s slower
-    * than one that has planned before.
+    * There is one clone per (session, key, value), reused while the
+    * session's conf stays the same: a fresh clone plans its first query
+    * about 0.1 s slower than one that has planned before.
     */
   def collectWithConf(df: DataFrame, key: String, value: String): Array[Row] =
     Dataset.ofRows(
       reusedClone(df.sparkSession.asInstanceOf[SparkSession], key, value),
       df.asInstanceOf[Dataset[_]].logicalPlan).collect()
 
-  private type Planner = (Map[String, String], String, String, SparkSession)
-
-  /** The last clone per session. A clone reaches its parent session, so
-    * it is held softly: the session can still be collected once memory
-    * runs short.
+  /** A session's clones by setting, each with the session conf it was
+    * cloned from.
     */
-  private val planners = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, SoftReference[Planner]])
+  private type Planners =
+    Map[(String, String), (Map[String, String], SparkSession)]
+
+  /** The clones per session. A clone reaches its parent session, so
+    * they are held softly: the session can still be collected once
+    * memory runs short.
+    */
+  private val planners =
+    new java.util.WeakHashMap[SparkSession, SoftReference[Planners]]
 
   private def reusedClone(own: SparkSession, key: String,
-      value: String): SparkSession = {
+      value: String): SparkSession = planners.synchronized {
     val confs = own.sessionState.conf.getAllConfs
-    Option(planners.get(own)).flatMap(r => Option(r.get)) match {
-      case Some((`confs`, `key`, `value`, planner)) => planner
+    val memo: Planners = Option(planners.get(own)).flatMap(r => Option(r.get))
+      .getOrElse(Map.empty)
+    memo.get((key, value)) match {
+      case Some((`confs`, planner)) => planner
       case _ =>
-        val planner = cloneWith(own, key, value)
-        planners.put(own, new SoftReference((confs, key, value, planner)))
+        val planner = own.cloneSession()
+        planner.sessionState.conf.setConfString(key, value)
+        planners.put(own,
+          new SoftReference(memo.updated((key, value), (confs, planner))))
         planner
     }
-  }
-
-  private def cloneWith(own: SparkSession, key: String,
-      value: String): SparkSession = {
-    val planner = own.cloneSession()
-    planner.sessionState.conf.setConfString(key, value)
-    planner
   }
 }

@@ -84,10 +84,11 @@ class AvroWireSpec extends SparkSpec {
     val response = s"""{"schema": ${com.fasterxml.jackson.databind.json
       .JsonMapper.builder().build().writeValueAsString(fixtureSchema)}}"""
     var calls = 0
+    // the fake registry knows id 7 and answers every other id with a 404
     val provider = new HttpSchemaProvider("http://registry:8081", url => {
       calls += 1
       if (url.endsWith("/schemas/ids/7")) response
-      else throw new RuntimeException(s"404 $url")
+      else throw new HttpSchemaProvider.NotFound(s"404 $url")
     })
     assert(provider.schemaFor(7).contains(fixtureSchema))
     assert(provider.schemaFor(7).contains(fixtureSchema))
@@ -112,9 +113,11 @@ class AvroWireSpec extends SparkSpec {
     var clock = 1000L
     val response = s"""{"schema": ${com.fasterxml.jackson.databind.json
       .JsonMapper.builder().build().writeValueAsString(fixtureSchema)}}"""
-    val provider = new HttpSchemaProvider("http://registry:8081", _ => {
+    // the fake registry answers 404 (unknown id) until the id registers
+    val provider = new HttpSchemaProvider("http://registry:8081", url => {
       calls += 1
-      if (registered) response else throw new RuntimeException("404")
+      if (registered) response
+      else throw new HttpSchemaProvider.NotFound(s"404 $url")
     }, negativeTtlMs = 30000L, nowMs = () => clock)
     assert(provider.schemaFor(9).isEmpty && calls == 1) // first miss fetches
     clock += 10000L

@@ -8,10 +8,11 @@ import org.apache.spark.sql.functions.{col, posexplode_outer}
 import org.apache.spark.sql.graftbridge.JobCount
 import org.apache.spark.sql.types._
 
-/** Bounded driver fetches ([[DriverModel.collectBounded]]) and the
-  * kernels that finish on the driver behind them: `pcaPower`'s and
-  * `ngramJaccardPairs`'s driver paths against their distributed paths,
-  * bit for bit, and `mmrRerank`'s capped collects.
+/** Bounded driver fetches ([[DriverModel.collectBounded]],
+  * [[DriverModel.fetchArrays]]) and the kernels that finish on the
+  * driver behind them: `pcaPower`'s and `ngramJaccardPairs`'s driver
+  * paths against their distributed paths, bit for bit, and `mmrRerank`'s
+  * capped collects.
   */
 class DriverModelSpec extends SparkSpec {
   import spark.implicits._
@@ -42,6 +43,48 @@ class DriverModelSpec extends SparkSpec {
         assert(rows.map(_.getLong(0)).sorted.toSeq == (0L until 40L)))
     }
     assert(spark.conf.getOption(key) == before)
+  }
+
+  test("fetchArrays: one job, Some iff cells <= cap at cap - 1, cap and cap + 1; a null or empty array is one cell") {
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("xs", ArrayType(LongType))))
+    def xs(v: java.lang.Long*): Seq[java.lang.Long] = v
+    // 4 partitions of 10 cells: 4 elements, a null array, an empty
+    // array, and 4 elements (one NULL) under a NULL id
+    val rows = (0 until 4).flatMap { p =>
+      val b = 10L * p
+      Seq(Row(b, xs(b, b + 1, b + 2, b + 3)), Row(b + 1, null),
+        Row(b + 2, xs()), Row(null, xs(-b, null, b, b)))
+    }
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4),
+      schema)
+    assert(df.rdd.getNumPartitions == 4)
+    for (cap <- Seq(5, 39, 40, 41)) {
+      val (got, jobs) =
+        JobCount(spark.sparkContext)(DriverModel.fetchArrays(df, cap))
+      assert(jobs == 1, s"cap $cap: $jobs jobs")
+      assert(got.isDefined == (cap >= 40), s"cap $cap")
+      got.foreach { m =>
+        assert(m.rows == rows.length)
+        assert(m.idNull.toSeq == rows.map(_.isNullAt(0)))
+        assert(rows.indices.forall(r => rows(r).isNullAt(0) ||
+          m.ids(r) == rows(r).getLong(0)))
+        val elems = rows.map(r =>
+          Option(r.getSeq[java.lang.Long](1)).getOrElse(Seq.empty))
+        assert(rows.indices.map(r => m.start(r + 1) - m.start(r)) ==
+          elems.map(_.length))
+        val flat = elems.flatten
+        assert(m.elemNull.toSeq == flat.map(_ == null))
+        assert(flat.indices.forall(i =>
+          flat(i) == null || m.bits(i) == flat(i).longValue))
+      }
+    }
+    // a DOUBLE element keeps its exact bits
+    val doubles = Seq(0.1, -0.0, Double.NaN, Double.MinPositiveValue)
+    val got = DriverModel.fetchArrays(Seq((7L, doubles)).toDF("id", "xs"), 4)
+    assert(got.exists(m => m.bits.indices.map(m.double).map(
+      java.lang.Double.doubleToRawLongBits) ==
+      doubles.map(java.lang.Double.doubleToRawLongBits)))
   }
 
   /** One `embeddings` row: (vec_id, embedding), either may be null. */
@@ -104,6 +147,27 @@ class DriverModelSpec extends SparkSpec {
         assert(got.schema == ref.schema, s"$ctx: ${got.schema}")
         assert(rowsOf(got) == want, s"$ctx: paths diverge")
       }
+    }
+  }
+
+  test("pcaPower: sums past 2^63 and below 10^38 stay exact on the driver") {
+    val rows = matrix(40, 6, 13L)
+    val (qScale, vScale) = (100000000000L, 1000000000L)
+    // round 1's t = Σ c·vScale per vec_id, from the same quantization
+    val q = rows.map(_._2.map(x =>
+      BigInt(math.floor(x.doubleValue * qScale.toDouble).toLong)))
+    val sums = q.transpose.map(_.sum)
+    val t = q.map(_.zip(sums).map { case (x, s) =>
+      (q.length * x - s) * vScale }.sum.abs)
+    assert(t.max > BigInt(Long.MaxValue) && t.max < BigInt(10).pow(38),
+      t.max)
+    val df = embs(rows)
+    for (iters <- Seq(1, 3, 6)) {
+      val got = SimilarityOps.pcaPower(df, iters, qScale, vScale)
+      assert(onDriver(got))
+      assert(rowsOf(got) == rowsOf(
+        SimilarityOps.pcaDistributed(df, iters, qScale, vScale)),
+        s"iters=$iters")
     }
   }
 
@@ -241,6 +305,37 @@ class DriverModelSpec extends SparkSpec {
     val ref = DedupOps.ngramJaccardDistributed(3, 0.5)(strict)
     assert(onDriver(got) && got.schema == ref.schema, got.schema)
     assert(pairsOf(got) == pairsOf(ref))
+  }
+
+  test("AllPairs ≡ the distributed plan on random hash sets with duplicate hashes inside a document") {
+    val setSchema = StructType(Seq(StructField("doc_id", LongType),
+      StructField("shingles", ArrayType(LongType))))
+    for (seed <- 1L to 3L) {
+      val rnd = new scala.util.Random(seed)
+      // 40 documents over 30 hashes, so they overlap; every third one
+      // repeats some of its hashes, and random draws repeat others
+      val random = (0 until 40).map { d =>
+        val base = Seq.fill(3 + rnd.nextInt(12))(
+          (rnd.nextInt(30) - 15).toLong * 1000003L)
+        val dup = if (d % 3 == 0) base ++ base.take(1 + rnd.nextInt(
+          base.length)) else base
+        (d.toLong, rnd.shuffle(dup).map(Long.box))
+      }
+      // exact copies (J = 1), a NULL element, a NULL array
+      val sets: Seq[(Long, Seq[java.lang.Long])] = random ++ Seq(
+        40L -> rnd.shuffle(random(1)._2), 41L -> Seq(1L, 2L, 3L).map(Long.box),
+        42L -> Seq(3L, 2L, 1L).map(Long.box),
+        43L -> (Seq(1L, 2L).map(Long.box) :+ null), 44L -> null)
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(
+        sets.map { case (d, h) => Row(d, h) }, 3), setSchema)
+      for (t <- Seq(0.0, 0.5, 0.8, 1.0)) {
+        val want = pairsOf(DedupOps.hashJaccardDistributed(t)(df))
+        val got = DedupOps.hashJaccardPairs(t, DriverModel.DefaultCap)(df)
+        assert(want.nonEmpty, s"seed $seed, t=$t: no pairs to compare")
+        assert(onDriver(got), s"seed $seed, t=$t: wrong path")
+        assert(pairsOf(got) == want, s"seed $seed, t=$t: paths diverge")
+      }
+    }
   }
 
   test("ngramJaccardPairs: the registered query takes the driver path and matches the distributed path") {

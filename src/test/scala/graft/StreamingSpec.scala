@@ -297,6 +297,82 @@ class StreamingSpec extends SparkSpec {
     probes.stop()
   }
 
+  test("registry outage fails the batch before its offsets commit; a restart lands every document exactly once (K6)") {
+    import com.sun.net.httpserver.HttpServer
+    import graft.functions.AvroWire
+    import graft.streaming.InjectorApp
+    val valueSchema = """{"type":"record","name":"P","fields":[
+      {"name":"id","type":"string"},{"name":"n","type":"int"}]}"""
+      .replaceAll("\n\\s*", "")
+    val body = s"""{"schema": ${com.fasterxml.jackson.databind.json
+      .JsonMapper.builder().build().writeValueAsString(valueSchema)}}"""
+      .getBytes("UTF-8")
+    // a registry that is down for its first `outage` requests: 503, the
+    // status a real one gives while it cannot serve
+    val outage = 2
+    val requests = new java.util.concurrent.atomic.AtomicInteger(0)
+    val server = HttpServer.create(new java.net.InetSocketAddress(0), 0)
+    server.createContext("/schemas/ids/4", ex => {
+      if (requests.incrementAndGet() <= outage)
+        ex.sendResponseHeaders(503, -1L)
+      else {
+        ex.sendResponseHeaders(200, body.length.toLong)
+        ex.getResponseBody.write(body)
+      }
+      ex.close()
+    })
+    server.start()
+    val es = new EsStubServer
+    val esPort = es.start()
+    val cp = Files.createTempDirectory("graft-registry-outage").toString +
+      "/cp"
+    val env = InjectorApp.fromEnv(Map(
+      "KAFKA_TOPICS" -> "my-topic",
+      "KAFKA_CONSUMER_RECORD_TYPE" -> "avro",
+      "SCHEMA_REGISTRY_URL" ->
+        s"http://127.0.0.1:${server.getAddress.getPort}",
+      "PROBES_PORT" -> "0",
+      "CHECKPOINT_LOCATION" -> cp))
+    val cfg = env.copy(sink = env.sink.copy(url = s"http://localhost:$esPort"))
+    val ts = Timestamp.valueOf("2024-03-05 10:11:12.345")
+    val msgs = (1 to 6).map(i => Msg(null, AvroWire.encodeConfluent(4,
+      valueSchema, Map("id" -> s"r$i", "n" -> i)), "my-topic", i % 2,
+      i.toLong, ts, 0))
+    implicit val sqlCtx = spark.sqlContext
+    val stream = MemoryStream[Msg]
+    stream.addData(msgs)
+    /** One start from the checkpoint: None when it drains, else why not. */
+    def run(): Option[Throwable] = {
+      val (q, probes) = InjectorApp.start(spark, cfg, jsonSchema = schema,
+        avroReaderSchema = valueSchema, source = Some(stream.toDF()))
+      try { q.processAllAvailable(); None }
+      catch { case e: org.apache.spark.sql.streaming.StreamingQueryException =>
+        Some(e) }
+      finally { q.stop(); probes.stop() }
+    }
+    try {
+      val first = run()
+      assert(first.exists(e => Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).exists(t =>
+          String.valueOf(t.getMessage).contains("answered 503"))),
+        s"the outage did not fail the stream: $first")
+      assert(!new java.io.File(s"$cp/commits/0").exists)
+      // each failed start used up at least one of the outage's answers
+      var last = first
+      var starts = 1
+      while (last.isDefined && starts <= outage) { last = run(); starts += 1 }
+      assert(last.isEmpty, s"no start drained after the outage: $last")
+      assert(new java.io.File(s"$cp/commits/0").exists)
+      val docs = es.documents.map { case (index, id, src) =>
+        (index, id, json.readTree(src).get("n").asInt) }
+      assert(docs.sortBy(_._3) == msgs.map(m => ("my-topic-2024-03-05",
+        s"${m.partition}:${m.offset}", m.offset.toInt)))
+    } finally {
+      server.stop(0)
+      es.stop()
+    }
+  }
+
   test("end-to-end: InjectorApp json record type with json keys") {
     import graft.streaming.InjectorApp
     import org.apache.spark.sql.types.{LongType, StructField => SF}

@@ -54,6 +54,32 @@ class TablesSpec extends SparkSpec {
     assert(caller.conf.getOption(nanosKey) == before)
   }
 
+  test("events: one session clone per (session, setting), kept while another setting is in use") {
+    import org.apache.spark.sql.graftbridge.SessionBridge
+    val caller = spark.newSession()
+    val before = caller.conf.getAll
+    def planner(key: String, value: String) = {
+      var seen: org.apache.spark.sql.SparkSession = null
+      SessionBridge.withConf(caller, key, value) { s =>
+        seen = s; s.range(1).toDF() }
+      seen
+    }
+    val limitKey = "spark.sql.limit.initialNumPartitions"
+    val events = planner(nanosKey, "true")
+    val limit = planner(limitKey, "7")
+    assert(events ne limit)
+    assert(planner(nanosKey, "true") eq events)
+    assert(planner(limitKey, "7") eq limit)
+    assert(events.conf.get(nanosKey) == "true" &&
+      limit.conf.get(limitKey) == "7")
+    assert(caller.conf.getAll == before)
+    // a changed caller conf takes a fresh clone that carries it
+    caller.conf.set("spark.sql.shuffle.partitions", "3")
+    val fresh = planner(nanosKey, "true")
+    assert((fresh ne events) &&
+      fresh.conf.get("spark.sql.shuffle.partitions") == "3")
+  }
+
   private def firstMillis(e: org.apache.spark.sql.DataFrame): Long =
     e.select(unix_millis(col("ts"))).limit(1).collect().head.getLong(0)
 
