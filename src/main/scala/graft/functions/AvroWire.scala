@@ -11,7 +11,7 @@ import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWri
 import org.apache.avro.io.{DecoderFactory, EncoderFactory}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.functions._
@@ -47,11 +47,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * `[int,long]`/`[float,double]` promote, anything else becomes a struct
   * of `member0..memberN` with exactly one branch set per value.
   *
-  * Scale: CodegenFallback is deliberate — the cost is Avro IO itself, not
-  * expression dispatch; the expression is still evaluated per-partition on
-  * executors with zero shuffle, and the surrounding projections stay in
-  * whole-stage codegen. The Avro->Catalyst converter tree is compiled once
-  * per schema (not re-dispatched per value).
+  * Scale: the decode is evaluated per partition on executors with zero
+  * shuffle. Its generated code calls the expression's own decode through
+  * a reference object, so the projection that decodes stays inside
+  * whole-stage codegen (one `CodegenFallback` expression would take the
+  * whole `Project` out of the generated stage). The Avro->Catalyst
+  * converter tree is compiled once per schema (not re-dispatched per
+  * value).
   */
 object AvroWire {
 
@@ -208,7 +210,7 @@ object AvroWire {
       child: Expression,
       readerSchemaJson: String,
       provider: SchemaProvider)
-      extends UnaryExpression with CodegenFallback {
+      extends UnaryExpression {
 
     override def dataType: DataType =
       catalystType(new Schema.Parser().parse(readerSchemaJson))
@@ -243,6 +245,16 @@ object AvroWire {
             rootConverter(reader.read(null, dec))
           } catch { case _: Exception => null } // malformed body -> drop
       }
+    }
+
+    // each task deserializes its own copy of the referenced expression,
+    // so the reader cache above stays per task
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val decode = ctx.addReferenceObj("avroDecode", this)
+      val boxed = CodeGenerator.boxedType(dataType)
+      nullSafeCodeGen(ctx, ev, bytes =>
+        s"""${ev.value} = ($boxed) $decode.nullSafeEval($bytes);
+           |${ev.isNull} = ${ev.value} == null;""".stripMargin)
     }
 
     override protected def withNewChildInternal(c: Expression) = copy(child = c)

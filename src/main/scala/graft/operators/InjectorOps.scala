@@ -3,6 +3,7 @@ package graft.operators
 import graft.functions.{MapSchemaProvider, SchemaProvider}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{ColumnBridge, CompiledJsonToStructs}
 import org.apache.spark.sql.types._
 
 /** Faithful re-expression of the reference injector's record-level dataflow
@@ -33,8 +34,10 @@ import org.apache.spark.sql.types._
   *
   * The same functions compose into batch plans (parquet, for the DuckDB
   * oracle) and Structured Streaming plans — none of them uses anything
-  * batch-only. All are built-in Catalyst expressions (whole-stage codegen,
-  * pushdown-friendly); nothing here needs a custom rule.
+  * batch-only. All compile into whole-stage codegen: built-in Catalyst
+  * expressions, plus [[CompiledJsonToStructs]] for the JSON decode, whose
+  * stock `from_json` would fall back to interpretation; nothing here needs
+  * a custom rule.
   */
 object InjectorOps {
 
@@ -72,20 +75,28 @@ object InjectorOps {
     * syntactically broken JSON is dropped).
     */
   def jsonDecode(schema: StructType, valueCol: String = "value")(df: DataFrame): DataFrame = {
-    val withCorrupt = StructType(
-      schema.fields :+ StructField("_corrupt_record", StringType))
     // PlanBarrier.opaque: without it the corrupt filter's alias gets
     // inlined below the projection and the from_json parse runs TWICE per
     // row (Filter + Project) — the dominant cost of the decode stage
     df.withColumn("payload",
         graft.functions.PlanBarrier.opaque(
-          from_json(col(valueCol).cast("string"), withCorrupt,
-            Map("mode" -> "PERMISSIVE",
-              "columnNameOfCorruptRecord" -> "_corrupt_record"))))
+          permissiveJson(col(valueCol), schema)))
       .filter(col("payload").isNotNull &&
         col("payload._corrupt_record").isNull)
       .withColumn("payload", col("payload").dropFields("_corrupt_record"))
   }
+
+  /** PERMISSIVE `from_json` of `bytes` (cast to string) into `schema` plus
+    * a `_corrupt_record` field, which is set for broken JSON. Compiled:
+    * unlike the stock expression, it keeps the decoding projection inside
+    * whole-stage codegen, so the whole pipeline is one generated stage.
+    */
+  private def permissiveJson(bytes: Column, schema: StructType): Column =
+    ColumnBridge.column(CompiledJsonToStructs(
+      StructType(schema.fields :+ StructField("_corrupt_record", StringType)),
+      Map("mode" -> "PERMISSIVE",
+        "columnNameOfCorruptRecord" -> "_corrupt_record"),
+      ColumnBridge.expression(bytes.cast("string"))))
 
   // ------------------------------------------------------------ transforms
 
@@ -130,11 +141,7 @@ object InjectorOps {
     * [[includeDecodedKey]] turns into a record drop).
     */
   def jsonKeyDecoder(schema: StructType): Column => Column = { key =>
-    val withCorrupt = StructType(
-      schema.fields :+ StructField("_corrupt_record", StringType))
-    val parsed = from_json(key.cast("string"), withCorrupt,
-      Map("mode" -> "PERMISSIVE",
-        "columnNameOfCorruptRecord" -> "_corrupt_record"))
+    val parsed = permissiveJson(key, schema)
     when(parsed.isNotNull && parsed.getField("_corrupt_record").isNull,
       parsed.dropFields("_corrupt_record"))
   }

@@ -1,10 +1,17 @@
 package graft.streaming
 
 import java.net.HttpURLConnection
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.LongAdder
 
+import com.fasterxml.jackson.core.io.JsonStringEncoder
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast}
+import org.apache.spark.sql.catalyst.expressions.json.StructsToJsonEvaluator
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The injector's Elasticsearch sink: bulk `create` over the wire
   * protocol — the reference's sink shape
@@ -23,14 +30,20 @@ import org.apache.spark.sql.functions._
   *    times, then fail the stream (the reference loops forever and can
   *    wedge a worker — SURVEY.md §7.5.5 documents the divergence).
   *
-  * Scale shape: each partition serializes its rows into
-  * [[EsHttpSink.MaxDocsPerBulk]]-sized NDJSON bodies and POSTs them over
-  * one JDK connection per request — no driver funnel, no shared client
-  * state; the counters (M5) flow back through the JOB RESULT (one stats
-  * tuple per partition), not through executor-side shared adders, so
-  * they are correct on a real cluster, not just in local mode. Uses only
-  * the JDK HTTP client and Spark's bundled Jackson — zero extra
-  * dependencies, same discipline as [[Probes]].
+  * Scale shape: a batch is written from its planned rows
+  * (`queryExecution.toRdd`), with no second plan per batch: each task
+  * serializes every row to its `_bulk` lines at once (the payload
+  * through the evaluator `to_json` runs, the action line through
+  * Jackson's string encoder) and POSTs one request per chunk of at most
+  * [[EsHttpSink.MaxDocsPerBulk]] docs over one JDK connection — no driver
+  * funnel, no shared client state. A batch with more partitions than
+  * the cluster's default parallelism is coalesced to it first (no
+  * shuffle), so it runs in one wave of tasks. The counters (M5) flow back
+  * through the JOB RESULT (one stats tuple per task), not through
+  * executor-side shared adders, so they are correct on a real cluster,
+  * not just in local mode. Uses only the JDK HTTP client and Spark's
+  * bundled Jackson — zero extra dependencies, same discipline as
+  * [[Probes]].
   *
   * The same connection settings (timeout, basic auth, self-signed-cert
   * trust) serve the bulk path, the readiness [[ping]] and the
@@ -51,43 +64,34 @@ class EsHttpSink(conf: EsHttpSink.Config) extends Serializable {
     * Throws (failing the stream) when a chunk exhausts its retries.
     */
   def write(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    import spark.implicits._
     val c = conf
-    val stats = batch
-      .select(col("es_index").cast("string"),
-        col("doc_id").cast("string"), to_json(col("payload")))
-      .as[(String, String, String)]
-      .rdd.mapPartitions { it =>
-        // the action line is SERIALIZED, never interpolated: R4/R3 let a
-        // user payload column supply the doc id / index (reference
-        // codec.go:77-90 accepts any string), so a value containing
-        // `"`, `\` or a newline must be JSON-escaped or the NDJSON body
-        // frame-shifts (the reference's elastic client escapes for it)
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val lines = EsHttpSink.BulkLines(batch.schema,
+      batch.sparkSession.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key))
+    val rows = batch.queryExecution.toRdd
+    val wave = batch.sparkSession.sparkContext.defaultParallelism
+    val stats = (if (rows.getNumPartitions > wave) rows.coalesce(wave)
+                 else rows).mapPartitions { it =>
+        val line = lines.serializer()
         var ins = 0L; var dup = 0L; var bad = 0L; var ret = 0L
-        it.grouped(EsHttpSink.MaxDocsPerBulk).foreach { rows =>
-          var pending = rows.toSeq
+        // each row becomes its doc's bytes at once: the planned rows are
+        // reused by the iterator, and a retry resends exactly these bytes
+        it.map(line).grouped(EsHttpSink.MaxDocsPerBulk).foreach { docs =>
+          var pending = docs
           var attempt = 0
           while (pending.nonEmpty) {
-            val body = pending.map { case (idx, id, doc) =>
-              val action = mapper.createObjectNode()
-              action.putObject("create").put("_index", idx).put("_id", id)
-              mapper.writeValueAsString(action) + "\n" + doc + "\n"
-            }.mkString
-            EsHttpSink.post(c, body) match {
+            EsHttpSink.post(c, EsHttpSink.concat(pending)) match {
               // pair item statuses back to rows positionally (the
               // _bulk contract: items are in request order) — but ONLY
               // when the server answered one item per doc sent; a
               // truncated/padded item list would silently mis-route
               // rows, so it retries as a whole-request failure instead
               case Right(items) if items.size == pending.size =>
-                val again = Seq.newBuilder[(String, String, String)]
-                items.zip(pending).foreach { case (st, row) =>
+                val again = Seq.newBuilder[Array[Byte]]
+                items.zip(pending).foreach { case (st, doc) =>
                   if (st == 200 || st == 201) ins += 1
                   else if (st == 409) dup += 1
                   else if (st == 400) bad += 1
-                  else again += row // 429/5xx item: retryable
+                  else again += doc // 429/5xx item: retryable
                 }
                 pending = again.result()
               case Right(_) => () // item-count mismatch: retry all
@@ -153,6 +157,77 @@ object EsHttpSink {
 
   /** Transient-failure retries per bulk chunk before the stream fails. */
   val MaxRetries = 3
+
+  /** How a task turns the rows of an assembled frame with `schema` into
+    * `_bulk` lines: one `create` action line, then the payload as
+    * `to_json` writes it in the session time zone `timeZone`. A missing
+    * column fails here, before any task starts.
+    */
+  private[streaming] final case class BulkLines(schema: StructType,
+      timeZone: String) {
+    private val index = schema.fieldIndex("es_index")
+    private val id = schema.fieldIndex("doc_id")
+    private val payload = schema.fieldIndex("payload")
+
+    /** Column `i` read as a string, as `cast("string")` reads it. */
+    private def text(i: Int): InternalRow => UTF8String =
+      schema(i).dataType match {
+        case _: StringType => _.getUTF8String(i)
+        case t =>
+          val cast = Cast(BoundReference(i, t, nullable = true), StringType,
+            Some(timeZone))
+          row => cast.eval(row).asInstanceOf[UTF8String]
+      }
+
+    /** One task's serializer: a doc's action and source lines as bytes.
+      * The action line is SERIALIZED, never interpolated: R4/R3 let a user
+      * payload column supply the doc id / index (reference codec.go:77-90
+      * accepts any string), so a value containing `"`, `\` or a newline
+      * is JSON-escaped as Jackson escapes it, or the NDJSON body would
+      * frame-shift; a null one is written as `null`.
+      */
+    def serializer(): InternalRow => Array[Byte] = {
+      val indexOf = text(index)
+      val idOf = text(id)
+      val payloadType = schema(payload).dataType
+      val json = StructsToJsonEvaluator(Map.empty, payloadType, Some(timeZone))
+      val quote = JsonStringEncoder.getInstance()
+      val out = new java.io.ByteArrayOutputStream(256)
+      def string(u: UTF8String): Unit =
+        if (u == null) out.write(Null)
+        else {
+          out.write('"'); out.write(quote.quoteAsUTF8(u.toString)); out.write('"')
+        }
+      row => {
+        out.reset()
+        out.write(CreateIndex); string(indexOf(row))
+        out.write(Id); string(idOf(row)); out.write(EndAction)
+        out.write(if (row.isNullAt(payload)) Null
+          else json.evaluate(row.get(payload, payloadType))
+            .asInstanceOf[UTF8String].getBytes)
+        out.write('\n')
+        out.toByteArray
+      }
+    }
+  }
+
+  private val CreateIndex = "{\"create\":{\"_index\":".getBytes(UTF_8)
+  private val Id = ",\"_id\":".getBytes(UTF_8)
+  private val EndAction = "}}\n".getBytes(UTF_8)
+  private val Null = "null".getBytes(UTF_8)
+
+  /** The `_bulk` body of these docs' lines, in order. */
+  private def concat(docs: Seq[Array[Byte]]): Array[Byte] = {
+    val body = new Array[Byte](docs.iterator.map(_.length).sum)
+    var at = 0
+    docs.foreach { d =>
+      System.arraycopy(d, 0, body, at, d.length); at += d.length
+    }
+    body
+  }
+
+  /** Reads `_bulk` responses; a configured mapper is thread-safe. */
+  private lazy val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   /** Where and how to reach the cluster (env names per
     * [[InjectorApp.fromEnv]]).
@@ -228,13 +303,13 @@ object EsHttpSink {
     * routes into the sink's bounded-retry path as a counted retry
     * rather than escaping as an uncounted task failure.
     */
-  private def post(c: Config, body: String): Either[Int, Seq[Int]] =
+  private def post(c: Config, body: Array[Byte]): Either[Int, Seq[Int]] =
     try {
       val conn = c.open("POST", "/_bulk")
       conn.setDoOutput(true)
       conn.setRequestProperty("Content-Type", "application/x-ndjson")
       val os = conn.getOutputStream
-      try os.write(body.getBytes("UTF-8")) finally os.close()
+      try os.write(body) finally os.close()
       val status = conn.getResponseCode
       if (status / 100 != 2) { conn.disconnect(); Left(status) }
       else {
@@ -242,7 +317,6 @@ object EsHttpSink {
         val resp = try new String(
           org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
         finally { in.close(); conn.disconnect() }
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
         val root = mapper.readTree(resp)
         val items = root.get("items")
         if (items == null || !items.isArray) Left(-2)

@@ -6,6 +6,7 @@ import java.sql.Timestamp
 import graft.operators.InjectorOps
 import graft.operators.InjectorOps.InjectorConfig
 import graft.streaming.{EsHttpSink, InjectorApp}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -436,5 +437,109 @@ class EsHttpSinkSpec extends SparkSpec {
         "ELASTICSEARCH_PASSWORD" -> "p")) == Set(Some(basic)))
       assert(exercise(Map.empty) == Set(None))
     } finally es.stop()
+  }
+
+  // ------------------------------------------- bodies from planned rows
+
+  /** The `_bulk` lines of each row as the sink built them from a second
+    * plan: string casts and `to_json`, then one `ObjectMapper` action
+    * node per row. The reference form of [[EsHttpSink.write]]'s bytes.
+    */
+  private def plannedTwiceLines(batch: DataFrame): Seq[Array[Byte]] = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    batch.select(col("es_index").cast("string"), col("doc_id").cast("string"),
+        to_json(col("payload")))
+      .as[(String, String, String)].collect().toSeq.map { case (idx, id, doc) =>
+        val action = mapper.createObjectNode()
+        action.putObject("create").put("_index", idx).put("_id", id)
+        (mapper.writeValueAsString(action) + "\n" + doc + "\n")
+          .getBytes("UTF-8")
+      }
+  }
+
+  /** The one body `write` sends for a one-partition `batch` equals, byte
+    * for byte, the body of the reference form.
+    */
+  private def assertSameBytes(batch: DataFrame): Unit = {
+    val es = new EsStubServer
+    val port = es.start()
+    try {
+      new EsHttpSink(s"http://localhost:$port").write(batch, 0L)
+      assert(es.bulkBodies.size == 1)
+      val sent = es.bulkBodies.peek()
+      val reference = plannedTwiceLines(batch).flatten.toArray
+      assert(sent.sameElements(reference), s"\nsent:\n" +
+        new String(sent, "UTF-8") + "\nreference:\n" +
+        new String(reference, "UTF-8"))
+    } finally es.stop()
+  }
+
+  test("bulk bodies from the planned rows are byte-equal to the to_json + ObjectMapper form: hostile and null ids, rich payloads") {
+    val ids = Seq[(String, String)](
+      ("plain", "a\"quote"), ("back\\slash", "back\\slash"),
+      ("new\nline", "tab\tand\"\\\nall"),
+      ("ünïcødé-索引", "emoji \uD83D\uDE00 ctl \u0001\u001f\u007f \u2028 / end"),
+      (null, null), ("x", null), (null, "y"))
+    val batch = ids.zipWithIndex.map { case ((i, d), k) => (i, d, k) }
+      .toDF("es_index", "doc_id", "k")
+      .select(col("es_index"), col("doc_id"), struct(
+        col("k").as("n"),
+        struct(col("k").as("x"), lit("é \"q\" \\ \n").as("s")).as("nested"),
+        array(col("k"), col("k") + 1).as("arr"),
+        map(lit("a\"b"), col("k"), lit("c"), lit(null).cast("int")).as("m"),
+        (col("k").cast("decimal(12,4)") / 7).cast("decimal(12,4)").as("dec"),
+        date_add(lit("2024-03-05").cast("date"), col("k")).as("day"),
+        timestamp_micros(lit(1709633472345678L) + col("k") * 3601000001L)
+          .as("ts"),
+        lit(null).cast("string").as("absent"),
+        lit(1709633472345L).as("@timestamp")).as("payload"))
+      .coalesce(1)
+    assertSameBytes(batch)
+  }
+
+  test("bulk bodies: integer es_index/doc_id columns are cast as the plan casts them") {
+    val batch = spark.range(0, 6).select(
+        when(col("id") === 4, lit(null)).otherwise((col("id") % 3).cast("int"))
+          .as("es_index"),
+        when(col("id") === 5, lit(null)).otherwise(col("id") * 1000000007L)
+          .as("doc_id"),
+        struct(col("id").as("n")).as("payload"))
+      .coalesce(1)
+    assert(batch.schema("es_index").dataType == IntegerType &&
+      batch.schema("doc_id").dataType == LongType)
+    assertSameBytes(batch)
+  }
+
+  test("a 429 item is retried alone, with the byte-identical lines it was first sent with") {
+    val es = new EsStubServer
+    val port = es.start()
+    try {
+      val sink = new EsHttpSink(s"http://localhost:$port")
+      es.throttleIds.add("0:2"); es.throttleIds.add("0:4")
+      sink.write(assembled((1 to 5).map(o =>
+        (0, o.toLong, s"""{"id":"é$o","n":$o}"""))).coalesce(1), 0L)
+      assert(sink.inserted.sum() == 5 && sink.retries.sum() == 1)
+      val sent = es.bulkBodies.asScala.toSeq
+      assert(sent.size == 2)
+      // one doc = its action line and its source line
+      val docs = new String(sent.head, "UTF-8").split("\n").grouped(2)
+        .map(_.mkString("", "\n", "\n")).toSeq
+      assert(docs.size == 5)
+      assert(sent(1).sameElements((docs(1) + docs(3)).getBytes("UTF-8")),
+        new String(sent(1), "UTF-8"))
+    } finally es.stop()
+  }
+
+  test("one wave: an 8-partition batch runs as many write tasks as the default parallelism (4 here)") {
+    val r = SinkWave.run(spark)
+    assert(spark.sparkContext.defaultParallelism == 4)
+    assert(r == SinkWave.Result(8, 4, SinkWave.Docs))
+  }
+
+  test("one wave: an 8-partition batch at local[2] runs exactly 2 write tasks (separate JVM)") {
+    SinkWave.fork("local[2]") match {
+      case Right(r) => assert(r == SinkWave.Result(8, 2, SinkWave.Docs))
+      case Left(err) => fail(err)
+    }
   }
 }

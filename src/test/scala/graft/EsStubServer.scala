@@ -33,6 +33,12 @@ final class EsStubServer {
     * as an uncaught task failure.
     */
   val garbageBulks = new AtomicInteger(0)
+  /** Docs whose id is in this set answer 429 once (not stored), then
+    * leave the set: the per-item throttle the sink retries positionally.
+    */
+  val throttleIds = ConcurrentHashMap.newKeySet[String]()
+  /** Every `_bulk` request body, byte for byte, in arrival order. */
+  val bulkBodies = new java.util.concurrent.ConcurrentLinkedQueue[Array[Byte]]()
   /** When true, `GET /` (the readiness ping endpoint) answers 503. */
   val healthDown = new java.util.concurrent.atomic.AtomicBoolean(false)
   /** Every request as (method, path, `Authorization` header), in arrival
@@ -103,16 +109,16 @@ final class EsStubServer {
           respond(ex, 503, """{"error":"injected outage"}""")
         else respond(ex, 200, """{"name":"es-stub","version":{}}""")
       case ("POST", "/_bulk") =>
+        val raw = org.apache.commons.io.IOUtils.toByteArray(ex.getRequestBody)
+        bulkBodies.add(raw)
         if (failBulks.getAndUpdate(n => math.max(0, n - 1)) > 0)
           respond(ex, 503, """{"error":"injected unavailability"}""")
         else if (garbageBulks.getAndUpdate(n => math.max(0, n - 1)) > 0) {
-          // consume the request (docs intentionally NOT stored) and
-          // answer a 2xx that is not a bulk response at all
-          org.apache.commons.io.IOUtils.toByteArray(ex.getRequestBody)
+          // docs intentionally NOT stored: answer a 2xx that is not a
+          // bulk response at all
           respond(ex, 200, """{"ok":true}""")
         } else {
-          val body = new String(org.apache.commons.io.IOUtils
-            .toByteArray(ex.getRequestBody), "UTF-8")
+          val body = new String(raw, "UTF-8")
           val lines = body.split("\n").filter(_.nonEmpty)
           val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
           val items = Seq.newBuilder[String]
@@ -133,6 +139,7 @@ final class EsStubServer {
                 // mapping-reject simulation: a boolean `reject` field
                 // stands in for the 400 a real mapper conflict returns
                 if (d.has("reject") && d.get("reject").asBoolean(false)) 400
+                else if (throttleIds.remove(id)) 429
                 else if (docs.putIfAbsent(s"$index/$id", doc) != null) 409
                 else 201
               } catch { case _: Exception => 400 }

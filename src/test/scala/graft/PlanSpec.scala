@@ -1,10 +1,12 @@
 package graft
 
+import graft.functions.{AvroWire, MapSchemaProvider}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{ExpandExec, SparkPlan}
+import org.apache.spark.sql.execution.{ExpandExec, FilterExec, InputAdapter,
+  ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
@@ -163,6 +165,60 @@ class PlanSpec extends SparkSpec {
     for (q <- Seq("d3_avro_decode", "d3_avro_rich")) {
       val n = count(planString(q), "from_confluent_avro")
       assert(n == 1, s"$q: value decode evaluated $n times in the plan")
+    }
+  }
+
+  /** The operators of `p` that run outside any generated stage. */
+  private def interpreted(p: SparkPlan): Seq[SparkPlan] = p match {
+    case w: WholeStageCodegenExec => inStage(w.child)
+    case other => other +: other.children.flatMap(interpreted)
+  }
+  private def inStage(p: SparkPlan): Seq[SparkPlan] = p match {
+    case i: InputAdapter => interpreted(i.child)
+    case other => other.children.flatMap(inStage)
+  }
+
+  test("injector pipeline plans as one generated stage: JSON, JSON + JSON key, Avro decode") {
+    import spark.implicits._
+    import graft.operators.InjectorOps
+    import org.apache.spark.sql.types._
+    val avroSchema = """{"type":"record","name":"E","fields":[""" +
+      """{"name":"id","type":"string"},{"name":"n","type":"int"}]}"""
+    val ts = java.sql.Timestamp.valueOf("2024-03-05 10:11:12.345")
+    // Kafka-shaped rows read back from parquet: over a local relation the
+    // optimizer would evaluate the decode itself, and no stage would be left
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-injector")
+    (0 until 8).map { i =>
+      Msg(s"""{"uid":$i}""".getBytes("UTF-8"),
+        s"""{"id":"r$i","n":$i}""".getBytes("UTF-8"), "my-topic", i % 2,
+        i.toLong, ts, 0)
+    }.toDF().write.parquet(s"$dir/json")
+    (0 until 8).map { i =>
+      Msg(null, AvroWire.encodeConfluent(7, avroSchema,
+        Map("id" -> s"r$i", "n" -> i)), "my-topic", i % 2, i.toLong, ts, 0)
+    }.toDF().write.parquet(s"$dir/avro")
+    val schema = StructType(Seq(StructField("id", StringType),
+      StructField("n", IntegerType)))
+    val cfg = InjectorOps.InjectorConfig()
+    val json = spark.read.parquet(s"$dir/json")
+    val cases = Seq(
+      "json" -> InjectorOps.pipeline(cfg, schema)(json),
+      "json + json key" -> InjectorOps.pipeline(cfg, schema,
+        keyDecoder = Some(InjectorOps.jsonKeyDecoder(
+          StructType(Seq(StructField("uid", LongType))))))(json),
+      "avro" -> InjectorOps.pipeline(cfg, schema,
+        decoder = Some(InjectorOps.decoderFor("avro", schema, avroSchema,
+          MapSchemaProvider(Map(7 -> avroSchema)))))(
+        spark.read.parquet(s"$dir/avro")))
+    for ((name, df) <- cases) {
+      val p = planOf(df)
+      val stages = p.collect { case w: WholeStageCodegenExec => w }
+      assert(stages.size == 1, s"$name: ${stages.size} generated stages\n$p")
+      val bare = interpreted(p).collect {
+        case x @ (_: ProjectExec | _: FilterExec) => x.nodeName
+      }
+      assert(bare.isEmpty, s"$name: $bare outside the generated stage\n$p")
+      assert(df.count() == 8L, name)
     }
   }
 
