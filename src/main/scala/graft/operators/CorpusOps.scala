@@ -683,56 +683,26 @@ object CorpusOps {
   /** Persist the BM25 inverted index — what the reference ships rows to
     * Elasticsearch to build, as a parquet posting table. ONLY the
     * postings are stored: df/dl/avgdl derive from them at search time
-    * (one aggregate over the index scan — never over raw text), which
-    * makes [[appendToBm25Index]] correct BY CONSTRUCTION: appending a
-    * batch's postings yields exactly the rebuilt index's rows, so
-    * append ≡ rebuild bit-exactly with no stats-reconciliation step.
-    * (A production variant would checkpoint the df/stats aggregate
-    * between searches; that is a cache, not part of the contract.)
+    * (one aggregate over the index scan — never over raw text), so the
+    * stats can never drift from the postings they describe. (A
+    * production variant would checkpoint the df/stats aggregate between
+    * searches; that is a cache, not part of the contract.)
     *
     * The store lives under a [[graft.sources.IndexManifest]] manifest:
-    * builds and compactions publish a new base, appends and deletes a
-    * delta, each behind one atomic pointer swap — a crash mid-write can
-    * never leave the index absent or half-written, and a failed append
-    * can be retried without duplicating postings.
-    * Deletes tombstone doc ids; df/dl/avgdl derive from the surviving
-    * posting rows at search time, so the stats stay consistent with the
-    * post-delete corpus with no reconciliation step.
+    * every build, and every rebuild over an updated corpus, publishes a
+    * complete version behind one atomic pointer swap — a crash mid-write
+    * can never leave the index absent or half-written.
     */
   def buildBm25Index(docs: DataFrame, dir: String): Unit =
     IndexManifest.publish(docs.sparkSession, dir)(vdir =>
       bm25Postings(docs).write.parquet(s"$vdir/tf"))
 
-  /** PRECONDITION: the batch must contain only doc_ids NOT already in
-    * the index — re-appending an id stores a second posting row per
-    * term, double-counting its df/tf (exactly as a rebuild over the
-    * duplicated input would) and breaking [[boolSearch]]'s
-    * one-row-per-(doc, term) invariant. At-least-once re-delivery must
-    * be deduped upstream — which is operator K2 / the
-    * [[DedupOps.incrementalNearDupPairs]] store, the same discipline
-    * the reference's ES `create` sink enforces.
-    */
-  def appendToBm25Index(newDocs: DataFrame, dir: String): Unit =
-    IndexManifest.append(newDocs, dir)(vdir =>
-      bm25Postings(newDocs).write.parquet(s"$vdir/tf"))
-
-  /** Small-files maintenance after appends: fold the chain into one
-    * base with the posting table clustered on (term, doc_id) — the df
-    * aggregate and query-term probes then read term-clustered row
-    * groups. Tombstoned postings are purged (ES's segment-merge
-    * reclaim); searches are unchanged.
-    */
-  def compactBm25Index(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    IndexManifest.compact(spark, dir, "doc_id",
-      Map("tf" -> Seq("term", "doc_id")))
-
-  /** Posting scan of the live chain, deleted ids anti-joined — the one
-    * read path every persisted-index search shares.
+  /** Posting scan of the current version — the one read path every
+    * persisted-index search shares.
     */
   private def storedTf(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
-    IndexManifest.snapshot(spark, dir).read("tf", "doc_id")
+    IndexManifest.snapshot(spark, dir).read("tf")
 
   /** Search the persisted index: identical scoring tail over the stored
     * postings — raw document text is never touched.
@@ -745,8 +715,8 @@ object CorpusOps {
   /** The whole search DSL over ONE stored posting index: fuzzy, prefix,
     * more-like-this, and bool searches share the BM25 index's posting
     * rows (each op's scoring tail derives everything it needs from
-    * them), so a deployment builds/appends/compacts one index and
-    * serves every query type from it — raw text is never reopened.
+    * them), so a deployment builds one index and serves every query
+    * type from it — raw text is never reopened.
     * Each is bit-identical to its from-raw-docs sibling by
     * construction (shared tail; property-tested).
     */
@@ -839,7 +809,7 @@ object CorpusOps {
     * at 100 TB a standing search workload wants this table: a phrase
     * query then reads ONLY the postings of its own terms (an `isin`
     * filter pushed into the parquet scan, term-clustered row groups
-    * after [[compactPositionalIndex]]'s sort), never the corpus.
+    * from [[buildPositionalIndex]]'s sort), never the corpus.
     */
   def positionalPostings(docs: DataFrame): DataFrame =
     docs.filter(col("text").isNotNull)
@@ -851,9 +821,7 @@ object CorpusOps {
   /** Persist the positional index under an [[graft.sources.IndexManifest]]
     * manifest (same crash-safe lifecycle as [[buildBm25Index]]),
     * clustered on (term, doc_id) so query-term probes touch only their
-    * own row groups. Append ≡ rebuild holds for the same reason as BM25:
-    * the rows are pure per-(doc, term) facts with no cross-doc stats to
-    * reconcile.
+    * own row groups.
     */
   def buildPositionalIndex(docs: DataFrame, dir: String): Unit =
     IndexManifest.publish(docs.sparkSession, dir)(vdir =>
@@ -861,22 +829,6 @@ object CorpusOps {
         .repartitionByRange(col("term"), col("doc_id"))
         .sortWithinPartitions(col("term"), col("doc_id"))
         .write.parquet(s"$vdir/pos"))
-
-  /** PRECONDITION: ids not already present (same as
-    * [[appendToBm25Index]] — re-appending double-stores positions).
-    */
-  def appendToPositionalIndex(newDocs: DataFrame, dir: String): Unit =
-    IndexManifest.append(newDocs, dir)(vdir =>
-      positionalPostings(newDocs).write.parquet(s"$vdir/pos"))
-
-  /** Compact after appends and deletes: the chain folds into one
-    * term-clustered base (row-identical; deleted rows purge physically,
-    * as in [[compactBm25Index]]).
-    */
-  def compactPositionalIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    IndexManifest.compact(spark, dir, "doc_id",
-      Map("pos" -> Seq("term", "doc_id")))
 
   /** The shared retrieval stage of both positional searches: postings
     * of the query vocabulary only (the `isin` filter reaches the parquet
@@ -887,7 +839,7 @@ object CorpusOps {
     */
   private def posMaps(spark: org.apache.spark.sql.SparkSession,
       dir: String, vocab: Seq[String]): DataFrame =
-    IndexManifest.snapshot(spark, dir).read("pos", "doc_id")
+    IndexManifest.snapshot(spark, dir).read("pos")
       .filter(col("term").isin(vocab: _*))
       .groupBy(col("doc_id"))
       .agg(map_from_entries(
@@ -1338,37 +1290,14 @@ object CorpusOps {
     */
   def buildPercolateIndex(spark: org.apache.spark.sql.SparkSession,
       queries: Seq[BoolQuery], dir: String): Unit =
-    IndexManifest.publish(spark, dir)(writePercolate(spark, queries, _))
-
-  /** PRECONDITION: the batch must contain only query ids NOT already in
-    * the index — same at-least-once discipline as [[appendToBm25Index]]
-    * (a re-registered id would double its clause rows and break the
-    * verdict sums). Append ≡ rebuild by construction: both paths store
-    * exactly the clause/requirement rows of the union, and both tables
-    * land in one delta behind one pointer swap.
-    */
-  def appendToPercolateIndex(spark: org.apache.spark.sql.SparkSession,
-      queries: Seq[BoolQuery], dir: String): Unit =
-    if (queries.nonEmpty)
-      IndexManifest.publishDelta(spark, dir)(writePercolate(spark, queries, _))
-
-  /** Compact the registry after appends and deletes: clause rows
-    * clustered on (term, query_id), requirement rows on query_id.
-    */
-  def compactPercolateIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    IndexManifest.compact(spark, dir, "query_id",
-      Map("terms" -> Seq("term", "query_id"), "meta" -> Seq("query_id")))
-
-  private def writePercolate(spark: org.apache.spark.sql.SparkSession,
-      queries: Seq[BoolQuery], vdir: String): Unit = {
-    validateBoolQueries(queries)
-    import spark.implicits._
-    clauseRows(queries).toDF("query_id", "term", "kind")
-      .write.parquet(s"$vdir/terms")
-    metaRows(queries).toDF("query_id", "must_req", "min_should")
-      .write.parquet(s"$vdir/meta")
-  }
+    IndexManifest.publish(spark, dir) { vdir =>
+      validateBoolQueries(queries)
+      import spark.implicits._
+      clauseRows(queries).toDF("query_id", "term", "kind")
+        .write.parquet(s"$vdir/terms")
+      metaRows(queries).toDF("query_id", "must_req", "min_should")
+        .write.parquet(s"$vdir/meta")
+    }
 
   /** Match an arriving document batch against the stored registry.
     * Bit-identical to `boolSearch(registry, k)(docs)` by construction
@@ -1382,8 +1311,8 @@ object CorpusOps {
       k: Int)(docs: DataFrame): DataFrame = {
     val tf = DedupOps.materialize(bm25Postings(docs))
     val snap = IndexManifest.snapshot(spark, dir)
-    val qt = snap.read("terms", "query_id")
-    val meta = snap.read("meta", "query_id")
+    val qt = snap.read("terms")
+    val meta = snap.read("meta")
     boolVerdictTail(qt.join(broadcast(tf), Seq("term")), meta, k,
       broadcastCandidates = true)
   }

@@ -620,14 +620,13 @@ object DedupOps {
 
   /** Persist the winnowing fingerprint store — the [[buildMinhashStore]]
     * idiom for the winnowing family: the per-doc sketch ([[winnowBase]])
-    * is computed ONCE at ingest; sets (verification payload) and the
+    * is computed ONCE at build; sets (verification payload) and the
     * exploded fingerprint postings (candidate key) land behind one
-    * manifest pointer, with the build params (k, w) as the base's model
-    * table. The df cap is NOT baked in: document frequency is a
-    * corpus-time statistic, so the store stays valid as it grows and
-    * `maxDf` remains a query knob. `dedup_winnowing` re-fingerprinted
-    * the whole corpus every run — 0.31 s/copy at 100×, all of it this
-    * ingest pass.
+    * manifest pointer, with the build params (k, w) as a model table.
+    * The df cap is NOT baked in: document frequency is a corpus-time
+    * statistic, so `maxDf` remains a query knob. `dedup_winnowing`
+    * re-fingerprinted the whole corpus every run — 0.31 s/copy at 100×,
+    * all of it this build pass.
     */
   def buildWinnowingStore(docs: DataFrame, dir: String, k: Int = 5,
       w: Int = 4): Unit = {
@@ -636,55 +635,32 @@ object DedupOps {
       import spark.implicits._
       Seq((k, w)).toDF("k", "w")
         .coalesce(1).write.parquet(s"$vdir/params")
-      writeWinnowing(docs, vdir, k, w)
+      val base = winnowBase(docs, k, w)
+      base.select(col("doc_id"), col("shingles")).write.parquet(s"$vdir/sets")
+      base.select(col("doc_id"), explode(col("fps")).as("fp"))
+        .write.parquet(s"$vdir/fps")
     }
-  }
-
-  private def writeWinnowing(docs: DataFrame, vdir: String, k: Int,
-      w: Int): Unit = {
-    val base = winnowBase(docs, k, w)
-    base.select(col("doc_id"), col("shingles")).write.parquet(s"$vdir/sets")
-    base.select(col("doc_id"), explode(col("fps")).as("fp"))
-      .write.parquet(s"$vdir/fps")
   }
 
   /** The store's persisted build parameters (k, w). */
   def winnowingStoreParams(spark: org.apache.spark.sql.SparkSession,
       dir: String): (Int, Int) = {
-    val r = IndexManifest.snapshot(spark, dir).model("params").head()
+    val r = IndexManifest.snapshot(spark, dir).model("params").head
     (r.getInt(0), r.getInt(1))
-  }
-
-  /** Append a batch atomically (both tables in one delta version —
-    * the [[appendToMinhashStore]] contract), through the STORED
-    * params. O(batch) per append; history never re-fingerprinted.
-    */
-  def appendToWinnowingStore(newDocs: DataFrame, dir: String): Unit = {
-    val (k, w) = winnowingStoreParams(newDocs.sparkSession, dir)
-    IndexManifest.append(newDocs, dir)(writeWinnowing(newDocs, _, k, w))
   }
 
   /** Full-corpus [[winnowingPairs]] served from a persisted store:
     * identical pair set by construction (same fingerprints, same df
-    * cap applied at query time over the live chain, same exact-Jaccard
-    * verify from the stored sets) — text never re-read, re-tokenized,
-    * re-hashed, or re-windowed.
+    * cap applied at query time over the stored postings, same
+    * exact-Jaccard verify from the stored sets) — text never re-read,
+    * re-tokenized, re-hashed, or re-windowed.
     */
   def winnowingPairsStore(spark: org.apache.spark.sql.SparkSession,
       dir: String, threshold: Double = 0.5, maxDf: Int = 50): DataFrame = {
     val snap = IndexManifest.snapshot(spark, dir)
-    winnowingPairsFrom(materialize(snap.read("fps", "doc_id")),
-      materialize(snap.read("sets", "doc_id")), threshold, maxDf)
+    winnowingPairsFrom(materialize(snap.read("fps")),
+      materialize(snap.read("sets")), threshold, maxDf)
   }
-
-  /** Small-files maintenance after repeated appends: the chain folds
-    * into one base, each table clustered on its probe key (sets by
-    * doc_id, fps by fp).
-    */
-  def compactWinnowingStore(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    IndexManifest.compact(spark, dir, "doc_id",
-      Map("sets" -> Seq("doc_id"), "fps" -> Seq("fp")))
 
   def minhashLshPairs(k: Int = 2, bands: Int = 8, rows: Int = 2,
       threshold: Double = 0.5)(df: DataFrame): DataFrame = {
@@ -736,9 +712,9 @@ object DedupOps {
     * LSH candidate key) and hashed shingle sets (the verification
     * payload) are written ONCE; history is never re-shingled. Store
     * size is O(corpus) longs — a constant factor of the text bytes, not
-    * a driver-side model. The build parameters (k, bands, rows) are the
-    * base's model table and every later consumer — appends, incremental
-    * probes, the full pair miner — reads them back instead of taking
+    * a driver-side model. The build parameters (k, bands, rows) are a
+    * model table and every later consumer — incremental probes, the
+    * full pair miner, the pair flags — reads them back instead of taking
     * its own: a store built with non-default geometry can never be
     * silently probed with mismatched band keys.
     */
@@ -749,15 +725,10 @@ object DedupOps {
       import spark.implicits._
       Seq((k, bands, rows)).toDF("k", "bands", "rows")
         .coalesce(1).write.parquet(s"$vdir/params")
-      writeMinhash(docs, vdir, k, bands, rows)
+      val sets = mhSets(docs, k)
+      sets.write.parquet(s"$vdir/sets")
+      mhBands(sets, bands, rows).write.parquet(s"$vdir/bands")
     }
-  }
-
-  private def writeMinhash(docs: DataFrame, vdir: String, k: Int,
-      bands: Int, rows: Int): Unit = {
-    val sets = mhSets(docs, k)
-    sets.write.parquet(s"$vdir/sets")
-    mhBands(sets, bands, rows).write.parquet(s"$vdir/bands")
   }
 
   /** The store's persisted build parameters (k, bands, rows). */
@@ -766,37 +737,9 @@ object DedupOps {
     minhashParams(IndexManifest.snapshot(spark, dir))
 
   private def minhashParams(snap: IndexManifest.Snapshot): (Int, Int, Int) = {
-    val r = snap.model("params").head()
+    val r = snap.model("params").head
     (r.getInt(0), r.getInt(1), r.getInt(2))
   }
-
-  /** Append a batch's fingerprints to an existing store (the ingest
-    * epilogue after [[incrementalNearDupPairs]] has flagged it) —
-    * ATOMICALLY: both tables land in one delta version behind the
-    * manifest's single pointer swap ([[graft.sources.IndexManifest
-    * .publishDelta]]). A crash anywhere mid-append leaves the store
-    * exactly as it was (no stranded set rows without candidate keys),
-    * and re-appending the batch converges to exactly-once rows.
-    * O(batch) per append.
-    */
-  def appendToMinhashStore(newDocs: DataFrame, dir: String): Unit = {
-    val (k, bands, rows) = minhashStoreParams(newDocs.sparkSession, dir)
-    IndexManifest.append(newDocs, dir)(
-      writeMinhash(newDocs, _, k, bands, rows))
-  }
-
-  /** Small-files maintenance after repeated appends (the [[graft
-    * .operators.SimilarityOps.compactIndex]] analogue for the
-    * fingerprint store): the chain folds into one base, each table
-    * range-partitioned and sorted on its probe key — sets by doc_id,
-    * bands by (band, band_key) — so the per-append file litter
-    * collapses and the band join reads clustered keys. Contents are
-    * row-identical, so probes are unchanged.
-    */
-  def compactMinhashStore(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    IndexManifest.compact(spark, dir, "doc_id",
-      Map("sets" -> Seq("doc_id"), "bands" -> Seq("band", "band_key")))
 
   /** Incremental near-dup check of a new ingest batch AGAINST the
     * persisted store: the batch is shingled/banded once, equi-joined on
@@ -813,8 +756,8 @@ object DedupOps {
       threshold: Double = 0.5): DataFrame = {
     val snap = IndexManifest.snapshot(newDocs.sparkSession, dir)
     val (k, bands, rows) = minhashParams(snap)
-    val storeSets = snap.read("sets", "doc_id")
-    val storeBands = snap.read("bands", "doc_id")
+    val storeSets = snap.read("sets")
+    val storeBands = snap.read("bands")
     val nsets = mhSets(newDocs, k)
     val nbands = mhBands(nsets, bands, rows)
     val cand = storeBands
@@ -847,7 +790,7 @@ object DedupOps {
       dir: String, threshold: Double = 0.5): DataFrame = {
     val snap = IndexManifest.snapshot(spark, dir)
     val (_, bands, rows) = minhashParams(snap)
-    val sets = materialize(snap.read("sets", "doc_id"))
+    val sets = materialize(snap.read("sets"))
     val cand = minhashCandidates(mhKeyArrays(sets, bands, rows), bands)
     mhVerify(cand, sets, sets, threshold)
   }
@@ -884,7 +827,7 @@ object DedupOps {
       flag: String = "is_textdup"): DataFrame = {
     val snap = IndexManifest.snapshot(spark, dir)
     val (_, bands, rows) = minhashParams(snap)
-    minhashPairFlagsFromSets(pairs, materialize(snap.read("sets", "doc_id")),
+    minhashPairFlagsFromSets(pairs, materialize(snap.read("sets")),
       bands, rows, threshold, flag)
   }
 

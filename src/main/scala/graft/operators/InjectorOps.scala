@@ -247,26 +247,20 @@ object InjectorOps {
     * the one composition both the oracle-checked `entry_pipeline` and the
     * deployed stream (`InjectorApp.start`) run. `decoder` is the D1 seam
     * ([[decoderFor]], default JSON into `schema`); `keyDecoder` set merges
-    * the decoded key (T2, [[includeDecodedKey]]). `dedupWatermark` bounds
-    * an in-stream K2 dedup: the reference's dedup state is the ES index
-    * (unbounded, free), a stream's must be bounded, so duplicate ids drop
-    * only within that delay of event time (SURVEY.md §7.5.4); `None`
-    * leaves K2 to the sink's create-op, like the reference.
+    * the decoded key (T2, [[includeDecodedKey]]). The pipeline keeps no
+    * state, so it runs in any trigger mode; K2 (duplicate doc ids) stays
+    * where the reference puts it, in the sink's create-op 409s.
     */
   def pipeline(cfg: InjectorConfig, schema: StructType,
       decoder: Option[DataFrame => DataFrame] = None,
-      keyDecoder: Option[Column => Column] = None,
-      dedupWatermark: Option[String] = None)(df: DataFrame): DataFrame = {
-    val routed = (nilMessageFilter()(_: DataFrame))
+      keyDecoder: Option[Column => Column] = None)(df: DataFrame)
+      : DataFrame =
+    assemble((nilMessageFilter()(_: DataFrame))
       .andThen(decoder.getOrElse(jsonDecode(schema)(_)))
       .andThen(injectTimestamp)
       .andThen(keyDecoder.fold(identity[DataFrame] _)(includeDecodedKey(_)))
       .andThen(blacklist(cfg.blacklist))
       .andThen(indexName(cfg))
       .andThen(docId(cfg))
-      .apply(df)
-    assemble(dedupWatermark.fold(routed)(delay =>
-      routed.withWatermark("timestamp", delay)
-        .dropDuplicatesWithinWatermark("doc_id")))
-  }
+      .apply(df))
 }

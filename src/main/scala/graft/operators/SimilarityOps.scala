@@ -317,11 +317,15 @@ object SimilarityOps {
     */
   private type Cents = Seq[(Long, Seq[Double])]
 
-  private def collectCents(centFrame: DataFrame): Cents = {
-    val cents = centFrame
+  private def collectCents(centFrame: DataFrame): Cents =
+    sortCents(centFrame
       .select(col("cent_id").cast("long"),
         col("cent_emb").cast("array<double>"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
+      .collect())
+
+  /** (cent_id BIGINT, cent_emb array<double>) rows, in id order. */
+  private def sortCents(rows: Array[Row]): Cents = {
+    val cents = rows.map(r => (r.getLong(0), r.getSeq[Double](1)))
       .sortBy(_._1).toSeq
     require(cents.nonEmpty, "IVF needs at least one centroid")
     cents
@@ -497,7 +501,7 @@ object SimilarityOps {
   /** Materialize the IVF index on disk — the build-once/search-many
     * shape of a production ANN deployment: corpus rows (+ their
     * precomputed norms) written to the `rows` table PARTITIONED BY home
-    * cell, centroids in the base's `centroids` model table. A search
+    * cell, centroids in the `centroids` model table. A search
     * then reads ONLY the probed cell directories via partition pruning:
     * cost is ~nprobe/k_cells of the corpus per query batch, and the
     * assignment map never re-runs.
@@ -519,71 +523,33 @@ object SimilarityOps {
     cents.toDF("cent_id", "cent_emb").write.parquet(s"$vdir/centroids")
   }
 
-  private def storedCents(snap: IndexManifest.Snapshot): Cents =
-    collectCents(snap.model("centroids"))
+  /** The stored centroids; `cap` bounds the fetch. */
+  private[graft] def storedCents(snap: IndexManifest.Snapshot,
+      cap: Int = DriverModel.DefaultCap): Cents =
+    sortCents(snap.model("centroids", cap))
 
-  /** Append new vectors to an existing [[buildIndex]] directory as one
-    * delta version: home cells come from the STORED centroids (the model
-    * is unchanged — the standard IVF maintenance path; re-train and
-    * rebuild when centroid drift accumulates). A pure map plus a
-    * partitioned write; searches pick the rows up with no other change.
-    *
-    * CONTRACT: `newVecs` ids must be NEW to the index — vec_id stays
-    * unique across the live store. Re-ingesting an id means
-    * [[graft.sources.IndexManifest.delete]] + [[compactIndex]] first.
-    * Duplicate live ids would corrupt consumers that assume one row per
-    * vec_id — [[knnGraphIndex]]'s per-src top-k window keys on the
-    * (cell, bucket) a unique id implies.
-    */
-  def appendToIndex(newVecs: DataFrame, dir: String): Unit = {
-    val cents = storedCents(IndexManifest.snapshot(newVecs.sparkSession, dir))
-    IndexManifest.append(newVecs, dir)(vdir =>
-      assignHome(cents)(withNorm(newVecs))
-        .write.partitionBy("cell").parquet(s"$vdir/rows"))
-  }
-
-  /** Compact a [[buildIndex]] or [[buildIvfPqIndex]] store after
-    * appends and deletes: each append adds at least one file per
-    * touched cell, the small-files tax on every probed-cell scan. The
-    * chain folds into one base with ONE file per cell, tombstoned
-    * vectors purged, the model tables carried over. Cell leads the sort
-    * because a partitioned write needs its task rows ordered by the
-    * partition column (V1Writes would insert a second sort otherwise).
-    */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    IndexManifest.compact(spark, dir, "vec_id",
-      Map("rows" -> Seq("cell", "vec_id")), partitionBy = Some("cell"))
-
-  /** Compact a [[buildSq8Index]] store: the code table folds into one
-    * vec_id-clustered base; the quantizer is carried over.
-    */
-  def compactSq8Index(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    IndexManifest.compact(spark, dir, "vec_id",
-      Map("codes" -> Seq("vec_id")))
-
-  /** The stored rows of an index store — live chain, deleted ids
-    * anti-joined, the partition column normalized back to long. Shared
-    * by the probed-cell searches and the index-served graph consumers.
+  /** The stored rows of an index store, the partition column normalized
+    * back to long. Shared by the probed-cell searches and the
+    * index-served graph consumers.
     */
   def readIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
-    longCell(IndexManifest.snapshot(spark, dir).read("rows", "vec_id"))
+    longCell(IndexManifest.snapshot(spark, dir).read("rows"))
 
   private def longCell(rows: DataFrame): DataFrame =
     rows.withColumn("cell", col("cell").cast("long"))
 
   /** Scan of an index store restricted to the probed cells: the probed
-    * ids are |Q|·nprobe values — driver-side model scale — and as an IN
-    * literal they prune the partition directories of every version.
+    * ids are |Q|·nprobe values — driver-side model scale, fetched
+    * bounded — and as an IN literal they prune the partition
+    * directories.
     */
   private def probedCellScan(snap: IndexManifest.Snapshot,
       qcells: DataFrame): DataFrame = {
-    val probed = qcells.select(col("cell")).distinct()
-      .collect().map(_.getLong(0)).toSeq
-    longCell(snap.read("rows", "vec_id")
-      .filter(col("cell").isInCollection(probed)))
+    val probed = snap.fetch("rows", DriverModel.DefaultCap)(
+        qcells.select(col("cell")).distinct())
+      .map(_.getLong(0)).sorted.toSeq
+    longCell(snap.read("rows").filter(col("cell").isInCollection(probed)))
   }
 
   /** Search a [[buildIndex]] directory: assign probe cells to the query
@@ -600,7 +566,7 @@ object SimilarityOps {
 
   /** Persisted IVF+PQ index: one corpus pass computes home cell + the m
     * PQ codes, written partitionBy(cell) to `rows`; centroids AND
-    * codebooks are the base's model tables. A search reads ONLY the
+    * codebooks are model tables. A search reads ONLY the
     * probed cell partitions and scores candidates by ADC table lookups —
     * at 100 TB the scan is nprobe/k_cells of a table that holds m small
     * ints per vector instead of the embeddings themselves.
@@ -610,7 +576,10 @@ object SimilarityOps {
     val cents = collectCents(centFrame)
     val spark = corpus.sparkSession
     IndexManifest.publish(spark, dir) { vdir =>
-      pqCoded(cents, books)(corpus)
+      // one corpus pass: home cell + the m PQ codes
+      assignHome(cents)(withNorm(corpus))
+        .select(col("vec_id") +: col("cell") +:
+          books.indices.map(j => pqCodeCol(books, j).as(s"__c$j")): _*)
         .write.partitionBy("cell").parquet(s"$vdir/rows")
       writeCents(spark, cents, vdir)
       import spark.implicits._
@@ -622,38 +591,15 @@ object SimilarityOps {
     }
   }
 
-  /** One corpus pass: home cell + the m PQ codes. */
-  private def pqCoded(cents: Cents, books: Seq[Seq[Seq[Double]]])(
-      corpus: DataFrame): DataFrame =
-    assignHome(cents)(withNorm(corpus))
-      .select(col("vec_id") +: col("cell") +:
-        books.indices.map(j => pqCodeCol(books, j).as(s"__c$j")): _*)
-
   /** Reload the codebooks model table as driver model state (m × nc ×
     * sub doubles), in (j, code) order.
     */
   private def loadBooks(snap: IndexManifest.Snapshot)
       : Seq[Seq[Seq[Double]]] =
     snap.model("books")
-      .orderBy(col("j"), col("code"))
-      .select(col("j"), col("cvec"))
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1): Seq[Double]))
-      .groupBy(_._1).toSeq.sortBy(_._1).map(_._2.map(_._2).toSeq)
-
-  /** Append new vectors to an existing [[buildIvfPqIndex]] directory as
-    * one delta version: home cells AND codes are computed with the
-    * STORED model (centroids + codebooks unchanged — the standard
-    * maintenance path for a daily growing corpus; re-train and rebuild
-    * when drift accumulates). Append ≡ rebuild bit-exact because a
-    * vector's cell and codes depend only on the model, never on the
-    * rest of the corpus.
-    */
-  def appendToIvfPqIndex(newVecs: DataFrame, dir: String): Unit = {
-    val snap = IndexManifest.snapshot(newVecs.sparkSession, dir)
-    val coded = pqCoded(storedCents(snap), loadBooks(snap))(newVecs)
-    IndexManifest.append(newVecs, dir)(vdir =>
-      coded.write.partitionBy("cell").parquet(s"$vdir/rows"))
-  }
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2): Seq[Double]))
+      .sortBy(r => (r._1, r._2)).toSeq
+      .groupBy(_._1).toSeq.sortBy(_._1).map(_._2.map(_._3))
 
   /** Search a [[buildIvfPqIndex]] directory: probe cells + ADC tables
     * are computed map-side from the reloaded model state; only the
@@ -930,10 +876,8 @@ object SimilarityOps {
     * build is JUST the within-cell self-join plus the top-k window,
     * and the cell-partitioned layout means the scan arrives clustered
     * on the join key. The amortization a standing pipeline wants: the
-    * model is applied to each vector once at ingest ([[appendToIndex]])
-    * instead of once per downstream graph consumer. Tombstoned vectors
-    * drop out of both join sides, so deletes are graph-invisible the
-    * moment they land.
+    * model is applied to each vector once at build ([[buildIndex]])
+    * instead of once per downstream graph consumer.
     */
   def knnGraphIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, k: Int, cellCap: Long = KnnCellTarget): DataFrame =
@@ -959,11 +903,9 @@ object SimilarityOps {
     // either way. CONTRACT (ADVICE r16 #3): this equivalence requires
     // vec_id to be UNIQUE in `assigned`. In-memory builds get it from
     // the embeddings table (key-unique by fixture contract); persisted
-    // builds from the index lifecycle — appendToIndex must only append
-    // NEW ids (re-ingest = IndexManifest.delete + compactIndex first;
-    // re-appending a still-live vec_id is as illegal as re-appending a
-    // tombstoned one, see IndexManifest.delete's doc), or per-(bucket,
-    // duplicate) top-ks would replace the global per-src top-k.
+    // builds from the corpus they were built over — duplicate ids there
+    // would make per-(bucket, duplicate) top-ks replace the global
+    // per-src top-k.
     // But HashPartitioning(cell, __bkt) from the self-join
     // already satisfies the clustered distribution and the fattest
     // intermediate of the whole build (the Σ|cell|² pair frame) is
@@ -1210,11 +1152,11 @@ object SimilarityOps {
         col("rank").cast("long").as("rank"), col("cos"))
   }
 
-  /** Persist the SQ8 index: the (2×dim)-double `model` table in the
-    * base and the uint8 `codes` table — a quarter of the raw float32
-    * bytes; searches never reopen the raw embeddings. The model is
-    * stored, not recomputed, so appends encode THROUGH it and append ≡
-    * rebuild bit-exactly.
+  /** Persist the SQ8 index: the (2×dim)-double `model` table and the
+    * uint8 `codes` table — a quarter of the raw float32 bytes; searches
+    * never reopen the raw embeddings. The model is stored, not
+    * recomputed, so a search decodes through the quantizer its codes
+    * were encoded with.
     */
   def buildSq8Index(corpus: DataFrame,
       model: (Seq[Double], Seq[Double]), dir: String): Unit = {
@@ -1225,24 +1167,10 @@ object SimilarityOps {
       import spark.implicits._
       mns.indices.map(i => (i, mns(i), mxs(i))).toDF("i", "mn", "mx")
         .coalesce(1).write.parquet(s"$vdir/model")
-      sq8Coded(model)(corpus).write.parquet(s"$vdir/codes")
+      corpus.select(col("vec_id"),
+          sq8Codes(mns, mxs)(col("embedding")).as("code"))
+        .write.parquet(s"$vdir/codes")
     }
-  }
-
-  private def sq8Coded(model: (Seq[Double], Seq[Double]))(
-      vecs: DataFrame): DataFrame =
-    vecs.select(col("vec_id"),
-      sq8Codes(model._1, model._2)(col("embedding")).as("code"))
-
-  /** Append new vectors as one delta version, through the STORED
-    * quantizer (a growing corpus must not re-derive min/max — that would
-    * re-encode history).
-    */
-  def appendToSq8Index(newVecs: DataFrame, dir: String): Unit = {
-    val coded = sq8Coded(loadSq8Model(
-      IndexManifest.snapshot(newVecs.sparkSession, dir)))(newVecs)
-    IndexManifest.append(newVecs, dir)(vdir =>
-      coded.write.parquet(s"$vdir/codes"))
   }
 
   /** Search the persisted index: dequantize the code scan (pure map)
@@ -1252,15 +1180,14 @@ object SimilarityOps {
       dir: String, queries: DataFrame, k: Int): DataFrame = {
     val snap = IndexManifest.snapshot(spark, dir)
     val (mns, mxs) = loadSq8Model(snap)
-    sq8Rank(snap.read("codes", "vec_id")
+    sq8Rank(snap.read("codes")
       .select(col("vec_id").as("neighbor_id"),
         sq8Dequantize(mns, mxs)(col("code")).as("dq")), queries, k)
   }
 
   private def loadSq8Model(snap: IndexManifest.Snapshot)
       : (Seq[Double], Seq[Double]) = {
-    val rows = snap.model("model")
-      .orderBy(col("i")).collect()
+    val rows = snap.model("model").sortBy(_.getInt(0))
     (rows.map(_.getDouble(1)).toSeq, rows.map(_.getDouble(2)).toSeq)
   }
 

@@ -1,12 +1,8 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileContext, FileSystem, FileUtil, Options, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.execution.datasources.{FileIndex,
-  HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitionDirectory}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StructType
+import graft.operators.DriverModel
+import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** The one lifecycle of every persisted index store (IVF, IVF-PQ, SQ8,
   * BM25, positional, percolator, MinHash, winnowing) — the
@@ -15,31 +11,27 @@ import org.apache.spark.sql.types.StructType
   * atomicity for free from Elasticsearch's per-document versioning
   * (elasticsearch/elasticsearch.go bulk `create`); a file-based store
   * has to provide its own. Each family keeps only its own encoding
-  * (which tables, which columns); building, appending, deleting,
-  * reading and compacting all go through here.
+  * (which tables, which columns); publishing, reading and retiring
+  * versions all go through here.
   *
   * Layout — a store root holds nothing else:
   * {{{
   *   <root>/MANIFEST                    one line: the current version
   *   <root>/versions/v<N>/<table>/      immutable-after-publish tables
-  *   <root>/versions/v<N>/PARENT        deltas only: the version extended
   * }}}
   *
-  * A build or [[compact]] publishes a BASE version holding every data
-  * table plus the family's model tables (centroids, codebooks,
-  * quantizer, build params), which are written once and read from the
-  * base ([[Snapshot.model]]). An append ([[append]]) or a [[delete]]
-  * publishes a DELTA holding only the batch's rows or a `deletes(id)`
-  * table. Every writer builds a COMPLETE new version directory, then
-  * swaps the MANIFEST pointer with `FileContext.rename(OVERWRITE)` — a
-  * single atomic metadata op on HDFS-like filesystems. So:
+  * Every version is COMPLETE: a build writes every data table plus the
+  * family's model tables (centroids, codebooks, quantizer, build
+  * params). A store is never appended to, deleted from or compacted in
+  * place; updating it is a rebuild through [[publish]]. The writer
+  * builds the new version directory, then swaps the MANIFEST pointer
+  * with `FileContext.rename(OVERWRITE)` — a single atomic metadata op on
+  * HDFS-like filesystems. So:
   *  - a crash anywhere before the swap leaves the old version live and
-  *    the half-written one invisible (no recovery dance), and a retried
-  *    append lands exactly once;
-  *  - a reader resolves the chain once ([[snapshot]]) and reads every
-  *    table it needs from that one view, over files that are never
-  *    rewritten in place — a reader holding v3's chain is unaffected by
-  *    v4's publish;
+  *    the half-written one invisible (no recovery dance);
+  *  - a reader resolves the version once ([[snapshot]]) and reads every
+  *    table it needs from it, over files that are never rewritten in
+  *    place — a reader holding v3 is unaffected by v4's publish;
   *  - old versions retire only via [[prune]], giving in-flight scans a
   *    grace window (the table-format "vacuum" discipline).
   */
@@ -50,7 +42,7 @@ object IndexManifest {
 
   private def manifest(root: String) = new Path(s"$root/MANIFEST")
 
-  def versionDir(root: String, v: Int): String = s"$root/versions/v$v"
+  private def versionDir(root: String, v: Int): String = s"$root/versions/v$v"
 
   /** The published version, if any. */
   def currentVersion(spark: SparkSession, root: String): Option[Int] = {
@@ -91,218 +83,39 @@ object IndexManifest {
     next
   }
 
-  /** Publish a DELTA version extending the current chain — how every
-    * append and [[delete]] lands. The new version directory holds ONLY
-    * the batch's tables plus a PARENT file naming the version it
-    * extends; [[Snapshot.read]] unions the chain into one logical store.
-    * The pointer swap remains the single commit: a crash anywhere before it
-    * leaves the old chain live and the half-written delta invisible (a
-    * multi-table append such as the minhash sets + bands can never
-    * strand one table without the other), and retrying re-runs `write`
-    * into a cleared directory — exactly-once rows, convergent retries
-    * (the snapshot-chain device of the table formats, reduced to a
-    * parent pointer). Per-append cost is O(batch), never O(store).
-    */
-  def publishDelta(spark: SparkSession, root: String)(
-      write: String => Unit): Int = {
-    val parent = currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(
-        s"IndexManifest: no MANIFEST under $root — publish a base first"))
-    publish(spark, root) { vdir =>
-      val pp = new Path(s"$vdir/PARENT")
-      val f = fs(spark, pp)
-      val out = f.create(pp, true)
-      try out.write(parent.toString.getBytes("UTF-8")) finally out.close()
-      write(vdir)
-    }
-  }
-
-  /** How every `appendTo*` lands one batch: a [[publishDelta]], except
-    * that an empty batch publishes nothing — an idle micro-batch never
-    * grows the chain, and a partitioned write of no rows (which leaves
-    * no parquet file behind) never becomes an unreadable delta.
-    */
-  def append(batch: DataFrame, root: String)(write: String => Unit): Unit =
-    if (!batch.isEmpty) publishDelta(batch.sparkSession, root)(write)
-
-  private def parentOf(spark: SparkSession, root: String,
-      v: Int): Option[Int] = {
-    val pp = new Path(s"${versionDir(root, v)}/PARENT")
-    val f = fs(spark, pp)
-    if (!f.exists(pp)) None
-    else {
-      val in = f.open(pp)
-      try Some(new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim.toInt)
-      finally in.close()
-    }
-  }
-
-  /** Version numbers of the live chain, newest first: the current
-    * version and every ancestor reachable through PARENT files (a full
-    * [[publish]] — rebuild or compaction — has no PARENT and roots the
-    * chain).
-    */
-  def chainVersions(spark: SparkSession, root: String): Seq[Int] = {
-    val b = Seq.newBuilder[Int]
-    var v = Some(currentVersion(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(
-        s"IndexManifest: no MANIFEST under $root — index never published")))
-      : Option[Int]
-    while (v.isDefined) { b += v.get; v = parentOf(spark, root, v.get) }
-    b.result()
-  }
-
-  /** Directories of the live chain, newest first. */
-  def resolveChain(spark: SparkSession, root: String): Seq[String] =
-    chainVersions(spark, root).map(versionDir(root, _))
-
-  private val Deletes = "deletes"
-
-  /** Tombstone ids — the delete-by-id half of the lifecycle ES provides
-    * the reference (GDPR/TTL retirement). Publishes a delta holding only
-    * a `deletes(id)` table; every [[Snapshot.read]] anti-joins it, so the
-    * ids are search-invisible the moment the pointer swaps, and the next
-    * [[compact]] purges them physically. A deleted id must not be
-    * re-appended before that compaction — the tombstone would swallow
-    * the new rows too. Returns the new version.
-    */
-  def delete(spark: SparkSession, root: String, ids: Seq[Long]): Int = {
-    import spark.implicits._
-    publishDelta(spark, root)(vdir =>
-      ids.toDF("id").write.parquet(s"$vdir/$Deletes"))
-  }
-
-  /** One resolved view of a store: the live chain's version
-    * directories, newest first, and the tables each holds — resolved and
-    * listed once. A reader of several tables (a search's model plus its
-    * data, the percolator's terms plus meta) takes ONE snapshot and reads
-    * every table from it, so a publish landing between two reads can
-    * never pair one base's quantizer or centroids with another's codes.
+  /** One resolved version of a store. A reader of several tables (a
+    * search's model plus its data, the percolator's terms plus meta)
+    * takes ONE snapshot and reads every table from it, so a publish
+    * landing between two reads can never pair one build's quantizer or
+    * centroids with another's codes.
     */
   final class Snapshot private[IndexManifest] (spark: SparkSession,
-      root: String, chain: Seq[(String, Set[String])]) {
+      val root: String, dir: String) {
 
-    private[IndexManifest] def base: (String, Set[String]) = chain.last
+    /** One table of the version: a plain parquet scan. */
+    def read(table: String): DataFrame = spark.read.parquet(s"$dir/$table")
 
-    /** Tables written by the chain's deltas (appends and deletes). */
-    private[IndexManifest] def deltaTables: Set[String] =
-      chain.init.flatMap(_._2).toSet
-
-    /** A model table (centroids, codebooks, quantizer, build params) —
-      * written once, in the chain's base version, and read from there.
+    /** Every row of `df`, a driver-sized frame over this store's `table`
+      * (a model table, or the probed keys of a data table), in one
+      * [[DriverModel.collectBounded]] fetch. More than `cap` rows fails
+      * with [[DriverModel.CapExceeded]] naming the store and the table.
       */
-    def model(table: String): DataFrame =
-      spark.read.parquet(s"${base._1}/$table")
+    def fetch(table: String, cap: Int)(df: DataFrame): Array[Row] =
+      DriverModel.collectBounded(df, cap).getOrElse(
+        throw new DriverModel.CapExceeded(s"IndexManifest: table $table " +
+          s"of $root needs more than $cap rows on the driver"))
 
-    /** The live rows of one data table: ONE scan over its directories
-      * in every version of the chain (base first; a version without the
-      * table, such as a delete delta, is skipped), minus the chain's
-      * deleted ids on `idCol`. A freshly built store is a chain of one
-      * with no deletes — exactly one plain scan and no anti-join.
+    /** Every row of a model table (centroids, codebooks, quantizer,
+      * build params), unordered: callers sort on the driver.
       */
-    def read(table: String, idCol: String): DataFrame = {
-      def dirs(t: String): Seq[String] = chain.reverse.collect {
-        case (v, ts) if ts(t) => s"$v/$t" }
-      if (dirs(table).isEmpty) throw new java.io.FileNotFoundException(
-        s"IndexManifest: no table $table in the live chain of $root")
-      val rows = scan(spark, dirs(table))
-      dirs(Deletes) match {
-        case Seq() => rows
-        case ds => rows.join(spark.read.parquet(ds: _*)
-          .select(col("id").as(idCol)).distinct(), Seq(idCol), "left_anti")
-      }
-    }
+    def model(table: String, cap: Int = DriverModel.DefaultCap)
+        : Array[Row] =
+      fetch(table, cap)(read(table))
   }
 
-  /** One scan over a table's version directories. Neither obvious read
-    * works: partition discovery over several version directories fails
-    * with CONFLICTING_DIRECTORY_STRUCTURES for a partitioned table
-    * (IVF's `cell=N` rows), and a union of per-version scans pays a
-    * schema inference, a file index and a task set per version — on a
-    * 4-vCPU VM, after 100 appends of 20 rows to a 2000-row store, a
-    * union-read BM25 search took ~18× and an IVF search ~7× the time of
-    * the same search over one scan. So the base's relation (its schema
-    * inferred once) is re-pointed at a [[ChainIndex]] of per-version
-    * file indexes: one scan, typed by the base, that keeps its pushed
-    * partition filters.
-    */
-  private def scan(spark: SparkSession, dirs: Seq[String]): DataFrame = {
-    val base = spark.read.parquet(dirs.head)
-    if (dirs.size == 1) return base
-    val rel = base.queryExecution.analyzed.collectFirst {
-      case l: LogicalRelation => l.relation.asInstanceOf[HadoopFsRelation] }
-      .get
-    val versions = rel.location +: dirs.tail.map(d => new InMemoryFileIndex(
-      spark, Seq(new Path(d)), Map.empty, Some(rel.schema)))
-    spark.baseRelationToDataFrame(
-      rel.copy(location = new ChainIndex(versions, rel.partitionSchema))(spark))
-  }
-
-  /** The file index of one table over a chain: each version's own index
-    * (partitions inferred within that version's directory, typed by the
-    * base schema) listed and pruned in turn.
-    */
-  private class ChainIndex(versions: Seq[FileIndex],
-      val partitionSchema: StructType) extends FileIndex {
-    def rootPaths: Seq[Path] = versions.flatMap(_.rootPaths)
-    def listFiles(partitionFilters: Seq[Expression],
-        dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-      versions.flatMap(_.listFiles(partitionFilters, dataFilters))
-    def inputFiles: Array[String] = versions.flatMap(_.inputFiles).toArray
-    def refresh(): Unit = versions.foreach(_.refresh())
-    def sizeInBytes: Long = versions.map(_.sizeInBytes).sum
-  }
-
-  /** Resolve the live chain of `root` once: one directory listing per
-    * version.
-    */
-  def snapshot(spark: SparkSession, root: String): Snapshot = {
-    val f = fs(spark, new Path(root))
-    new Snapshot(spark, root, resolveChain(spark, root).map(v =>
-      v -> f.listStatus(new Path(v)).collect {
-        case s if s.isDirectory => s.getPath.getName }.toSet))
-  }
-
-  /** Fold the live chain into one new base — the small-files maintenance
-    * every store shares. `tables` names the family's DATA tables with
-    * their sort keys, and must cover every table an append wrote (a
-    * table left out would lose its deltas, so that throws). Each is read
-    * minus deleted ids, range-partitioned and sorted on its keys, and
-    * written to the new version; with `partitionBy`, rows
-    * range-partition on that column alone (one range never splits a
-    * value, so the partitioned write leaves ONE file per value — IVF's
-    * one file per cell) and are written partitioned by it. Every other
-    * base table — the model tables — is copied unchanged. Then publish
-    * and [[prune]] with keep = 2. Contents are row-identical minus the
-    * purged deletes, so searches are unchanged. Returns the new version.
-    */
-  def compact(spark: SparkSession, root: String, idCol: String,
-      tables: Map[String, Seq[String]],
-      partitionBy: Option[String] = None): Int = {
-    val snap = snapshot(spark, root)
-    val unfolded = snap.deltaTables - Deletes -- tables.keySet
-    require(unfolded.isEmpty, s"IndexManifest.compact: $root has appended " +
-      s"tables ${unfolded.mkString(", ")} that compaction would drop")
-    val (base, baseTables) = snap.base
-    val f = fs(spark, new Path(base))
-    val v = publish(spark, root) { vdir =>
-      tables.foreach { case (t, keys) =>
-        val w = snap.read(t, idCol)
-          .repartitionByRange(partitionBy.fold(keys)(Seq(_)).map(col): _*)
-          .sortWithinPartitions(keys.map(col): _*)
-          .write
-        partitionBy.fold(w)(w.partitionBy(_)).parquet(s"$vdir/$t")
-      }
-      (baseTables -- tables.keySet).foreach(t =>
-        if (!FileUtil.copy(f, new Path(s"$base/$t"), f, new Path(s"$vdir/$t"),
-            false, spark.sparkContext.hadoopConfiguration))
-          throw new java.io.IOException(
-            s"IndexManifest.compact: could not copy $base/$t"))
-    }
-    prune(spark, root, keep = 2)
-    v
-  }
+  /** Resolve the current version of `root` once. */
+  def snapshot(spark: SparkSession, root: String): Snapshot =
+    new Snapshot(spark, root, resolve(spark, root))
 
   /** The atomic pointer swap: write MANIFEST.tmp, rename OVERWRITE onto
     * MANIFEST. `FileContext.rename(OVERWRITE)` is the Hadoop API whose
@@ -322,39 +135,24 @@ object IndexManifest {
     fc.rename(tmp, mp, Options.Rename.OVERWRITE)
   }
 
-  /** Retire dead version directories: anything not on the live PARENT
-    * chain, except the newest `keep - 1` of them AND every PARENT-chain
-    * ancestor of a retained dead version (the grace window for
-    * in-flight readers still scanning a superseded chain — a reader
-    * that resolved the old chain needs the whole chain, base included,
-    * not just its tip, so dead versions are retained as COMPLETE
-    * chains). Chain members — the current version and every ancestor
-    * it references — are NEVER deleted, however old: a delta store's
-    * base must outlive all its deltas. Run after [[publish]]. Returns
-    * the versions deleted.
+  /** Retire superseded version directories, except the newest `keep - 1`
+    * of them (the grace window for in-flight readers still scanning a
+    * superseded version). The current version, and anything above it (a
+    * concurrent writer's unpublished version), is never deleted. Run
+    * after [[publish]]. Returns the versions deleted.
     */
   def prune(spark: SparkSession, root: String, keep: Int = 2): Seq[Int] = {
     require(keep >= 1, s"prune must keep the current version (keep=$keep)")
     val cur = currentVersion(spark, root).getOrElse(return Seq.empty)
-    val live = chainVersions(spark, root).toSet
     val vdir = new Path(s"$root/versions")
     val f = fs(spark, vdir)
     if (!f.exists(vdir)) return Seq.empty
-    val dead = f.listStatus(vdir).toSeq
+    val retire = f.listStatus(vdir).toSeq
       .map(_.getPath.getName)
       .collect { case n if n.startsWith("v") => n.drop(1).toInt }
-      .filter(_ <= cur) // a concurrent writer's in-flight v(cur+1) is not ours to touch
-      .filterNot(live)
+      .filter(_ < cur)
       .sorted
-    // the newest keep-1 dead versions survive as whole chains: walk
-    // PARENT pointers from each retained tip so a superseded delta
-    // chain keeps its base and middle deltas, not just its tip (an
-    // in-flight read scans all of them)
-    val retained = scala.collection.mutable.Set.empty[Int]
-    def walk(v: Int): Unit =
-      if (retained.add(v)) parentOf(spark, root, v).foreach(walk)
-    dead.takeRight(keep - 1).foreach(walk)
-    val retire = dead.filterNot(retained)
+      .dropRight(keep - 1)
     retire.foreach { v =>
       if (!f.delete(new Path(versionDir(root, v)), true))
         throw new java.io.IOException(

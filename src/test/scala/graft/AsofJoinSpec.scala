@@ -125,148 +125,6 @@ class AsofJoinSpec extends SparkSpec {
     assert(inMem.nonEmpty && inMem.sameElements(onDisk))
   }
 
-  test("index append: build on half, append the rest ≡ build on everything") {
-    def v(x: Double, y: Double) = Array(x, y, 0.0, 0.0)
-    val all = Seq(
-      0L -> v(1.0, 0.05), 1L -> v(1.0, 0.1), 2L -> v(0.9, 0.0),
-      10L -> v(0.05, 1.0), 11L -> v(0.0, 0.95), 12L -> v(0.1, 1.0))
-    val (half, rest) = all.partition(_._1 <= 2L)
-    def cents(df: org.apache.spark.sql.DataFrame) =
-      df.filter($"vec_id" === 2L || $"vec_id" === 12L)
-        .select($"vec_id".as("cent_id"), $"embedding".as("cent_emb"))
-    val full = all.toDF("vec_id", "embedding")
-    val dirA = java.nio.file.Files
-      .createTempDirectory("graft-ivf-appA").toString + "/idx"
-    val dirB = java.nio.file.Files
-      .createTempDirectory("graft-ivf-appB").toString + "/idx"
-    SimilarityOps.buildIndex(full, cents(full), dirA)
-    // B: built on the x-cluster half only (centroid 12 supplied
-    // explicitly — centroids are model state, not corpus rows), then the
-    // y-cluster appended through the STORED model
-    SimilarityOps.buildIndex(half.toDF("vec_id", "embedding"),
-      cents(full), dirB)
-    SimilarityOps.appendToIndex(rest.toDF("vec_id", "embedding"), dirB)
-    val q = full.filter($"vec_id" === 0L || $"vec_id" === 10L)
-    def rows(dir: String) =
-      SimilarityOps.searchIndex(spark, dir, q, 2)
-        .select($"query_id", $"neighbor_id", $"rank", $"cos")
-        .as[(Long, Long, Long, Double)].collect().sortBy(r => (r._1, r._3))
-    assert(rows(dirA).nonEmpty && rows(dirA).sameElements(rows(dirB)))
-  }
-
-  test("ivfpq index append: build on half, append the rest ≡ build on everything") {
-    def v(x: Double, y: Double) = Array(x, y, 0.0, 0.0)
-    val all = Seq(
-      0L -> v(1.0, 0.05), 1L -> v(1.0, 0.1), 2L -> v(0.9, 0.0),
-      10L -> v(0.05, 1.0), 11L -> v(0.0, 0.95), 12L -> v(0.1, 1.0))
-    val (half, rest) = all.partition(_._1 <= 2L)
-    val full = all.toDF("vec_id", "embedding")
-    def cents(df: org.apache.spark.sql.DataFrame) =
-      df.filter($"vec_id" === 2L || $"vec_id" === 12L)
-        .select($"vec_id".as("cent_id"), $"embedding".as("cent_emb"))
-    // codebooks are model state trained once on the seed rows — the
-    // appended half must encode through the SAME stored books
-    val books = SimilarityOps.pqBooksOf(full, Seq(2L, 12L), m = 2, dim = 4)
-    val dirA = java.nio.file.Files
-      .createTempDirectory("graft-ivfpq-appA").toString + "/idx"
-    val dirB = java.nio.file.Files
-      .createTempDirectory("graft-ivfpq-appB").toString + "/idx"
-    SimilarityOps.buildIvfPqIndex(full, cents(full), books, dirA)
-    SimilarityOps.buildIvfPqIndex(half.toDF("vec_id", "embedding"),
-      cents(full), books, dirB)
-    SimilarityOps.appendToIvfPqIndex(rest.toDF("vec_id", "embedding"), dirB)
-    val q = full.filter($"vec_id" === 0L || $"vec_id" === 10L)
-    def rows(dir: String) =
-      SimilarityOps.searchIvfPqIndex(spark, dir, q, 2)
-        .select($"query_id", $"neighbor_id", $"rank", $"score")
-        .as[(Long, Long, Long, Double)].collect().sortBy(r => (r._1, r._3))
-    assert(rows(dirA).nonEmpty && rows(dirA).sameElements(rows(dirB)))
-  }
-
-  test("index compaction: one file per cell, search unchanged after appends") {
-    def v(x: Double, y: Double) = Array(x, y, 0.0, 0.0)
-    val all = Seq(
-      0L -> v(1.0, 0.05), 1L -> v(1.0, 0.1), 2L -> v(0.9, 0.0),
-      10L -> v(0.05, 1.0), 11L -> v(0.0, 0.95), 12L -> v(0.1, 1.0))
-    val cents = all.toDF("vec_id", "embedding")
-      .filter($"vec_id" === 2L || $"vec_id" === 12L)
-      .select($"vec_id".as("cent_id"), $"embedding".as("cent_emb"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-ivf-compact").toString + "/idx"
-    // three appends on top of the build: every touched cell accretes
-    // files — the small-files shape compaction exists to undo
-    SimilarityOps.buildIndex(
-      all.take(2).toDF("vec_id", "embedding"), cents, dir)
-    all.drop(2).grouped(2).foreach(g =>
-      SimilarityOps.appendToIndex(g.toDF("vec_id", "embedding"), dir))
-    val q = all.toDF("vec_id", "embedding")
-      .filter($"vec_id" === 0L || $"vec_id" === 10L)
-    def rows() = SimilarityOps.searchIndex(spark, dir, q, 2)
-      .select($"query_id", $"neighbor_id", $"rank", $"cos")
-      .as[(Long, Long, Long, Double)].collect().sortBy(r => (r._1, r._3))
-    import graft.sources.IndexManifest
-    // parquet files per cell, summed over every version of the live chain
-    def filesPerCell() = IndexManifest.resolveChain(spark, dir)
-      .flatMap(v => Option(new java.io.File(s"$v/rows").listFiles)
-        .getOrElse(Array.empty[java.io.File]).toSeq)
-      .filter(_.getName.startsWith("cell=")).map(d =>
-        d.getName -> d.listFiles.count(_.getName.endsWith(".parquet")))
-      .groupMapReduce(_._1)(_._2)(_ + _)
-    val before = rows()
-    assert(IndexManifest.chainVersions(spark, dir) == Seq(3, 2, 1))
-    assert(filesPerCell().values.exists(_ > 1), "appends made no files")
-    SimilarityOps.compactIndex(spark, dir)
-    // the compaction published ONE new version, a chain of one
-    assert(IndexManifest.chainVersions(spark, dir) == Seq(4))
-    val fpc = filesPerCell()
-    assert(fpc.nonEmpty && fpc.values.forall(_ == 1), fpc.toString)
-    assert(rows().sameElements(before), "compaction changed the result")
-  }
-
-  test("index deletes: tombstone hides vectors, compaction purges them") {
-    def v(x: Double, y: Double) = Array(x, y, 0.0, 0.0)
-    val all = Seq(
-      0L -> v(1.0, 0.05), 1L -> v(1.0, 0.1), 2L -> v(0.9, 0.0),
-      10L -> v(0.05, 1.0), 11L -> v(0.0, 0.95), 12L -> v(0.1, 1.0))
-    val full = all.toDF("vec_id", "embedding")
-    def cents(df: org.apache.spark.sql.DataFrame) =
-      df.filter($"vec_id" === 2L || $"vec_id" === 12L)
-        .select($"vec_id".as("cent_id"), $"embedding".as("cent_emb"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-ivf-del").toString + "/idx"
-    val dirB = java.nio.file.Files
-      .createTempDirectory("graft-ivf-delB").toString + "/idx"
-    SimilarityOps.buildIndex(full, cents(full), dir)
-    graft.sources.IndexManifest.delete(spark, dir, Seq(1L))
-    // reference: an index that never contained vector 1
-    SimilarityOps.buildIndex(
-      all.filterNot(_._1 == 1L).toDF("vec_id", "embedding"),
-      cents(full), dirB)
-    val q = full.filter($"vec_id" === 0L || $"vec_id" === 10L)
-    def rows(d: String) = SimilarityOps.searchIndex(spark, d, q, 2)
-      .select($"query_id", $"neighbor_id", $"rank", $"cos")
-      .as[(Long, Long, Long, Double)].collect().sortBy(r => (r._1, r._3))
-    val want = rows(dirB)
-    assert(want.nonEmpty && want.forall(_._2 != 1L))
-    assert(rows(dir).sameElements(want)) // hidden immediately
-    SimilarityOps.compactIndex(spark, dir)
-    assert(rows(dir).sameElements(want)) // still gone after the purge
-    // physically purged; the new base (v3) is tombstone-free while the
-    // old chain (v1 + its delete delta v2) stays for old readers inside
-    // the keep=2 grace window
-    import graft.sources.IndexManifest
-    def deletes(v: Int) =
-      new java.io.File(s"${IndexManifest.versionDir(dir, v)}/deletes")
-    assert(IndexManifest.chainVersions(spark, dir) == Seq(3))
-    val data = spark.read.parquet(s"${IndexManifest.versionDir(dir, 3)}/rows")
-    assert(!data.select($"vec_id").as[Long].collect().contains(1L))
-    assert(!deletes(3).exists() && deletes(2).exists())
-    // the second compaction retires the old chain, tombstones with it
-    SimilarityOps.compactIndex(spark, dir)
-    assert(!deletes(2).exists())
-    assert(rows(dir).sameElements(want))
-  }
-
   test("hash sampling is deterministic, salted, and monotone in percent") {
     val ids = (0L until 1000L).toDF("doc_id")
     def sample(pct: Int, salt: String) = ids

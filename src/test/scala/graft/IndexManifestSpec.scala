@@ -63,7 +63,7 @@ class IndexManifestSpec extends SparkSpec {
     // reader resolves v1 and builds its plan
     val v1Scan = spark.read.parquet(
       s"${IndexManifest.resolve(spark, root)}/t")
-    // a compaction-style rewrite publishes v2 meanwhile
+    // a rebuild publishes v2 meanwhile
     IndexManifest.publish(spark, root) { vdir =>
       Seq((1L, "a"), (2L, "b")).toDF("id", "s").write.parquet(s"$vdir/t")
     }
@@ -72,91 +72,6 @@ class IndexManifestSpec extends SparkSpec {
     assert(v1Scan.count() == 1)
     assert(spark.read.parquet(
       s"${IndexManifest.resolve(spark, root)}/t").count() == 2)
-  }
-
-  test("publishDelta: crash mid-delta leaves the chain live; retry converges exactly-once") {
-    val root = tmpRoot()
-    IndexManifest.publish(spark, root) { vdir =>
-      Seq((1L, "base")).toDF("id", "s").write.parquet(s"$vdir/t")
-    }
-    // crash between the delta's two table writes: pointer untouched,
-    // half-written delta invisible
-    intercept[RuntimeException] {
-      IndexManifest.publishDelta(spark, root) { vdir =>
-        Seq((2L, "delta")).toDF("id", "s").write.parquet(s"$vdir/t")
-        throw new RuntimeException("crash before second table")
-      }
-    }
-    assert(IndexManifest.currentVersion(spark, root).contains(1))
-    assert(IndexManifest.chainVersions(spark, root) == Seq(1))
-    // retry: the orphaned v2 is cleared and rewritten — never doubled
-    val v = IndexManifest.publishDelta(spark, root) { vdir =>
-      Seq((2L, "delta")).toDF("id", "s").write.mode("overwrite")
-        .parquet(s"$vdir/t")
-    }
-    assert(v == 2 && IndexManifest.chainVersions(spark, root) == Seq(2, 1))
-    val rows = spark.read.parquet(
-      IndexManifest.resolveChain(spark, root).map(d => s"$d/t"): _*)
-      .as[(Long, String)].collect().toSet
-    assert(rows == Set((1L, "base"), (2L, "delta")))
-  }
-
-  test("prune never retires a live chain ancestor; a full publish frees the old chain") {
-    val root = tmpRoot()
-    IndexManifest.publish(spark, root) { vdir =>
-      Seq((1L, "base")).toDF("id", "s").write.parquet(s"$vdir/t")
-    }
-    (2 to 3).foreach { i =>
-      IndexManifest.publishDelta(spark, root) { vdir =>
-        Seq((i.toLong, "d")).toDF("id", "s").write.parquet(s"$vdir/t")
-      }
-    }
-    // whole chain live: nothing to retire even at keep=1
-    assert(IndexManifest.prune(spark, root, keep = 1).isEmpty)
-    assert(IndexManifest.chainVersions(spark, root) == Seq(3, 2, 1))
-    // a compaction-style full publish roots a new chain; the old one is
-    // now dead and keep=1 retires all of it
-    IndexManifest.publish(spark, root) { vdir =>
-      Seq((1L, "c"), (2L, "c"), (3L, "c")).toDF("id", "s")
-        .write.parquet(s"$vdir/t")
-    }
-    assert(IndexManifest.prune(spark, root, keep = 1) == Seq(1, 2, 3))
-    assert(IndexManifest.chainVersions(spark, root) == Seq(4))
-    assert(spark.read.parquet(
-      s"${IndexManifest.resolve(spark, root)}/t").count() == 3)
-  }
-
-  test("prune retains a superseded delta chain WHOLE, not just its tip") {
-    val root = tmpRoot()
-    // old chain: base v1 ← delta v2 ← delta v3
-    IndexManifest.publish(spark, root) { vdir =>
-      Seq((1L, "base")).toDF("id", "s").write.parquet(s"$vdir/t")
-    }
-    (2 to 3).foreach { i =>
-      IndexManifest.publishDelta(spark, root) { vdir =>
-        Seq((i.toLong, "d")).toDF("id", "s").write.parquet(s"$vdir/t")
-      }
-    }
-    // an in-flight reader resolves the old chain BEFORE compaction
-    val oldChainDirs = IndexManifest.resolveChain(spark, root)
-    assert(oldChainDirs.length == 3)
-    // compaction supersedes the chain with a fresh root v4
-    IndexManifest.publish(spark, root) { vdir =>
-      Seq((1L, "c"), (2L, "c"), (3L, "c")).toDF("id", "s")
-        .write.parquet(s"$vdir/t")
-    }
-    // keep=2 grants one dead version of grace — which must mean the dead
-    // chain's TIP plus every ancestor it references (v3 → v2 → v1), or
-    // the in-flight reader loses its base mid-scan
-    assert(IndexManifest.prune(spark, root, keep = 2).isEmpty)
-    val reread = spark.read.parquet(oldChainDirs.map(d => s"$d/t"): _*)
-      .as[(Long, String)].collect().toSet
-    assert(reread == Set((1L, "base"), (2L, "d"), (3L, "d")),
-      "the superseded chain's reader must survive a keep=2 prune whole")
-    // once the grace window passes (keep=1), the whole dead chain retires
-    assert(IndexManifest.prune(spark, root, keep = 1) == Seq(1, 2, 3))
-    assert(new java.io.File(s"$root/versions").listFiles()
-      .map(_.getName).sorted.toSeq == Seq("v4"))
   }
 
   test("prune retires oldest versions, never the current") {
@@ -176,5 +91,16 @@ class IndexManifestSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       IndexManifest.prune(spark, root, keep = 0)
     }
+    // a writer's unpublished version above the current one is not
+    // prune's to retire
+    intercept[RuntimeException] {
+      IndexManifest.publish(spark, root) { vdir =>
+        Seq((5L, "x")).toDF("id", "s").write.parquet(s"$vdir/t")
+        throw new RuntimeException("died mid-publish")
+      }
+    }
+    assert(IndexManifest.prune(spark, root, keep = 1) == Seq(3))
+    assert(new java.io.File(s"$root/versions").listFiles()
+      .map(_.getName).sorted.toSeq == Seq("v4", "v5"))
   }
 }

@@ -1072,198 +1072,6 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == batched && streamed.map(_._2) == Set(1L, 3L))
   }
 
-  test("streaming embedding ingest: foreachBatch appends to the persisted IVF index") {
-    import graft.operators.SimilarityOps
-    def v(x: Double, y: Double) = Array(x, y, 0.0, 0.0)
-    val base = Seq(0L -> v(1.0, 0.05), 2L -> v(0.9, 0.0),
-      10L -> v(0.05, 1.0), 12L -> v(0.1, 1.0)).toDF("vec_id", "embedding")
-    val cents = base.filter($"vec_id" === 2L || $"vec_id" === 12L)
-      .select($"vec_id".as("cent_id"), $"embedding".as("cent_emb"))
-    val dir = Files.createTempDirectory("graft-ivf-live").toString + "/idx"
-    SimilarityOps.buildIndex(base, cents, dir)
-    // live ingest: two micro-batches routed through the STORED model —
-    // the maintenance path a continuously-embedding pipeline runs
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[(Long, Array[Double])]
-    val cp = Files.createTempDirectory("graft-ivf-live-cp").toString
-    val writer = stream.toDF().toDF("vec_id", "embedding")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        SimilarityOps.appendToIndex(batch, dir)
-      }
-      .option("checkpointLocation", s"$cp/cp").start()
-    val streamed = Seq(1L -> v(1.0, 0.1), 11L -> v(0.0, 0.95))
-    try {
-      stream.addData(streamed.take(1))
-      writer.processAllAvailable()
-      stream.addData(streamed.drop(1))
-      writer.processAllAvailable()
-    } finally writer.stop()
-    // the persisted search sees the streamed vectors immediately, and
-    // the streamed index ≡ a batch build over everything, bit-exact
-    val q = base.filter($"vec_id" === 0L || $"vec_id" === 10L)
-    def rows(d: String) = SimilarityOps.searchIndex(spark, d, q, 2)
-      .select($"query_id", $"neighbor_id", $"rank", $"cos")
-      .as[(Long, Long, Long, Double)].collect().sortBy(r => (r._1, r._3))
-    val dirB = Files.createTempDirectory("graft-ivf-liveB")
-      .toString + "/idx"
-    SimilarityOps.buildIndex(
-      base.unionAll(streamed.toDF("vec_id", "embedding")), cents, dirB)
-    val live = rows(dir)
-    assert(live.map(r => (r._1, r._2)).toSet ==
-      Set((0L, 1L), (0L, 2L), (10L, 11L), (10L, 12L)))
-    assert(live.sameElements(rows(dirB)))
-  }
-
-  test("streaming document ingest: foreachBatch appends to the BM25 index") {
-    import graft.operators.CorpusOps
-    // the live view of the search-index build: documents arrive on a
-    // stream, each micro-batch appends its postings; because df/dl/stats
-    // derive from the stored postings, streamed ingest ≡ batch build
-    val base = Seq(1L -> "rare common common", 2L -> "common common")
-    val streamed = Seq(3L -> "rare common pad pad pad pad",
-      4L -> "pad common common rare")
-    val dir = Files.createTempDirectory("graft-bm25-live").toString + "/idx"
-    CorpusOps.buildBm25Index(base.toDF("doc_id", "text"), dir)
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[(Long, String)]
-    val cp = Files.createTempDirectory("graft-bm25-live-cp").toString
-    val writer = stream.toDF().toDF("doc_id", "text")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        CorpusOps.appendToBm25Index(batch, dir)
-      }
-      .option("checkpointLocation", s"$cp/cp").start()
-    try {
-      stream.addData(streamed.take(1))
-      writer.processAllAvailable()
-      stream.addData(streamed.drop(1))
-      writer.processAllAvailable()
-    } finally writer.stop()
-    val qs = Seq(0L -> "rare", 1L -> "common")
-    val live = CorpusOps.searchBm25Index(spark, dir, qs, 10)
-      .as[(Long, Long, Long, Long, Long)].collect()
-      .sortBy(r => (r._1, r._5)).toSeq
-    val batch = CorpusOps.bm25Search(qs, 10)(
-      (base ++ streamed).toDF("doc_id", "text"))
-      .as[(Long, Long, Long, Long, Long)].collect()
-      .sortBy(r => (r._1, r._5)).toSeq
-    assert(live == batch && live.map(_._2).contains(3L))
-  }
-
-  test("streaming document ingest: foreachBatch appends to the positional index") {
-    import graft.operators.CorpusOps
-    // the live view of the phrase-search index: positional posting rows
-    // are pure per-(doc, term) facts, so streamed append ≡ batch build
-    // (same contract as the BM25 dual above); a phrase query sees each
-    // micro-batch's docs the moment its append lands
-    val base = Seq(1L -> "table hash table hash scan")
-    val streamed = Seq(2L -> "slow hash batch now",
-      3L -> "table hash only here")
-    val dir = Files.createTempDirectory("graft-pos-live").toString + "/idx"
-    CorpusOps.buildPositionalIndex(base.toDF("doc_id", "text"), dir)
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[(Long, String)]
-    val cp = Files.createTempDirectory("graft-pos-live-cp").toString
-    val writer = stream.toDF().toDF("doc_id", "text")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        CorpusOps.appendToPositionalIndex(batch, dir)
-      }
-      .option("checkpointLocation", s"$cp/cp").start()
-    try {
-      stream.addData(streamed.take(1))
-      writer.processAllAvailable()
-      stream.addData(streamed.drop(1))
-      writer.processAllAvailable()
-    } finally writer.stop()
-    val qs = Seq(0L -> "table hash", 1L -> "slow hash batch")
-    val live = CorpusOps.phraseSearchIndex(spark, dir, qs)
-      .as[(Long, Long, Long)].collect()
-      .sortBy(r => (r._1, r._2)).toSeq
-    val batch = CorpusOps.phraseSearch(qs)(
-      (base ++ streamed).toDF("doc_id", "text"))
-      .as[(Long, Long, Long)].collect()
-      .sortBy(r => (r._1, r._2)).toSeq
-    assert(live == batch && live.contains((0L, 3L, 1L)) &&
-      live.contains((1L, 2L, 1L)))
-  }
-
-  test("streaming document ingest: foreachBatch appends to the minhash fingerprint store") {
-    import graft.operators.DedupOps
-    // the live view of the dedup fingerprint store (the fourth store
-    // with this contract, after IVF/BM25/positional): per-doc shingle
-    // sets and band keys are pure facts, so streamed append ≡ batch
-    // build — the full pair miner over the appended store equals the
-    // miner over a one-shot build, bit-exact
-    val base = Seq(1L -> "alpha beta gamma delta epsilon zeta",
-      2L -> "one two three four five six")
-    val streamed = Seq(3L -> "alpha beta gamma delta epsilon eta",
-      4L -> "one two three four five seven")
-    val dir = Files.createTempDirectory("graft-mh-live").toString + "/idx"
-    DedupOps.buildMinhashStore(base.toDF("doc_id", "text"), dir)
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[(Long, String)]
-    val cp = Files.createTempDirectory("graft-mh-live-cp").toString
-    val writer = stream.toDF().toDF("doc_id", "text")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        DedupOps.appendToMinhashStore(batch, dir)
-      }
-      .option("checkpointLocation", s"$cp/cp").start()
-    try {
-      stream.addData(streamed.take(1))
-      writer.processAllAvailable()
-      stream.addData(streamed.drop(1))
-      writer.processAllAvailable()
-    } finally writer.stop()
-    def rows(d: String) = DedupOps.minhashLshPairsStore(spark, d)
-      .select($"a", $"b", $"jaccard")
-      .as[(Long, Long, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
-    val live = rows(dir)
-    val dirB = Files.createTempDirectory("graft-mh-liveB")
-      .toString + "/idx"
-    DedupOps.buildMinhashStore(
-      (base ++ streamed).toDF("doc_id", "text"), dirB)
-    assert(live == rows(dirB))
-    assert(live.map(r => (r._1, r._2)).toSet == Set((1L, 3L), (2L, 4L)))
-  }
-
-  test("streaming document ingest: foreachBatch appends to the winnowing store") {
-    import graft.operators.DedupOps
-    val base = Seq(1L -> "a b c d e f g h i j",
-      2L -> "q r s t u v w x y z")
-    val streamed = Seq(3L -> "a b c d e f g h i k",
-      4L -> "q r s t u v w x y m")
-    val dir = Files.createTempDirectory("graft-wn-live").toString + "/idx"
-    DedupOps.buildWinnowingStore(base.toDF("doc_id", "text"), dir)
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[(Long, String)]
-    val cp = Files.createTempDirectory("graft-wn-live-cp").toString
-    val writer = stream.toDF().toDF("doc_id", "text")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        DedupOps.appendToWinnowingStore(batch, dir)
-      }
-      .option("checkpointLocation", s"$cp/cp").start()
-    try {
-      stream.addData(streamed.take(1))
-      writer.processAllAvailable()
-      stream.addData(streamed.drop(1))
-      writer.processAllAvailable()
-    } finally writer.stop()
-    def rows(d: String) = DedupOps.winnowingPairsStore(spark, d)
-      .select($"a", $"b", $"jaccard")
-      .as[(Long, Long, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
-    val live = rows(dir)
-    val dirB = Files.createTempDirectory("graft-wn-liveB")
-      .toString + "/idx"
-    DedupOps.buildWinnowingStore(
-      (base ++ streamed).toDF("doc_id", "text"), dirB)
-    assert(live == rows(dirB))
-    assert(live.map(r => (r._1, r._2)).toSet == Set((1L, 3L), (2L, 4L)))
-  }
-
   test("streaming percolate: stored bool queries alert on arriving docs") {
     import graft.operators.CorpusOps
     import graft.operators.CorpusOps.BoolQuery
@@ -1308,12 +1116,14 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.CorpusOps.BoolQuery
     // the registry-scale percolator: queries live in the PERSISTED
     // terms→queries index, docs stream in, and a query registered
-    // between micro-batches starts matching immediately (alerts are
-    // forward-only — earlier docs were percolated before it existed,
-    // exactly ES percolator semantics)
+    // between micro-batches (a rebuild of the registry) starts matching
+    // from the next batch (alerts are forward-only — earlier docs were
+    // percolated before it existed, exactly ES percolator semantics)
     val idx = Files.createTempDirectory("graft-perc-idx").toString + "/idx"
-    CorpusOps.buildPercolateIndex(spark,
-      Seq(BoolQuery(0L, must = Seq("error"), mustNot = Seq("test"))), idx)
+    val registry = Seq(
+      BoolQuery(0L, must = Seq("error"), mustNot = Seq("test")),
+      BoolQuery(1L, should = Seq("slow", "timeout"), minShould = 1))
+    CorpusOps.buildPercolateIndex(spark, registry.take(1), idx)
     val arriving = Seq(1L -> "error in prod", 2L -> "error in test run",
       3L -> "slow request", 4L -> "all fine")
     implicit val sqlCtx = spark.sqlContext
@@ -1332,9 +1142,7 @@ class StreamingSpec extends SparkSpec {
     try {
       stream.addData(arriving.take(2))
       writer.processAllAvailable()
-      CorpusOps.appendToPercolateIndex(spark,
-        Seq(BoolQuery(1L, should = Seq("slow", "timeout"),
-          minShould = 1)), idx)
+      CorpusOps.buildPercolateIndex(spark, registry, idx)
       stream.addData(arriving.drop(2))
       writer.processAllAvailable()
     } finally writer.stop()
@@ -1343,7 +1151,8 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming ingest dedup: each micro-batch checks then joins the store") {
     import graft.operators.DedupOps
-    // history 0-4 seeds the store; batches {5,6} then {7,9} stream in.
+    // history 0-4 seeds the store; batches {5,6} then {7,9} stream in,
+    // and each batch rebuilds the store over everything seen so far.
     // 7~6 is the load-bearing pair: its history HALF arrived on the
     // stream one batch earlier — the store must already contain it.
     val texts = Seq(
@@ -1358,7 +1167,9 @@ class StreamingSpec extends SparkSpec {
       9L -> "red green blue cyan magenta yellow black grey")
     val all = texts.toDF("doc_id", "text")
     val store = Files.createTempDirectory("graft-mh-live").toString + "/s"
-    DedupOps.buildMinhashStore(all.filter($"doc_id" < 5), store)
+    val seen = scala.collection.mutable.ArrayBuffer(
+      texts.filter(_._1 < 5L): _*)
+    DedupOps.buildMinhashStore(seen.toSeq.toDF("doc_id", "text"), store)
     val flagged = scala.collection.mutable.Set.empty[(Long, Long, Double)]
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[(Long, String)]
@@ -1368,7 +1179,9 @@ class StreamingSpec extends SparkSpec {
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         flagged ++= DedupOps.incrementalNearDupPairs(batch, store)
           .as[(Long, Long, Double)].collect()
-        DedupOps.appendToMinhashStore(batch, store)
+        seen ++= batch.as[(Long, String)].collect()
+        DedupOps.buildMinhashStore(
+          seen.toSeq.toDF("doc_id", "text"), store)
       }
       .option("checkpointLocation", s"$cp/cp").start()
     try {
@@ -1655,21 +1468,6 @@ class StreamingSpec extends SparkSpec {
     val snap = listener.snapshot.get
     assert(snap.lastAddBatchMs >= 0L) // M3
     assert(!snap.fallingBehind) // M4 analogue on a drained stream
-  }
-
-  test("in-stream dedup within watermark drops duplicate doc ids") {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Msg]
-    // same (partition, offset) delivered twice in one batch
-    stream.addData(batch1 ++ batch1)
-    val out = Files.createTempDirectory("graft-stream2").toString
-    val q = InjectorOps.pipeline(cfg, schema,
-      dedupWatermark = Some("1 hour"))(stream.toDF())
-      .writeStream.format("memory").queryName("dedup_out")
-      .option("checkpointLocation", s"$out/cp").start()
-    try q.processAllAvailable() finally q.stop()
-    val ids = spark.table("dedup_out").select($"doc_id").as[String].collect()
-    assert(ids.sorted.toSeq == Seq("0:1", "0:2", "1:1"))
   }
 
   test("in-stream exact dedup drops duplicate content (batch ≡ streaming)") {

@@ -287,26 +287,18 @@ class TextDedupSpec extends SparkSpec {
     assert(deq(0) == Seq(0.0, -1.0, 7.0) && deq(1) == Seq(1.0, 1.0, 7.0))
   }
 
-  test("sq8 persisted index: append through the stored model == rebuild") {
-    val half1 = Seq((0L, Array(1.0f, 0.0f)), (1L, Array(0.9f, 0.1f)))
+  test("sq8 persisted index ≡ the in-memory operator, bit-exact") {
+    val all = Seq((0L, Array(1.0f, 0.0f)), (1L, Array(0.9f, 0.1f)),
+      (2L, Array(0.0f, 1.0f)), (3L, Array(0.5f, 0.5f)))
       .toDF("vec_id", "embedding")
-    val half2 = Seq((2L, Array(0.0f, 1.0f)), (3L, Array(0.5f, 0.5f)))
-      .toDF("vec_id", "embedding")
-    val all = half1.unionAll(half2)
     val model = SimilarityOps.sq8Model(all)
-    val dirA = java.nio.file.Files
-      .createTempDirectory("sq8-idx-a").toString + "/idx"
-    val dirB = java.nio.file.Files
-      .createTempDirectory("sq8-idx-b").toString + "/idx"
-    SimilarityOps.buildSq8Index(half1, model, dirA)
-    SimilarityOps.appendToSq8Index(half2, dirA)
-    SimilarityOps.buildSq8Index(all, model, dirB)
+    val dir = java.nio.file.Files
+      .createTempDirectory("sq8-idx").toString + "/idx"
+    SimilarityOps.buildSq8Index(all, model, dir)
     val q = all.filter($"vec_id" === 0)
-    def res(d: String) = SimilarityOps.searchSq8Index(spark, d, q, 3)
+    val a = SimilarityOps.searchSq8Index(spark, dir, q, 3)
       .as[(Long, Long, Long, Double)].collect().sortBy(_._3).toSeq
-    val a = res(dirA)
-    assert(a == res(dirB) && a.nonEmpty)
-    // and the persisted search == the in-memory operator, bit-exact
+    assert(a.nonEmpty)
     val mem = SimilarityOps.sq8TopK(all, q, 3, model)
       .as[(Long, Long, Long, Double)].collect().sortBy(_._3).toSeq
     assert(a == mem)
@@ -388,159 +380,30 @@ class TextDedupSpec extends SparkSpec {
     assert(batchCross.nonEmpty) // fixture is non-vacuous
     val store = java.nio.file.Files
       .createTempDirectory("mh-store-test").toString + "/s"
-    DedupOps.buildMinhashStore(d.filter($"doc_id" < 3), store)
-    DedupOps.appendToMinhashStore(
-      d.filter($"doc_id" >= 3 && $"doc_id" < 5), store)
+    DedupOps.buildMinhashStore(d.filter($"doc_id" < 5), store)
     val incr = DedupOps.incrementalNearDupPairs(
       d.filter($"doc_id" >= 5), store)
       .as[(Long, Long, Double)].collect().toSet
-    // build-half+append ≡ one batch over the history; the probe sees
-    // exactly the cross pairs — no within-history, no within-batch
+    // the probe sees exactly the cross pairs — no within-history, no
+    // within-batch
     assert(incr == batchCross)
   }
 
-  test("persisted BM25 index: append == rebuild == in-memory, bit-exact") {
+  test("persisted BM25 index == in-memory, bit-exact") {
     import graft.operators.CorpusOps
-    val half1 = Seq((1L, "rare common common common"),
-      (2L, "common common common common")).toDF("doc_id", "text")
-    val half2 = Seq(
+    val all = Seq((1L, "rare common common common"),
+      (2L, "common common common common"),
       (3L, "rare common pad pad pad pad pad pad pad pad pad pad"))
       .toDF("doc_id", "text")
-    val all = half1.unionAll(half2)
     val qs = Seq(0L -> "rare", 0L -> "common")
     val dir = java.nio.file.Files
       .createTempDirectory("bm25-idx").toString + "/idx"
-    CorpusOps.buildBm25Index(half1, dir)
-    CorpusOps.appendToBm25Index(half2, dir)
+    CorpusOps.buildBm25Index(all, dir)
     val persisted = CorpusOps.searchBm25Index(spark, dir, qs, 3)
       .as[(Long, Long, Long, Long, Long)].collect().sortBy(_._5).toSeq
     val mem = CorpusOps.bm25Search(qs, 3)(all)
       .as[(Long, Long, Long, Long, Long)].collect().sortBy(_._5).toSeq
     assert(persisted == mem && persisted.nonEmpty)
-    // compaction: the build + append chain folds into a term-clustered
-    // base published as ONE new manifest version (atomic pointer swap) —
-    // fewer files over the chain, search unchanged
-    import graft.sources.IndexManifest
-    def tfFiles() = IndexManifest.resolveChain(spark, dir).map(v =>
-      new java.io.File(s"$v/tf").listFiles()
-        .count(_.getName.endsWith(".parquet"))).sum
-    val filesBefore = tfFiles()
-    assert(IndexManifest.chainVersions(spark, dir) == Seq(2, 1))
-    CorpusOps.compactBm25Index(spark, dir)
-    assert(IndexManifest.chainVersions(spark, dir) == Seq(3))
-    val filesAfter = tfFiles()
-    val compacted = CorpusOps.searchBm25Index(spark, dir, qs, 3)
-      .as[(Long, Long, Long, Long, Long)].collect().sortBy(_._5).toSeq
-    assert(compacted == mem && filesAfter < filesBefore)
-  }
-
-  test("BM25 index deletes: tombstone hides, compaction purges") {
-    import graft.operators.CorpusOps
-    import graft.sources.IndexManifest
-    val d = Seq((1L, "rare common common"), (2L, "common common"),
-      (3L, "rare pad pad pad")).toDF("doc_id", "text")
-    val qs = Seq(0L -> "rare", 1L -> "common")
-    val dir = java.nio.file.Files
-      .createTempDirectory("bm25-del").toString + "/idx"
-    CorpusOps.buildBm25Index(d, dir)
-    IndexManifest.delete(spark, dir, Seq(2L))
-    def got() = CorpusOps.searchBm25Index(spark, dir, qs, 10)
-      .as[(Long, Long, Long, Long, Long)].collect()
-      .sortBy(r => (r._1, r._5)).toSeq
-    // search-invisible immediately, with df/dl/avgdl of the SURVIVING
-    // corpus (scores must equal an index never containing doc 2)
-    val want = CorpusOps.bm25Search(qs, 10)(d.filter($"doc_id" =!= 2L))
-      .as[(Long, Long, Long, Long, Long)].collect()
-      .sortBy(r => (r._1, r._5)).toSeq
-    assert(got() == want && want.nonEmpty)
-    assert(got().map(_._2).forall(_ != 2L))
-    // the delete is a delta holding only the tombstone table
-    assert(IndexManifest.chainVersions(spark, dir) == Seq(2, 1))
-    assert(new java.io.File(s"$dir/versions/v2").list().toSet
-      .filterNot(_.startsWith(".")) == Set("PARENT", "deletes"))
-    // compaction physically purges into a tombstone-free base
-    CorpusOps.compactBm25Index(spark, dir)
-    assert(got() == want)
-    assert(IndexManifest.chainVersions(spark, dir) == Seq(3))
-    val vdir = IndexManifest.versionDir(dir, 3)
-    assert(!new java.io.File(s"$vdir/deletes").exists())
-    val ids = spark.read.parquet(s"$vdir/tf")
-      .select($"doc_id").distinct().as[Long].collect().toSet
-    assert(ids == Set(1L, 3L))
-  }
-
-  test("compactMinhashStore leaves probes identical with fewer files") {
-    def files(d: String) = new java.io.File(d).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    val texts = (0 until 12).map(i =>
-      (i.toLong, if (i % 5 == 0) "alpha beta gamma delta epsilon zeta"
-      else s"unique body $i with its own words entirely $i"))
-    val d = texts.toDF("doc_id", "text")
-    val store = java.nio.file.Files
-      .createTempDirectory("mh-compact").toString + "/s"
-    DedupOps.buildMinhashStore(d.filter($"doc_id" < 4), store)
-    DedupOps.appendToMinhashStore(
-      d.filter($"doc_id" >= 4 && $"doc_id" < 8), store)
-    DedupOps.appendToMinhashStore(
-      d.filter($"doc_id" >= 8 && $"doc_id" < 10), store)
-    val probe = d.filter($"doc_id" >= 10)
-    val before = DedupOps.incrementalNearDupPairs(probe, store)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(before.nonEmpty) // the %4 clones collide across the split
-    import graft.sources.IndexManifest
-    // build + 2 delta appends = a 3-version live chain
-    assert(IndexManifest.chainVersions(spark, store) == Seq(3, 2, 1))
-    def setsFiles() = IndexManifest.resolveChain(spark, store)
-      .map(v => files(s"$v/sets")).sum
-    val filesBefore = setsFiles()
-    DedupOps.compactMinhashStore(spark, store)
-    // the whole chain folded into one full version behind one swap
-    assert(IndexManifest.currentVersion(spark, store).contains(4))
-    assert(IndexManifest.chainVersions(spark, store) == Seq(4))
-    val after = DedupOps.incrementalNearDupPairs(probe, store)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(after == before)
-    assert(setsFiles() < filesBefore)
-  }
-
-  test("minhash append is ATOMIC: crash mid-append changes nothing, retry converges") {
-    val d = Seq(
-      0L -> "alpha beta gamma delta epsilon zeta eta theta",
-      1L -> "one two three four five six seven eight",
-      2L -> "alpha beta gamma delta epsilon zeta eta iota", // ~dup of 0
-      3L -> "one two three four five six seven nine")       // ~dup of 1
-      .toDF("doc_id", "text")
-    val store = java.nio.file.Files
-      .createTempDirectory("mh-atomic").toString + "/s"
-    DedupOps.buildMinhashStore(d.filter($"doc_id" < 2), store)
-    val batch = d.filter($"doc_id" >= 2)
-    val expected = DedupOps.incrementalNearDupPairs(batch, store)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(expected.map(p => (p._1, p._2)) == Set((0L, 2L), (1L, 3L)))
-    // simulated crash between the delta's sets and bands writes — the
-    // window the pre-r11 in-place append left open
-    import graft.sources.IndexManifest
-    intercept[RuntimeException] {
-      IndexManifest.publishDelta(spark, store) { vdir =>
-        batch.write.parquet(s"$vdir/sets")
-        throw new RuntimeException("crash before bands")
-      }
-    }
-    // reopen: the store is EXACTLY its pre-append self — same probe
-    // results, no stranded rows visible anywhere
-    assert(IndexManifest.chainVersions(spark, store) == Seq(1))
-    assert(DedupOps.incrementalNearDupPairs(batch, store)
-      .as[(Long, Long, Double)].collect().toSet == expected)
-    // retry converges: the append lands exactly once…
-    DedupOps.appendToMinhashStore(batch, store)
-    assert(IndexManifest.chainVersions(spark, store) == Seq(2, 1))
-    // …and a fresh probe near doc 0 sees each store doc EXACTLY once
-    // (doubled set rows would double the verified pair rows)
-    val p4 = Seq(4L -> "alpha beta gamma delta epsilon zeta eta kappa")
-      .toDF("doc_id", "text")
-    val pairs = DedupOps.incrementalNearDupPairs(p4, store)
-      .as[(Long, Long, Double)].collect().toSeq
-    assert(pairs.map(p => (p._1, p._2)).sorted == Seq((0L, 4L), (2L, 4L)))
   }
 
   test("fuzzySearch: SymSpell deletion-join == brute-force levenshtein") {
@@ -652,7 +515,7 @@ class TextDedupSpec extends SparkSpec {
     assert(got == Seq((0L, 5L, 2L, 3L, 1L), (0L, 1L, 2L, 2L, 2L)))
   }
 
-  test("percolate index: build/append parity with boolSearch") {
+  test("percolate index: build parity with boolSearch") {
     import graft.operators.CorpusOps
     import graft.operators.CorpusOps.BoolQuery
     val d = docs(
@@ -672,12 +535,6 @@ class TextDedupSpec extends SparkSpec {
     val expected = rows(CorpusOps.boolSearch(registry, 10)(d))
     assert(rows(CorpusOps.percolate(spark, full, 10)(d)) == expected)
     assert(expected.nonEmpty)
-    // build-half + append-half ≡ build-everything, through the search
-    val half = java.nio.file.Files
-      .createTempDirectory("graft-perc-half").toString + "/idx"
-    CorpusOps.buildPercolateIndex(spark, registry.take(1), half)
-    CorpusOps.appendToPercolateIndex(spark, registry.drop(1), half)
-    assert(rows(CorpusOps.percolate(spark, half, 10)(d)) == expected)
     // the builder enforces the same query guards as boolSearch
     intercept[IllegalArgumentException] {
       CorpusOps.buildPercolateIndex(spark,
@@ -1121,31 +978,6 @@ class TextDedupSpec extends SparkSpec {
     assert(idx == scan && idx.nonEmpty, s"idx=$idx scan=$scan")
   }
 
-  test("positional index: append ≡ rebuild; delete tombstones hide docs") {
-    import graft.operators.CorpusOps
-    val half1 = docs((1L, "table hash one"), (2L, "table scan hash"))
-    val half2 = docs((3L, "table hash two"))
-    val all = docs((1L, "table hash one"), (2L, "table scan hash"),
-      (3L, "table hash two"))
-    val dirA = java.nio.file.Files
-      .createTempDirectory("graft-pos-a").toString + "/idx"
-    val dirB = java.nio.file.Files
-      .createTempDirectory("graft-pos-b").toString + "/idx"
-    CorpusOps.buildPositionalIndex(half1, dirA)
-    CorpusOps.appendToPositionalIndex(half2, dirA)
-    CorpusOps.buildPositionalIndex(all, dirB)
-    val qs = Seq(0L -> "table hash")
-    def rows(dir: String) = CorpusOps.phraseSearchIndex(spark, dir, qs)
-      .select($"doc_id", $"n_hits").as[(Long, Long)]
-      .collect().sortBy(_._1).toSeq
-    assert(rows(dirA) == rows(dirB) && rows(dirA).map(_._1) == Seq(1L, 3L))
-    graft.sources.IndexManifest.delete(spark, dirA, Seq(1L))
-    assert(rows(dirA).map(_._1) == Seq(3L))
-    // compaction purges tombstoned rows physically; results unchanged
-    CorpusOps.compactPositionalIndex(spark, dirA)
-    assert(rows(dirA).map(_._1) == Seq(3L))
-  }
-
   test("positional index: highlight and snippets match the scan variants") {
     import graft.operators.CorpusOps
     val d = docs(
@@ -1248,7 +1080,7 @@ class TextDedupSpec extends SparkSpec {
       "store pair plan must not contain a distinct exchange")
   }
 
-  test("winnowing store pairs ≡ scan pairs; append ≡ rebuild; compaction row-identical") {
+  test("winnowing store pairs ≡ scan pairs") {
     val d = docs(
       (1L, "a b c d e f g h i j"),
       (2L, "a b c d e f g h i k"),   // near dup of 1
@@ -1267,18 +1099,6 @@ class TextDedupSpec extends SparkSpec {
     DedupOps.buildWinnowingStore(d, full)
     assert(DedupOps.winnowingStoreParams(spark, full) == ((5, 4)))
     assert(rows(DedupOps.winnowingPairsStore(spark, full)) == scan)
-    // build half + append half ≡ the one-shot build (append computes
-    // through the STORED params, atomically)
-    val inc = java.nio.file.Files
-      .createTempDirectory("graft-wn-store-inc").toString + "/idx"
-    DedupOps.buildWinnowingStore(d.filter($"doc_id" <= 2), inc)
-    DedupOps.appendToWinnowingStore(d.filter($"doc_id" > 2), inc)
-    assert(rows(DedupOps.winnowingPairsStore(spark, inc)) == scan)
-    // compaction folds the chain without changing a row
-    DedupOps.compactWinnowingStore(spark, inc)
-    assert(graft.sources.IndexManifest
-      .chainVersions(spark, inc).size == 1)
-    assert(rows(DedupOps.winnowingPairsStore(spark, inc)) == scan)
     // the df cap stays a query-time knob on the store path: capping at
     // 0 kills every candidate
     assert(DedupOps.winnowingPairsStore(spark, full, maxDf = 0)
@@ -1360,14 +1180,11 @@ class TextDedupSpec extends SparkSpec {
     assert(rows(DedupOps.minhashLshPairsStore(spark, store,
       threshold = 0.5)) == expected)
     assert(expected.map(r => (r._1, r._2)).contains((1L, 2L)))
-    // appends and incremental probes inherit the stored geometry too
-    DedupOps.appendToMinhashStore(
-      docs((5L, "p q r s t u v")), store)
-    assert(DedupOps.minhashStoreParams(spark, store) == ((3, 4, 4)))
+    // incremental probes inherit the stored geometry too
     val incr = DedupOps.incrementalNearDupPairs(
       docs((6L, "p q r s t u v")), store)
       .select($"a", $"b").as[(Long, Long)].collect().toSet
-    assert(incr.contains((1L, 6L)) && incr.contains((5L, 6L)))
+    assert(incr.contains((1L, 6L)) && incr.contains((2L, 6L)))
   }
 
   test("knnGraphIndex ≡ knnGraph under the same cell model") {
@@ -1392,13 +1209,6 @@ class TextDedupSpec extends SparkSpec {
     val mem = rows(SimilarityOps.knnGraph(cents, k = 2)(corpus))
     assert(idx == mem && idx.nonEmpty,
       s"index-served graph drifted: $idx vs $mem")
-    // deletes are graph-invisible on BOTH join sides the moment the
-    // tombstone lands
-    graft.sources.IndexManifest.delete(spark, dir, Seq(4L))
-    val afterDel = rows(SimilarityOps.knnGraphIndex(spark, dir, k = 2))
-    assert(afterDel ==
-      rows(SimilarityOps.knnGraph(cents, k = 2)(
-        corpus.filter($"vec_id" =!= 4L))))
   }
 
   test("persisted rescore ≡ scan rescore on collision-free fixtures") {
